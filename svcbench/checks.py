@@ -1,10 +1,11 @@
 """Output checks for the service benchmark.
 
 Each checker takes the run record the JVM wrote and the fixture
-directory, and returns a list of (op index, message) failures; the index
-is "run" for a check over the whole run. Relational
-endpoint results and lake counts are recomputed with DuckDB on the same
-parquet files, outside the timed window.
+directory. It returns a list of (op index, message) failures, where the
+index is "run" for a check over the whole run, and a dict of the values
+the checks computed. Relational endpoint results, lake counts and the
+exact nearest neighbours are recomputed with DuckDB on the same parquet
+files, outside the timed window.
 """
 import datetime
 import math
@@ -184,7 +185,7 @@ def service_mix(rec, data):
         if err:
             fails.append((op["i"], f"{ep}: {err}"))
     con.close()
-    return fails
+    return fails, {}
 
 
 def same_each_round(rec, keys):
@@ -202,12 +203,36 @@ def same_each_round(rec, keys):
     return fails, first
 
 
+RECALL_FLOOR = 0.7
+
+
+def exact_top10(con, probes):
+    """The exact cosine top-10 of every probe, the probe itself excluded."""
+    rows = con.execute(f"""
+        WITH s AS (SELECT p.vec_id AS pid, e.vec_id,
+              list_cosine_similarity(p.embedding, e.embedding) AS cs
+            FROM embeddings p JOIN embeddings e ON e.vec_id <> p.vec_id
+            WHERE p.vec_id IN ({",".join(str(int(p)) for p in probes)}))
+        SELECT pid, vec_id FROM s
+        QUALIFY row_number() OVER (PARTITION BY pid ORDER BY cs DESC, vec_id) <= 10
+        """).fetchall()
+    out = {}
+    for p, x in rows:
+        out.setdefault(p, set()).add(x)
+    return out
+
+
 def lake_etl(rec, data):
-    keys = ("copy_rows", "merge_rows", "merge_changed", "scd_rows",
-            "scd_current", "sales_rows", "readback_rows", "audit")
-    fails, v = same_each_round(rec, keys)
+    """The lake counts must match DuckDB's; the curation and model stages
+    must agree across rounds, and the ANN search must reach the recall
+    floor against the exact cosine top-10."""
+    lake_keys = ("copy_rows", "merge_rows", "merge_changed", "scd_rows",
+                 "scd_current", "sales_rows", "readback_rows", "audit")
+    fails, v = same_each_round(rec, lake_keys + (
+        "docs", "kept", "pairs", "clusters", "clean",
+        "related", "communities", "recs", "ann", "quality"))
     if v is None:
-        return fails
+        return fails, {}
     f = rec["facts"]
     con = connect(data)
     q = lambda s: con.execute(s).fetchone()[0]
@@ -234,34 +259,22 @@ def lake_etl(rec, data):
         "parts_never_shipped": anti("part", "p_partkey", "lineitem", "l_partkey"),
         "suppliers_never_shipped": anti("supplier", "s_suppkey", "lineitem", "l_suppkey"),
     }
+    exact = exact_top10(con, f["probes"])
     con.close()
-    for k in keys:
+    for k in lake_keys:
         if v[k] != want[k]:
             fails.append(("run", f"{k}: {v[k]} != expected {want[k]}"))
-    return fails
+    if not 0 < v["clean"] <= v["clusters"] <= v["kept"] <= v["docs"]:
+        fails.append(("run", "curation counts out of order: " + str(
+            {k: v[k] for k in ("docs", "kept", "clusters", "clean")})))
+    rel = v["related"]
+    if not rel or len(set(rel)) != len(rel) or f["seed_part"] in rel:
+        fails.append(("run", f"related parts empty, not distinct or include the seed: {rel}"))
+    hits = sum(1 for p, x in v["ann"] if x in exact.get(p, ()))
+    recall = hits / (10 * len(f["probes"]))
+    if recall < RECALL_FLOOR:
+        fails.append(("run", f"recall_at_10 {recall} < {RECALL_FLOOR}"))
+    return fails, {"recall_at_10": recall}
 
 
-def curation(rec, data):
-    fails, v = same_each_round(rec, ("docs", "kept", "pairs", "clusters", "clean"))
-    if v is not None and not (0 < v["clean"] <= v["clusters"] <= v["kept"] <= v["docs"]):
-        fails.append(("run", f"counts out of order: {v}"))
-    return fails
-
-
-RECALL_FLOOR = 0.7
-
-
-def model_refresh(rec, data):
-    fails, v = same_each_round(rec, ("related", "communities", "recs",
-                                     "recall_at_10", "quality"))
-    if v is not None:
-        if v["recall_at_10"] < RECALL_FLOOR:
-            fails.append(("run", f"recall_at_10 {v['recall_at_10']} < {RECALL_FLOOR}"))
-        rel = v["related"]
-        if len(set(rel)) != len(rel) or rec["facts"]["seed_part"] in rel:
-            fails.append(("run", f"related parts not distinct or include the seed: {rel}"))
-    return fails
-
-
-CHECKS = {"service_mix": service_mix, "lake_etl": lake_etl,
-          "curation": curation, "model_refresh": model_refresh}
+CHECKS = {"service_mix": service_mix, "lake_etl": lake_etl}

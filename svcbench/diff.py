@@ -5,7 +5,10 @@
 
 A and B are each a run record written by run.py (.bench_build/records/
 *.json), a directory of records, or a glob. When a side holds several
-records of one workload, each metric is their median. Rows are grouped by
+records of one workload, each metric is their median. A traced record
+also carries its own end-to-end metrics, so a diff of an untraced run
+against the traced run of the same seed shows the whole tracing
+overhead, listeners included. Rows are grouped by
 layer (the metric name up to its first dot; end-to-end metrics first),
 with both values, B - A, and B / A. Telemetry that makes runs
 incomparable (core count, heap, shuffle partitions, versions, load) is
@@ -41,7 +44,8 @@ def load(spec, workload):
 def medians(recs):
     vals, units = {}, {}
     for r in recs:
-        for k, m in r["result"]["metrics"].items():
+        res = r["result"]
+        for k, m in {**res.get("end_to_end", {}), **res["metrics"]}.items():
             vals.setdefault(k, []).append(m["value"])
             units[k] = m["unit"]
     return {k: statistics.median(v) for k, v in vals.items()}, units

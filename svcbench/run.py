@@ -31,7 +31,7 @@ import checks
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
-WORKLOADS = ("service_mix", "lake_etl", "curation", "model_refresh")
+WORKLOADS = ("service_mix", "lake_etl")
 CORES = 4
 XMX = "3g"
 RUN_LIMIT_S = 170
@@ -42,9 +42,6 @@ ADD_OPENS = [x for p in (
     "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
     "sun.security.action", "sun.util.calendar")
     for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
-ENDPOINTS = ("revenueByOrderDate", "nationSummary", "topCustomers",
-             "eventActivity", "supplierRevenue", "partTypeShare",
-             "returnedItems", "marketShare", "searchDocuments")
 
 
 def fail(msg):
@@ -207,8 +204,9 @@ def e2e(rec):
     }
 
 
-def per_layer(rec):
-    """Per-layer metrics of a traced run; 0 for a layer the workload skips."""
+def per_layer(rec, derived):
+    """Per-layer metrics of a traced run; 0 for a layer the workload skips.
+    `derived` holds what the checks computed (the ANN recall)."""
     ops = rec["ops"]
     n = len(ops)
     traced = [o for o in ops if o["traced"]]
@@ -226,14 +224,14 @@ def per_layer(rec):
     m = {
         "Tables.load_s": (lay("Tables.load"), "s"),
         "Tables.load_calls": (lay("Tables.load", "calls"), "count"),
-        "EtlService.build_s": (sum(lay(f"EtlService.{e}") for e in ENDPOINTS), "s"),
+        "EtlService.build_s": (sum(lay(f"EtlService.{e}") for e in rec["endpoints"]), "s"),
         "spark.collect_s": (lay("spark.collect"), "s"),
         "spark.plan_s": (sp["plan_s"] / n, "s"),
         "spark.plan_share": (sp["plan_s"] / sum(o["lat"] for o in ops), "ratio"),
         "spark.driver_only_s": (sp["driver_only_s"] / n, "s"),
         "spark.aqe_replans": (sp["aqe_replans"] / n, "count"),
     }
-    for e in ENDPOINTS:
+    for e in rec["endpoints"]:
         lat = [o["lat"] for o in ops if o["kind"] == e]
         m[f"EtlService.{e}_p50_s"] = (quantile(lat, 0.5) if lat else 0, "s")
     for k, unit in (("jobs", "count"), ("stages", "count"), ("tasks", "count"),
@@ -263,20 +261,17 @@ def per_layer(rec):
         "Caches.storage_peak_bytes": (
             max(rec["window"]["storage_samples_bytes"] or [0]), "bytes"),
     })
-    # the layers only the workloads outside BENCHMARK.json exercise
-    if rec["workload"] == "curation":
-        for name in ("TextOps.qualityScore", "DedupOps.minhashLshPairs",
-                     "DedupOps.clusterResolve", "TextOps.decontaminate"):
-            m[f"{name}_s"] = (lay(name), "s")
-        m["DedupOps.clusterResolve_jobs"] = (lay("DedupOps.clusterResolve", "jobs"), "count")
-        m["DedupOps.pairs"] = (mean_check("pairs"), "count")
-    if rec["workload"] == "model_refresh":
-        for name in ("EtlService.relatedParts", "EtlService.partCommunities",
-                     "EtlService.recommendations", "PqOps.ivfPqSearch",
-                     "EtlService.qualityScores"):
-            m[f"{name}_s"] = (lay(name), "s")
-            m[f"{name}_jobs"] = (lay(name, "jobs"), "count")
-        m["PqOps.recall_at_10"] = (mean_check("recall_at_10"), "ratio")
+    for name in ("TextOps.qualityScore", "DedupOps.minhashLshPairs",
+                 "DedupOps.clusterResolve", "TextOps.decontaminate"):
+        m[f"{name}_s"] = (lay(name), "s")
+    m["DedupOps.clusterResolve_jobs"] = (lay("DedupOps.clusterResolve", "jobs"), "count")
+    m["DedupOps.pairs"] = (mean_check("pairs"), "count")
+    for name in ("EtlService.relatedParts", "EtlService.partCommunities",
+                 "EtlService.recommendations", "PqOps.ivfPqSearch",
+                 "EtlService.qualityScores"):
+        m[f"{name}_s"] = (lay(name), "s")
+        m[f"{name}_jobs"] = (lay(name, "jobs"), "count")
+    m["PqOps.recall_at_10"] = (derived.get("recall_at_10", 0), "ratio")
     tl = [o["lat"] for o in traced]
     ul = [o["lat"] for o in ops if not o["traced"]]
     over = quantile(tl, 0.5) - quantile(ul, 0.5) if tl and ul else 0
@@ -331,11 +326,11 @@ def main(argv=None):
     shutil.rmtree(os.path.join(out, "work"), ignore_errors=True)
     shutil.rmtree(os.path.join(out, "tmp"), ignore_errors=True)
 
-    fails = checks.CHECKS[a.workload](rec, data)
+    fails, derived = checks.CHECKS[a.workload](rec, data)
     bad_ops = {i for i, _ in fails}
     attempted = len(rec["ops"]) + len(rec["warmup"])
     failed = min(attempted, len(bad_ops))
-    metrics = per_layer(rec) if a.trace else e2e(rec)
+    metrics = per_layer(rec, derived) if a.trace else e2e(rec)
     tel["loadavg_after"] = list(os.getloadavg()[:2])
     rec["telemetry"].update(tel)
     rec["telemetry"].update(xmx=XMX, sf=a.sf)
@@ -343,6 +338,11 @@ def main(argv=None):
                      "failed": failed, "check_failures": fails[:50],
                      "metrics": {k: {"value": v, "unit": u}
                                  for k, (v, u) in metrics.items()}}
+    if a.trace:
+        # the traced run's own end-to-end figures, so that diff.py can
+        # set them against an untraced run of the same seed
+        rec["result"]["end_to_end"] = {k: {"value": v, "unit": u}
+                                       for k, (v, u) in e2e(rec).items()}
     rec_dir = os.path.join(BUILD, "records")
     os.makedirs(rec_dir, exist_ok=True)
     with open(os.path.join(rec_dir, name + ".json"), "w") as f:

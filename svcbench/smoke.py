@@ -13,6 +13,8 @@ import os
 import subprocess
 import sys
 
+from run import WORKLOADS
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
@@ -23,7 +25,7 @@ def main():
     listed = {w["name"] for w in bench["workloads"]}
     want = {0: {m["name"] for m in bench["end_to_end"]},
             1: {m["name"] for m in bench["per_layer"]}}
-    for w in ("service_mix", "lake_etl", "curation", "model_refresh"):
+    for w in WORKLOADS:
         for trace in (0, 1):
             cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", w,
                    "--seed", "7", "--seconds", "1", "--trace", str(trace),

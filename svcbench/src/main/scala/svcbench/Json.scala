@@ -1,68 +1,29 @@
 package svcbench
 
-/** Minimal JSON encoder for the run record: maps, sequences, strings,
-  * numbers, booleans, options and null. */
+import com.fasterxml.jackson.core.StreamWriteFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** JSON for the run record, written by Jackson once the Spark values in
+  * it are turned into the plain values the checker reads: rows into
+  * lists, timestamps into ISO-8601 UTC strings, non-finite doubles into
+  * null. */
 object Json {
+  private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
+    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN).build()
 
-  def encode(v: Any): String = {
-    val sb = new StringBuilder
-    write(sb, v)
-    sb.toString
-  }
+  def encode(v: Any): String = mapper.writeValueAsString(plain(v))
 
-  private def write(sb: StringBuilder, v: Any): Unit = v match {
-    case null | None => sb ++= "null"
-    case Some(x) => write(sb, x)
-    case s: String => quote(sb, s)
-    case b: Boolean => sb ++= b.toString
-    case d: Double =>
-      sb ++= (if (d.isNaN || d.isInfinite) "null" else d.toString)
-    case f: Float => write(sb, f.toDouble)
-    case n: Int => sb ++= n.toString
-    case n: Long => sb ++= n.toString
-    case n: Short => sb ++= n.toString
-    case n: Byte => sb ++= n.toString
-    case d: java.math.BigDecimal => sb ++= d.toPlainString
-    case d: BigDecimal => sb ++= d.bigDecimal.toPlainString
-    case t: java.sql.Timestamp => quote(sb, t.toInstant.toString)
-    case t: java.time.Instant => quote(sb, t.toString)
-    case d: java.sql.Date => quote(sb, d.toString)
+  private def plain(v: Any): Any = v match {
+    case Some(x) => plain(x)
+    case r: org.apache.spark.sql.Row => r.toSeq.map(plain)
+    case t: java.sql.Timestamp => t.toInstant.toString
+    case d: java.sql.Date => d.toString
+    case d: Double if d.isNaN || d.isInfinite => null
     case m: scala.collection.Map[_, _] =>
-      sb += '{'
-      var first = true
-      m.foreach { case (k, x) =>
-        if (!first) sb += ','
-        first = false
-        quote(sb, k.toString)
-        sb += ':'
-        write(sb, x)
-      }
-      sb += '}'
-    case a: Array[_] => write(sb, a.toSeq)
-    case s: Iterable[_] =>
-      sb += '['
-      var first = true
-      s.foreach { x =>
-        if (!first) sb += ','
-        first = false
-        write(sb, x)
-      }
-      sb += ']'
-    case r: org.apache.spark.sql.Row => write(sb, r.toSeq)
-    case other => quote(sb, other.toString)
-  }
-
-  private def quote(sb: StringBuilder, s: String): Unit = {
-    sb += '"'
-    s.foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < 0x20 => sb ++= f"\\u${c.toInt}%04x"
-      case c => sb += c
-    }
-    sb += '"'
+      m.map { case (k, x) => k.toString -> plain(x) }
+    case a: Array[_] => a.toSeq.map(plain)
+    case s: Iterable[_] => s.map(plain)
+    case other => other
   }
 }

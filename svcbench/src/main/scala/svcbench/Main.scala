@@ -138,12 +138,14 @@ object Main {
     val ws = System.nanoTime()
     val deadline = ws + (seconds * 1e9).toLong
     // the first op index taken after the deadline fixes the end of the
-    // window: at least `minOps`, rounded up to a whole block
+    // window: at least `minOps` (two when tracing, so that one op is
+    // traced and one is not), rounded up to a whole block
+    val minOps = if (trace) math.max(w.minOps, 2) else w.minOps
     val stopAt = new AtomicLong(Long.MaxValue)
     def take(): Long = {
       val i = next.getAndIncrement()
       if (System.nanoTime() >= deadline) {
-        val end = math.max(i, w.minOps.toLong)
+        val end = math.max(i, minOps.toLong)
         stopAt.compareAndSet(Long.MaxValue, (end + w.block - 1) / w.block * w.block)
       }
       i
@@ -171,6 +173,7 @@ object Main {
     val record = Map(
       "workload" -> name, "seed" -> seed, "seconds" -> seconds,
       "trace" -> trace, "unit" -> w.unit, "clients" -> w.clients,
+      "endpoints" -> ServiceMix.endpoints,
       "telemetry" -> Map(
         "spark_version" -> spark.version,
         "java_version" -> System.getProperty("java.version"),

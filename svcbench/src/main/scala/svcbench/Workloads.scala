@@ -54,14 +54,9 @@ trait Workload {
 }
 
 object Workloads {
-  val names: Seq[String] = Seq("service_mix", "lake_etl", "curation",
-    "model_refresh")
-
   def apply(name: String, c: Ctx): Workload = name match {
     case "service_mix" => new ServiceMix(c)
     case "lake_etl" => new LakeEtl(c)
-    case "curation" => new Curation(c)
-    case "model_refresh" => new ModelRefresh(c)
     case other => throw new IllegalArgumentException(s"unknown workload: $other")
   }
 
@@ -69,6 +64,12 @@ object Workloads {
     if (f.isFile) (f.length, if (f.getName.startsWith("part-")) 1L else 0L)
     else Option(f.listFiles).getOrElse(Array.empty[File]).map(dirBytes)
       .foldLeft((0L, 0L)) { case ((b, n), (b1, n1)) => (b + b1, n + n1) }
+}
+
+object ServiceMix {
+  val endpoints = Vector("revenueByOrderDate", "nationSummary",
+    "topCustomers", "eventActivity", "supplierRevenue", "partTypeShare",
+    "returnedItems", "marketShare", "searchDocuments")
 }
 
 /** The nine read endpoints of [[EtlService]], called by two closed-loop
@@ -82,10 +83,9 @@ final class ServiceMix(c: Ctx) extends Workload {
   val minOps = 27
   val unit = "request"
 
+  import ServiceMix.endpoints
+
   private val svc = new EtlService(c.spark)
-  private val endpoints = Vector("revenueByOrderDate", "nationSummary",
-    "topCustomers", "eventActivity", "supplierRevenue", "partTypeShare",
-    "returnedItems", "marketShare", "searchDocuments")
   private val segments = Vector("AUTOMOBILE", "BUILDING", "FURNITURE",
     "HOUSEHOLD", "MACHINERY")
   private val regions = Vector("AFRICA", "AMERICA", "ASIA", "EUROPE",
@@ -214,16 +214,22 @@ final class ServiceMix(c: Ctx) extends Workload {
 /** The reference's COPY → transform → UNLOAD core, one round at a time:
   * COPY the staged CSV lineitem and JSON orders into the lake, apply a
   * seeded CDC changeset to customer, build the SCD-2 history of events,
-  * join and UNLOAD by year, read one year back, audit integrity. */
+  * join and UNLOAD by year, read one year back, audit integrity. The
+  * round then curates the documents ([[Curation]]) and refreshes the
+  * models from the copied tables ([[ModelRefresh]]), so that the text,
+  * dedup, graph, ML and vector layers are measured with the lake's, one
+  * after another, each on the round's critical path. */
 final class LakeEtl(c: Ctx) extends Workload {
   val clients = 1
-  val warmupOps = 4
-  val minOps = 3
+  val warmupOps = 1
+  val minOps = 1
   val unit = "round"
 
   private val svc = new EtlService(c.spark)
   private val stage = s"${c.data}/stage"
   private val lake = s"${c.work}/lake"
+  private val curation = new Curation(c, s"$lake/documents")
+  private val models = new ModelRefresh(c)
   private var updates, deletes, inserts = Seq.empty[Long]
   private var readYear = 0
   private var inputRows = 0L
@@ -241,7 +247,8 @@ final class LakeEtl(c: Ctx) extends Workload {
 
   override def facts: Map[String, Any] = Map("updates" -> updates.size,
     "inserts" -> inserts.size, "deletes" -> deletes.size, "year" -> readYear,
-    "input_rows" -> inputRows, "input_bytes" -> inputBytes)
+    "input_rows" -> inputRows, "input_bytes" -> inputBytes) ++
+    curation.facts ++ models.facts
 
   def setup(): Map[String, Double] = {
     val r = c.rng(0x1a4eL)
@@ -251,12 +258,15 @@ final class LakeEtl(c: Ctx) extends Workload {
     deletes = picked.drop(updates.size).take(picked.size / 8)
     inserts = (0 until picked.size / 4).map(j => nCust + 1000L * r.nextInt(50) + j)
     readYear = 1995 + r.nextInt(7)
-    inputRows = Seq("lineitem", "orders", "customer", "events", "part",
-      "supplier").map(c.table(_).count()).sum + updates.size + inserts.size +
-      deletes.size
+    val tables = Seq("lineitem", "orders", "customer", "events", "part",
+      "supplier", "documents", "embeddings")
+    inputRows = tables.map(c.table(_).count()).sum + updates.size +
+      inserts.size + deletes.size
     inputBytes = (Seq(s"$stage/lineitem", s"$stage/orders") ++
-      Seq("customer", "events", "part", "supplier").map(n =>
-        s"${c.data}/$n.parquet")).map(p => Workloads.dirBytes(new File(p))._1).sum
+      tables.drop(2).map(n => s"${c.data}/$n.parquet"))
+      .map(p => Workloads.dirBytes(new File(p))._1).sum
+    curation.setup()
+    models.setup()
     Map.empty
   }
 
@@ -312,6 +322,8 @@ final class LakeEtl(c: Ctx) extends Workload {
       svc.integrityAudit(ord, li, c.table("customer"), c.table("part"),
         c.table("supplier")).collect()
     }
+    val curated = curation.run()
+    val refreshed = models.run(li, ord)
     c.heapSample()
     c.span("Caches.clear")(Caches.clear(c.spark))
     val (bytes, files) = Workloads.dirBytes(new File(lake))
@@ -324,38 +336,27 @@ final class LakeEtl(c: Ctx) extends Workload {
       "bytes_read" -> inputBytes, "bytes_written" -> bytes,
       "files_written" -> files,
       "rows_written" -> (nLi + nOrd + merged.getLong(0) + scd.getLong(0) +
-        sales)))
+        sales + curated("clean").asInstanceOf[Long])) ++ curated ++ refreshed)
   }
 }
 
-/** The curation chain over documents: quality gate, MinHash-LSH near-dup
-  * pairs at Jaccard 0.6, cluster resolution, decontamination against a
-  * seeded held-out source, UNLOAD by language. Every stage is an api
-  * call (not a memoized query key) and the round ends with
-  * `Caches.clear`, so every round does the full work. */
-final class Curation(c: Ctx) extends Workload {
-  val clients = 1
-  val warmupOps = 3
-  val minOps = 3
-  val unit = "round"
-
+/** The curation chain over documents, as stages of a lake round:
+  * quality gate, MinHash-LSH near-dup pairs at Jaccard 0.6, cluster
+  * resolution, decontamination against a seeded held-out source, UNLOAD
+  * by language. Every stage is an api call, not a memoized query key,
+  * and the round ends with `Caches.clear`, so every round does the full
+  * work. */
+final class Curation(c: Ctx, out: String) {
   private val heldOut = s"src${c.rng(0xc0a7L).nextInt(20)}"
-  private val out = s"${c.work}/curated"
   private var nDocs = 0L
-  private var docBytes = 0L
 
-  override def facts: Map[String, Any] = Map("held_out" -> heldOut,
-    "input_bytes" -> docBytes)
+  def facts: Map[String, Any] = Map("held_out" -> heldOut)
 
-  def setup(): Map[String, Double] = {
-    nDocs = c.table("documents").count()
-    docBytes = Workloads.dirBytes(new File(s"${c.data}/documents.parquet"))._1
-    Map.empty
-  }
+  def setup(): Unit = nDocs = c.table("documents").count()
 
-  def op(i: Long): OpOut = {
+  def run(): Map[String, Any] = {
     // each stage is persisted and counted, as a pipeline reporting its
-    // counts would; `Caches.clear` below releases them
+    // counts would; the round's `Caches.clear` releases them
     def stage(df: DataFrame): (DataFrame, Long) = {
       val p = Caches.persistTracked(df)
       (p, p.count())
@@ -384,90 +385,76 @@ final class Curation(c: Ctx) extends Workload {
         keepers.join(clean, "doc_id").select("doc_id", "source", "text", "lang"),
         out, Seq("lang"))
     }
-    c.heapSample()
-    c.span("Caches.clear")(Caches.clear(c.spark))
-    val (bytes, files) = Workloads.dirBytes(new File(out))
-    OpOut("round", nDocs, Map("docs" -> nDocs, "kept" -> nKept,
-      "pairs" -> nPairs, "clusters" -> clusters, "clean" -> nClean,
-      "bytes_read" -> docBytes, "bytes_written" -> bytes,
-      "files_written" -> files))
+    Map("docs" -> nDocs, "kept" -> nKept, "pairs" -> nPairs,
+      "clusters" -> clusters, "clean" -> nClean)
   }
 }
 
-/** The iterative model builds: random-walk-with-restart related parts,
-  * label-propagation part communities, item-CF recommendations for a
-  * seeded customer sample, IVF-PQ training plus seeded probes, and the
-  * perceptron quality gate. Parameters are drawn once per run, so every
-  * round must return the same results. */
-final class ModelRefresh(c: Ctx) extends Workload {
-  val clients = 1
-  val warmupOps = 1
-  val minOps = 3
-  val unit = "round"
+/** The iterative model builds, as stages of a lake round:
+  * random-walk-with-restart related parts, label-propagation part
+  * communities and item-CF recommendations over a seeded sixteenth of
+  * the orders, IVF-PQ training plus seeded probes over every embedding, and
+  * the perceptron quality gate over every document. Parameters are drawn
+  * once per run, so every round must return the same results. */
+final class ModelRefresh(c: Ctx) {
+  import ModelRefresh._
 
+  private val slice = c.rng(0x30deL).nextInt(Slices)
   private val svc = new EtlService(c.spark)
   private var seedPart = 0L
   private var customers, probes = Seq.empty[Long]
-  private var exact = Map.empty[Long, Set[Long]]
-  private var inputRows = 0L
 
-  override def facts: Map[String, Any] = Map("seed_part" -> seedPart,
-    "probes" -> probes.size)
+  def facts: Map[String, Any] = Map("seed_part" -> seedPart,
+    "customers" -> customers.size, "probes" -> probes)
 
-  def setup(): Map[String, Double] = {
-    val t0 = System.nanoTime()
-    val r = c.rng(0x30deL)
-    def keys(t: String) = c.table(t).count()
-    seedPart = (r.nextDouble() * keys("part")).toLong
-    customers = r.shuffle((0L until keys("customer")).toVector).take(50).sorted
-    probes = r.shuffle((0L until keys("embeddings")).toVector).take(20).sorted
-    // exact cosine top-10 of every probe, computed outside Spark
-    val vecs = c.table("embeddings").select("vec_id", "embedding").collect()
-      .map { r =>
-        val v = r.getSeq[Float](1).map(_.toDouble)
-        val n = math.sqrt(v.map(x => x * x).sum)
-        r.getLong(0) -> v.map(_ / n)
-      }
-    val byId = vecs.toMap
-    exact = probes.map { p =>
-      val cos = vecs.collect { case (id, v) if id != p =>
-        (-byId(p).zip(v).map { case (a, b) => a * b }.sum, id) }
-      p -> cos.sorted.take(10).map(_._2).toSet
-    }.toMap
-    inputRows = Seq("lineitem", "orders", "embeddings", "documents")
-      .map(c.table(_).count()).sum
-    Map("exact_knn_s" -> secs(t0))
+  private def inSlice(key: String): Column =
+    pmod(col(key), lit(Slices.toLong)) === slice
+
+  def setup(): Unit = {
+    def draw(df: DataFrame, key: String, n: Int): Seq[Long] =
+      df.select(key).distinct().orderBy(xxhash64(col(key), lit(c.seed)))
+        .limit(n).collect().map(_.getLong(0)).toSeq.sorted
+    seedPart = draw(c.table("lineitem").filter(inSlice("l_orderkey")),
+      "l_partkey", 1).head
+    customers = draw(c.table("orders").filter(inSlice("o_orderkey")),
+      "o_custkey", 50)
+    probes = draw(c.table("embeddings"), "vec_id", 20)
   }
 
-  def op(i: Long): OpOut = {
+  def run(lineitem: DataFrame, orders: DataFrame): Map[String, Any] = {
     import c.spark.implicits._
-    val li = c.table("lineitem")
+    val li = lineitem.filter(inSlice("l_orderkey"))
     val related = c.span("EtlService.relatedParts")(
-      svc.relatedParts(li, seedPart, 10).collect())
+      svc.relatedParts(li, seedPart, 10, iters = 2).collect())
     val comm = c.span("EtlService.partCommunities")(
       svc.partCommunities(li).agg(count(lit(1)),
         countDistinct(col("community"))).head())
     val recs = c.span("EtlService.recommendations")(
-      svc.recommendations(li, c.table("orders"), 5,
+      svc.recommendations(li, orders.filter(inSlice("o_orderkey")), 5,
         customers = Some(customers.toDF("c_custkey"))).collect())
     val ann = c.span("PqOps.ivfPqSearch") {
       val emb = c.table("embeddings")
       val pr = emb.filter(col("vec_id").isin(probes: _*))
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      PqOps.ivfPqSearch(emb, "vec_id", "embedding", 64, 8, 4, 16, 16, 4,
-        pr, 6, 48, 10).select("probe_id", "vec_id").collect()
+      // 8 cells and 16 sub-quantizers of 16 centroids, each trained for
+      // two Lloyd rounds on a quarter of the vectors; every cell probed,
+      // 64 shortlisted and re-ranked exactly to the top 10
+      PqOps.ivfPqSearch(emb, "vec_id", "embedding", 64, 8, 2, 16, 16, 2,
+        pr, 8, 64, 10, trainOneIn = 4).select("probe_id", "vec_id").collect()
     }
-    val hits = ann.count(r => exact(r.getLong(0)).contains(r.getLong(1)))
     val quality = c.span("EtlService.qualityScores")(
       svc.qualityScores(c.table("documents")).agg(count(lit(1)),
         sum(when(col("score") > 0, 1).otherwise(0))).head())
-    c.heapSample()
-    c.span("Caches.clear")(Caches.clear(c.spark))
-    OpOut("round", inputRows, Map(
-      "related" -> related.map(_.getLong(0)).toSeq,
+    Map("related" -> related.map(_.getLong(0)).toSeq,
       "communities" -> Seq(comm.getLong(0), comm.getLong(1)),
       "recs" -> recs.length,
-      "recall_at_10" -> hits.toDouble / (10 * probes.size),
-      "quality" -> Seq(quality.getLong(0), quality.getLong(1))))
+      "ann" -> ann.map(r => (r.getLong(0), r.getLong(1))).sorted
+        .map { case (p, v) => Seq(p, v) }.toSeq,
+      "quality" -> Seq(quality.getLong(0), quality.getLong(1)))
   }
+}
+
+object ModelRefresh {
+  /** The graph models read one of this many slices of the orders. */
+  val Slices = 16
 }
