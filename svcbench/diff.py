@@ -6,9 +6,9 @@
 A and B are each a run record written by run.py (.bench_build/records/
 *.json), a directory of records, or a glob. When a side holds several
 records of one workload, each metric is their median. A traced record
-also carries its own end-to-end metrics, so a diff of an untraced run
-against the traced run of the same seed shows the whole tracing
-overhead, listeners included. Rows are grouped by
+also carries the latency_p50_s of its traced ops, so a diff of an
+untraced run against the traced run of the same seed shows the whole
+tracing overhead, listeners included. Rows are grouped by
 layer (the metric name up to its first dot; end-to-end metrics first),
 with both values, B - A, and B / A. Telemetry that makes runs
 incomparable (core count, heap, shuffle partitions, versions, load) is

@@ -25,9 +25,9 @@ final case class OpRec(i: Long, client: Int, kind: String, t: Double,
   * is timed from JVM start; writing derived inputs that do not exist
   * yet is not. The measured window then runs the workload's closed-loop
   * clients for `seconds`, then on until it holds the workload's minimum
-  * number of ops, rounded up to whole blocks. With tracing on, odd-numbered ops
-  * are traced and even ones are not, so the record carries the tracing
-  * overhead of the same window. */
+  * number of ops, rounded up to whole blocks. With tracing on,
+  * even-numbered ops are traced and odd ones are not, so the record
+  * carries the tracing overhead of the same window. */
 object Main {
 
   private val pauseNs = new ThreadLocal[Long] {
@@ -154,7 +154,7 @@ object Main {
       val th = new Thread(() => {
         var i = take()
         while (i < stopAt.get) {
-          ops.add(runOp(i, cl, traced = trace && i % 2 == 1, ws))
+          ops.add(runOp(i, cl, traced = trace && i % 2 == 0, ws))
           i = take()
         }
       }, s"client-$cl")
