@@ -112,10 +112,15 @@ class PropertySpec extends SparkSpec {
       val model = (0 until n.toInt).map(i => i.toLong -> find(i).toLong).toMap
       val nodes = (0L until n.toLong).toDF("id")
       val pairs = es.toDF("id_lo", "id_hi")
-      val got = graft.operators.PipelineQueries
-        .connectedComponents(nodes, pairs)
-        .as[(Long, Long)].collect().toMap
-      assert(got == model, s"n=$n edges=${es.size}")
+      // the default cutover finishes every spec graph on the driver; 0
+      // runs contraction rounds to an empty edge set, 3 runs rounds and
+      // then the driver finish on the residue
+      for (cutover <- Seq(500000L, 0L, 3L)) {
+        val got = graft.operators.PipelineQueries
+          .connectedComponents(nodes, pairs, cutover)
+          .as[(Long, Long)].collect().toMap
+        assert(got == model, s"n=$n edges=${es.size} cutover=$cutover")
+      }
     }
   }
 
