@@ -80,7 +80,7 @@ object SharedMemos {
       val (tr, sy) = operators.CorpusStatsQueries.bpeArtifacts(s, dir)
       force(tr); force(sy)
     }),
-    // three-landmark multi-source BFS levels (q232, q290)
+    // three-landmark multi-source BFS levels (q164, q232, q290)
     "shared:landmark_bfs" ->
       (s => force(operators.GraphQueries.landmarkBfs(s, dir))),
     // per-(doc, term) frequency table — the retrieval family's shared

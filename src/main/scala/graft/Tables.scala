@@ -136,16 +136,6 @@ object Tables {
   private val eventsTsNanos =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
-  /** True when the parquet footer stores `ts` as TIMESTAMP(NANOS). With
-    * `nanosAsLong` set, schema inference surfaces a NANOS column as
-    * LongType while µs/ms columns infer as a timestamp type — so the
-    * inferred type IS the footer's unit, and the read path branches on
-    * ground truth instead of assuming what the generator wrote. The
-    * probe scopes the conf flip to itself (restores the previous value
-    * after) so a µs-fixture session is left untouched; the NANOS read
-    * path in [[load]] scopes it to an isolated child session instead
-    * (see [[nanosSession]]) because the conf must still be set when
-    * the returned frame EXECUTES, not just at plan time. */
   /** Fixture-state fingerprint for the driver-side caches: the max
     * lastModified across the path AND its direct children. A bare
     * directory mtime misses an in-place file rewrite (the directory
@@ -160,19 +150,19 @@ object Tables {
     else kids.foldLeft(f.lastModified())((m, k) => math.max(m, k.lastModified()))
   }
 
+  /** True when the parquet footer stores `ts` as TIMESTAMP(NANOS). With
+    * `nanosAsLong` set, schema inference surfaces a NANOS column as
+    * LongType while µs/ms columns infer as a timestamp type — so the
+    * inferred type IS the footer's unit, and the read path branches on
+    * ground truth instead of assuming what the generator wrote. The
+    * inference runs on the isolated [[nanosSession]], which carries
+    * `nanosAsLong`, so the caller's session conf is never written and a
+    * thread planning on it concurrently cannot see a flipped value. */
   private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
     val key = path + "@" + fixtureMtime(path)
-    eventsTsNanos.computeIfAbsent(key, { _ =>
-      val confKey = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = spark.conf.getOption(confKey)
-      spark.conf.set(confKey, "true")
-      try Boolean.box(spark.read.parquet(path).schema.find(_.name == "ts")
-        .exists(_.dataType == LongType))
-      finally prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None    => spark.conf.unset(confKey)
-      }
-    })
+    eventsTsNanos.computeIfAbsent(key, _ =>
+      Boolean.box(nanosSession(spark).read.parquet(path).schema
+        .find(_.name == "ts").exists(_.dataType == LongType)))
   }
 
   /** Per-(session, path, mtime) cache of the loaded frame: each

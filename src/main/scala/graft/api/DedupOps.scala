@@ -1,6 +1,8 @@
 package graft.api
 
 import graft.Dets.safeDiv
+import graft.Iterate
+import graft.Iterate.{Concurrent, Sequential}
 import graft.functions.{GraftFunctions, TextFunctions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -298,14 +300,125 @@ object DedupOps {
       .select("id_lo", "id_hi", "hd")
   }
 
-  /** Connected components over an undirected pair set: every node ends
-    * labelled with the smallest reachable `id`. Delegates to the
-    * iterative min-label-propagation + pointer-jumping loop (see
-    * [[graft.operators.PipelineQueries.connectedComponents]] for the
-    * per-round mechanics and scale notes). `nodes` needs an `id` column,
-    * `pairs` needs `id_lo`/`id_hi`. Returns (id, lab). */
-  def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame =
-    graft.operators.PipelineQueries.connectedComponents(nodes, pairs)
+  /** Connected components by star contraction over an undirected pair
+    * set: every node ends labelled with the smallest `id` reachable
+    * through `pairs`. `nodes` needs a long `id` column, `pairs` long
+    * `id_lo`/`id_hi` columns; returns (id, lab).
+    *
+    * Each round hooks every active vertex to the minimum of itself and
+    * its neighbours (`m`), composes that hook into the running
+    * vertex→representative map, and CONTRACTS the edge set to
+    * (m(lo), m(hi)) with self-loops dropped and duplicates merged. The
+    * component minimum is a fixpoint of `m`, so labels only ever move
+    * down toward it, and the contracted graph loses its non-minimal
+    * local structure each round — on clique-heavy near-dup graphs the
+    * edge set collapses almost entirely after one round, so only round
+    * 0 pays a full pass over the pair table. Path graphs halve per
+    * round (the pointer-jump bound). Termination: every contracted
+    * edge's max endpoint is ≤ some pre-contraction edge's MIN endpoint,
+    * so the edge set's frontier strictly descends until empty.
+    *
+    * Round state goes through [[graft.Iterate]]: the edge set is
+    * Sequential (the round's own edge count fills it), the
+    * representative map is Sequential (nothing reads it until after
+    * the loop, whose final pass composes the cached per-round hooks),
+    * and the hook is Concurrent (the contraction reads it from two join
+    * sides, one per endpoint).
+    *
+    * Scale shape: the representative map holds only vertices that
+    * appear in some pair (near-dup participants, not the corpus);
+    * `nodes` is touched exactly once, by the final left join. Joins
+    * carry no broadcast hints — AQE broadcasts the hook/rep tables
+    * while they fit and falls back to shuffle joins past that. Once
+    * contraction shrinks the live graph to at most `localCutover` edges
+    * it is collected and finished with driver-side union-find — the
+    * cluster-level residue of a 100 TB dedup graph is a few MB, and
+    * solving it locally replaces O(log d) more rounds of job overhead
+    * with one collect bounded by the cutover, not the data. PropertySpec
+    * checks the result against union-find with the driver finish only,
+    * with contraction rounds only, and with both.
+    */
+  def connectedComponents(nodes: DataFrame, pairs: DataFrame,
+    localCutover: Long = 500000): DataFrame = {
+    // canonical lo<hi edges; near-dup producers already emit unique
+    // ordered pairs, so no distinct here — the first contraction dedups
+    var e = Iterate.keep(pairs
+      .select(least(col("id_lo"), col("id_hi")).as("lo"),
+        greatest(col("id_lo"), col("id_hi")).as("hi"))
+      .filter(col("lo") =!= col("hi")), Sequential)
+    // rep: pair-participating vertex -> current contracted representative
+    var rep: DataFrame = null
+    var nEdges = e.count()
+    var iter = 0
+    while (nEdges > localCutover && iter < 50) {
+      // hook: m(x) = min(x, min neighbour of x) over the live edge set
+      val m = Iterate.keep(e
+        .select(col("lo").as("x"), col("hi").as("y"))
+        .union(e.select(col("hi").as("x"), col("lo").as("y")))
+        .groupBy("x").agg(min("y").as("my"))
+        .select(col("x"), least(col("x"), col("my")).as("m")), Concurrent)
+      // compose the hook into the global representative map; vertices
+      // whose representative went edge-less keep their label (left join)
+      rep = Iterate.keep(
+        if (rep == null) m.select(col("x").as("id"), col("m").as("lab"))
+        else rep.join(m, rep("lab") === m("x"), "left")
+          .select(rep("id"), coalesce(col("m"), rep("lab")).as("lab")),
+        Sequential)
+      // contract: rewrite both endpoints through m, drop self-loops,
+      // merge parallel edges — the only full edge pass of the round
+      val mlo = m.select(col("x").as("lo"), col("m").as("ml"))
+      val mhi = m.select(col("x").as("hi"), col("m").as("mh"))
+      e = Iterate.keep(e
+        .join(mlo, "lo").join(mhi, "hi")
+        .select(least(col("ml"), col("mh")).as("lo"),
+          greatest(col("ml"), col("mh")).as("hi"))
+        .filter(col("lo") =!= col("hi"))
+        .distinct(), Sequential)
+      nEdges = e.count()
+      iter += 1
+    }
+    // the driver-side finish is bounded by the CUTOVER, not the data —
+    // if the iteration cap (not the edge count) ended the loop, refuse
+    // to collect an unbounded edge set and name the pathology instead
+    if (nEdges > localCutover)
+      throw new IllegalStateException(
+        s"connectedComponents: $nEdges edges remain after $iter contraction" +
+          s" rounds (cutover $localCutover) — graph is not contracting;" +
+          " raise localCutover or investigate the edge distribution")
+    if (nEdges > 0) {
+      // residual graph fits on the driver: min-root union-find with path
+      // compression, then one small mapping composed into rep
+      val es = e.select(col("lo"), col("hi")).collect()
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
+        r
+      }
+      es.foreach { row =>
+        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val verts = scala.collection.mutable.LongMap.empty[Long]
+      es.foreach { row =>
+        verts(row.getLong(0)) = 0L; verts(row.getLong(1)) = 0L
+      }
+      verts.keys.foreach(v => verts(v) = find(v))
+      val spark = nodes.sparkSession
+      import spark.implicits._
+      val local = verts.toSeq.toDF("x", "m")
+      rep =
+        if (rep == null) local.select(col("x").as("id"), col("m").as("lab"))
+        else rep.join(local, rep("lab") === local("x"), "left")
+          .select(rep("id"), coalesce(col("m"), rep("lab")).as("lab"))
+    }
+    val n = nodes.select(col("id"))
+    if (rep == null) n.select(col("id"), col("id").as("lab"))
+    else n.join(rep.select(col("id"), col("lab")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("lab"), col("id")).as("lab"))
+  }
 
   /** Full cluster resolution: label every row of `docs` with the cluster
     * it belongs to under `pairs` (any near-dup pair set — exact, LSH, or

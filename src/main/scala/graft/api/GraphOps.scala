@@ -1,6 +1,7 @@
 package graft.api
 
-import graft.Dets
+import graft.{Dets, Iterate}
+import graft.Iterate.{Concurrent, Sequential}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,7 +26,8 @@ import org.apache.spark.sql.functions._
   * documented to run on a SUPPORT-FLOORED backbone (or the q228-style
   * apex sample) because raw Σ deg² wedge enumeration does not survive
   * dense graphs; label propagation is one equi-join + argmax per
-  * round, localCheckpointed so round k never replays round k−1.
+  * round. Every loop here keeps its round state through
+  * [[graft.Iterate]], so round k never replays round k−1.
   */
 object GraphOps {
 
@@ -147,8 +149,8 @@ object GraphOps {
     * 7th-decimal …5 boundaries (e.g. 0.000235/94 = 2.5e-6), where
     * Spark rounds the shortest decimal rendering of the double and
     * DuckDB the exact binary value — a measured 1-ulp divergence at
-    * sf0.01. Each iteration localCheckpoints so round k never replays
-    * round k−1 (the q153 multi-job convention). */
+    * sf0.01. The mass vector is kept per round as
+    * [[graft.Iterate.Sequential]] state. */
   def randomWalkRestart(und: DataFrame, xCol: String, yCol: String,
     wCol: String, seed: DataFrame, damping: Double, iters: Int)
   : DataFrame = {
@@ -166,9 +168,8 @@ object GraphOps {
     val wdeg = ed0.groupBy("u").agg(sum(col("w")).as("wdeg"))
     val ed = ed0.join(wdeg, Seq("u")).localCheckpoint(true)
     val s = seed.select(col("v")).localCheckpoint(true)
-    var r = s.withColumn("pr6", lit(Micro))
-    var it = 0
-    while (it < iters) {
+    val r0 = s.withColumn("pr6", lit(Micro))
+    Iterate.rounds(r0, iters, Sequential) { (r, _) =>
       val contrib = ed
         .join(r.select(col("v").as("u"), col("pr6").as("pru6")), Seq("u"))
         .select(col("v"),
@@ -177,21 +178,12 @@ object GraphOps {
       // sparse union of the contribution set and the seed row: the
       // seed may be absent from round 1's contributions (no self
       // loops), and absent vertices must stay absent, not become 0s
-      // r15: per-round persistTracked (lazy cache) — the r14 bare form
-      // (no cap at all) measured SLOWER on the driver bench
-      // (3.05 → 3.77 s): the unrolled multi-round plan's analysis and
-      // AQE re-planning outgrew the jobs it saved. The persist caps
-      // the plan at one InMemoryRelation per round without the r13
-      // eager checkpoint jobs (the q248 pattern).
-      r = graft.Caches.persistTracked(
-        contrib.join(s.withColumn("st", lit(1)), Seq("v"), "full")
-          .select(col("v"),
-            (when(col("st") === 1, lit(restartMicro)).otherwise(lit(0L))
-              + expr(s"(2L * $dNum * coalesce(sc6, 0L) + $dDen)" +
-                s" div (2L * $dDen)")).as("pr6")))
-      it += 1
-    }
-    r.select(col("v"), (col("pr6").cast("double") / Micro).as("pr"))
+      contrib.join(s.withColumn("st", lit(1)), Seq("v"), "full")
+        .select(col("v"),
+          (when(col("st") === 1, lit(restartMicro)).otherwise(lit(0L))
+            + expr(s"(2L * $dNum * coalesce(sc6, 0L) + $dDen)" +
+              s" div (2L * $dDen)")).as("pr6"))
+    }.select(col("v"), (col("pr6").cast("double") / Micro).as("pr"))
   }
 
   /** Weighted-Jaccard (Ruzicka) similarity between adjacency
@@ -283,8 +275,9 @@ object GraphOps {
     * Returns (src, v, lvl) with lvl = hop distance, min-level
     * deduplicated per (src, v); vertices beyond `maxLvl` hops carry no
     * row. Each level is one equi-join of the frontier against the
-    * edge relation, localCheckpointed so level k never replays k−1
-    * (the q164 convention, generalized).
+    * edge relation; the distance set is [[graft.Iterate.Concurrent]]
+    * state, because the frontier and seen sides of the next level's
+    * join both read it.
     *
     * `seeds` holds one seed vertex per row in column `seedCol`
     * (default "src"); the returned frame always names it `src`
@@ -294,32 +287,19 @@ object GraphOps {
     val u = und.select(col(xCol).as("x"), col(yCol).as("y"))
     val ed = u.select(col("x").as("u"), col("y").as("v"))
       .unionAll(u.select(col("y").as("u"), col("x").as("v")))
-    // Per-level EAGER localCheckpoint is load-bearing here (r15
-    // measured, ScaleBench sf0.5 interleaved minima): the next level
-    // reads `dist` from CONCURRENT join subtrees (frontier side and
-    // seen side of one SortMergeJoin), and with a lazy persist both
-    // sides race the cache fill and recompute the level from lineage —
-    // recursively, so the whole traversal re-executes per level
-    // (q164 5.0 → 10.9 s, q232 5.8 → 12.3 s under the lazy form).
-    // The q248/q153 persist pattern only works when the readers are
-    // SEQUENTIAL (broadcast build before stream); BFS's are not.
-    var dist = seeds.select(col(seedCol).as("src"))
-      .withColumn("v", col("src")).withColumn("lvl", lit(0))
-      .localCheckpoint(true)
-    var lvl = 0
-    while (lvl < maxLvl) {
-      val frontier = dist.filter(col("lvl") === lvl)
-      val next = frontier.select(col("src"), col("v").as("u"))
+    val seeded = Iterate.keep(seeds.select(col(seedCol).as("src"))
+      .withColumn("v", col("src")).withColumn("lvl", lit(0)), Concurrent)
+    Iterate.rounds(seeded, maxLvl, Concurrent) { (dist, lvl) =>
+      val next = dist.filter(col("lvl") === lvl)
+        .select(col("src"), col("v").as("u"))
         .join(ed, Seq("u"))
         .select(col("src"), col("v")).distinct()
         .join(dist.select(col("src"), col("v"), lit(1).as("seen")),
           Seq("src", "v"), "left")
         .filter(col("seen").isNull)
         .select(col("src"), col("v"), lit(lvl + 1).as("lvl"))
-      dist = dist.unionByName(next).localCheckpoint(true)
-      lvl += 1
+      dist.unionByName(next)
     }
-    dist
   }
 
   /** k-core of an undirected x < y edge list by iterative peeling:
@@ -329,34 +309,37 @@ object GraphOps {
     * within-core degree; an empty frame when the graph has no k-core.
     *
     * Each round is one degree aggregation plus two anti-joins on the
-    * SHRINKING edge relation, localCheckpointed so round r never
-    * replays rounds 1..r−1 — the standard O(rounds)-pass degeneracy
+    * SHRINKING edge relation — the standard O(rounds)-pass degeneracy
     * peel, and the only shape that works at 100 TB (per-vertex
-    * priority-queue peeling is inherently sequential). Rounds to
-    * fixpoint are data-dependent but small in practice (bounded by
-    * the degeneracy ordering's depth); extra rounds past the fixpoint
-    * are no-ops, so a caller replaying this with a FIXED unroll (the
-    * oracle) gets the identical relation as the early-exiting loop —
-    * provided the fixpoint is reached within `maxRounds`, which the
-    * caller should verify at its scale (the q238 spec pins it). */
+    * priority-queue peeling is inherently sequential). The edge
+    * relation and the round's drop set are [[graft.Iterate.Concurrent]]
+    * state: the degree union and the two anti-joins each read them
+    * from two subtrees. Rounds to fixpoint are data-dependent but small
+    * in practice (bounded by the degeneracy ordering's depth); extra
+    * rounds past the fixpoint are no-ops, so a caller replaying this
+    * with a FIXED unroll (the oracle) gets the identical relation as
+    * the early-exiting loop — provided the fixpoint is reached within
+    * `maxRounds`, which the caller should verify at its scale (for
+    * q238, OperatorSpec compares the capped peel with one allowed four
+    * times the cap at sf0.001 and sf0.01). */
   def kCore(und: DataFrame, xCol: String, yCol: String, k: Int,
     maxRounds: Int): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "need k >= 1 and maxRounds >= 1")
-    var e = und.select(col(xCol).as("x"), col(yCol).as("y"))
-      .localCheckpoint(true)
+    var e = Iterate.keep(
+      und.select(col(xCol).as("x"), col(yCol).as("y")), Concurrent)
     var r = 0
     var done = false
     while (r < maxRounds && !done) {
-      val drop = e.select(col("x").as("u"))
+      val drop = Iterate.keep(e.select(col("x").as("u"))
         .unionAll(e.select(col("y").as("u")))
         .groupBy("u").agg(count(lit(1)).as("d"))
-        .filter(col("d") < k).select("u")
-        .localCheckpoint(true)
+        .filter(col("d") < k).select("u"), Concurrent)
       if (drop.isEmpty) done = true
       else {
-        e = e.join(drop.select(col("u").as("x")), Seq("x"), "left_anti")
-          .join(drop.select(col("u").as("y")), Seq("y"), "left_anti")
-          .localCheckpoint(true)
+        e = Iterate.keep(
+          e.join(drop.select(col("u").as("x")), Seq("x"), "left_anti")
+            .join(drop.select(col("u").as("y")), Seq("y"), "left_anti"),
+          Concurrent)
         r += 1
       }
     }
@@ -373,10 +356,9 @@ object GraphOps {
     *
     * Weights are integer counts, so the per-(vertex, label) sums are
     * exact; each round is one equi-join of the edge relation against
-    * the current assignment plus one keyed argmax, localCheckpointed
-    * so round k never replays round k−1 (the q153/q164 multi-job
-    * convention). Isolated vertices cannot occur (every vertex in an
-    * edge list has degree ≥ 1). */
+    * the current assignment plus one keyed argmax; the assignment is
+    * [[graft.Iterate.Sequential]] state. Isolated vertices cannot occur
+    * (every vertex in an edge list has degree ≥ 1). */
   def labelPropagation(und: DataFrame, xCol: String, yCol: String,
     wCol: String, iters: Int): DataFrame = {
     val ed = und.select(col(xCol).as("u"), col(yCol).as("v"),
@@ -384,26 +366,16 @@ object GraphOps {
       .unionAll(und.select(col(yCol).as("u"), col(xCol).as("v"),
         col(wCol).as("w")))
       .localCheckpoint(true)
-    // r15: per-round persistTracked, not eager localCheckpoint — each
-    // round's assignment still materializes once (one InMemoryRelation
-    // per round), filled inside the consumer's action; the iters extra
-    // eager jobs are gone (the q248 pattern).
-    var labels = graft.Caches.persistTracked(
-      ed.select(col("u").as("v")).distinct()
-        .withColumn("label", col("v")))
-    var it = 0
-    while (it < iters) {
-      val s = ed
-        .join(labels.select(col("v"), col("label")), Seq("v"))
+    val init = Iterate.keep(ed.select(col("u").as("v")).distinct()
+      .withColumn("label", col("v")), Sequential)
+    val rn = row_number().over(
+      Window.partitionBy("u").orderBy(col("s").desc, col("label").asc))
+    Iterate.rounds(init, iters, Sequential) { (labels, _) =>
+      ed.join(labels.select(col("v"), col("label")), Seq("v"))
         .groupBy(col("u"), col("label"))
         .agg(sum(col("w")).as("s"))
-      val rn = row_number().over(
-        Window.partitionBy("u").orderBy(col("s").desc, col("label").asc))
-      labels = graft.Caches.persistTracked(
-        s.withColumn("rn", rn).filter(col("rn") === 1)
-          .select(col("u").as("v"), col("label")))
-      it += 1
+        .withColumn("rn", rn).filter(col("rn") === 1)
+        .select(col("u").as("v"), col("label"))
     }
-    labels
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Dets, Tables}
+import graft.{Dets, Iterate, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -483,23 +483,18 @@ object AnalyticsQueries {
         .agg(sum(col("p")).as("p"))
         .unionByName(loops)
         .localCheckpoint(true)
-      var v = (Seq("base") ++ MkChannels)
+      val v0 = (Seq("base") ++ MkChannels)
         .map(sc => (sc, "START", 1000000L)).toDF("sc", "state", "mass")
-      var round = 0
-      while (round < MkRounds) {
-        // r15: per-round persistTracked (the q248 pattern) — one
-        // InMemoryRelation per round, no eager job for a ~|scenarios×
-        // states|-row mass vector. The per-round aliases of m are
-        // REQUIRED with the lazy persist: v's lineage now contains m's
-        // attribute ids (localCheckpoint used to cut them away), so
-        // re-joining the raw m would be an ambiguous self-join.
+      // the mass vector is Sequential round state. The per-round aliases
+      // of m are REQUIRED with its lazy persist: the vector's lineage
+      // contains m's attribute ids, so re-joining the raw m would be an
+      // ambiguous self-join.
+      val v = Iterate.rounds(v0, MkRounds, Iterate.Sequential) { (vr, _) =>
         val mr = m.select(col("sc").as("m_sc"), col("i").as("m_i"),
           col("j").as("m_j"), col("p").as("m_p"))
-        v = graft.Caches.persistTracked(
-          v.join(mr, v("sc") === col("m_sc") && v("state") === col("m_i"))
-            .groupBy(col("m_sc").as("sc"), col("m_j").as("state"))
-            .agg(expr("sum(mass * m_p) div 1000000L").as("mass")))
-        round += 1
+        vr.join(mr, vr("sc") === col("m_sc") && vr("state") === col("m_i"))
+          .groupBy(col("m_sc").as("sc"), col("m_j").as("state"))
+          .agg(expr("sum(mass * m_p) div 1000000L").as("mass"))
       }
       val conv = v.filter(col("state") === "CONV")
         .select(col("sc"), col("mass").as("conv_ppm"))

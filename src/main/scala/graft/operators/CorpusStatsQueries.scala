@@ -591,13 +591,15 @@ object CorpusStatsQueries {
     // is a self-pair like (a,a) on "aaa"), rebuild + recompact the
     // symbol sequences, repeat. Everything is vocabulary-local: a word
     // repeated a billion times costs one symbol sequence weighted by
-    // its count; each round is two (w, pos) equi-joins + one
-    // vocabulary-sized pair agg, localCheckpointed so round k never
-    // replays rounds 1..k−1; the argmax pair is a bounded driver
-    // finish (ONE row per round) folded back as literals. Output: the
-    // merge table (round, pair, weighted count) plus the total
-    // weighted symbol count after each merge — the invariant that
-    // proves the merge was applied (drops by exactly cnt per round).
+    // its count; each round is one window chain over (w ORDER BY pos)
+    // + one vocabulary-sized pair agg, the symbol relation kept per
+    // round by graft.Iterate (Sequential — the round's own symbol
+    // count fills it) so round k never replays rounds 1..k−1; the
+    // argmax pair is a bounded driver finish (ONE row per round)
+    // folded back as literals. Output: the merge table (round, pair,
+    // weighted count) plus the total weighted symbol count after each
+    // merge — the invariant that proves the merge was applied (drops
+    // by exactly cnt per round).
     "q236_bpe_merges" -> ((s, dir) => bpeArtifacts(s, dir)._1),
 
     // The tokenizer loop CLOSED (round 10): q236 trains the merges,
@@ -739,13 +741,14 @@ object CorpusStatsQueries {
     rounds: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val wOrd = Window.partitionBy("w").orderBy("pos")
-    var sdf = graft.Caches.persistTracked(
+    var sdf = graft.Iterate.keep(
       words.select(col("w"), col("wcnt"),
         posexplode(expr(
           "transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
           .as(Seq("p0", "sym")))
       .select(col("w"), col("wcnt"),
-        (col("p0") + 1).cast("long").as("pos"), col("sym")))
+        (col("p0") + 1).cast("long").as("pos"), col("sym")),
+      graft.Iterate.Sequential)
     val trace = Seq.newBuilder[(Long, String, String, Long, Long)]
     var r = 1
     var dry = false
@@ -794,12 +797,13 @@ object CorpusStatsQueries {
               col("im") && (col("mrn") - col("mrn0")) % 2 === 0)
             .withColumn("consumed",
               coalesce(lag(col("keep"), 1).over(wOrd), lit(false)))
-          sdf = graft.Caches.persistTracked(ann
+          sdf = graft.Iterate.keep(ann
             .filter(!col("consumed"))
             .select(col("w"), col("wcnt"), col("pos"),
               when(col("keep"), concat(col("sym"), col("sym2")))
                 .otherwise(col("sym")).as("sym"))
-            .withColumn("pos", row_number().over(wOrd).cast("long")))
+            .withColumn("pos", row_number().over(wOrd).cast("long")),
+            graft.Iterate.Sequential)
           val nAfter = sdf.agg(sum(col("wcnt")).as("n"))
             .collect().head.getLong(0)
           trace += ((r.toLong, s1, s2, cnt, nAfter))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Dets
+import graft.{Dets, Iterate}
+import graft.Iterate.Sequential
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,9 +13,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: the edge build is a per-order self-join — Σ|order|²
   * with order size bounded by the schema (≤ 7 lines), never |corpus|².
   * Each PageRank iteration is one equi-join of the edge table against
-  * the current rank vector plus a keyed aggregation; the edge table
-  * and per-iteration ranks are localCheckpointed so the k-th iteration
-  * does not replay the previous k−1 (the q77 multi-job convention).
+  * the current rank vector plus a keyed aggregation; the edge table is
+  * checkpointed once and the per-iteration ranks are kept by
+  * [[graft.Iterate]], so the k-th iteration does not replay the
+  * previous k−1.
   * Determinism [D2]: per-edge contributions are 6dp-rounded BEFORE the
   * decimal sum (fold-order invariant), ranks re-round to 6dp per
   * iteration, and the final top-20 ties on part key — bit-identical on
@@ -99,11 +101,11 @@ object GraphQueries {
   private val LpaIters = 2
 
   /** q238 core order and peel-round cap. The cap must exceed the
-    * rounds-to-fixpoint at every verified scale (measured via
-    * tools/KCoreProbe: 0 / 3 / 5 rounds at sf0.001 / 0.01 / 0.1 for
-    * k = 2 on the w ≥ 2 backbone); rounds past the fixpoint are no-ops,
-    * so the oracle's FIXED 8-round unroll and the engine's
-    * early-exiting loop produce the identical relation. */
+    * rounds-to-fixpoint at every verified scale (OperatorSpec checks
+    * that the capped peel equals one allowed four times the cap at
+    * sf0.001 and sf0.01); rounds past the fixpoint are no-ops, so the
+    * oracle's FIXED 8-round unroll and the engine's early-exiting loop
+    * produce the identical relation. */
   private[graft] val CoreK = 2
   private[graft] val CoreMaxRounds = 8
 
@@ -156,83 +158,46 @@ object GraphQueries {
     "q153_pagerank" -> ((s, dir) => {
       // both directions of the memoized pair table (CoPurchase.pairW —
       // ONE per-order self-join per session, shared with
-      // q164/q165/q167/q171/q176). ONE materialization beyond it: the
-      // degree-annotated edge table. deg/nodes/r0 are cheap single-agg
-      // projections of it — re-deriving them costs less than three
-      // more eager checkpoints (measured: 8.2 s → ~5 s idle at sf0.1);
-      // per-iteration ranks still checkpoint so iteration k never
-      // replays k−1.
+      // q164/q165/q167/q171/q176). Two loop invariants are checkpointed:
+      // the degree-annotated edge table, and the node set, which round
+      // 1's job reads from two subtrees (r0 and the left join) — a lazy
+      // persist there would race the cache fill. deg/nn are cheap
+      // single-agg projections, re-derived instead of materialized.
       val edges = CoPurchase.directedW(s, dir)
       val deg = edges.groupBy("u").agg(sum(col("w")).as("wdeg"))
       val ed = edges.join(deg, Seq("u")).localCheckpoint(true)
-      // nodes is read by r0 plus every round's left join — persist so
-      // the distinct exchange over ed runs once, not once per round
-      val nodes = graft.Caches.persistTracked(
-        ed.select(col("u").as("v")).distinct())
+      val nodes = ed.select(col("u").as("v")).distinct().localCheckpoint(true)
       val nn = nodes.agg(count(lit(1)).as("nn"))
-      // r15: per-round ranks are persistTracked (lazy cache), not
-      // eagerly localCheckpointed (r13/r14) — each round still
-      // materializes exactly once (every consumer reads one
-      // InMemoryRelation, which also keeps the ed ⋈ r AQE planning
-      // anchored to real per-round stats), but the fill happens inside
-      // the single final action, so the Iters+1 extra eager jobs are
-      // gone (the q248 pattern). The r14 full-drop experiment (no cap
-      // at all) was rejected for the exposed-plan growth; the persist
-      // keeps the cap without the jobs.
-      var r = graft.Caches.persistTracked(nodes.crossJoin(broadcast(nn))
-        .select(col("v"), round(lit(1d) / col("nn"), 6).as("pr")))
-      var it = 0
-      while (it < Iters) {
+      val r0 = Iterate.keep(nodes.crossJoin(broadcast(nn))
+        .select(col("v"), round(lit(1d) / col("nn"), 6).as("pr")), Sequential)
+      Iterate.rounds(r0, Iters, Sequential) { (r, _) =>
         val contrib = ed
           .join(r.select(col("v").as("u"), col("pr").as("pru")), Seq("u"))
           .select(col("v"),
             round(col("pru") * col("w") / col("wdeg"), 6).as("c"))
           .groupBy("v")
           .agg(sum(col("c").cast(Dec)).cast("double").as("sc"))
-        r = graft.Caches.persistTracked(nodes.join(contrib, Seq("v"), "left")
+        nodes.join(contrib, Seq("v"), "left")
           .crossJoin(broadcast(nn))
           .select(col("v"),
             round(lit(1d - Damping) / col("nn")
-              + lit(Damping) * coalesce(col("sc"), lit(0d)), 6).as("pr")))
-        it += 1
-      }
-      r.select(col("v").as("p_partkey"), col("pr").as("pr6"))
+              + lit(Damping) * coalesce(col("sc"), lit(0d)), 6).as("pr"))
+      }.select(col("v").as("p_partkey"), col("pr").as("pr6"))
         .orderBy(col("pr6").desc, col("p_partkey").asc)
         .limit(20)
     }),
 
     // BFS reachability profile: how many parts sit at each hop distance
-    // (0..3) from the smallest part in the co-purchase graph. Frontier
-    // expansion is one equi-join of the current distance set against the
-    // edge table per level, localCheckpointed so level k never replays
-    // k−1 (the q153/q77 multi-job convention); the oracle is DuckDB's
-    // recursive CTE over the same edges, with min-level dedup making the
-    // spec traversal-order-independent.
+    // (0..3) from the smallest part in the co-purchase graph. The
+    // smallest part is one of q232's three landmarks, so this is the
+    // memoized landmark traversal (GraphOps.multiSourceBfs) cut to that
+    // source — no traversal of its own. The oracle is DuckDB's
+    // recursive CTE over the same edges, with min-level dedup making
+    // the spec traversal-order-independent.
     "q164_bfs_levels" -> ((s, dir) => {
-      // derived from the memoized pair table — already distinct per
-      // orientation, so no extra distinct/checkpoint needed; the
-      // frontier loop re-reads the persisted parent cheaply
-      val edges = CoPurchase.directedW(s, dir).select("u", "v")
-      val seed = edges.agg(min(col("u")).as("v"))
-        .select(col("v"), lit(0).as("lvl"))
-      // Per-level EAGER localCheckpoint KEPT (r15 measured at sf0.5:
-      // the lazy-persist form regressed 2.2× — the seen-join's two
-      // sides read `dist` concurrently and race the cache fill,
-      // recomputing the traversal recursively; see multiSourceBfs)
-      var dist = seed.localCheckpoint(true)
-      var lvl = 0
-      while (lvl < 3) {
-        val frontier = dist.filter(col("lvl") === lvl)
-        val next = frontier.select(col("v").as("u"))
-          .join(edges, Seq("u"))
-          .select(col("v")).distinct()
-          .join(dist.select(col("v"), lit(1).as("seen")), Seq("v"), "left")
-          .filter(col("seen").isNull)
-          .select(col("v"), lit(lvl + 1).as("lvl"))
-        dist = dist.unionByName(next).localCheckpoint(true)
-        lvl += 1
-      }
-      dist.groupBy("lvl").agg(count(lit(1)).as("n_parts")).orderBy("lvl")
+      val seed = CoPurchase.und(s, dir).agg(min(col("x")).as("src"))
+      landmarkBfs(s, dir).join(broadcast(seed), Seq("src"))
+        .groupBy("lvl").agg(count(lit(1)).as("n_parts")).orderBy("lvl")
     }),
 
     // Exact triangle census + global clustering coefficient of the
@@ -362,8 +327,8 @@ object GraphQueries {
     // the largest total co-purchase weight among its neighbours
     // (ties → smallest label [D2]); report the 20 largest communities.
     // Each round is one equi-join + keyed argmax (the library form,
-    // graft.api.GraphOps.labelPropagation), localCheckpointed so
-    // round 2 never replays round 1; the oracle unrolls both rounds
+    // graft.api.GraphOps.labelPropagation), whose round state
+    // graft.Iterate keeps; the oracle unrolls both rounds
     // as ROW_NUMBER argmax CTEs. Integer weights make every sum
     // exact — no float staging needed anywhere.
     // Landmark closeness centrality — the per-NODE distance summary
@@ -774,29 +739,20 @@ object GraphQueries {
       val nP = e.select("p").distinct().count()
       val a0 = e.select("p").distinct()
         .withColumn("a", lit(HitsScale / nP))
-      // r15: each half-round's aggregate is persistTracked (lazy
-      // cache), not eager-localCheckpointed (r13) and not left bare
-      // (r14). The bare form regressed on the driver's own bench
-      // (3.78 → 5.15 s): each `hr` is read TWICE per step (stream side
-      // + total agg), so the unrolled plan doubled per half-round to
-      // 4,234 lines / 312 Exchanges and its analysis + scheduling cost
-      // more than the four materialization jobs the checkpoints had
-      // paid. The persist caps the plan the same way the checkpoints
-      // did — every consumer below reads one InMemoryRelation — but
-      // fills lazily inside the single final action, so the four extra
-      // eager jobs never run. e stays checkpointed — every half-round
-      // reads it.
+      // Each half-round's aggregate is read twice (stream side and the
+      // broadcast total, built first), so it is kept as Sequential
+      // round state; e is the loop invariant every half-round reads.
       def hubStep(a: DataFrame): DataFrame = {
-        val hr = graft.Caches.persistTracked(
+        val hr = Iterate.keep(
           e.join(a, Seq("p")).groupBy("c")
-            .agg(sum(col("w") * col("a")).as("hr")))
+            .agg(sum(col("w") * col("a")).as("hr")), Sequential)
         hr.crossJoin(broadcast(hr.agg(sum("hr").as("t"))))
           .select(col("c"), expr(s"(hr * ${HitsScale}L) div t").as("h"))
       }
       def authStep(h: DataFrame): DataFrame = {
-        val ar = graft.Caches.persistTracked(
+        val ar = Iterate.keep(
           e.join(h, Seq("c")).groupBy("p")
-            .agg(sum(col("w") * col("h")).as("ar")))
+            .agg(sum(col("w") * col("h")).as("ar")), Sequential)
         ar.crossJoin(broadcast(ar.agg(sum("ar").as("t"))))
           .select(col("p"), expr(s"(ar * ${HitsScale}L) div t").as("a"))
       }

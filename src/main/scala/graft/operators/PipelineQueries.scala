@@ -17,15 +17,11 @@ import org.apache.spark.sql.functions._
   * staging and serving layers).
   *
   * Scale notes:
-  *  - q77 is iterative min-label propagation over the near-dup edge list:
-  *    every iteration is one shuffle join edges⋈labels + a partial-agg
-  *    min — the standard large-graph connected-components loop. Labels
-  *    are localCheckpoint'ed per iteration so lineage (and thus planning
-  *    time) stays O(1) in the iteration count, and convergence is
-  *    detected with a single exact integer aggregate (sum of labels,
-  *    strictly decreasing until fixpoint). Dense near-dup clusters
-  *    converge in a handful of iterations; a 100 TB corpus would swap the
-  *    edge list for q66's LSH candidates and keep this loop unchanged.
+  *  - q77 resolves clusters with [[graft.api.DedupOps.clusterResolve]]:
+  *    connected components by star contraction over the near-dup edge
+  *    list, each round one hook aggregate plus one contraction join on
+  *    a shrinking edge set. A 100 TB corpus would swap the edge list
+  *    for q66's LSH candidates and keep this loop unchanged.
   *  - q78/q79/q80 are pure projection + window work: they shuffle once on
   *    the partition key (lang) and stay inside whole-stage codegen. The
   *    split/sample hashes are the engine-portable rolling hashes from
@@ -70,141 +66,6 @@ object PipelineQueries {
   private val MixCase = MixWeights.toSeq.sorted.map { case (k, w) =>
     s"WHEN '$k' THEN ${(w * MixTotal).toLong}"
   }.mkString(" ")
-
-  /** Connected components by star contraction: every node ends labelled
-    * with the smallest `id` reachable through `pairs` (undirected).
-    * `nodes` must have a long `id` column, `pairs` long `id_lo`/`id_hi`
-    * columns; returns (id, lab).
-    *
-    * Each round hooks every active vertex to the minimum of itself and
-    * its neighbours (`m`), composes that hook into the running
-    * vertex→representative map, and CONTRACTS the edge set to
-    * (m(lo), m(hi)) with self-loops dropped and duplicates merged. The
-    * component minimum is a fixpoint of `m`, so labels only ever move
-    * down toward it, and the contracted graph loses its non-minimal
-    * local structure each round — on clique-heavy near-dup graphs the
-    * edge set collapses almost entirely after one round, so only round
-    * 0 pays a full pass over the pair table (the old
-    * propagate-and-jump loop re-scanned every edge every round). Path
-    * graphs halve per round (the pointer-jump bound, verified in
-    * PropertySpec against union-find). Termination: every contracted
-    * edge's max endpoint is ≤ some pre-contraction edge's MIN endpoint,
-    * so the edge set's frontier strictly descends until empty.
-    *
-    * Scale shape: the representative map holds only vertices that
-    * appear in some pair (near-dup participants, not the corpus);
-    * `nodes` is touched exactly once, by the final left join. Joins
-    * carry no broadcast hints — AQE broadcasts the hook/rep tables
-    * while they fit and falls back to shuffle joins past that, so the
-    * loop needs no rewrite at 10^9+ vertices. Once contraction shrinks
-    * the live graph under `localCutover` edges it is collected and
-    * finished with driver-side union-find — the cluster-level residue
-    * of a 100 TB dedup graph is a few MB, and solving it locally
-    * replaces O(log d) more rounds of job overhead with one collect
-    * (bounded by the cutover, not the data). Set GRAFT_CC_DEBUG for
-    * per-round timings.
-    */
-  def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-    localCutover: Long = 500000): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    def tick[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (dbg) println(f"[cc] $label%-10s ${(System.nanoTime - t0) / 1e9}%.2f s")
-      r
-    }
-    // canonical lo<hi edges; near-dup producers already emit unique
-    // ordered pairs, so no distinct here — the first contraction dedups
-    // r15: per-round persistTracked, not eager localCheckpoint. The
-    // loop's control flow still pays one action per round (the edge
-    // count below), and that count materializes the round's e (and,
-    // through its lineage, the round's m) exactly once — but `rep`,
-    // which nothing reads until after the loop, now stays LAZY: its
-    // final evaluation is one pass composing the cached per-round
-    // hooks instead of an eager rep-sized materialization job per
-    // round (the q248 pattern plus a strict job-count win).
-    var e = tick("init")(graft.Caches.persistTracked(pairs
-      .select(least(col("id_lo"), col("id_hi")).as("lo"),
-        greatest(col("id_lo"), col("id_hi")).as("hi"))
-      .filter(col("lo") =!= col("hi"))))
-    // rep: pair-participating vertex -> current contracted representative
-    var rep: DataFrame = null
-    var nEdges = e.count()
-    var iter = 0
-    while (nEdges > localCutover && iter < 50) {
-      // hook: m(x) = min(x, min neighbour of x) over the live edge set
-      // — EAGERLY checkpointed: the contraction reads it from two
-      // concurrent join sides (mlo/mhi), which under a lazy persist
-      // race the cache fill (the BFS finding); the hook is
-      // vertex-sized, so the eager job is the cheap side of that trade
-      val m = tick(s"round $iter hook")(e
-        .select(col("lo").as("x"), col("hi").as("y"))
-        .union(e.select(col("hi").as("x"), col("lo").as("y")))
-        .groupBy("x").agg(min("y").as("my"))
-        .select(col("x"), least(col("x"), col("my")).as("m"))
-        .localCheckpoint(true))
-      // compose the hook into the global representative map; vertices
-      // whose representative went edge-less keep their label (left join)
-      rep = tick(s"round $iter rep")(graft.Caches.persistTracked(
-        if (rep == null) m.select(col("x").as("id"), col("m").as("lab"))
-        else rep.join(m, rep("lab") === m("x"), "left")
-          .select(rep("id"), coalesce(col("m"), rep("lab")).as("lab"))))
-      // contract: rewrite both endpoints through m, drop self-loops,
-      // merge parallel edges — the only full edge pass of the round
-      val mlo = m.select(col("x").as("lo"), col("m").as("ml"))
-      val mhi = m.select(col("x").as("hi"), col("m").as("mh"))
-      e = tick(s"round $iter contract")(graft.Caches.persistTracked(e
-        .join(mlo, "lo").join(mhi, "hi")
-        .select(least(col("ml"), col("mh")).as("lo"),
-          greatest(col("ml"), col("mh")).as("hi"))
-        .filter(col("lo") =!= col("hi"))
-        .distinct()))
-      nEdges = e.count()
-      iter += 1
-    }
-    // the driver-side finish is bounded by the CUTOVER, not the data —
-    // if the iteration cap (not the edge count) ended the loop, refuse
-    // to collect an unbounded edge set and name the pathology instead
-    if (nEdges > localCutover)
-      throw new IllegalStateException(
-        s"connectedComponents: $nEdges edges remain after $iter contraction" +
-          s" rounds (cutover $localCutover) — graph is not contracting;" +
-          " raise localCutover or investigate the edge distribution")
-    if (nEdges > 0) {
-      // residual graph fits on the driver: min-root union-find with path
-      // compression, then one small mapping composed into rep
-      val local = tick("local uf") {
-        val es = e.select(col("lo"), col("hi")).collect()
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
-          r
-        }
-        es.foreach { row =>
-          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val verts = scala.collection.mutable.LongMap.empty[Long]
-        es.foreach { row =>
-          verts(row.getLong(0)) = 0L; verts(row.getLong(1)) = 0L
-        }
-        verts.keys.foreach(v => verts(v) = find(v))
-        val spark = nodes.sparkSession
-        import spark.implicits._
-        verts.toSeq.toDF("x", "m")
-      }
-      rep =
-        if (rep == null) local.select(col("x").as("id"), col("m").as("lab"))
-        else rep.join(local, rep("lab") === local("x"), "left")
-          .select(rep("id"), coalesce(col("m"), rep("lab")).as("lab"))
-    }
-    val n = nodes.select(col("id"))
-    if (rep == null) n.select(col("id"), col("id").as("lab"))
-    else n.join(rep.select(col("id"), col("lab")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("lab"), col("id")).as("lab"))
-  }
 
   /** The resolved q77 component relation (doc_id, cluster_id, keep)
     * over the 0.6 near-dup pairs, memoized per (session, dir) — five

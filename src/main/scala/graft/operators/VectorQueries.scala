@@ -445,10 +445,12 @@ object VectorQueries {
     // ratio re-floored to the 2^20 grid. The emitted v3/λ are raw
     // doubles obtained ONLY through exact-decimal→double casts
     // (correctly rounded in both engines, probe-verified) and
-    // deterministic double division. The covariance localCheckpoints —
-    // it feeds 3 mat-vecs + the Rayleigh quotient (the q153-PageRank
-    // multi-job pattern); the only corpus-sized job is the one
-    // self-join Gram pass, map-side combined to 4096 cells.
+    // deterministic double division. The covariance is the loop
+    // invariant and checkpoints — it feeds 3 mat-vecs + the Rayleigh
+    // quotient; the only corpus-sized job is the one Gram pass,
+    // map-side combined to 4096 cells. Each round's vector is
+    // Concurrent round state: the final job reads it from three
+    // broadcast builds (vi, vj and the denominator).
     "q217_pca_power" -> ((s, dir) => {
       val S = 1048576L // 2^20 quantization grid
       val d38 = (c: Column) => c.cast("decimal(38,0)")
@@ -495,10 +497,10 @@ object VectorQueries {
             Seq("j"))
           .groupBy("i").agg(sum(col("aij") * col("v")).as("w"))
         val mx = w.agg(max(abs(col("w"))).as("mw"))
-        r = w.crossJoin(broadcast(mx))
+        r = graft.Iterate.keep(w.crossJoin(broadcast(mx))
           .select(col("i"),
-            (col("w").cast("double") / col("mw").cast("double")).as("r"))
-          .localCheckpoint()
+            (col("w").cast("double") / col("mw").cast("double")).as("r")),
+          graft.Iterate.Concurrent)
         v = r.select(col("i"), floor(col("r") * S).cast("long").as("v"))
       }
       val num = cov

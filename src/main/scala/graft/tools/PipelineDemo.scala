@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.functions.TextFunctions
-import graft.operators.{PipelineQueries, TextQueries}
+import graft.operators.TextQueries
 import graft.sources.LakeWriter
 import org.apache.spark.sql.functions._
 
@@ -53,7 +53,7 @@ object PipelineDemo {
     val pairs = TextQueries.nearDupPairs(s, dir, 0.6)
       .join(nodes.select(col("id").as("id_lo")), "id_lo")
       .join(nodes.select(col("id").as("id_hi")), "id_hi")
-    val labels = PipelineQueries.connectedComponents(nodes, pairs)
+    val labels = graft.api.DedupOps.connectedComponents(nodes, pairs)
     val keepers = scored.join(
       labels.filter(col("id") === col("lab")).select(col("id").as("doc_id")),
       "doc_id")

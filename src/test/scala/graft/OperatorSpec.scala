@@ -157,6 +157,23 @@ class OperatorSpec extends SparkSpec {
     }
   }
 
+  test("q238 k-core peel reaches its fixpoint within the oracle's round cap") {
+    // the oracle replays a FIXED CoreMaxRounds unroll of the peel, which
+    // equals the early-exiting loop only if the loop stops within the
+    // cap — so a run allowed four times the cap must find the same core
+    import graft.operators.GraphQueries.{CoreK, CoreMaxRounds,
+      LinkPredMinSupport}
+    for (sf <- Seq(Sf, "/root/testdata/sf0.01")) {
+      val und = graft.operators.CoPurchase.pairW(spark, sf)
+        .filter(col("w") >= LinkPredMinSupport).select("x", "y")
+      def core(maxRounds: Int) = graft.api.GraphOps
+        .kCore(und, "x", "y", CoreK, maxRounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(core(CoreMaxRounds) == core(4 * CoreMaxRounds),
+        s"k-core peel not at its fixpoint after $CoreMaxRounds rounds at $sf")
+    }
+  }
+
   test("q60 exact dedup is idempotent") {
     val once = SparkEntry.queries("q60_dedup_exact")(spark, Sf)
     val again = once.groupBy("text")

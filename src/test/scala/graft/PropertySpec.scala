@@ -116,7 +116,7 @@ class PropertySpec extends SparkSpec {
       // runs contraction rounds to an empty edge set, 3 runs rounds and
       // then the driver finish on the residue
       for (cutover <- Seq(500000L, 0L, 3L)) {
-        val got = graft.operators.PipelineQueries
+        val got = graft.api.DedupOps
           .connectedComponents(nodes, pairs, cutover)
           .as[(Long, Long)].collect().toMap
         assert(got == model, s"n=$n edges=${es.size} cutover=$cutover")
