@@ -41,7 +41,7 @@ object SharedMemos {
       val (cb, codes) = operators.VectorQueries.pqProdArtifacts(s, dir)
       force(cb); force(codes)
     }),
-    // q134 IVF+PQ training (cells, centroids, residual codebooks, codes)
+    // q134 IVF+PQ training (centroids, residual codebooks, codes)
     "shared:ivfpq_train" -> (s => {
       val (cents, cb, codes) = operators.VectorQueries.ivfPqArtifacts(s, dir)
       force(cents); force(cb); force(codes)

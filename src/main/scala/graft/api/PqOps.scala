@@ -1,9 +1,12 @@
 package graft.api
 
-import graft.functions.{CentroidAggregator, GraftFunctions, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.jdk.CollectionConverters._
+
+import graft.functions.{CentroidAggregator, Codebook, GraftFunctions, PqKernels, TextFunctions}
+import graft.sources.IvfIndex
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Product quantization + asymmetric-distance (ADC) search — the
   * memory-resident ANN path that complements [[graft.sources.IvfIndex]]
@@ -14,13 +17,20 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   * sub-distances instead of touching any raw vector.
   *
   * Scale shape: training runs on the deterministic spread-hash sample
-  * (`trainOneIn`, the IvfIndex convention); all m subspaces train
-  * TOGETHER in one distributed job per Lloyd iteration (the subvector
-  * table carries a subspace column — no per-subspace driver loop over
-  * the data); encoding is one broadcast-join pass over the corpus; ADC
-  * search broadcasts a |probes|·m·ksub distance table and never moves
-  * the codes — the only shuffle is the (probe, id) partial-sum, m rows
-  * per pair collapsing map-side.
+  * (`trainOneIn`, the IvfIndex convention). A sample that fits
+  * [[IvfIndex.DriverBaseBytes]] (rows × (dim·w + 8) bytes, w the
+  * element width) is collected once and trained on the driver; a larger
+  * one trains all m subspaces together in one distributed job per Lloyd
+  * round. The model (codebooks, IVF cell centroids) is a driver-built
+  * local relation. Encoding is one map over the corpus
+  * (`graft_l2_codes`, no shuffle, no broadcast build); flat PQ explodes
+  * it to (id, j, code), IVF-PQ keeps (id, cell, codes array<int>). ADC
+  * search broadcasts the |probes|·m·ksub distance tables and never
+  * moves the codes.
+  *
+  * One kernel object, [[graft.functions.PqKernels]], holds the
+  * arithmetic of the driver loops and of the `graft_*` expressions that
+  * apply the model, so both sides agree by construction.
   *
   * Determinism [D2]: sub-distances are 6dp-rounded and decimal-summed;
   * assignment and ranking tie-break on (code, id); centroids are the
@@ -29,11 +39,6 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   * layout or cluster size.
   */
 object PqOps {
-
-  private val Spread = 2654435761L
-  private def idHash(c: Column): Column =
-    pmod(pmod(c, lit(TextFunctions.HashMod)) * Spread,
-      lit(TextFunctions.HashMod))
 
   /** (keys..., j, sv) subvector table: vector split into `m` slices of
     * `dim / m` components. */
@@ -62,137 +67,160 @@ object PqOps {
       - lit(2d) * call_function("graft_dot", col(sv), col(cent))
       + call_function("graft_dot", col(cent), col(cent)), 6)
 
-  /** argmin-L2 code assignment: (id, j, code) — one broadcast of the
-    * codebooks, ranking through the bounded-heap top-1 (no shuffle of
-    * scored pairs). */
-  private def assign(sv: DataFrame, cb: DataFrame): DataFrame =
-    graft.plans.GraftOps.topKPerGroup(
-      sv.join(broadcast(cb), Seq("j"))
-        .select(col("id"), col("j"), col("code"), l2sq("sv", "cent").as("d")),
-      Seq(col("id"), col("j")),
-      Seq(col("d").asc, col("code").asc), 1, rankName = "__r")
-      .select("id", "j", "code")
-
-  /** graft_dot mirrored on the driver for double arrays: the same
-    * left-fold Σ a[i]·b[i] over min(|a|,|b|) elements — used to
-    * precompute codebook self-dots for [[assignLit]] bit-identically
-    * to the in-plan `graft_dot(cent, cent)`. */
-  private def dotDD(a: Array[Double], b: Array[Double]): Double = {
-    val n = math.min(a.length, b.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  /** [[assign]] with the codebook as a COLLECTED driver-side model
-    * (the int-kernel convention, [[pqIntTrain]]'s `assigned`): the
-    * m-per-subspace (code, cent) lists ride three nested literals and
-    * the argmin is a codegen'd transform/array_min — a pure map, no
-    * broadcast exchange, no bounded-heap shuffle, no join back for
-    * `sv`. Distances are the same l2sq tree, term for term:
-    * round((graft_dot(sv,sv) − 2·graft_dot(sv,cent)) + cent·cent, 6)
-    * with the self-dot precomputed by [[dotDD]] (same left fold); the
-    * (d asc, code asc) tie-break is the struct field order, with a
-    * NULL d (null sv slice) sorting first like the heap's
-    * NULLS-FIRST ascending order. The codebook is the bounded model
-    * table (m·ksub·(dim/m) doubles), driver-resident by design — the
-    * same budget [[pqIntTrain]] and the ADC distance tables already
-    * spend. Returns (id, j, sv, code). */
-  private def assignLit(sv: DataFrame, m: Int,
-    cb: Array[(Int, Int, Array[Double])]): DataFrame = {
+  /** The codebook table (j, code, cent) as the kernel's [[Codebook]]:
+    * subspace j's codes ascending. */
+  private def codebook(cb: Array[(Int, Int, Array[Double])], m: Int,
+    sub: Int): Codebook = {
     val byJ = (0 until m).map(j => cb.filter(_._1 == j).sortBy(_._2))
-    require(byJ.forall(_.nonEmpty),
-      s"assignLit needs >= 1 surviving code per subspace, got " +
-        byJ.map(_.length).mkString(","))
-    val cents = typedLit(byJ.map(_.map(_._3.toSeq).toSeq))
-    val codes = typedLit(byJ.map(_.map(_._2).toSeq))
-    val cn2s = typedLit(byJ.map(_.map(e => dotDD(e._3, e._3)).toSeq))
-    sv.withColumn("__cc", element_at(cents, col("j") + 1))
-      .withColumn("__cd", element_at(codes, col("j") + 1))
-      .withColumn("__c2", element_at(cn2s, col("j") + 1))
-      .withColumn("__a", array_min(expr(
-        "transform(sequence(0, size(__cd) - 1), i -> named_struct(" +
-          "'d', round((graft_dot(sv, sv) - 2.0D * graft_dot(sv, __cc[i]))" +
-          " + __c2[i], 6), " +
-          "'code', __cd[i]))")))
-      .select(col("id"), col("j"), col("sv"), col("__a.code").as("code"))
+    new Codebook(sub, byJ.map(_.map(_._3).toArray).toArray,
+      byJ.map(_.map(_._2).toArray).toArray)
   }
 
-  /** Train the m per-subspace codebooks: (j, code, cent array<double>).
-    * Each subspace seeds from its own `ksub` DISTINCT subvector
-    * patterns — the patterns whose smallest carrying id hash-scatters
-    * first. Per-subspace distinctness matters: seeding every subspace
-    * from the same ksub corpus rows plants duplicate centroids wherever
-    * those rows coincide in a subspace, the argmin tie-break starves
-    * the duplicates and the cells die. `iters` Lloyd rounds run on the
-    * sampled subvector table, all subspaces in one job per round. */
+  private def collectCb(cb: DataFrame): Array[(Int, Int, Array[Double])] =
+    cb.collect().map(r =>
+      (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+
+  /** `name`(x, sub, cents, codes) with the codebook as literals. */
+  private def codebookCall(name: String, x: Column, cb: Codebook): Column =
+    call_function(name, x, lit(cb.sub),
+      typedLit(cb.cents.map(_.map(_.toSeq).toSeq).toSeq),
+      typedLit(cb.codes.map(_.toSeq).toSeq))
+
+  private val CbSchema = StructType(Seq(
+    StructField("j", IntegerType, nullable = false),
+    StructField("code", IntegerType, nullable = false),
+    StructField("cent", ArrayType(DoubleType, containsNull = false),
+      nullable = false)))
+
+  /** A driver-built codebook as a local relation (j, code, cent). */
+  private def codebookFrame(spark: SparkSession,
+    cb: Array[(Int, Int, Array[Double])]): DataFrame =
+    spark.createDataFrame(
+      cb.toSeq.map { case (j, c, v) => Row(j, c, v.toSeq) }.asJava, CbSchema)
+
+  /** Train the m per-subspace codebooks: (j, code, cent array<double>),
+    * a local relation built on the driver. Each subspace seeds from its
+    * own `ksub` DISTINCT subvector patterns — the patterns whose
+    * smallest carrying id hash-scatters first. Per-subspace
+    * distinctness matters: seeding every subspace from the same ksub
+    * corpus rows plants duplicate centroids wherever those rows
+    * coincide in a subspace, the argmin tie-break starves the
+    * duplicates and the cells die. `iters` Lloyd rounds run on the
+    * sampled base, all subspaces at once. */
   def pqCodebooks(emb: DataFrame, idCol: String, vecCol: String,
-    dim: Int, m: Int, ksub: Int, iters: Int, trainOneIn: Int = 1): DataFrame = {
+    dim: Int, m: Int, ksub: Int, iters: Int, trainOneIn: Int = 1): DataFrame =
+    pqCodebooksWithin(emb, idCol, vecCol, dim, m, ksub, iters, trainOneIn,
+      IvfIndex.DriverBaseBytes)
+
+  /** [[pqCodebooks]] against an explicit driver budget (specs pass 0 to
+    * force the cluster path). */
+  private[graft] def pqCodebooksWithin(emb: DataFrame, idCol: String,
+    vecCol: String, dim: Int, m: Int, ksub: Int, iters: Int, trainOneIn: Int,
+    budget: Long): DataFrame = {
     require(dim > 0 && m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
     require(ksub > 0 && iters >= 0 && trainOneIn >= 1,
       "need ksub > 0, iters >= 0, trainOneIn >= 1")
     GraftFunctions.register(emb.sparkSession)
+    codebookFrame(emb.sparkSession, pqFit(IvfIndex.trainSample(
+      emb.select(col(idCol).as("id"), col(vecCol).as("v")), trainOneIn),
+      dim, m, ksub, iters, budget))
+  }
+
+  /** Codebook training over a sampled (id, v) base. When the base fits
+    * `budget` ([[IvfIndex.collectWithin]]) it is collected once and
+    * seeding and every Lloyd round run on the driver ([[pqFitLocal]]);
+    * otherwise [[pqFitCluster]] runs one distributed job per round.
+    * Both use the [[PqKernels]] arithmetic and [[CentroidAggregator]],
+    * so they agree exactly (ApiSpec runs both on one base). */
+  private def pqFit(base: DataFrame, dim: Int, m: Int, ksub: Int,
+    iters: Int, budget: Long): Array[(Int, Int, Array[Double])] =
+    IvfIndex.collectWithin(base, dim, budget) match {
+      case Some(rows) => pqFitLocal(rows, m, dim / m, ksub, iters)
+      case None => pqFitCluster(base, dim, m, ksub, iters)
+    }
+
+  /** Driver-side codebook training, the cluster rounds' arithmetic:
+    *  - seeds: per subspace, group the slices by value — -0.0 read as
+    *    0.0 and every NaN as one, as Spark normalizes floating grouping
+    *    keys — keep each pattern's smallest id, and take the `ksub`
+    *    patterns first by (id hash, id); code = rank − 1, cent = the
+    *    normalized pattern;
+    *  - each Lloyd round: every row's codes by [[PqKernels.l2Codes]],
+    *    then per (j, code) the decimal-mean centroid of its slices; a
+    *    code no row chose disappears. */
+  private def pqFitLocal(rows: Array[(Long, Array[Double])], m: Int,
+    sub: Int, ksub: Int, iters: Int): Array[(Int, Int, Array[Double])] = {
+    var cb: Array[(Int, Int, Array[Double])] = (0 until m).flatMap { j =>
+      val first = scala.collection.mutable.HashMap.empty[Seq[Long],
+        (Long, Array[Double])]
+      rows.foreach { case (id, x) =>
+        val sv = PqKernels.slice(x, j, sub)
+          .map(d => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d)
+        val key = sv.toSeq.map(java.lang.Double.doubleToLongBits)
+        if (first.get(key).forall(_._1 > id)) first(key) = (id, sv)
+      }
+      first.values.toSeq.sortBy { case (kid, _) => (IvfIndex.idHash(kid), kid) }
+        .take(ksub).zipWithIndex.map { case ((_, sv), r) => (j, r, sv) }
+    }.toArray
+    var it = 0
+    while (it < iters) {
+      val book = codebook(cb, m, sub)
+      cb = PqKernels.centroids(rows.iterator.flatMap { case (_, x) =>
+        val codes = PqKernels.l2Codes(x, book)
+        Iterator.tabulate(m)(j => ((j, codes(j)), PqKernels.slice(x, j, sub)))
+      }, sub).map { case ((j, c), cent) => (j, c, cent) }.toArray
+      it += 1
+    }
+    cb
+  }
+
+  /** The cluster rounds, for a base over the driver budget: the base is
+    * checkpointed; the seeds are one bounded heap per subspace over the
+    * distinct (j, slice) patterns; each Lloyd round is ONE distributed
+    * job — the `graft_l2_codes` map feeding the exact decimal-mean
+    * centroid aggregation, collected for the next round's literals and
+    * re-sorted by (j, code) so the literal layout never depends on
+    * partition order [D1]. */
+  private def pqFitCluster(sampled: DataFrame, dim: Int, m: Int, ksub: Int,
+    iters: Int): Array[(Int, Int, Array[Double])] = {
     val sub = dim / m
-    val svAll = subvectors(emb, idCol, vecCol, dim, m)
-    val base = (if (trainOneIn == 1) svAll
-      else svAll.filter(idHash(col("id")) % trainOneIn === 0))
-      .localCheckpoint(true)
-    // per-subspace seeds: collapse to distinct (j, sv) patterns keyed
-    // by their smallest carrying id, then one bounded heap per subspace
-    // picks the ksub patterns whose key id hash-scatters first
+    val base = sampled.localCheckpoint(true)
     val seedCb = graft.plans.GraftOps.topKPerGroup(
-      base.groupBy(col("j"), col("sv")).agg(min(col("id")).as("__kid"))
-        .withColumn("__h", idHash(col("__kid"))),
+      subvectorsKeyed(base, Seq("id"), "v", dim, m)
+        .groupBy(col("j"), col("sv")).agg(min(col("id")).as("__kid"))
+        .withColumn("__h", IvfIndex.idHash(col("__kid"))),
       Seq(col("j")), Seq(col("__h").asc, col("__kid").asc), ksub,
       rankName = "__rk")
       .select(col("j"), (col("__rk") - 1).cast("int").as("code"),
-        expr("transform(sv, x -> CAST(x AS DOUBLE))").as("cent"))
-    if (iters == 0) return seedCb
-    // r15: the per-round codebook is the bounded MODEL table
-    // (m·ksub·(dim/m) doubles) — it lives on the driver between rounds,
-    // exactly like [[pqIntTrain]]'s integer kernel. Each round is then
-    // ONE distributed job — the [[assignLit]] map feeding the exact
-    // decimal-mean centroid aggregation, collected for the next
-    // round's literals — instead of the broadcast build + bounded-heap
-    // shuffle + (id, j) join-back + eager checkpoint the DataFrame
-    // round paid (r13/r14 shape; shared:ivfpq_train / pq_prod_train
-    // job counts measured down). Same distances (l2sq's tree, the
-    // self-dot precomputed by the same left fold), same tie-break,
-    // same centroid arithmetic — collected rows re-sort by (j, code)
-    // so literal layout never depends on partition order [D1]; a code
-    // emptied by a round disappears exactly as the groupBy dropped it.
-    var cbLocal: Array[(Int, Int, Array[Double])] = seedCb.collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        col("sv").cast("array<double>").as("cent"))
+    var cb = collectCb(seedCb)
     val centroid = udaf(new CentroidAggregator(sub),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
-    var cbDf: DataFrame = null
     var it = 0
     while (it < iters) {
-      cbDf = assignLit(base, m, cbLocal)
+      cb = collectCb(base
+        .select(col("v"), posexplode(codebookCall("graft_l2_codes", col("v"),
+          codebook(cb, m, sub))).as(Seq("j", "code")))
         .groupBy("j", "code")
-        .agg(centroid(col("sv").cast("array<float>")).as("cent"))
-      if (it < iters - 1)
-        cbLocal = cbDf.collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        .agg(centroid(slice(col("v"), col("j") * sub + 1, lit(sub))
+          .cast("array<float>")).as("cent")))
+        .sortBy(e => (e._1, e._2))
       it += 1
     }
-    cbDf
+    cb
   }
 
   /** Encode the corpus: (id, j, code) — m rows per vector, the
     * compressed representation ADC searches against. The codebook is
     * the bounded model table: it collects to the driver once and the
-    * encode is the [[assignLit]] pure map — at any corpus size the
-    * encode stage has NO shuffle and no broadcast build (the former
-    * bounded-heap form shuffled ≤ k·partitions rows and paid a
-    * broadcast + heap exchange per encode). */
+    * encode is one `graft_l2_codes` map exploded by subspace — no
+    * shuffle and no broadcast build at any corpus size. */
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
-    dim: Int, m: Int, cb: DataFrame): DataFrame =
-    assignLit(subvectors(emb, idCol, vecCol, dim, m), m,
-      cb.collect().map(r =>
-        (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray)))
-      .select("id", "j", "code")
+    dim: Int, m: Int, cb: DataFrame): DataFrame = {
+    GraftFunctions.register(emb.sparkSession)
+    emb.select(col(idCol).as("id"), posexplode(codebookCall("graft_l2_codes",
+        col(vecCol), codebook(collectCb(cb), m, dim / m))).as(Seq("j", "code")))
+  }
 
   /** ADC top-k: per probe, rank ids by the sum of table-looked-up
     * sub-distances (asc, id tie-break). `probes` needs (probe_id, pe).
@@ -601,50 +629,33 @@ object PqOps {
   }
 
   /** Decimal-mean cell centroids over an (id, cell) assignment:
-    * (cell, cent array<double>). One of the three persisted IVF+PQ
-    * training artifacts (with the residual codebooks and the codes) —
-    * gated hosts memoize each via `Caches.memo` so repeated searches in
-    * one session never retrain (the IvfIndex persisted-index analog). */
+    * (cell, cent array<double>) — the IVF+PQ coarse centroids the
+    * residuals are taken against. */
   def cellCentroids(emb: DataFrame, idCol: String, vecCol: String,
     dim: Int, cells: DataFrame): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
-    val centroid = udaf(new CentroidAggregator(dim),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
-    emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .join(cells, Seq("id"))
-      .groupBy("cell")
-      .agg(centroid(col("v").cast("array<float>")).as("cent"))
+    centroidsByCell(emb.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .join(cells, Seq("id")), dim)
   }
 
-  /** Residual corpus (id, cell, res): v − centroid(cell) — what the
-    * IVF+PQ codebooks train on and the codes encode. */
-  def residuals(emb: DataFrame, idCol: String, vecCol: String,
-    cells: DataFrame, cents: DataFrame): DataFrame =
-    emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .join(cells, Seq("id"))
-      .join(broadcast(cents), Seq("cell"))
-      .select(col("id"), col("cell"),
-        expr("zip_with(v, cent, (x, y) -> CAST(x AS DOUBLE) - y)").as("res"))
-
-  /** [[cellCentroids]] over an assignment that already CARRIES the
-    * vector ((id, v, cell) — IvfIndex.kmeansAssigned): the same
-    * decimal-mean aggregation with the corpus⋈cells id-join dropped
-    * (guide §2.4 — the join re-attached a column the assignment map
-    * had in hand). */
-  def cellCentroidsAssigned(assigned: DataFrame, dim: Int): DataFrame = {
-    GraftFunctions.register(assigned.sparkSession)
+  private def centroidsByCell(assigned: DataFrame, dim: Int): DataFrame = {
     val centroid = udaf(new CentroidAggregator(dim),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
     assigned.groupBy("cell")
       .agg(centroid(col("v").cast("array<float>")).as("cent"))
   }
 
-  /** [[residuals]] over a vector-carrying assignment — one broadcast
-    * of the |cells| centroids into a pure map, no corpus shuffle. */
-  def residualsAssigned(assigned: DataFrame, cents: DataFrame): DataFrame =
-    assigned.join(broadcast(cents), Seq("cell"))
+  /** Residual corpus (id, cell, res): v − centroid(cell) — what the
+    * IVF+PQ codebooks train on and the codes encode. */
+  def residuals(emb: DataFrame, idCol: String, vecCol: String,
+    cells: DataFrame, cents: DataFrame): DataFrame = {
+    GraftFunctions.register(emb.sparkSession)
+    emb.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .join(cells, Seq("id"))
+      .join(broadcast(cents), Seq("cell"))
       .select(col("id"), col("cell"),
-        expr("zip_with(v, cent, (x, y) -> CAST(x AS DOUBLE) - y)").as("res"))
+        call_function("graft_vsub", col("v"), col("cent")).as("res"))
+  }
 
   /** IVF+PQ (residual) two-stage search — the composed 100 TB ANN
     * layout: a coarse quantizer of `kCells` learned cells prunes WHICH
@@ -655,40 +666,113 @@ object PqOps {
     * probe's residual against that cell, shortlists `shortK`, and the
     * exact re-rank finishes to top `k`.
     *
-    * Scale shape: training (cells + codebooks) is sample-able
-    * (`trainOneIn` — the spread-hash 1-in-n sample drives BOTH the
-    * coarse Lloyd and the PQ codebook Lloyd; encoding and search always
-    * cover the full corpus) and one-off; at query time the probe side
-    * broadcasts a |probes|·nprobe·m·ksub distance table and the
-    * (cell, j, code) equi-join touches only the probed cells' codes —
-    * the corpus's raw vectors surface exclusively in the
-    * |probes|·shortK re-rank join. Everything deterministic [D2]:
-    * decimal-mean centroids, 6dp-rounded distances, (cell, code, id)
+    * Scale shape: [[ivfPqTrain]] builds the model — on the driver when
+    * the 1-in-`trainOneIn` training sample fits
+    * [[IvfIndex.DriverBaseBytes]] — and encodes the corpus in one map;
+    * at query time the probe side broadcasts |probes|·nprobe distance
+    * tables of m·ksub entries, and each code row in a probed cell is
+    * scored by `graft_adc_sum` in the same map — the corpus's raw
+    * vectors surface only in the |probes|·shortK re-rank join.
+    * Everything deterministic [D2]: decimal-mean centroids,
+    * 6dp-rounded distances summed as exact decimals, (cell, code, id)
     * tie-breaks. Sessions answering many probe batches should train
-    * once via [[cellCentroids]]/[[residuals]]/[[pqCodebooks]]/
-    * [[pqEncode]] and search with [[ivfPqSearchWith]]. */
+    * once with [[ivfPqTrain]], persist the codes, and search with
+    * [[ivfPqSearchWith]]. */
   def ivfPqSearch(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
     kCells: Int, cellIters: Int, m: Int, ksub: Int, pqIters: Int,
     probes: DataFrame, nprobe: Int, shortK: Int, k: Int,
     trainOneIn: Int = 1): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    val cells = graft.sources.IvfIndex.kmeansCells(
-      emb, idCol, vecCol, kCells, cellIters, dim, trainOneIn)
-    val cents = cellCentroids(emb, idCol, vecCol, dim, cells)
-      .localCheckpoint(true)
-    val res = residuals(emb, idCol, vecCol, cells, cents)
-      .localCheckpoint(true)
-    val cb = pqCodebooks(res, "id", "res", dim, m, ksub, pqIters, trainOneIn)
-    val codes = pqEncode(res, "id", "res", dim, m, cb)
-      .join(res.select("id", "cell"), Seq("id"))
-    ivfPqSearchWith(cents, cb, codes, emb, idCol, vecCol, dim, m,
-      probes, nprobe, shortK, k)
+    val (cents, cb, codes) = ivfPqTrain(emb, idCol, vecCol, dim, kCells,
+      cellIters, m, ksub, pqIters, trainOneIn)
+    // the encode map runs once, into block storage: left lazy, the
+    // search's codegen'd join would evaluate it inside the match loop,
+    // once per (code row, probe of its cell)
+    ivfPqSearchWith(cents, cb, codes.localCheckpoint(true), emb, idCol,
+      vecCol, dim, m, probes, nprobe, shortK, k)
   }
 
-  /** [[ivfPqSearch]]'s query stage against prebuilt training artifacts:
-    * `cents` (cell, cent), `cb` residual codebooks, `codes`
-    * (id, j, code, cell). Self-match exclusion as in [[pqAdcTopK]]:
-    * probes share the corpus id space, or pass `excludeSelf = false`. */
+  /** The IVF+PQ model and encoded corpus: `cents` (cell, cent) and `cb`
+    * (j, code, cent) as local relations built on the driver, and
+    * `codes` (id, cell, codes array<int>, subspace j at position j) as
+    * one lazy map over the corpus.
+    *
+    *  - The coarse cells are [[IvfIndex.kmeansFit]]'s: on the driver
+    *    when the sample fits [[IvfIndex.DriverBaseBytes]], else the
+    *    per-round cluster jobs.
+    *  - `cents` are the decimal means of the final assignment over the
+    *    whole corpus: on the driver when the sample IS the corpus
+    *    (`trainOneIn` 1), else one aggregation job.
+    *  - The codebooks train on the sample's residuals against `cents`:
+    *    the driver already holds the sample on the driver path; the
+    *    cluster path samples the residual map ([[pqCodebooks]]'s
+    *    branches, same budget). On the driver the residuals are doubles:
+    *    twice the sample's float payload.
+    *  - Pass `codes` to [[ivfPqSearchWith]] persisted or checkpointed.
+    *  - `codes` assigns, takes the residual and encodes in one pass:
+    *    `graft_cos_argmax` → `graft_vsub` → `graft_l2_codes`.
+    *
+    * The same artifacts as [[IvfIndex.kmeansCells]] → [[cellCentroids]]
+    * → [[residuals]] → [[pqCodebooks]] → [[pqEncode]], bit for bit
+    * (ApiSpec), without their corpus⋈cells joins. */
+  def ivfPqTrain(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
+    kCells: Int, cellIters: Int, m: Int, ksub: Int, pqIters: Int,
+    trainOneIn: Int = 1): (DataFrame, DataFrame, DataFrame) = {
+    require(dim > 0 && m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
+    require(ksub > 0 && pqIters >= 0, "need ksub > 0, pqIters >= 0")
+    val spark = emb.sparkSession
+    GraftFunctions.register(spark)
+    val sub = dim / m
+    val (full, fit) = IvfIndex.kmeansFit(emb, idCol, vecCol, kCells,
+      cellIters, dim, trainOneIn, IvfIndex.DriverBaseBytes)
+    val assigned = IvfIndex.assignCells(full, fit.cells)
+    val cellOf = IvfIndex.cellModel(fit.cells)
+    val cents: IndexedSeq[(Int, Array[Double])] = fit.sample match {
+      case Some(rows) if trainOneIn == 1 => PqKernels.centroids(
+        rows.iterator.map(r => (PqKernels.cosArgmax(r._2, cellOf), r._2)), dim)
+      case _ => centroidsByCell(assigned, dim).collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).toIndexedSeq
+    }
+    val centOf = cents.toMap
+    // the residual's centroid by cell id (ids are the dense seed
+    // indexes; every assigned cell has a centroid)
+    val centByCell = typedLit((0 to cents.map(_._1).max).map(c =>
+      centOf.get(c).fold(Seq.empty[Double])(_.toSeq)))
+    val residual = call_function("graft_vsub", col("v"),
+      centByCell.getItem(col("cell")))
+    val cb = fit.sample match {
+      case Some(rows) => pqFitLocal(rows.map { case (id, v) =>
+          val c = centOf(PqKernels.cosArgmax(v, cellOf))
+          (id, Array.tabulate(v.length)(i => v(i) - c(i)))
+        }, m, sub, ksub, pqIters)
+      case None => pqFit(IvfIndex.trainSample(
+          assigned.select(col("id"), residual.as("v")), trainOneIn),
+        dim, m, ksub, pqIters, IvfIndex.DriverBaseBytes)
+    }
+    val codes = assigned.select(col("id"), col("cell"),
+      codebookCall("graft_l2_codes", residual, codebook(cb, m, sub))
+        .as("codes"))
+    val centSchema = StructType(Seq(
+      StructField("cell", IntegerType, nullable = false),
+      StructField("cent", ArrayType(DoubleType, containsNull = false),
+        nullable = false)))
+    (spark.createDataFrame(
+      cents.map { case (c, v) => Row(c, v.toSeq) }.asJava, centSchema),
+      codebookFrame(spark, cb), codes)
+  }
+
+  /** [[ivfPqSearch]]'s query stage against trained artifacts: `cents`
+    * (cell, cent), `cb` residual codebooks (j, code, cent) and `codes`
+    * (id, cell, codes array<int>) encoded against that `cb`
+    * ([[ivfPqTrain]]). Per probe, the `nprobe` nearest cells by exact
+    * L2; per (probe, cell) the residual's distance table
+    * (`graft_l2_table`), broadcast; each code row of a probed cell is
+    * scored by `graft_adc_sum` — the DECIMAL(38,6) sum of its m table
+    * entries — then shortlisted and re-ranked exactly. Pass `codes`
+    * materialized (persisted or checkpointed): a lazy encode map is
+    * re-evaluated per matching probe inside the join. Self-match
+    * exclusion as in [[pqAdcTopK]]: probes share the corpus id space,
+    * or pass `excludeSelf = false`. */
   def ivfPqSearchWith(cents: DataFrame, cb: DataFrame, codes: DataFrame,
     emb: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int,
     probes: DataFrame, nprobe: Int, shortK: Int, k: Int,
@@ -696,6 +780,7 @@ object PqOps {
     require(nprobe > 0 && k > 0 && shortK >= k,
       "need nprobe > 0 and shortK >= k > 0")
     GraftFunctions.register(emb.sparkSession)
+    val book = codebook(collectCb(cb), m, dim / m)
     // probe cell selection by exact L2 to the centroids
     val psel = graft.plans.GraftOps.topKPerGroup(
       broadcast(probes).crossJoin(broadcast(cents))
@@ -707,21 +792,16 @@ object PqOps {
       Seq(col("probe_id")), Seq(col("d2").asc, col("cell").asc), nprobe,
       rankName = "__cr")
     // per-(probe, cell) residual → ADC distance table, broadcast
-    val ptab = subvectorsKeyed(
-      psel.join(broadcast(cents), Seq("cell"))
-        .select(col("probe_id"), col("cell"),
-          expr("zip_with(pe, cent, (x, y) -> CAST(x AS DOUBLE) - y)")
-            .as("pres")),
-      Seq("probe_id", "cell"), "pres", dim, m)
-      .join(broadcast(cb), Seq("j"))
-      .select(col("probe_id"), col("cell"), col("j"), col("code"),
-        l2sq("sv", "cent").as("d"))
-    val joined = codes.join(broadcast(ptab), Seq("cell", "j", "code"))
+    val ptab = psel.join(broadcast(cents), Seq("cell"))
+      .select(col("probe_id"), col("cell"),
+        codebookCall("graft_l2_table",
+          call_function("graft_vsub", col("pe"), col("cent")), book).as("tab"))
+    val joined = codes.join(broadcast(ptab), Seq("cell"))
     val scores = (if (excludeSelf) joined.filter(col("id") =!= col("probe_id"))
       else joined)
-      .groupBy("probe_id", "id")
-      .agg(round(sum(col("d").cast(graft.Dets.Dec)).cast("double"), 6)
-        .as("adc6"))
+      .select(col("probe_id"), col("id"),
+        round(call_function("graft_adc_sum", col("codes"), col("tab"))
+          .cast("double"), 6).as("adc6"))
     val short = graft.plans.GraftOps.topKPerGroup(scores,
         Seq(col("probe_id")), Seq(col("adc6").asc, col("id").asc), shortK,
         rankName = "__r")

@@ -209,7 +209,14 @@ object GraftFunctions {
     "graft_jaro_winkler" -> (es => JaroWinklerSim(es(0), es(1))),
     "graft_jaro_winkler_gte" -> (es => JaroWinklerGte(es(0), es(1),
       unitDoubleLit(es(2), "graft_jaro_winkler_gte cutoff"))),
-    "graft_common_bytes" -> (es => CommonByteCount(es(0), es(1)))
+    "graft_common_bytes" -> (es => CommonByteCount(es(0), es(1))),
+    "graft_cos_argmax" -> (es => CosArgmax(es(0), es(1), es(2))),
+    "graft_l2_codes" -> (es =>
+      L2Codes(es(0), intLit(es(1), "graft_l2_codes sub"), es(2), es(3))),
+    "graft_l2_table" -> (es =>
+      L2Table(es(0), intLit(es(1), "graft_l2_table sub"), es(2), es(3))),
+    "graft_adc_sum" -> (es => AdcSum(es(0), es(1))),
+    "graft_vsub" -> (es => VecSub(es(0), es(1)))
   )
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

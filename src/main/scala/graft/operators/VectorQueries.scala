@@ -312,10 +312,10 @@ object VectorQueries {
     // measured 0.833, matching flat PQ, with the pruning machinery
     // fully exercised; clustered production data is where nprobe ≪
     // kCells pays. Oracle-omitted like q132 (k-means); floors in
-    // RecallAuditSpec. The five training artifacts (coarse assignment,
-    // cell centroids, residual corpus, codebooks, codes) memoize via
-    // Caches.memo keyed on (dir, layout) — only the search stage runs
-    // per invocation after the first.
+    // RecallAuditSpec. The three training artifacts (cell centroids,
+    // codebooks, cell-tagged codes) memoize via Caches.memo keyed on
+    // (dir, layout) — only the search stage runs per invocation after
+    // the first.
     "q134_ivfpq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val (cents, cb, codes) = ivfPqArtifacts(s, dir)
@@ -825,38 +825,23 @@ object VectorQueries {
   }
 
   /** q134's IVF+PQ training artifacts (cell centroids, residual
-    * codebooks, cell-tagged codes), memoized per (session, dir,
-    * layout) — same sharing contract as [[pqProdArtifacts]]. The
-    * intermediate cells/residual frames stay memoized too: the
-    * codebook/code builds read them lazily on first materialization. */
+    * codebooks, cell-tagged code arrays) from ONE [[PqOps.ivfPqTrain]]
+    * run per (session, dir, layout), memoized — same sharing contract
+    * as [[pqProdArtifacts]], same one-training-run convention as
+    * [[pqIntArtifacts]]. */
   private[graft] def ivfPqArtifacts(s: SparkSession, dir: String)
   : (DataFrame, DataFrame, DataFrame) = {
-    val emb = t(s, dir, "embeddings")
     val mk = s"ivfpq:$dir:64:$IvfPqCells:4:$PqM:$PqKsub:$PqIters"
-    // r15: the memoized assignment CARRIES the vector (id, v, cell) —
-    // centroids aggregate it directly and residuals are a
-    // broadcast-map, where the (id, cell)-only form re-joined the
-    // corpus by id twice (guide §2.4); rows and values are identical
-    // (the join was 1:1 on id).
-    val cells = graft.Caches.memo(s, s"$mk:cellsfull") {
-      graft.sources.IvfIndex.kmeansAssigned(
-        emb, "vec_id", "embedding", IvfPqCells, 4, 64)
+    var built: Option[(DataFrame, DataFrame, DataFrame)] = None
+    def b(i: Int): DataFrame = {
+      if (built.isEmpty)
+        built = Some(graft.api.PqOps.ivfPqTrain(t(s, dir, "embeddings"),
+          "vec_id", "embedding", 64, IvfPqCells, 4, PqM, PqKsub, PqIters, 1))
+      built.get.productElement(i).asInstanceOf[DataFrame]
     }
-    val cents = graft.Caches.memo(s, s"$mk:cents") {
-      graft.api.PqOps.cellCentroidsAssigned(cells, 64)
-    }
-    val res = graft.Caches.memo(s, s"$mk:res") {
-      graft.api.PqOps.residualsAssigned(cells, cents)
-    }
-    val cb = graft.Caches.memo(s, s"$mk:cb") {
-      graft.api.PqOps.pqCodebooks(res, "id", "res", 64, PqM, PqKsub,
-        PqIters)
-    }
-    val codes = graft.Caches.memo(s, s"$mk:codes") {
-      graft.api.PqOps.pqEncode(res, "id", "res", 64, PqM, cb)
-        .join(res.select("id", "cell"), Seq("id"))
-    }
-    (cents, cb, codes)
+    (graft.Caches.memo(s, s"$mk:cents")(b(0)),
+      graft.Caches.memo(s, s"$mk:cb")(b(1)),
+      graft.Caches.memo(s, s"$mk:codes")(b(2)))
   }
 
   /** The q267/q268/q284 integer-PQ training artifacts (trace, cents,

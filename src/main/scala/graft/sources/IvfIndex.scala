@@ -1,9 +1,10 @@
 package graft.sources
 
-import graft.functions.{CentroidAggregator, GraftFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.{CellModel, CentroidAggregator, GraftFunctions, PqKernels}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Persisted IVF (inverted-file) ANN index over an embedding table.
   *
@@ -116,17 +117,18 @@ object IvfIndex {
     * farthest (min over seeds of cosine, id tie-break). Hash-scatter
     * seeding is NOT enough — two seeds landing in one true cluster
     * splits it while two other clusters merge, and Lloyd cannot recover
-    * (observed in the spec before this). Each of the k seeding steps and
-    * each Lloyd iteration is one scan with ≤k dot products per row — the
-    * standard IVF training profile; train on a sample when the corpus is
-    * too large even for that (the layout and search path don't change).
-    * The k seed vectors live on the driver (k × dim floats — the
-    * quantizer itself, not data): bounded and tiny.
+    * (observed in the spec before this).
     *
-    * Assignment broadcasts the centroid table and takes the max-cosine
-    * centroid through the bounded-heap argmax (one pass, no shuffle of
-    * scored pairs); recomputation uses exact decimal-mean centroids; an
-    * emptied cell simply disappears (k shrinks, never crashes).
+    * Scale shape ([[kmeansFit]]): a training base that fits the one
+    * driver budget, [[DriverBaseBytes]] (rows × (dim·w + 8) bytes, w the
+    * element width), is collected once and seeded and iterated on the
+    * driver; a larger one pays one scan per seed and one per Lloyd
+    * round. The cells are the model (k × dim doubles, the quantizer
+    * itself, not data) and ride the plan as literals: assignment is the
+    * `graft_cos_argmax` map ([[graft.functions.PqKernels.cosArgmax]]),
+    * one pass, no broadcast, no shuffle. Recomputation uses exact
+    * decimal-mean centroids; an emptied cell simply disappears (k
+    * shrinks, never crashes).
     *
     * `trainOneIn` is the 100 TB training path: seeding and Lloyd
     * iterations run on the deterministic 1-in-`trainOneIn`
@@ -145,137 +147,144 @@ object IvfIndex {
     * literals ride the plan), so keeping `v` on the row is free — and
     * downstream artifact builds (cell centroids, residuals) that would
     * otherwise re-join the corpus to the (id, cell) table by id can
-    * aggregate or map DIRECTLY, dropping two corpus-sized exchanges
-    * per build (guide §2.4). */
+    * aggregate or map DIRECTLY (guide §2.4). `budget` is the driver
+    * base budget ([[DriverBaseBytes]]; specs pass 0 to force the
+    * cluster path). */
   private[graft] def kmeansAssigned(emb: DataFrame, idCol: String,
-    vecCol: String, k: Int, iters: Int, dim: Int, trainOneIn: Int = 1)
-  : DataFrame = {
+    vecCol: String, k: Int, iters: Int, dim: Int, trainOneIn: Int = 1,
+    budget: Long = DriverBaseBytes): DataFrame = {
+    val (full, fit) =
+      kmeansFit(emb, idCol, vecCol, k, iters, dim, trainOneIn, budget)
+    assignCells(full, fit.cells)
+  }
+
+  /** A trained coarse quantizer: the farthest-first seed ids in pick
+    * order, the Lloyd cells (cell, centroid) ascending by cell, and the
+    * training base itself when it fitted the driver budget. */
+  private[graft] final case class CellFit(seedIds: Seq[Long],
+    cells: IndexedSeq[(Int, Array[Double])],
+    sample: Option[Array[(Long, Array[Double])]])
+
+  private[graft] def cellModel(cells: IndexedSeq[(Int, Array[Double])])
+  : CellModel = new CellModel(cells.map(_._2).toArray, cells.map(_._1).toArray)
+
+  /** (…, cell): each row's nearest cell by cosine, `graft_cos_argmax`
+    * against the cells as literals — a pure map, no broadcast. */
+  private[graft] def assignCells(df: DataFrame,
+    cells: IndexedSeq[(Int, Array[Double])]): DataFrame =
+    df.withColumn("cell", call_function("graft_cos_argmax", col("v"),
+      typedLit(cells.map(_._2.toSeq)), typedLit(cells.map(_._1))))
+
+  /** The spread-hash 1-in-`trainOneIn` training sample of an (id, …)
+    * table — a pure id predicate, so the same ids train on any engine
+    * or cluster size. */
+  private[graft] def trainSample(df: DataFrame, trainOneIn: Int): DataFrame =
+    if (trainOneIn == 1) df
+    else df.filter(idHash(col("id")) % trainOneIn === 0)
+
+  private val Spread = 2654435761L
+  private val HashMod = graft.functions.TextFunctions.HashMod
+
+  /** The multiplicative-spread id hash pmod(pmod(id, M)·spread, M). */
+  private[graft] def idHash(id: Column): Column =
+    pmod(pmod(id, lit(HashMod)) * Spread, lit(HashMod))
+
+  /** [[idHash]] on the driver — Spark's long arithmetic wraps like
+    * Java's, so the product is the same wrap. */
+  private[graft] def idHash(id: Long): Long = {
+    val m1 = ((id % HashMod) + HashMod) % HashMod
+    val p = m1 * Spread
+    ((p % HashMod) + HashMod) % HashMod
+  }
+
+  /** Seeds and Lloyd rounds over the sampled base; returns the
+    * unsampled (id, v) corpus for the final assignment and the fit.
+    *
+    * Driver path: when the base fits `budget` ([[collectWithin]]) it is
+    * collected once and seeding and every Lloyd round run on the
+    * driver with the [[PqKernels]] arithmetic — the same functions the
+    * `graft_cos_argmax` map runs on the executors, and the same
+    * [[CentroidAggregator]] the cluster rounds aggregate with, so both
+    * paths produce identical seeds and cells (ApiSpec runs both on one
+    * base).
+    *
+    * Cluster path, for a base over the budget (only reachable when a
+    * huge corpus trains unsampled): one sort-head job per farthest-first
+    * seed, then one distributed job per Lloyd round — the
+    * `graft_cos_argmax` map feeding the centroid aggregation, collected
+    * for the next round's literals, re-sorted by cell so the literal
+    * layout never depends on partition order [D1]. An emptied cell
+    * disappears on both paths (k shrinks, never crashes). */
+  private[graft] def kmeansFit(emb: DataFrame, idCol: String, vecCol: String,
+    k: Int, iters: Int, dim: Int, trainOneIn: Int, budget: Long)
+  : (DataFrame, CellFit) = {
     require(k > 0 && iters >= 0 && dim > 0, "need k > 0, iters >= 0, dim > 0")
     require(trainOneIn >= 1, "trainOneIn must be >= 1")
     GraftFunctions.register(emb.sparkSession)
-    val spread = 2654435761L
-    val mod = graft.functions.TextFunctions.HashMod
-    // `full` is only checkpointed when it IS the training base: with
-    // trainOneIn > 1 the full corpus is scanned exactly once (the final
-    // assignment), so materializing every row into block storage up
-    // front would pay a complete extra pass for zero reuse — only the
-    // sampled training base iterates and earns the checkpoint
-    val fullLazy = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n2", expr("graft_dot(v, v)"))
-    val base =
-      if (trainOneIn == 1) fullLazy.localCheckpoint(true)
-      else fullLazy.filter(
-        pmod(pmod(col("id"), lit(mod)) * spread, lit(mod)) % trainOneIn === 0)
-        .localCheckpoint(true)
-    val full = if (trainOneIn == 1) base else fullLazy
-    // superseded localCheckpoints (base, per-iteration cents) are
-    // reclaimed by the ContextCleaner once unreferenced — no manual
-    // unpersist needed, but do not hold references to returned frames
-    // longer than necessary on a large training corpus
-    //
-    // Farthest-first seeding is inherently sequential (seed i+1 depends
-    // on seed i), so the cluster form pays one full-scan sort-head JOB
-    // per seed — k-1 scheduler round-trips that dominate the training
-    // time on a small (sampled) base. When the base fits a bounded
-    // driver buffer, ONE collect replaces them and the k-1 picks run
-    // driver-side with the SAME arithmetic, bit for bit: graft_dot's
-    // left-fold double accumulation, safeDiv's NULL on zero denominator
-    // treated as cosine +1 (the zero-norm rule below), Double.compare
-    // ordering with id tie-break — mirrored in [[seedDriver]] and gated
-    // by DeterminismSpec/RecallAuditSpec. A base past the bound (the
-    // 100 TB path samples via trainOneIn precisely so it never is)
-    // falls back to the per-seed jobs unchanged.
-    val sess0 = emb.sparkSession
-    val collected: Array[(Long, Array[Float])] = {
-      import sess0.implicits._
-      base.select(col("id"), col("v")).limit(SeedCollectMaxRows + 1)
-        .as[(Long, Array[Float])].collect()
+    val full = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val sampled = trainSample(full, trainOneIn)
+    collectWithin(sampled, dim, budget) match {
+      case Some(rows) =>
+        require(rows.nonEmpty,
+          "kmeansCells needs a non-empty (sampled) embedding table")
+        val seeds = seedDriver(rows, k)
+        var cells = seeds.zipWithIndex.map { case ((_, v), i) => (i, v) }
+        var it = 0
+        while (it < iters) {
+          val m = cellModel(cells)
+          cells = PqKernels.centroids(
+            rows.iterator.map(r => (PqKernels.cosArgmax(r._2, m), r._2)), dim)
+          it += 1
+        }
+        (full, CellFit(seeds.map(_._1), cells, Some(rows)))
+      case None =>
+        // `full` is only checkpointed when it IS the training base: with
+        // trainOneIn > 1 the full corpus is scanned exactly once (the
+        // final assignment), so materializing every row up front would
+        // pay a complete extra pass for zero reuse
+        val base = sampled.withColumn("n2", expr("graft_dot(v, v)"))
+          .localCheckpoint(true)
+        val fit = clusterFit(base, k, iters, dim)
+        (if (trainOneIn == 1) base.select("id", "v") else full, fit)
     }
-    require(collected.nonEmpty,
-      "kmeansCells needs a non-empty (sampled) embedding table")
-    def seedCos(s: Array[Float]): Column = {
-      val sn2 = s.foldLeft(0d)((a, x) => a + x.toDouble * x)
+  }
+
+  private def clusterFit(base: DataFrame, k: Int, iters: Int, dim: Int)
+  : CellFit = {
+    def seedCos(s: Array[Double]): Column =
       graft.Dets.safeDiv(call_function("graft_dot", col("v"), typedLit(s)),
-        sqrt(col("n2")) * math.sqrt(sn2))
-    }
-    val seedIds = scala.collection.mutable.Set.empty[Long]
-    val seedBuf = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-    if (collected.length <= SeedCollectMaxRows) {
-      seedDriver(collected, k, seedIds, seedBuf)
-    } else {
-      val firstRow = base
-        .withColumn("__h", pmod(pmod(col("id"), lit(mod)) * spread, lit(mod)))
-        .orderBy(col("__h").asc, col("id").asc).select("id", "v")
+        sqrt(col("n2")) * math.sqrt(PqKernels.dot(s, s)))
+    val first = base.withColumn("__h", idHash(col("id")))
+      .orderBy(col("__h").asc, col("id").asc).select("id", "v").head(1)
+    require(first.nonEmpty,
+      "kmeansCells needs a non-empty (sampled) embedding table")
+    val firstRow = first.head
+    val seedIds = scala.collection.mutable.LinkedHashSet(firstRow.getLong(0))
+    val seedBuf = scala.collection.mutable.ArrayBuffer(doubles(firstRow))
+    var exhausted = false
+    while (seedBuf.size < k && !exhausted) {
+      // a zero-norm vector has NULL cosine to every seed; without the
+      // coalesce it would sort NULLS FIRST and be re-picked as EVERY
+      // remaining seed, collapsing the quantizer to one usable cell.
+      // Treating NULL as +1 (nearest possible) makes zero vectors the
+      // least attractive seed instead.
+      val nearest = coalesce(
+        seedBuf.toSeq.map(seedCos).reduce(greatest(_, _)), lit(1d))
+      val next = base.withColumn("__near", nearest)
+        .orderBy(col("__near").asc, col("id").asc).select("id", "v")
         .head()
-      seedIds += firstRow.getLong(0)
-      seedBuf += firstRow.getSeq[Float](1).toArray
-      var exhausted = false
-      while (seedBuf.size < k && !exhausted) {
-        // a zero-norm vector has NULL cosine to every seed; without the
-        // coalesce it would sort NULLS FIRST and be re-picked as EVERY
-        // remaining seed, collapsing the quantizer to one usable cell.
-        // Treating NULL as +1 (nearest possible) makes zero vectors the
-        // least attractive seed instead.
-        val nearest = coalesce(
-          seedBuf.toSeq.map(seedCos).reduce(greatest(_, _)), lit(1d))
-        val next = base.withColumn("__near", nearest)
-          .orderBy(col("__near").asc, col("id").asc).select("id", "v")
-          .head()
-        // fewer distinct useful rows than k: stop early with fewer cells
-        // rather than silently duplicating seeds
-        if (seedIds.add(next.getLong(0)))
-          seedBuf += next.getSeq[Float](1).toArray
-        else exhausted = true
-      }
+      // fewer distinct useful rows than k: stop early with fewer cells
+      // rather than silently duplicating seeds
+      if (seedIds.add(next.getLong(0))) seedBuf += doubles(next)
+      else exhausted = true
     }
-    // r15: the k cell centroids are the bounded MODEL table (k·dim
-    // doubles) — they live on the driver between rounds, the
-    // PqOps.pqIntTrain kernel convention applied to the float path.
-    // Each Lloyd round is then ONE distributed job — the literal-array
-    // argmax map feeding the exact decimal-mean centroid aggregation,
-    // collected for the next round's literals — instead of the
-    // broadcast build + bounded-heap shuffle + eager checkpoint the
-    // DataFrame round paid. Same cosine tree (safeDiv NULL on a zero
-    // denominator sorts LAST like the heap's DESC NULLS LAST), same
-    // 4dp + cell tie-break, same centroid arithmetic; collected rows
-    // re-sort by cell so literal layout never depends on partition
-    // order [D1]; an emptied cell disappears exactly as the groupBy
-    // dropped it (k shrinks, never crashes).
-    var cells: IndexedSeq[(Int, Array[Double])] =
-      seedBuf.toIndexedSeq.zipWithIndex.map { case (v, i) =>
-        (i, v.map(_.toDouble))
-      }
     val centroid = udaf(new CentroidAggregator(dim),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
-    def assignLit(over: DataFrame): DataFrame = {
-      val cents = typedLit(cells.map(_._2.toSeq))
-      val cellIds = typedLit(cells.map(_._1))
-      val cn2s = typedLit(cells.map(c => dotDD(c._2, c._2)))
-      over.withColumn("__cc", cents)
-        .withColumn("__cd", cellIds)
-        .withColumn("__c2", cn2s)
-        .withColumn("__a", array_min(expr(
-          // min over (cos4-is-null, -cos4, cell) == the old heap's
-          // (cos4 DESC NULLS LAST, cell ASC) top-1: negation under
-          // java.lang.Double.compare is order-reversing (also for
-          // ±0.0), the isn field pushes NULL cosines last, and the
-          // all-NULL case falls to the cell tie-break exactly like
-          // the heap did
-          "transform(sequence(0, size(__cd) - 1), i -> named_struct(" +
-            "'isn', CASE WHEN (sqrt(n2) * sqrt(__c2[i])) != 0D" +
-            " THEN 0 ELSE 1 END, " +
-            "'nc', coalesce(-round(" +
-            "CASE WHEN (sqrt(n2) * sqrt(__c2[i])) != 0D" +
-            " THEN graft_dot(v, __cc[i]) / (sqrt(n2) * sqrt(__c2[i]))" +
-            " END, 4), 0D), " +
-            "'cell', __cd[i]))")))
-        .select(col("id"), col("v"), col("__a.cell").as("cell"))
-    }
+    var cells: IndexedSeq[(Int, Array[Double])] =
+      seedBuf.toIndexedSeq.zipWithIndex.map { case (v, i) => (i, v) }
     var it = 0
     while (it < iters) {
-      // Lloyd trains on the sample; only the final assignment below
-      // pays a full-corpus scan.
-      cells = assignLit(base)
+      cells = assignCells(base, cells)
         .groupBy("cell")
         .agg(centroid(col("v").cast("array<float>")).as("cent"))
         .collect()
@@ -283,72 +292,70 @@ object IvfIndex {
         .sortBy(_._1).toIndexedSeq
       it += 1
     }
-    assignLit(full).select(col("id"), col("v"), col("cell"))
+    CellFit(seedIds.toSeq, cells, None)
   }
 
-  /** graft_dot mirrored on the driver for double arrays — the same
-    * left-fold Σ a[i]·b[i], so precomputed centroid self-dots match
-    * the in-plan `graft_dot(cent, cent)` bit for bit. */
-  private def dotDD(a: Array[Double], b: Array[Double]): Double = {
-    val n = math.min(a.length, b.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += a(i) * b(i); i += 1 }
-    s
+  /** The one byte budget of every driver-resident model base (the
+    * k-means and PQ training bases): 65,536 rows of 64 floats plus an
+    * 8-byte id, about 16.5 MiB — the row cap the seeding collect had at
+    * the fixtures' width. */
+  private[graft] val DriverBaseBytes: Long = 65536L * (64 * 4 + 8)
+
+  /** The (id, v) rows of `base` as doubles, when rows × (dim·w + 8)
+    * fits `budget` bytes, w the vector's element width (4 for float, 8
+    * for double). The ids are counted first — one past the row cap,
+    * vectors pruned — so an over-budget base never ships a vector.
+    * None over the budget, and when a vector or an element is NULL
+    * (those keep the cluster path's NULL semantics). */
+  private[graft] def collectWithin(base: DataFrame, dim: Int, budget: Long)
+  : Option[Array[(Long, Array[Double])]] = {
+    val width = base.schema("v").dataType match {
+      case ArrayType(FloatType, _) => 4
+      case _ => 8
+    }
+    val cap = budget / (dim.toLong * width + 8)
+    if (cap < 1 || base.select("id").limit(math.min(cap + 1, Int.MaxValue).toInt)
+        .collect().length > cap) None
+    else {
+      val rows = base.select(col("id").cast("long"), col("v")).collect()
+      if (rows.exists(r => r.isNullAt(1) || r.getSeq[Any](1).contains(null))) None
+      else Some(rows.map(r => (r.getLong(0), doubles(r))))
+    }
   }
 
-  /** Cap on the one-collect seeding path: 64Ki rows × (64 floats + id)
-    * ≈ 20 MB of driver tuples — bounded like the seed vectors
-    * themselves. Bases past this (only reachable when a huge corpus is
-    * trained UNsampled) keep the per-seed cluster jobs. */
-  private val SeedCollectMaxRows = 65536
+  /** A row's float or double vector (field 1) as doubles. */
+  private def doubles(r: Row): Array[Double] = r.getSeq[Any](1).iterator.map {
+    case f: Float => f.toDouble
+    case d: Double => d
+  }.toArray
 
-  /** Driver-side farthest-first seeding over the collected (id, v)
-    * base — the exact per-seed job arithmetic, mirrored operation for
-    * operation so the picked seeds are bit-identical:
+  /** Farthest-first seeding over the collected base, the per-seed job
+    * arithmetic of [[clusterFit]] step for step:
     *
-    *  - first seed: min (pmod(pmod(id, M)·spread, M), id) — Spark long
-    *    arithmetic wraps like Java's, so the product is the same wrap;
-    *  - dot products: graft_dot's left-fold Σ (double)a[i]·(double)b[i]
-    *    over min(|a|,|b|) elements;
-    *  - per-seed cosine: dot / (sqrt(n2)·sqrt(sn2)), NULL when the
-    *    denominator is 0 (safeDiv) — a row with no non-NULL cosine
-    *    reads as +1 (the zero-norm rule);
-    *  - nearest = greatest over seeds, next = min (nearest, id), both
-    *    on java.lang.Double.compare ordering (Spark's DoubleType
-    *    ordering; keeps -0.0 < 0.0 exactly like the cluster sort);
-    *  - duplicate pick stops the loop early (exhausted), like the
-    *    seedIds.add guard on the job path. */
-  private def seedDriver(rows: Array[(Long, Array[Float])], k: Int,
-    seedIds: scala.collection.mutable.Set[Long],
-    seedBuf: scala.collection.mutable.ArrayBuffer[Array[Float]]): Unit = {
-    val mod = graft.functions.TextFunctions.HashMod
-    val spread = 2654435761L
-    def dotFF(a: Array[Float], b: Array[Float]): Double = {
-      val n = math.min(a.length, b.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
-    def hashOf(id: Long): Long = {
-      val m1 = ((id % mod) + mod) % mod
-      val p = m1 * spread // wraps exactly like Spark's long multiply
-      ((p % mod) + mod) % mod
-    }
-    val n2s = rows.map(r => dotFF(r._2, r._2))
+    *  - first seed: min ([[idHash]], id);
+    *  - per-seed cosine: graft_dot(v, s) / (sqrt(n2)·sqrt(s·s)), NULL
+    *    when the denominator is 0 (safeDiv) — a row with no non-NULL
+    *    cosine reads as +1 (the zero-norm rule);
+    *  - nearest = greatest over seeds, next = min (nearest, id); a
+    *    cosine is never -0.0 (a left fold from +0.0 cannot produce it),
+    *    so java.lang.Double.compare orders them as the cluster sort;
+    *  - a duplicate pick stops the loop early, like the seedIds guard
+    *    on the job path. */
+  private def seedDriver(rows: Array[(Long, Array[Double])], k: Int)
+  : IndexedSeq[(Long, Array[Double])] = {
+    val n2s = rows.map(r => PqKernels.dot(r._2, r._2))
     var fi = 0
     var i = 1
     while (i < rows.length) {
-      val c = java.lang.Long.compare(hashOf(rows(i)._1), hashOf(rows(fi)._1))
+      val c = java.lang.Long.compare(idHash(rows(i)._1), idHash(rows(fi)._1))
       if (c < 0 || (c == 0 && rows(i)._1 < rows(fi)._1)) fi = i
       i += 1
     }
-    seedIds += rows(fi)._1
-    seedBuf += rows(fi)._2
+    val seedIds = scala.collection.mutable.Set(rows(fi)._1)
+    val seeds = scala.collection.mutable.ArrayBuffer(rows(fi))
     var exhausted = false
-    while (seedBuf.size < k && !exhausted) {
-      val seedN2 = seedBuf.map(s => s.foldLeft(0d)((a, x) => a + x.toDouble * x))
+    while (seeds.size < k && !exhausted) {
+      val seedN2 = seeds.map(s => PqKernels.dot(s._2, s._2))
       var bi = -1
       var bNear = 0d
       var r = 0
@@ -356,10 +363,10 @@ object IvfIndex {
         var near = 0d
         var any = false
         var j = 0
-        while (j < seedBuf.length) {
+        while (j < seeds.length) {
           val den = math.sqrt(n2s(r)) * math.sqrt(seedN2(j))
           if (den != 0) {
-            val c = dotFF(rows(r)._2, seedBuf(j)) / den
+            val c = PqKernels.dot(rows(r)._2, seeds(j)._2) / den
             if (!any || java.lang.Double.compare(c, near) > 0) {
               near = c; any = true
             }
@@ -373,8 +380,9 @@ object IvfIndex {
         }
         r += 1
       }
-      if (seedIds.add(rows(bi)._1)) seedBuf += rows(bi)._2
+      if (seedIds.add(rows(bi)._1)) seeds += rows(bi)
       else exhausted = true
     }
+    seeds.toIndexedSeq
   }
 }

@@ -588,6 +588,96 @@ class ApiSpec extends SparkSpec {
     assert(first == again)
   }
 
+  private lazy val sf01Emb: DataFrame =
+    Tables.load(spark, fixture("sf0.01"), "embeddings")
+      .select(col("vec_id").as("vid"), col("embedding").as("v"))
+
+  test("IvfIndex.kmeansFit and PqOps.pqCodebooks: the driver and cluster " +
+    "branches give identical seeds, cells, codebooks and codes") {
+    import graft.api.PqOps
+    import graft.sources.IvfIndex
+    import spark.implicits._
+    // exact duplicates (2 of 1, 9 of 8), signed zeros (3 is 1 with -0.0
+    // where 1 has 0.0), a zero vector (NULL cosine to every seed), fewer
+    // distinct rows than k (farthest-first stops early) and a slice of 6
+    // within 6dp of 5's (its code ties at distance 0 and empties)
+    val synth = Seq(
+      (1L, Array(1f, 0f, 0.5f, -0.0f, 0.25f, 0.25f, 0f, 1f)),
+      (2L, Array(1f, 0f, 0.5f, -0.0f, 0.25f, 0.25f, 0f, 1f)),
+      (3L, Array(1f, -0.0f, 0.5f, 0f, 0.25f, 0.25f, -0.0f, 1f)),
+      (4L, Array.fill(8)(0f)),
+      (5L, Array(0f, 1f, 0f, 1f, 0f, 1f, 0f, 1f)),
+      (6L, Array(0f, 1f, 0f, 1f, 0f, 1f, 0f, 1.0004f)),
+      (7L, Array(-1f, 0f, -0.5f, 0f, -0.25f, -0.25f, 0f, -1f)),
+      (8L, Array(0.5f, 0.5f, 0.5f, 0.5f, -0.5f, -0.5f, -0.5f, -0.5f)),
+      (9L, Array(0.5f, 0.5f, 0.5f, 0.5f, -0.5f, -0.5f, -0.5f, -0.5f)),
+      (10L, Array(0.2f, 0.1f, -0.3f, 0.4f, 0f, -0.0f, 0.6f, -0.2f)),
+      (11L, Array(0.21f, 0.1f, -0.3f, 0.4f, -0.0f, 0f, 0.6f, -0.2f))
+    ).toDF("vid", "v")
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for ((emb, dim, m, k, ksub, oneIn) <- Seq((sf01Emb, 64, 16, 8, 16, 1),
+        (sf01Emb, 64, 16, 8, 16, 4), (synth, 8, 4, 10, 6, 1))) {
+      val what = s"dim $dim, 1 in $oneIn"
+      val fits = Seq(IvfIndex.DriverBaseBytes, 0L).map(b =>
+        IvfIndex.kmeansFit(emb, "vid", "v", k, 2, dim, oneIn, b))
+      val Seq((_, drv), (_, clu)) = fits
+      assert(drv.sample.isDefined && clu.sample.isEmpty, what)
+      assert(drv.seedIds == clu.seedIds, what)
+      assert(drv.cells.map(c => (c._1, c._2.toSeq)) ==
+        clu.cells.map(c => (c._1, c._2.toSeq)), what)
+      val Seq(a0, a1) = fits.map { case (full, fit) =>
+        rows(IvfIndex.assignCells(full, fit.cells).select("id", "cell"))
+      }
+      assert(a0 == a1, what)
+      val codeCounts = Seq(0, 2).map { iters =>
+        val Seq(cb0, cb1) = Seq(IvfIndex.DriverBaseBytes, 0L).map(b =>
+          PqOps.pqCodebooksWithin(emb, "vid", "v", dim, m, ksub, iters, oneIn, b))
+        assert(rows(cb0) == rows(cb1), s"$what, $iters rounds")
+        assert(rows(PqOps.pqEncode(emb, "vid", "v", dim, m, cb0)) ==
+          rows(PqOps.pqEncode(emb, "vid", "v", dim, m, cb1)),
+          s"$what, $iters rounds")
+        cb0.count()
+      }
+      if (emb eq synth)
+        assert(drv.seedIds.size < k && drv.cells.size < drv.seedIds.size &&
+          codeCounts(1) < codeCounts(0) && codeCounts(0) < m * ksub,
+          s"the synthetic base must stop seeding early, empty a cell and " +
+            s"a code: ${drv.seedIds.size} seeds, ${drv.cells.size} cells, " +
+            s"codes $codeCounts")
+    }
+  }
+
+  test("PqOps.ivfPqSearch equals its public pieces on the cluster path, " +
+    "and is identical on 1 and 3 partitions") {
+    import graft.api.PqOps
+    import graft.sources.IvfIndex
+    val (dim, cells, m, ksub, nprobe, shortK, k, oneIn) =
+      (64, 8, 16, 16, 6, 32, 5, 4)
+    val emb1 = sf01Emb.coalesce(1)
+    val probes = emb1.filter(col("vid") < 8)
+      .select(col("vid").as("probe_id"), col("v").as("pe"))
+    def search(emb: DataFrame): Seq[org.apache.spark.sql.Row] =
+      PqOps.ivfPqSearch(emb, "vid", "v", dim, cells, 2, m, ksub, 2, probes,
+        nprobe, shortK, k, oneIn).collect().toSeq
+    val got = search(emb1)
+    assert(got.length == 8 * k)
+    assert(search(emb1.repartition(3)) == got)
+    val assigned = IvfIndex.kmeansAssigned(emb1, "vid", "v", cells, 2, dim,
+      oneIn, budget = 0L).select("id", "cell")
+    val cents = PqOps.cellCentroids(emb1, "vid", "v", dim, assigned)
+    val res = PqOps.residuals(emb1, "vid", "v", assigned, cents)
+    val cb = PqOps.pqCodebooksWithin(res, "id", "res", dim, m, ksub, 2, oneIn, 0L)
+    val codes = PqOps.pqEncode(res, "id", "res", dim, m, cb)
+      .groupBy("id")
+      .agg(sort_array(collect_list(struct(col("j"), col("code")))).as("jc"))
+      .select(col("id"), col("jc.code").as("codes"))
+      .join(res.select("id", "cell"), Seq("id"))
+      .localCheckpoint(true)
+    assert(PqOps.ivfPqSearchWith(cents, cb, codes, emb1, "vid", "v", dim, m,
+      probes, nprobe, shortK, k).collect().toSeq == got)
+  }
+
   test("PqOps.pqIntTrain/pqIntAdcTopK: trace partition of the corpus, " +
     "duplicate retrieval, determinism") {
     import spark.implicits._

@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** §5.2: the physical-mapping claims in SURVEY §2/§4 are enforced, not
   * aspirational — broadcast joins stay broadcast, top-k stays
@@ -393,5 +399,75 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Set("q22_agg_hll", "q45_approx_quantile", "q132_pq_adc",
         "q134_ivfpq")),
       s"unexpected oracle-omitted queries: $omitted")
+  }
+  /** Every executed plan of `run`'s actions, split into stages at
+    * exchange and query-stage boundaries; a cached relation's plan is a
+    * stage of its own. */
+  private def executedStages(run: => Unit): Seq[Seq[SparkPlan]] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+        e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      // listener events arrive on the bus thread: wait until they stop
+      var seen = -1
+      var waited = 0
+      while (plans.size != seen && waited < 60) {
+        seen = plans.size; Thread.sleep(500); waited += 1
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Seq[SparkPlan]]
+    def stage(root: SparkPlan): Unit = {
+      val nodes = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+      def walk(p: SparkPlan): Unit = p match {
+        case a: AdaptiveSparkPlanExec => stage(a.executedPlan)
+        case q: QueryStageExec => stage(q.plan)
+        case e: Exchange => stage(e.child)
+        case c: InMemoryTableScanExec =>
+          nodes += c; stage(c.relation.cachedPlan)
+        case other =>
+          nodes += other
+          other.subqueries.foreach(stage)
+          other.children.foreach(walk)
+      }
+      walk(root)
+      out += nodes.toSeq
+    }
+    plans.forEach(p => stage(p))
+    out.toSeq
+  }
+
+  test("no interpreted lambda in an ivfPqSearch or q134 stage that scans " +
+    "the embeddings") {
+    val sf = fixture("sf0.01")
+    val stages = executedStages {
+      val emb = Tables.load(spark, sf, "embeddings")
+      val probes = emb.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      graft.api.PqOps.ivfPqSearch(emb, "vec_id", "embedding", 64, 8, 2, 16,
+        16, 2, probes, 8, 64, 10, trainOneIn = 4).collect()
+      SparkEntry.queries("q134_ivfpq")(spark, sf).collect()
+    }
+    def scansEmbeddings(st: Seq[SparkPlan]): Boolean = st.exists {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.getName.startsWith("embeddings"))
+      case _ => false
+    }
+    // Probe-side stages that may keep a lambda, by the operator text
+    // that carries it: none today (the probe residual and its distance
+    // table run on graft_vsub / graft_l2_table).
+    val probeSideAllowlist = Seq.empty[String]
+    val offenders = stages.filter(scansEmbeddings).flatMap(_.filter { n =>
+      n.expressions.exists(_.find(_.isInstanceOf[LambdaFunction]).isDefined) &&
+        !probeSideAllowlist.exists(n.simpleString(400).contains)
+    })
+    assert(stages.count(scansEmbeddings) >= 2, s"${stages.length} stages")
+    assert(offenders.isEmpty,
+      offenders.map(_.simpleString(400)).mkString("\n"))
   }
 }

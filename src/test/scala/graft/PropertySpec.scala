@@ -386,4 +386,95 @@ class PropertySpec extends SparkSpec {
       assert(got == want, s"AA mismatch on $edges")
     }
   }
+  test("IVF/PQ kernels equal their SQL formulations") {
+    import graft.functions.PqKernels
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val dim = 8; val sub = 4
+    // coarse values so cosines, distances and ids tie; -0.0 components,
+    // a zero vector and a NULL vector
+    val comp = Gen.oneOf(-0.5f, -0.25f, -0.0f, 0.0f, 0.25f, 0.5f, 0.1f, 0.3f)
+    val vecs = cases(Gen.listOfN(dim, comp), 60).map(_.toArray)
+    val rows = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) } ++
+      Seq((60L, Array.fill(dim)(0f)), (61L, null))
+    val emb = rows.toDF("id", "v")
+    // cells: a duplicate pair and a zero centroid; codes: subspace 1
+    // lacks code 1
+    val cents = Seq(Seq(0.25, 0.5, 0.0, -0.25, 0.1, 0.0, 0.3, 0.5),
+      Seq(0.25, 0.5, 0.0, -0.25, 0.1, 0.0, 0.3, 0.5), Seq.fill(dim)(0.0),
+      Seq(-0.5, 0.25, 0.3, 0.1, -0.25, 0.5, 0.0, -0.1))
+    val cells = Seq(3, 1, 7, 2)
+    val cbCents = Seq(
+      Seq(Seq(0.25, 0.5, 0.0, -0.25), Seq(0.1, 0.1, 0.1, 0.1),
+        Seq(0.0, 0.0, 0.0, 0.0), Seq(-0.5, -0.25, 0.3, 0.5)),
+      Seq(Seq(0.25, 0.5, 0.0, -0.25), Seq(0.3, 0.3, -0.0, 0.1),
+        Seq(0.25, 0.5, 0.0, -0.25)))
+    val cbCodes = Seq(Seq(0, 1, 2, 3), Seq(0, 2, 3))
+    val withLits = emb
+      .withColumn("__cc", typedLit(cents)).withColumn("__cd", typedLit(cells))
+      .withColumn("__c2", expr("transform(__cc, c -> graft_dot(c, c))"))
+      .withColumn("n2", expr("graft_dot(v, v)"))
+    val cos = withLits.select(col("id"),
+      call_function("graft_cos_argmax", col("v"), typedLit(cents),
+        typedLit(cells)).as("got"),
+      expr("array_min(transform(sequence(0, size(__cd) - 1), i -> " +
+        "named_struct('isn', CASE WHEN (sqrt(n2) * sqrt(__c2[i])) != 0D " +
+        "THEN 0 ELSE 1 END, 'nc', coalesce(-round(CASE WHEN " +
+        "(sqrt(n2) * sqrt(__c2[i])) != 0D THEN graft_dot(v, __cc[i]) / " +
+        "(sqrt(n2) * sqrt(__c2[i])) END, 4), 0D), 'cell', __cd[i]))).cell")
+        .as("want"))
+      .collect()
+    assert(cos.forall(r => r.getInt(1) == r.getInt(2)), cos.mkString("\n"))
+    val cbLit = Seq(lit(sub), typedLit(cbCents), typedLit(cbCodes))
+    val perJ = emb.select(col("id"), col("v"),
+        posexplode(call_function("graft_l2_codes", (col("v") +: cbLit): _*))
+          .as(Seq("j", "got")))
+      .withColumn("sv", slice(col("v"), col("j") * sub + 1, lit(sub)))
+      .withColumn("__cc", element_at(typedLit(cbCents), col("j") + 1))
+      .withColumn("__cd", element_at(typedLit(cbCodes), col("j") + 1))
+      .withColumn("__c2", expr("transform(__cc, c -> graft_dot(c, c))"))
+      .withColumn("want", expr("array_min(transform(sequence(0, " +
+        "size(__cd) - 1), i -> named_struct('d', round((graft_dot(sv, sv) - " +
+        "2.0D * graft_dot(sv, __cc[i])) + __c2[i], 6), 'code', __cd[i]))).code"))
+      .select("id", "j", "got", "want").collect()
+    assert(perJ.length == rows.length * 2)
+    assert(perJ.forall(r => r.getInt(2) == r.getInt(3)), perJ.mkString("\n"))
+    // ADC: every row's codes scored against one probe's table, against
+    // the DECIMAL(38,6) sum of the per-subspace 6dp distances
+    val probe = Seq(0.3, -0.25, 0.1, 0.0, 0.5, 0.25, -0.5, 0.1)
+    val adc = emb.select(col("id"),
+        call_function("graft_l2_codes", (col("v") +: cbLit): _*).as("codes"))
+      .withColumn("tab", call_function("graft_l2_table",
+        (typedLit(probe) +: cbLit): _*))
+      .withColumn("got", call_function("graft_adc_sum", col("codes"), col("tab")))
+    val want = adc.select(col("id"), posexplode(col("codes")).as(Seq("j", "code")))
+      .withColumn("qv", slice(typedLit(probe), col("j") * sub + 1, lit(sub)))
+      .withColumn("cent", element_at(element_at(typedLit(cbCents), col("j") + 1),
+        array_position(element_at(typedLit(cbCodes), col("j") + 1),
+          col("code")).cast("int")))
+      .withColumn("d", round(expr("graft_dot(qv, qv)") - lit(2d) *
+        expr("graft_dot(qv, cent)") + expr("graft_dot(cent, cent)"), 6))
+      .groupBy("id").agg(sum(col("d").cast(Dets.Dec)).as("want"))
+    val both = adc.join(want, Seq("id")).select("id", "got", "want").collect()
+    assert(both.length == rows.length)
+    assert(both.forall(r => r.getDecimal(1) == r.getDecimal(2)), both.mkString("\n"))
+    // the fast rounding against Spark's ROUND and the decimal cast, on
+    // random magnitudes and on values a few ulps from a half
+    val rnd = new scala.util.Random(7)
+    val xs = Seq.fill(3000)((rnd.nextDouble() - 0.5) *
+        math.pow(10, rnd.nextInt(12) - 6)) ++
+      (0 until 3000).flatMap { i =>
+        val h = (rnd.nextInt(2000000) - 1000000 + 0.5) / 1e6
+        Seq(h, math.nextUp(h), math.nextDown(h), h / 100, -0.0)
+      }
+    val sparkRounded = xs.toDF("x")
+      .select(col("x"), round(col("x"), 4), round(col("x"), 6),
+        col("x").cast(Dets.Dec)).collect()
+    sparkRounded.foreach { r =>
+      val x = r.getDouble(0)
+      assert(java.lang.Double.compare(PqKernels.round(x, 4), r.getDouble(1)) == 0, s"round4 $x")
+      assert(java.lang.Double.compare(PqKernels.round(x, 6), r.getDouble(2)) == 0, s"round6 $x")
+      assert(PqKernels.micros6(x).contains(r.getDecimal(3).unscaledValue.longValueExact), s"micros $x")
+    }
+  }
 }
