@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   *
   * Scale shape: training runs on the deterministic spread-hash sample
   * (`trainOneIn`, the IvfIndex convention). A sample that fits
-  * [[IvfIndex.DriverBaseBytes]] (rows × (dim·w + 8) bytes, w the
-  * element width) is collected once and trained on the driver; a larger
+  * [[IvfIndex.DriverBaseBytes]] (rows × (dim·8 + 8) bytes, the doubles
+  * the driver holds) is collected once and trained on the driver; a larger
   * one trains all m subspaces together in one distributed job per Lloyd
   * round. The model (codebooks, IVF cell centroids) is a driver-built
   * local relation. Encoding is one map over the corpus
@@ -135,7 +135,7 @@ object PqOps {
   private def pqFit(base: DataFrame, dim: Int, m: Int, ksub: Int,
     iters: Int, budget: Long): Array[(Int, Int, Array[Double])] =
     IvfIndex.collectWithin(base, dim, budget) match {
-      case Some(rows) => pqFitLocal(rows, m, dim / m, ksub, iters)
+      case Some(rows) => pqFitLocal(() => rows.iterator, m, dim / m, ksub, iters)
       case None => pqFitCluster(base, dim, m, ksub, iters)
     }
 
@@ -147,13 +147,14 @@ object PqOps {
     *    normalized pattern;
     *  - each Lloyd round: every row's codes by [[PqKernels.l2Codes]],
     *    then per (j, code) the decimal-mean centroid of its slices; a
-    *    code no row chose disappears. */
-  private def pqFitLocal(rows: Array[(Long, Array[Double])], m: Int,
+    *    code no row chose disappears.
+    * `rows` yields the base afresh on each of its m + iters passes. */
+  private def pqFitLocal(rows: () => Iterator[(Long, Array[Double])], m: Int,
     sub: Int, ksub: Int, iters: Int): Array[(Int, Int, Array[Double])] = {
     var cb: Array[(Int, Int, Array[Double])] = (0 until m).flatMap { j =>
       val first = scala.collection.mutable.HashMap.empty[Seq[Long],
         (Long, Array[Double])]
-      rows.foreach { case (id, x) =>
+      rows().foreach { case (id, x) =>
         val sv = PqKernels.slice(x, j, sub)
           .map(d => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d)
         val key = sv.toSeq.map(java.lang.Double.doubleToLongBits)
@@ -165,7 +166,7 @@ object PqOps {
     var it = 0
     while (it < iters) {
       val book = codebook(cb, m, sub)
-      cb = PqKernels.centroids(rows.iterator.flatMap { case (_, x) =>
+      cb = PqKernels.centroids(rows().flatMap { case (_, x) =>
         val codes = PqKernels.l2Codes(x, book)
         Iterator.tabulate(m)(j => ((j, codes(j)), PqKernels.slice(x, j, sub)))
       }, sub).map { case ((j, c), cent) => (j, c, cent) }.toArray
@@ -700,13 +701,12 @@ object PqOps {
     *    when the sample fits [[IvfIndex.DriverBaseBytes]], else the
     *    per-round cluster jobs.
     *  - `cents` are the decimal means of the final assignment over the
-    *    whole corpus: on the driver when the sample IS the corpus
-    *    (`trainOneIn` 1), else one aggregation job.
-    *  - The codebooks train on the sample's residuals against `cents`:
-    *    the driver already holds the sample on the driver path; the
-    *    cluster path samples the residual map ([[pqCodebooks]]'s
-    *    branches, same budget). On the driver the residuals are doubles:
-    *    twice the sample's float payload.
+    *    whole corpus, one aggregation job.
+    *  - The codebooks train on the sample's residuals against `cents`.
+    *    On the driver path the driver already holds the sample and
+    *    derives each row's residual afresh on every training pass, so
+    *    it never holds a second copy; the cluster path samples the
+    *    residual map ([[pqCodebooks]]'s branches, same budget).
     *  - Pass `codes` to [[ivfPqSearchWith]] persisted or checkpointed.
     *  - `codes` assigns, takes the residual and encodes in one pass:
     *    `graft_cos_argmax` → `graft_vsub` → `graft_l2_codes`.
@@ -725,14 +725,9 @@ object PqOps {
     val (full, fit) = IvfIndex.kmeansFit(emb, idCol, vecCol, kCells,
       cellIters, dim, trainOneIn, IvfIndex.DriverBaseBytes)
     val assigned = IvfIndex.assignCells(full, fit.cells)
-    val cellOf = IvfIndex.cellModel(fit.cells)
-    val cents: IndexedSeq[(Int, Array[Double])] = fit.sample match {
-      case Some(rows) if trainOneIn == 1 => PqKernels.centroids(
-        rows.iterator.map(r => (PqKernels.cosArgmax(r._2, cellOf), r._2)), dim)
-      case _ => centroidsByCell(assigned, dim).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1).toIndexedSeq
-    }
+    val cents = centroidsByCell(assigned, dim).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1).toIndexedSeq
     val centOf = cents.toMap
     // the residual's centroid by cell id (ids are the dense seed
     // indexes; every assigned cell has a centroid)
@@ -741,9 +736,11 @@ object PqOps {
     val residual = call_function("graft_vsub", col("v"),
       centByCell.getItem(col("cell")))
     val cb = fit.sample match {
-      case Some(rows) => pqFitLocal(rows.map { case (id, v) =>
-          val c = centOf(PqKernels.cosArgmax(v, cellOf))
-          (id, Array.tabulate(v.length)(i => v(i) - c(i)))
+      case Some(rows) =>
+        val cellOf = IvfIndex.cellModel(fit.cells)
+        val rowCent = rows.map(r => centOf(PqKernels.cosArgmax(r._2, cellOf)))
+        pqFitLocal(() => rows.iterator.zip(rowCent.iterator).map {
+          case ((id, v), c) => (id, Array.tabulate(v.length)(i => v(i) - c(i)))
         }, m, sub, ksub, pqIters)
       case None => pqFit(IvfIndex.trainSample(
           assigned.select(col("id"), residual.as("v")), trainOneIn),

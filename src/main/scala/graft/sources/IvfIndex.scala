@@ -4,7 +4,6 @@ import graft.functions.{CellModel, CentroidAggregator, GraftFunctions, PqKernels
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Persisted IVF (inverted-file) ANN index over an embedding table.
   *
@@ -120,11 +119,12 @@ object IvfIndex {
     * (observed in the spec before this).
     *
     * Scale shape ([[kmeansFit]]): a training base that fits the one
-    * driver budget, [[DriverBaseBytes]] (rows × (dim·w + 8) bytes, w the
-    * element width), is collected once and seeded and iterated on the
-    * driver; a larger one pays one scan per seed and one per Lloyd
-    * round. The cells are the model (k × dim doubles, the quantizer
-    * itself, not data) and ride the plan as literals: assignment is the
+    * driver budget, [[DriverBaseBytes]] (rows × (dim·8 + 8) bytes, the
+    * doubles the driver holds), is collected once and seeded and
+    * iterated on the driver; a larger one pays one scan per seed and one
+    * per Lloyd round. The cells are the model (k × dim doubles, the
+    * quantizer itself, not data) and ride the plan as literals:
+    * assignment is the
     * `graft_cos_argmax` map ([[graft.functions.PqKernels.cosArgmax]]),
     * one pass, no broadcast, no shuffle. Recomputation uses exact
     * decimal-mean centroids; an emptied cell simply disappears (k
@@ -138,24 +138,10 @@ object IvfIndex {
     * everything; the sample is a pure id-hash predicate, so the same
     * ids train on any engine or cluster size. */
   def kmeansCells(emb: DataFrame, idCol: String, vecCol: String,
-    k: Int, iters: Int, dim: Int, trainOneIn: Int = 1): DataFrame =
-    kmeansAssigned(emb, idCol, vecCol, k, iters, dim, trainOneIn)
-      .select(col("id"), col("cell"))
-
-  /** [[kmeansCells]] WITH the vector carried through: (id, v, cell).
-    * The final assignment is a pure map over the corpus (the centroid
-    * literals ride the plan), so keeping `v` on the row is free — and
-    * downstream artifact builds (cell centroids, residuals) that would
-    * otherwise re-join the corpus to the (id, cell) table by id can
-    * aggregate or map DIRECTLY (guide §2.4). `budget` is the driver
-    * base budget ([[DriverBaseBytes]]; specs pass 0 to force the
-    * cluster path). */
-  private[graft] def kmeansAssigned(emb: DataFrame, idCol: String,
-    vecCol: String, k: Int, iters: Int, dim: Int, trainOneIn: Int = 1,
-    budget: Long = DriverBaseBytes): DataFrame = {
-    val (full, fit) =
-      kmeansFit(emb, idCol, vecCol, k, iters, dim, trainOneIn, budget)
-    assignCells(full, fit.cells)
+    k: Int, iters: Int, dim: Int, trainOneIn: Int = 1): DataFrame = {
+    val (full, fit) = kmeansFit(emb, idCol, vecCol, k, iters, dim, trainOneIn,
+      DriverBaseBytes)
+    assignCells(full, fit.cells).select(col("id"), col("cell"))
   }
 
   /** A trained coarse quantizer: the farthest-first seed ids in pick
@@ -296,30 +282,32 @@ object IvfIndex {
   }
 
   /** The one byte budget of every driver-resident model base (the
-    * k-means and PQ training bases): 65,536 rows of 64 floats plus an
-    * 8-byte id, about 16.5 MiB — the row cap the seeding collect had at
+    * k-means and PQ training bases), counted as the driver holds a base:
+    * 8-byte doubles plus an 8-byte id per row. 65,536 rows of 64
+    * doubles, about 32.5 MiB — the row cap the seeding collect had at
     * the fixtures' width. */
-  private[graft] val DriverBaseBytes: Long = 65536L * (64 * 4 + 8)
+  private[graft] val DriverBaseBytes: Long = 65536L * (64 * 8 + 8)
 
-  /** The (id, v) rows of `base` as doubles, when rows × (dim·w + 8)
-    * fits `budget` bytes, w the vector's element width (4 for float, 8
-    * for double). The ids are counted first — one past the row cap,
-    * vectors pruned — so an over-budget base never ships a vector.
-    * None over the budget, and when a vector or an element is NULL
-    * (those keep the cluster path's NULL semantics). */
+  /** The (id, v) rows of `base` as doubles, when rows × (dim·8 + 8)
+    * fits `budget` bytes. The ids are counted first — one past the row
+    * cap, vectors pruned — so an over-budget base never ships a vector;
+    * the vectors then come back through the typed encoder as primitive
+    * double arrays. None over the budget, and when a vector or an
+    * element is NULL (those keep the cluster path's NULL semantics). */
   private[graft] def collectWithin(base: DataFrame, dim: Int, budget: Long)
   : Option[Array[(Long, Array[Double])]] = {
-    val width = base.schema("v").dataType match {
-      case ArrayType(FloatType, _) => 4
-      case _ => 8
-    }
-    val cap = budget / (dim.toLong * width + 8)
+    val cap = budget / (dim.toLong * 8 + 8)
     if (cap < 1 || base.select("id").limit(math.min(cap + 1, Int.MaxValue).toInt)
         .collect().length > cap) None
     else {
-      val rows = base.select(col("id").cast("long"), col("v")).collect()
-      if (rows.exists(r => r.isNullAt(1) || r.getSeq[Any](1).contains(null))) None
-      else Some(rows.map(r => (r.getLong(0), doubles(r))))
+      val rows = base.select(col("id").cast("long"), col("v"))
+        .map(r => (r.getLong(0),
+          if (r.isNullAt(1) || r.getSeq[Any](1).contains(null)) null
+          else doubles(r)))(
+          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[
+            (Long, Array[Double])]())
+        .collect()
+      if (rows.exists(_._2 == null)) None else Some(rows)
     }
   }
 

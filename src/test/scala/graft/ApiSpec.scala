@@ -663,8 +663,9 @@ class ApiSpec extends SparkSpec {
     val got = search(emb1)
     assert(got.length == 8 * k)
     assert(search(emb1.repartition(3)) == got)
-    val assigned = IvfIndex.kmeansAssigned(emb1, "vid", "v", cells, 2, dim,
-      oneIn, budget = 0L).select("id", "cell")
+    val (full, fit) = IvfIndex.kmeansFit(emb1, "vid", "v", cells, 2, dim,
+      oneIn, 0L)
+    val assigned = IvfIndex.assignCells(full, fit.cells).select("id", "cell")
     val cents = PqOps.cellCentroids(emb1, "vid", "v", dim, assigned)
     val res = PqOps.residuals(emb1, "vid", "v", assigned, cents)
     val cb = PqOps.pqCodebooksWithin(res, "id", "res", dim, m, ksub, 2, oneIn, 0L)

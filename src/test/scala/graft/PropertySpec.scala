@@ -440,26 +440,30 @@ class PropertySpec extends SparkSpec {
     assert(perJ.length == rows.length * 2)
     assert(perJ.forall(r => r.getInt(2) == r.getInt(3)), perJ.mkString("\n"))
     // ADC: every row's codes scored against one probe's table, against
-    // the DECIMAL(38,6) sum of the per-subspace 6dp distances
-    val probe = Seq(0.3, -0.25, 0.1, 0.0, 0.5, 0.25, -0.5, 0.1)
-    val adc = emb.select(col("id"),
-        call_function("graft_l2_codes", (col("v") +: cbLit): _*).as("codes"))
-      .withColumn("tab", call_function("graft_l2_table",
-        (typedLit(probe) +: cbLit): _*))
-      .withColumn("got", call_function("graft_adc_sum", col("codes"), col("tab")))
-    val want = adc.select(col("id"), posexplode(col("codes")).as(Seq("j", "code")))
-      .withColumn("qv", slice(typedLit(probe), col("j") * sub + 1, lit(sub)))
-      .withColumn("cent", element_at(element_at(typedLit(cbCents), col("j") + 1),
-        array_position(element_at(typedLit(cbCodes), col("j") + 1),
-          col("code")).cast("int")))
-      .withColumn("d", round(expr("graft_dot(qv, qv)") - lit(2d) *
-        expr("graft_dot(qv, cent)") + expr("graft_dot(cent, cent)"), 6))
-      .groupBy("id").agg(sum(col("d").cast(Dets.Dec)).as("want"))
-    val both = adc.join(want, Seq("id")).select("id", "got", "want").collect()
-    assert(both.length == rows.length)
-    assert(both.forall(r => r.getDecimal(1) == r.getDecimal(2)), both.mkString("\n"))
-    // the fast rounding against Spark's ROUND and the decimal cast, on
-    // random magnitudes and on values a few ulps from a half
+    // the DECIMAL(38,6) sum of the per-subspace 6dp distances; the 1e7
+    // probe's terms pass 9.2e12, past the range of a Long of micros
+    val small = Seq(0.3, -0.25, 0.1, 0.0, 0.5, 0.25, -0.5, 0.1)
+    for (probe <- Seq(small, small.map(_ * 1e7))) {
+      val adc = emb.select(col("id"),
+          call_function("graft_l2_codes", (col("v") +: cbLit): _*).as("codes"))
+        .withColumn("tab", call_function("graft_l2_table",
+          (typedLit(probe) +: cbLit): _*))
+        .withColumn("got", call_function("graft_adc_sum", col("codes"), col("tab")))
+      val want = adc.select(col("id"), posexplode(col("codes")).as(Seq("j", "code")))
+        .withColumn("qv", slice(typedLit(probe), col("j") * sub + 1, lit(sub)))
+        .withColumn("cent", element_at(element_at(typedLit(cbCents), col("j") + 1),
+          array_position(element_at(typedLit(cbCodes), col("j") + 1),
+            col("code")).cast("int")))
+        .withColumn("d", round(expr("graft_dot(qv, qv)") - lit(2d) *
+          expr("graft_dot(qv, cent)") + expr("graft_dot(cent, cent)"), 6))
+        .groupBy("id").agg(sum(col("d").cast(Dets.Dec)).as("want"))
+      val both = adc.join(want, Seq("id")).select("id", "got", "want").collect()
+      assert(both.length == rows.length)
+      assert(both.forall(r => r.getDecimal(1) == r.getDecimal(2)),
+        s"probe $probe\n" + both.mkString("\n"))
+    }
+    // the kernel's rounding against Spark's ROUND and the decimal cast,
+    // on random magnitudes and on values a few ulps from a half
     val rnd = new scala.util.Random(7)
     val xs = Seq.fill(3000)((rnd.nextDouble() - 0.5) *
         math.pow(10, rnd.nextInt(12) - 6)) ++
@@ -474,7 +478,7 @@ class PropertySpec extends SparkSpec {
       val x = r.getDouble(0)
       assert(java.lang.Double.compare(PqKernels.round(x, 4), r.getDouble(1)) == 0, s"round4 $x")
       assert(java.lang.Double.compare(PqKernels.round(x, 6), r.getDouble(2)) == 0, s"round6 $x")
-      assert(PqKernels.micros6(x).contains(r.getDecimal(3).unscaledValue.longValueExact), s"micros $x")
+      assert(PqKernels.dec6(x) == r.getDecimal(3), s"dec6 $x")
     }
   }
 }
