@@ -23,15 +23,28 @@ object Bench {
     (System.nanoTime() - t0) / 1e6
   }
 
+  /** A string as the body of a JSON string literal (quote and
+    * backslash escaped), as BENCH_DETAIL writes the `sf` path. */
+  private def jsonEsc(v: String): String =
+    v.replace("\\", "\\\\").replace("\"", "\\\"")
+
   /** Per-line history from the PREVIOUS BENCH_DETAIL at the same path
     * (the committed idle sweep, in the driver's round flow): key →
     * seconds for both q-keys and shared: lines. Empty when the file is
-    * absent/unreadable — the history trigger then just never fires. */
-  private def readHistory(path: String): Map[String, Double] =
+    * absent/unreadable, or was written on another core count or scale
+    * factor (a file without `cpus` predates the field and counts as
+    * another core count) — the history trigger then just never fires. */
+  private[graft] def readHistory(path: String, cpus: Int,
+    sfDir: String): Map[String, Double] =
     try {
       val txt = java.nio.file.Files.readString(
         java.nio.file.Paths.get(path))
-      "\"((?:q|shared:)[A-Za-z0-9_]+)\":(-?[0-9]+(?:\\.[0-9]+)?)".r
+      val sameCpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(txt)
+        .exists(_.group(1).toInt == cpus)
+      val sameSf = "\"sf\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
+        .exists(_.group(1) == jsonEsc(sfDir))
+      if (!(sameCpus && sameSf)) Map.empty
+      else "\"((?:q|shared:)[A-Za-z0-9_]+)\":(-?[0-9]+(?:\\.[0-9]+)?)".r
         .findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
@@ -54,26 +67,20 @@ object Bench {
     val loadPre = loadavg()
     val calibPre = calibMs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "BENCH_DETAIL.json")
-    // idle history must be read BEFORE this run overwrites the file
-    val history = readHistory(detailPath)
     // GraftSession also pins the UTC session timezone — without it a
     // non-UTC box would plan different timestamp predicate boundaries
     // than the verified runs and benchmark a different workload
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
+    // the harness runs one shuffle partition per core
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // idle history must be read BEFORE this run overwrites the file
+    val history = readHistory(detailPath, cpus, sfDir)
     // Untimed warmup: JIT, codegen cache, parquet footer reads — otherwise
     // ~5s of one-time JVM cost lands on whichever query happens to run
     // first and distorts its number.
-    SparkEntry.queries.get("q20_agg_pricing").foreach { f =>
-      try f(spark, sfDir).count() catch { case _: Throwable => }
-    }
+    tools.Probe.warmUp(spark, sfDir)
     // Memo-prime phase: build every cross-key shared memo FIRST, each
     // timed under its own stable `shared:<name>` label — per-key lines
     // below are then memo-warm by definition instead of charging family
@@ -109,7 +116,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     // escape the interpolated path — a quote or backslash in the env
     // var would otherwise break the one JSON line the driver parses
-    val sfEsc = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
+    val sfEsc = jsonEsc(sfDir)
     // load/calibration telemetry so a load-polluted run is machine-
     // detectable next to the timings it polluted (idle box ≈ load1 ≪
     // nproc and calib_ms_pre ≈ calib_ms_post)
@@ -230,7 +237,7 @@ object Bench {
       val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
         .mkString("{", ",", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
-        s"""{"sf":"$sfEsc","n_queries":${perKey.size},""" +
+        s"""{"sf":"$sfEsc","cpus":$cpus,"n_queries":${perKey.size},""" +
           s""""n_shared":${shared.size},"queries":$fullQs,"unit":"sec",""" +
           s"""$tele,"metric":"total","value_raw":${f3(total)},""" +
           s""""value":${f3(totalEff)}}""" + "\n")

@@ -20,8 +20,8 @@ import org.apache.spark.sql.SparkSession
   *
   * What it deliberately does NOT set: `master`, memory sizing, and
   * `spark.sql.shuffle.partitions` — those are deployment decisions
-  * (the local harness mains pin partitions = cores; a cluster should
-  * size them to data volume or let AQE coalesce).
+  * ([[harness]] pins partitions = cores; a cluster should size them
+  * to data volume or let AQE coalesce).
   */
 object GraftSession {
 
@@ -43,5 +43,15 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+  }
+
+  /** The session of every harness main (Bench, Verify, the tools):
+    * [[local]] on `SPARK_GRAFT_CPUS` cores, or on every core of the
+    * machine when the variable is unset, logging at WARN. */
+  def harness(): SparkSession = {
+    val s = local(sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors()))
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 }

@@ -12,15 +12,9 @@ object Verify {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").filter(_.nonEmpty).toSet
       else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // GraftSession pins extensions, UTC, and µs-int64 parquet timestamps
     // (the driver's pyarrow read then has DuckDB's exact timestamp unit)
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -292,135 +292,12 @@ object PqOps {
       .orderBy("probe_id", "rank")
   }
 
-  /** Deterministic OPQ-style rotation matrix: seeded Gaussian rows
-    * (the q102 splitmix64 kernel) orthonormalized by modified
-    * Gram-Schmidt — a pure driver-side function of (dim, seed), dim×dim
-    * doubles (the quantizer's parameter, not data). Rotating vectors
-    * before the subvector split spreads correlated energy across
-    * subspaces so the same code budget quantizes finer — the
-    * fixed-rotation member of the OPQ family (OPQ proper alternates
-    * R-updates with codebook training; the fixed seeded R captures most
-    * of the decorrelation win without a second training loop).
-    * Rotation preserves L2, so ADC distances in rotated space ARE
-    * distances in the original space and the exact re-rank stage can
-    * use the raw vectors unchanged. */
-  def rotationMatrix(dim: Int, seed: Long = 7L): Array[Array[Double]] = {
-    require(dim > 0, "dim must be positive")
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0d; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    val g = graft.api.VectorOps.gaussianPlanes(dim, dim, seed)
-      .map(_.map(_.toDouble))
-    val q = Array.ofDim[Double](dim, dim)
-    var r = 0
-    var row = 0
-    while (row < dim && r < dim) {
-      val v = g(row).clone()
-      var j = 0
-      while (j < r) {
-        val d = dot(q(j), v)
-        var i = 0
-        while (i < dim) { v(i) -= d * q(j)(i); i += 1 }
-        j += 1
-      }
-      val n = math.sqrt(dot(v, v))
-      // Gaussian rows are a.s. linearly independent; a (numerically)
-      // dependent row is skipped rather than normalized into noise
-      if (n > 1e-9) { q(r) = v.map(_ / n); r += 1 }
-      row += 1
-    }
-    require(r == dim, s"rotation basis incomplete: $r of $dim")
-    q
-  }
-
   /** x → R·x as a codegen column: element i = graft_dot(R_i, x),
     * 6dp-rounded so every engine and partition layout trains and
     * encodes on identical rotated values [D2]. */
   def rotateCol(vecCol: String, rot: Array[Array[Double]]): Column =
     array(rot.map(r =>
       round(call_function("graft_dot", typedLit(r), col(vecCol)), 6)): _*)
-
-  /** Two-stage PQ search with a fixed OPQ-style rotation: codebooks
-    * train and codes encode on R·x; the ADC shortlist runs in rotated
-    * space; the exact re-rank uses the RAW vectors (valid because R is
-    * orthonormal — see [[rotationMatrix]]). Same code budget as
-    * [[pqSearch]], finer quantization on correlated subspaces. */
-  def opqSearch(emb: DataFrame, idCol: String, vecCol: String,
-    probes: DataFrame, dim: Int, m: Int, ksub: Int, iters: Int,
-    shortK: Int, k: Int, seed: Long = 7L, trainOneIn: Int = 1): DataFrame = {
-    require(k > 0 && shortK >= k, "need shortK >= k > 0")
-    GraftFunctions.register(emb.sparkSession)
-    val rot = rotationMatrix(dim, seed)
-    val rEmb = emb.select(col(idCol).as("id"),
-      rotateCol(vecCol, rot).as("rv"))
-    val cb = pqCodebooks(rEmb, "id", "rv", dim, m, ksub, iters, trainOneIn)
-    val codes = pqEncode(rEmb, "id", "rv", dim, m, cb)
-    val rProbes = probes.select(col("probe_id"),
-      rotateCol("pe", rot).as("pe"))
-    rerank(pqAdcTopK(codes, cb, rProbes, dim, m, shortK)
-      .select("probe_id", "vec_id"), emb, idCol, vecCol, probes, k)
-  }
-
-  /** Variance-balancing dimension permutation — OPQ's eigenvalue-
-    * allocation idea applied to the coordinate axes: order dimensions
-    * by corpus variance (exact decimal moments [D2], pos tie-break)
-    * and serpentine-deal them across the `m` subspaces so every
-    * subspace carries a comparable energy budget — the failure mode it
-    * fixes is a contiguous split putting all high-variance dims in one
-    * subspace whose 256-code budget then dominates quantization error.
-    * A permutation IS orthonormal, so L2 is preserved and the exact
-    * re-rank stays on raw vectors. Returns perm with perm(k) = source
-    * dim of output position k (positions j·sub .. j·sub+sub−1 belong
-    * to subspace j); driver-side cost is one dim-bounded collect. */
-  def variancePermutation(emb: DataFrame, vecCol: String,
-    dim: Int, m: Int): Array[Int] = {
-    require(dim > 0 && m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val st = emb.select(posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy("pos").agg(
-        count(lit(1)).as("n"),
-        sum(col("x").cast(graft.Dets.Dec)).as("sx"),
-        sum((col("x") * col("x")).cast(graft.Dets.Dec)).as("sxx"))
-      .select(col("pos"),
-        (col("sxx").cast("double") / col("n")
-          - (col("sx").cast("double") / col("n"))
-          * (col("sx").cast("double") / col("n"))).as("v"))
-      .collect()
-    val varByPos = st.map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val order = (0 until dim).sortBy(p => (-varByPos.getOrElse(p, 0d), p))
-    val buckets = Array.fill(m)(scala.collection.mutable.ArrayBuffer[Int]())
-    order.zipWithIndex.foreach { case (p, i) =>
-      val j = if ((i / m) % 2 == 0) i % m else m - 1 - (i % m)
-      buckets(j) += p
-      ()
-    }
-    buckets.flatMap(_.sorted)
-  }
-
-  private def permuteCol(vecCol: String, perm: Array[Int]): Column =
-    array(perm.map(p => col(vecCol).getItem(p)): _*)
-
-  /** [[opqSearch]]'s permutation sibling: same two-stage search with
-    * the [[variancePermutation]] instead of a dense rotation — cheaper
-    * to apply (a projection, not dim² dots) and the better fit when
-    * the coordinate axes are already meaningful and only their
-    * GROUPING into subspaces is unbalanced. */
-  def opqSearchPermuted(emb: DataFrame, idCol: String, vecCol: String,
-    probes: DataFrame, dim: Int, m: Int, ksub: Int, iters: Int,
-    shortK: Int, k: Int, trainOneIn: Int = 1): DataFrame = {
-    require(k > 0 && shortK >= k, "need shortK >= k > 0")
-    GraftFunctions.register(emb.sparkSession)
-    val perm = variancePermutation(emb, vecCol, dim, m)
-    val rEmb = emb.select(col(idCol).as("id"),
-      permuteCol(vecCol, perm).as("rv"))
-    val cb = pqCodebooks(rEmb, "id", "rv", dim, m, ksub, iters, trainOneIn)
-    val codes = pqEncode(rEmb, "id", "rv", dim, m, cb)
-    val rProbes = probes.select(col("probe_id"),
-      permuteCol("pe", perm).as("pe"))
-    rerank(pqAdcTopK(codes, cb, rProbes, dim, m, shortK)
-      .select("probe_id", "vec_id"), emb, idCol, vecCol, probes, k)
-  }
 
   /** Jacobi eigendecomposition of a small symmetric matrix (the
     * rotation update's 64×64 — driver-side, deterministic: fixed sweep

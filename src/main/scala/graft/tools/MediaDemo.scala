@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.sources.Multimodal
-import org.apache.spark.sql.SparkSession
 
 /** Runnable example of the multimodal pipeline: synthetic binary media
   * rows → partition-local feature extraction → frame-sample plan.
@@ -9,8 +8,7 @@ import org.apache.spark.sql.SparkSession
 object MediaDemo {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val media = spark.range(n).map { i =>

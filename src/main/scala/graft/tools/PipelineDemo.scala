@@ -26,7 +26,7 @@ object PipelineDemo {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_pipe_").toString)
-    val s = graft.GraftSession.local(32)
+    val s = graft.GraftSession.local()
     s.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.loadSpread(s, dir, "documents")

@@ -18,12 +18,7 @@ object PlanDump {
     val tag = args(2)
     val names = if (args.length > 3) args.drop(3).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = graft.GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.GraftSession.harness()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       try {

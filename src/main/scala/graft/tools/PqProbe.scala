@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: PQ codebook health + ADC shortlist recall sweep at a
@@ -8,11 +7,7 @@ import org.apache.spark.sql.functions._
 object PqProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.GraftSession.harness()
     graft.functions.GraftFunctions.register(s)
     val emb = graft.Tables.loadSpread(s, dir, "embeddings")
     for ((m, ksub, iters) <- Seq((16, 16, 2), (16, 16, 3))) {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe behind the RecallAuditSpec floors: measures (a) the exact
@@ -19,11 +18,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.GraftSession.harness()
 
     // (a) similarity distributions
     val docs = Tables.loadSpread(s, dir, "documents")

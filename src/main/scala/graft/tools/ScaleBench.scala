@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SharedMemos, SparkEntry}
+import graft.{GraftSession, SharedMemos}
 
 /** Growth-study bench (r13 verdict item 1): times the scale-critical
   * query families against ScaleGen fixtures at several scale factors,
@@ -14,7 +14,8 @@ import graft.{GraftSession, SharedMemos, SparkEntry}
   * selected families consume are primed FIRST, each timed under its
   * own `shared:` line, so per-key lines are memo-warm and comparable
   * across scale factors; a key's exponent then measures ITS plan, not
-  * whichever family build it happened to trigger. Prints one JSON line
+  * whichever family build it happened to trigger. Each line is timed
+  * through [[Probe.measure]] on the harness session. Prints one JSON line
   * with the per-line seconds plus the fixture's row counts (the x-axis
   * of the growth table in BENCH_NOTES.md).
   */
@@ -45,13 +46,7 @@ object ScaleBench {
       args(1).split(",").toSeq else DefaultKeys
     val sharedWanted = if (args.length > 2 && args(2).nonEmpty)
       args(2).split(",").toSeq else DefaultShared
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     // row counts: the growth table's x-axis, read from the fixture
     // itself so the artifact is self-describing
@@ -61,20 +56,11 @@ object ScaleBench {
     }
 
     // untimed warmup (JIT + codegen + footers), same as graft.Bench
-    try SparkEntry.queries("q20_agg_pricing")(spark, sfDir).count()
-    catch { case _: Throwable => }
-
-    def time(work: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { work; (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
-    }
-    val shared = SharedMemos.primes(sfDir)
-      .filter { case (label, _) => sharedWanted.contains(label) }
-      .map { case (label, prime) => label -> time(prime(spark)) }
-    val perKey = keys.map { k =>
-      k -> time { SparkEntry.queries(k)(spark, sfDir).count(); () }
-    }
+    Probe.warmUp(spark, sfDir)
+    def time(name: String): Double = Probe.measure(spark, sfDir, name).seconds
+    val shared = SharedMemos.primes(sfDir).map(_._1)
+      .filter(sharedWanted.contains).map(label => label -> time(label))
+    val perKey = keys.map(k => k -> time(k))
     def f3(v: Double): String =
       "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val all = shared ++ perKey

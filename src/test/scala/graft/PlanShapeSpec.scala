@@ -4,9 +4,10 @@ import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** §5.2: the physical-mapping claims in SURVEY §2/§4 are enforced, not
   * aspirational — broadcast joins stay broadcast, top-k stays
@@ -400,10 +401,8 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         "q134_ivfpq")),
       s"unexpected oracle-omitted queries: $omitted")
   }
-  /** Every executed plan of `run`'s actions, split into stages at
-    * exchange and query-stage boundaries; a cached relation's plan is a
-    * stage of its own. */
-  private def executedStages(run: => Unit): Seq[Seq[SparkPlan]] = {
+  /** The executed plan of every one of `run`'s actions. */
+  private def executedPlans(run: => Unit): Seq[SparkPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -414,13 +413,16 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     spark.listenerManager.register(listener)
     try {
       run
-      // listener events arrive on the bus thread: wait until they stop
-      var seen = -1
-      var waited = 0
-      while (plans.size != seen && waited < 60) {
-        seen = plans.size; Thread.sleep(500); waited += 1
-      }
+      // listener events arrive on the bus thread
+      org.apache.spark.sql.graft.DatasetBridge.drainListenerBus(spark)
     } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** Every executed plan of `run`'s actions, split into stages at
+    * exchange and query-stage boundaries; a cached relation's plan is a
+    * stage of its own. */
+  private def executedStages(run: => Unit): Seq[Seq[SparkPlan]] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Seq[SparkPlan]]
     def stage(root: SparkPlan): Unit = {
       val nodes = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
@@ -438,8 +440,25 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       walk(root)
       out += nodes.toSeq
     }
-    plans.forEach(p => stage(p))
+    executedPlans(run).foreach(stage)
     out.toSeq
+  }
+
+  test("Probe.measure counts q20's jobs, tasks and final-plan exchanges, " +
+    "and runs a shared: prime") {
+    val r = tools.Probe.measure(spark, Sf, "q20_agg_pricing")
+    assert(r.error.isEmpty && r.seconds >= 0, r.error)
+    assert(r.jobs.nonEmpty && r.tasks >= 1 && r.shapes.nonEmpty, r)
+    // the same action's AQE-final plan, counted independently
+    val want = executedPlans {
+      SparkEntry.queries("q20_agg_pricing")(spark, Sf).count(); ()
+    }.map(p => collectWithSubqueries(p) { case e: ShuffleExchangeLike => e }
+      .size).sum
+    assert(want > 0 && r.exchanges == want, s"${r.exchanges} vs $want")
+    val p = tools.Probe.measure(spark, Sf, "shared:text_hashed")
+    assert(p.error.isEmpty && p.jobs.nonEmpty, p)
+    assert(p.jobs.exists(_.site.contains("graft.SharedMemos")),
+      p.jobs.map(_.site).mkString("\n"))
   }
 
   test("no interpreted lambda in an ivfPqSearch or q134 stage that scans " +

@@ -190,7 +190,7 @@ class RecallAuditSpec extends SparkSpec {
     //      embeddings are where the rotation pays in recall too).
     // Probe sweep (incl. fixed seeded rotations 0.67-0.73 — measurably
     // WORSE, which is why the shipped rotation is learned, not random)
-    // in tools/OpqProbe + BENCH_NOTES.md.
+    // in BENCH_NOTES.md.
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.loadSpread(spark, Sf01, "embeddings")
     val probes = emb.filter(col("vec_id") < 10)

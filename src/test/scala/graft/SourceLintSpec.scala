@@ -76,6 +76,27 @@ class SourceLintSpec extends AnyFunSuite {
       s"val-init-order violations:\n${failures.mkString("\n")}")
   }
 
+  test("harness sessions come from GraftSession: no SparkSession.builder() " +
+    "or SPARK_GRAFT_CPUS read elsewhere in src/main") {
+    // ScaleGen keeps its own SPARK_GRAFT_CPUS read: the service benchmark
+    // keys its generated fixture cache on that file's digest, so editing
+    // it would regenerate the fixture inside every benchmark comparison.
+    val allowed = Seq(
+      "SparkSession.builder()" -> Seq("graft/GraftSession.scala"),
+      "\"SPARK_GRAFT_CPUS\"" ->
+        Seq("graft/GraftSession.scala", "graft/tools/ScaleGen.scala"))
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    val hits = for {
+      p <- sources
+      (line, i) <- Files.readAllLines(p).asScala.toSeq.zipWithIndex
+      if !isComment(line)
+      (pattern, files) <- allowed
+      if line.contains(pattern) && !files.exists(f => p.endsWith(f))
+    } yield s"$p:${i + 1}: $pattern"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   private def lint(p: Path, lines: Seq[String]): Seq[String] = {
     {
       // pass 1: top-level strict-val declaration lines per name

@@ -11,18 +11,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def fixture(name: String): String =
     java.nio.file.Paths.get(Sf).resolveSibling(name).toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // production parity — and spark.sql.extensions is STATIC: it only
-    // takes effect on the session that creates the SparkContext, so the
-    // shared suite context must carry it for ExtensionsSpec to pass in
-    // any suite order
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
+  /** The production session config on 8 cores — and
+    * spark.sql.extensions is STATIC: it only takes effect on the session
+    * that creates the SparkContext, so the shared suite context must
+    * carry it for ExtensionsSpec to pass in any suite order. */
+  lazy val spark: SparkSession = GraftSession.local(8)
 
   // Each suite's start and end on stdout with the wall clock, so a run
   // killed or timed out part-way shows which suite it died in.
