@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -99,114 +99,32 @@ object MlOps {
     * assignment that round — `round` r is evaluated against the
     * centroids after r−1 update steps.
     *
-    * Determinism contract ([D5] throughout, the [[perceptronTrace]]
-    * conventions applied to clustering):
-    *   - vectors are quantized ONCE to integer units
-    *     (`floor(double(x) · scale)` — IEEE-identical in any engine);
-    *     every distance, sum, and centroid after that is 64-bit
-    *     integer arithmetic, so a SQL replay is bit-exact;
-    *   - seeds are the `k` rows with the smallest
-    *     polyMix(id mod M) (ties by id), clusters numbered in that
-    *     order — a portable pseudo-random draw, no RNG;
-    *   - assignment ties break toward the lower cluster id;
-    *   - centroid update is the sign-explicit truncating mean per
-    *     dimension.
+    * This is [[PqOps.pqIntTrain]] with one subspace, its trace
+    * projected to (round, cl, n_vecs, inertia), so it keeps that
+    * trainer's [D5] contract (the [[perceptronTrace]] conventions
+    * applied to clustering): vectors milli-quantized once, int64
+    * arithmetic after that, the `k` polyMix-smallest ids as seeds
+    * (clusters numbered in draw order), ties toward the lower cluster,
+    * the sign-explicit truncating mean, an empty cluster keeping its
+    * centroid. `dim` is the first vector's. With fewer than `k` rows
+    * with a vector it trains as many clusters as there are rows.
     *
-    * Scale shape: per round one broadcast of k·dim centroid literals
-    * into a codegen'd zip_with distance kernel (no join), one
-    * (cluster, dim)-keyed partial aggregation, and a k·dim
-    * driver-side fold — the PQ-codebook bounded-driver convention.
-    * With milli-unit quantization (scale = 1e3) per-row distances stay
-    * ≤ dim·4e6·scale² ≈ 1e9, so inertia sums hold to ~1e9 rows; past
-    * that the inertia column (not the centroids) would need decimal
-    * staging. */
+    * Scale shape: one bounded read of up to `k` vector sizes (`dim` and
+    * the cluster count), then the trainer's one job per round. */
   def kmeansTrace(df: DataFrame, idCol: String, vecCol: String,
     k: Int, iters: Int, scale: Long = 1000L): DataFrame = {
     require(k >= 1 && iters >= 1, "need k >= 1 and iters >= 1")
-    val spark = df.sparkSession
-    val hashM = graft.functions.TextFunctions.HashMod
-    val e = df.select(col(idCol).cast("long").as("__id"),
-        expr(s"transform($vecCol, x -> " +
-          s"cast(floor(cast(x as double) * ${scale}L) as bigint))")
-          .as("__e"))
-      .filter(col("__e").isNotNull)
-      .localCheckpoint(true)
-    val dim = e.select(size(col("__e"))).head().getInt(0)
-    // the trace's n_vecs/inertia come from the pos==0 slice of the
-    // posexplode'd stats, so a size-0 vector would silently vanish from
-    // the counts (r14 ADVICE) — name the precondition instead
-    require(dim >= 1, s"kmeansTrace needs vectors of dim >= 1, got $dim")
-    val seedIds = e.select(col("__id"),
-        graft.operators.GraphQueries.polyMix(pmod(col("__id"), lit(hashM)))
-          .as("__h"))
-      .orderBy(col("__h").asc, col("__id").asc).limit(k)
-      .collect().map(_.getLong(0))
-    val seedVec = e.filter(col("__id").isin(seedIds.map(Long.box): _*))
-      .collect().map(r => r.getLong(0) ->
-        r.getSeq[Long](1).toArray).toMap
-    var cents: Seq[Array[Long]] = seedIds.map(seedVec(_)).toSeq
-    // single nested-literal kernel (the PqOps.pqIntTrain r14 form): the
-    // k×dim centroid table is ONE typedLit plan node and the argmin is
-    // a transform/array_min over it — same integer math and lower-id
-    // tie-break as the per-cluster literal-array chain it replaces,
-    // with O(1) plan size in k (the chain's analysis + codegen cost
-    // grew with k and dominated small-data trace runs).
-    def assigned = {
-      val cLit = typedLit(cents.map(_.toSeq))
-      e.withColumn("__cbs", cLit)
-        .withColumn("__a", array_min(expr(
-          s"transform(sequence(0, ${cents.size - 1}), c -> named_struct(" +
-            "'dist', aggregate(zip_with(__e, __cbs[c], " +
-            "(x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b), " +
-            "'cl', CAST(c AS BIGINT)))")))
-        .select(col("__id"), col("__e"),
-          col("__a.cl").as("cl"), col("__a.dist").as("dist"))
-    }
-    // ONE distributed job per round (the PqOps.pqIntTrain r14 shape):
-    // the (cl, pos)-keyed stats agg carries the centroid-update sums
-    // AND the round's trace numbers (n_vecs / inertia = the pos-0
-    // slice), and the k·iters trace rows assemble driver-side — the
-    // earlier loop evaluated each round's assignment twice (sums
-    // collect + trace-union member) and re-analyzed the iters-member
-    // union of assignment plans at every trace action.
-    val traceRows = Seq.newBuilder[Row]
-    var r = 1
-    while (r <= iters) {
-      val a = assigned
-      val stats = a.select(col("cl"), col("dist"), posexplode(col("__e")))
-        .groupBy(col("cl"), col("pos"))
-        .agg(sum("col").as("s"), count(lit(1)).as("n"),
-          sum("dist").as("sd"))
-        .collect()
-      traceRows ++= stats.iterator
-        .filter(_.getInt(1) == 0)
-        .map(row => Row(r.toLong, row.getLong(0),
-          row.getLong(3), row.getLong(4)))
-      if (r < iters) {
-        val sums = stats
-          .map(row => (row.getLong(0), row.getInt(1)) ->
-            (row.getLong(2), row.getLong(3))).toMap
-        cents = cents.indices.map { j =>
-          Array.tabulate(dim) { d =>
-            sums.get((j.toLong, d)) match {
-              case Some((g, n)) if n > 0 =>
-                if (g < 0) -((-g) / n) else g / n
-              case _ => cents(j)(d) // empty cluster keeps its centroid
-            }
-          }
-        }
-      }
-      r += 1
-    }
-    val traceSchema = StructType(Seq(
-      StructField("round", LongType, nullable = false),
-      StructField("cl", LongType, nullable = false),
-      StructField("n_vecs", LongType, nullable = false),
-      StructField("inertia", LongType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        traceRows.result().sortBy(row =>
-          (row.getLong(0), row.getLong(1))), 1), traceSchema)
+    val sizes = df.filter(col(vecCol).isNotNull).select(size(col(vecCol)))
+      .limit(k).collect().map(_.getInt(0))
+    // the trace's n_vecs/inertia come from each cluster's first
+    // component, so a size-0 vector would silently vanish from the
+    // counts — name the precondition instead
+    require(sizes.headOption.exists(_ >= 1),
+      s"kmeansTrace needs vectors of dim >= 1, got ${sizes.headOption}")
+    val (trace, _, _) = PqOps.pqIntTrain(df, idCol, vecCol, sizes.head, 1,
+      sizes.length, iters, scale)
+    trace.select(col("round"), col("code").cast("long").as("cl"),
+        col("n_vecs"), col("inertia"))
       .orderBy("round", "cl")
   }
 

@@ -1,12 +1,13 @@
 package graft.api
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
-import graft.functions.{CentroidAggregator, Codebook, GraftFunctions, PqKernels, TextFunctions}
+import graft.functions.{CentroidAggregator, CodeLayout, Codebook, GraftFunctions, IntCodebook, PqKernels, TextFunctions}
 import graft.sources.IvfIndex
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /** Product quantization + asymmetric-distance (ADC) search — the
   * memory-resident ANN path that complements [[graft.sources.IvfIndex]]
@@ -23,14 +24,16 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * one trains all m subspaces together in one distributed job per Lloyd
   * round. The model (codebooks, IVF cell centroids) is a driver-built
   * local relation. Encoding is one map over the corpus
-  * (`graft_l2_codes`, no shuffle, no broadcast build); flat PQ explodes
-  * it to (id, j, code), IVF-PQ keeps (id, cell, codes array<int>). ADC
-  * search broadcasts the |probes|·m·ksub distance tables and never
-  * moves the codes.
+  * (`graft_l2_codes`, no shuffle, no broadcast build) to one layout,
+  * (id, codes array<int>) with subspace j at position j; IVF-PQ adds
+  * the cell. Flat PQ is IVF-PQ with one zero-centroid cell: both
+  * search through [[adcTopK]], which broadcasts the |probes|·m·ksub
+  * distance tables and never moves the codes.
   *
   * One kernel object, [[graft.functions.PqKernels]], holds the
   * arithmetic of the driver loops and of the `graft_*` expressions that
-  * apply the model, so both sides agree by construction.
+  * apply the model, so both sides agree by construction. Integer PQ
+  * ([[pqIntTrain]]) runs the same expressions on int64 vectors.
   *
   * Determinism [D2]: sub-distances are 6dp-rounded and decimal-summed;
   * assignment and ranking tie-break on (code, id); centroids are the
@@ -40,40 +43,19 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   */
 object PqOps {
 
-  /** (keys..., j, sv) subvector table: vector split into `m` slices of
-    * `dim / m` components. */
-  private def subvectorsKeyed(df: DataFrame, keyCols: Seq[String],
-    vecCol: String, dim: Int, m: Int): DataFrame = {
-    val sub = dim / m
-    df.select(keyCols.map(col) :+ explode(expr(
-        s"transform(sequence(0, ${m - 1}), j -> " +
-          s"named_struct('j', CAST(j AS INT), 'sv', " +
-          s"slice($vecCol, j*$sub+1, $sub)))")).as("x"): _*)
-      .select(keyCols.map(col) :+ col("x.j").as("j") :+
-        col("x.sv").as("sv"): _*)
+  /** A (j, code, cent) table's subspaces j < m: per subspace its
+    * (codes, cents), codes ascending. */
+  private def bySubspace[A: ClassTag](cb: Array[(Int, Int, A)], m: Int)
+  : (Array[Array[Int]], Array[Array[A]]) = {
+    val byJ = (0 until m).map(j => cb.filter(_._1 == j).sortBy(_._2))
+    (byJ.map(_.map(_._2)).toArray, byJ.map(_.map(_._3)).toArray)
   }
 
-  /** (id, j, sv) subvector table. */
-  private def subvectors(emb: DataFrame, idCol: String, vecCol: String,
-    dim: Int, m: Int): DataFrame =
-    subvectorsKeyed(emb.select(col(idCol).as("id"), col(vecCol).as("v")),
-      Seq("id"), "v", dim, m)
-
-  /** Squared L2 between a subvector and a centroid via three dot
-    * products, 6dp-rounded so assignment and ADC rank identically on
-    * any engine. */
-  private def l2sq(sv: String, cent: String): Column =
-    round(call_function("graft_dot", col(sv), col(sv))
-      - lit(2d) * call_function("graft_dot", col(sv), col(cent))
-      + call_function("graft_dot", col(cent), col(cent)), 6)
-
-  /** The codebook table (j, code, cent) as the kernel's [[Codebook]]:
-    * subspace j's codes ascending. */
+  /** The codebook table (j, code, cent) as the kernel's [[Codebook]]. */
   private def codebook(cb: Array[(Int, Int, Array[Double])], m: Int,
     sub: Int): Codebook = {
-    val byJ = (0 until m).map(j => cb.filter(_._1 == j).sortBy(_._2))
-    new Codebook(sub, byJ.map(_.map(_._3).toArray).toArray,
-      byJ.map(_.map(_._2).toArray).toArray)
+    val (codes, cents) = bySubspace(cb, m)
+    new Codebook(sub, cents, codes)
   }
 
   private def collectCb(cb: DataFrame): Array[(Int, Int, Array[Double])] =
@@ -81,10 +63,11 @@ object PqOps {
       (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
 
   /** `name`(x, sub, cents, codes) with the codebook as literals. */
-  private def codebookCall(name: String, x: Column, cb: Codebook): Column =
-    call_function(name, x, lit(cb.sub),
-      typedLit(cb.cents.map(_.map(_.toSeq).toSeq).toSeq),
-      typedLit(cb.codes.map(_.toSeq).toSeq))
+  private def codebookCall(name: String, x: Column, cb: CodeLayout): Column =
+    call_function(name, x, lit(cb.sub), cb match {
+        case c: Codebook => typedLit(c.cents.map(_.map(_.toSeq).toSeq).toSeq)
+        case c: IntCodebook => typedLit(c.cents.map(_.map(_.toSeq).toSeq).toSeq)
+      }, typedLit(cb.codes.map(_.toSeq).toSeq))
 
   private val CbSchema = StructType(Seq(
     StructField("j", IntegerType, nullable = false),
@@ -186,17 +169,19 @@ object PqOps {
     iters: Int): Array[(Int, Int, Array[Double])] = {
     val sub = dim / m
     val base = sampled.localCheckpoint(true)
+    val slices = base.select(col("id"), explode(array((0 until m).map(j =>
+        struct(lit(j).as("j"), slice(col("v"), j * sub + 1, sub).as("sv"))): _*))
+        .as("x"))
+      .select(col("id"), col("x.j").as("j"), col("x.sv").as("sv"))
     val seedCb = graft.plans.GraftOps.topKPerGroup(
-      subvectorsKeyed(base, Seq("id"), "v", dim, m)
-        .groupBy(col("j"), col("sv")).agg(min(col("id")).as("__kid"))
+      slices.groupBy(col("j"), col("sv")).agg(min(col("id")).as("__kid"))
         .withColumn("__h", IvfIndex.idHash(col("__kid"))),
       Seq(col("j")), Seq(col("__h").asc, col("__kid").asc), ksub,
       rankName = "__rk")
       .select(col("j"), (col("__rk") - 1).cast("int").as("code"),
         col("sv").cast("array<double>").as("cent"))
     var cb = collectCb(seedCb)
-    val centroid = udaf(new CentroidAggregator(sub),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
+    val centroid = centroidOf(sub)
     var it = 0
     while (it < iters) {
       cb = collectCb(base
@@ -211,22 +196,29 @@ object PqOps {
     cb
   }
 
-  /** Encode the corpus: (id, j, code) — m rows per vector, the
-    * compressed representation ADC searches against. The codebook is
-    * the bounded model table: it collects to the driver once and the
-    * encode is one `graft_l2_codes` map exploded by subspace — no
-    * shuffle and no broadcast build at any corpus size. */
+  /** Encode the corpus: (id, codes array<int>), subspace j's code at
+    * position j — the compressed representation ADC searches against,
+    * IVF-PQ's layout without the cell. The codebook is the bounded
+    * model table: it collects to the driver once and the encode is one
+    * `graft_l2_codes` map — no shuffle and no broadcast build at any
+    * corpus size. */
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
     dim: Int, m: Int, cb: DataFrame): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
-    emb.select(col(idCol).as("id"), posexplode(codebookCall("graft_l2_codes",
-        col(vecCol), codebook(collectCb(cb), m, dim / m))).as(Seq("j", "code")))
+    emb.select(col(idCol).as("id"), codebookCall("graft_l2_codes",
+        col(vecCol), codebook(collectCb(cb), m, dim / m)).as("codes"))
   }
+
+  private val CentSchema = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("cent", ArrayType(DoubleType, containsNull = false),
+      nullable = false)))
 
   /** ADC top-k: per probe, rank ids by the sum of table-looked-up
     * sub-distances (asc, id tie-break). `probes` needs (probe_id, pe).
-    * Returns (probe_id, vec_id, adc6, rank). The probe distance table
-    * (|probes|·m·ksub rows) broadcasts; the codes never move.
+    * Returns (probe_id, vec_id, adc6, rank). This is [[adcTopK]] with
+    * one zero-centroid cell that every code row sits in: each probe's
+    * distance table (m·ksub entries) broadcasts; the codes never move.
     *
     * `excludeSelf` (default true) drops candidates whose id equals the
     * probe's id — the self-match exclusion for probes drawn FROM the
@@ -237,22 +229,12 @@ object PqOps {
   def pqAdcTopK(codes: DataFrame, cb: DataFrame, probes: DataFrame,
     dim: Int, m: Int, k: Int, excludeSelf: Boolean = true): DataFrame = {
     require(k > 0, "k must be positive")
-    GraftFunctions.register(codes.sparkSession)
-    val ptab = subvectors(probes, "probe_id", "pe", dim, m)
-      .withColumnRenamed("id", "probe_id")
-      .join(broadcast(cb), Seq("j"))
-      .select(col("probe_id"), col("j"), col("code"),
-        l2sq("sv", "cent").as("d"))
-    val joined = codes.join(broadcast(ptab), Seq("j", "code"))
-    val scores = (if (excludeSelf) joined.filter(col("id") =!= col("probe_id"))
-      else joined)
-      .groupBy("probe_id", "id")
-      .agg(round(sum(col("d").cast(graft.Dets.Dec)).cast("double"), 6)
-        .as("adc6"))
-    graft.plans.GraftOps.topKPerGroup(scores, Seq(col("probe_id")),
-        Seq(col("adc6").asc, col("id").asc), k, rankName = "rank")
-      .select(col("probe_id"), col("id").as("vec_id"), col("adc6"),
-        col("rank"))
+    val spark = codes.sparkSession
+    GraftFunctions.register(spark)
+    val zero = spark.createDataFrame(
+      Seq(Row(0, Seq.fill(dim)(0.0))).asJava, CentSchema)
+    adcTopK(zero, codebook(collectCb(cb), m, dim / m),
+        codes.withColumn("cell", lit(0)), probes, 1, k, excludeSelf)
       .orderBy("probe_id", "rank")
   }
 
@@ -267,11 +249,9 @@ object PqOps {
   def pqSearch(codes: DataFrame, cb: DataFrame, emb: DataFrame,
     idCol: String, vecCol: String, probes: DataFrame,
     dim: Int, m: Int, shortK: Int, k: Int,
-    excludeSelf: Boolean = true): DataFrame = {
-    require(k > 0 && shortK >= k, "need shortK >= k > 0")
-    rerank(pqAdcTopK(codes, cb, probes, dim, m, shortK, excludeSelf)
-      .select("probe_id", "vec_id"), emb, idCol, vecCol, probes, k)
-  }
+    excludeSelf: Boolean = true): DataFrame =
+    opqSearchWith(None, cb, codes, emb, idCol, vecCol, probes, dim, m,
+      shortK, k, excludeSelf)
 
   /** Exact squared-L2 re-rank of a (probe_id, vec_id) shortlist against
     * the raw vectors — |shortlist| rows joined, never the corpus. */
@@ -281,10 +261,7 @@ object PqOps {
       .join(emb.select(col(idCol).as("vec_id"), col(vecCol).as("__cv")),
         Seq("vec_id"))
       .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("l2sq6", round(
-        call_function("graft_dot", col("__cv"), col("__cv"))
-          - lit(2d) * call_function("graft_dot", col("pe"), col("__cv"))
-          + call_function("graft_dot", col("pe"), col("pe")), 6))
+      .withColumn("l2sq6", l2d6("__cv", "pe"))
       .select("probe_id", "vec_id", "l2sq6")
     graft.plans.GraftOps.topKPerGroup(cand, Seq(col("probe_id")),
         Seq(col("l2sq6").asc, col("vec_id").asc), k, rankName = "rank")
@@ -292,12 +269,26 @@ object PqOps {
       .orderBy("probe_id", "rank")
   }
 
+  /** round((a·a − 2·a·b) + b·b, 6) over graft_dot: the 6dp squared L2
+    * every re-rank and cell pick orders by. */
+  private def l2d6(a: String, b: String): Column =
+    round(call_function("graft_dot", col(a), col(a))
+      - lit(2d) * call_function("graft_dot", col(a), col(b))
+      + call_function("graft_dot", col(b), col(b)), 6)
+
   /** x → R·x as a codegen column: element i = graft_dot(R_i, x),
     * 6dp-rounded so every engine and partition layout trains and
     * encodes on identical rotated values [D2]. */
   def rotateCol(vecCol: String, rot: Array[Array[Double]]): Column =
     array(rot.map(r =>
       round(call_function("graft_dot", typedLit(r), col(vecCol)), 6)): _*)
+
+  /** [[rotateCol]], or the raw column for the identity (`None`): the
+    * identity trains on the raw floats — NOT the rotated path's 6dp
+    * quantization — so OPQ's alternation 1 is bit-identical to flat PQ
+    * (measured: rounding here alone cost 0.833 → 0.800 overlap). */
+  private def rotateOpt(vecCol: String, rot: Option[Array[Array[Double]]])
+  : Column = rot.fold(col(vecCol))(rotateCol(vecCol, _))
 
   /** Jacobi eigendecomposition of a small symmetric matrix (the
     * rotation update's 64×64 — driver-side, deterministic: fixed sweep
@@ -414,18 +405,11 @@ object PqOps {
     GraftFunctions.register(emb.sparkSession)
     val sub = dim / m
     var rot: Option[Array[Array[Double]]] = None // None = identity
-    def rotated: DataFrame = rot match {
-      case Some(r) => emb.select(col(idCol).as("id"),
-        rotateCol(vecCol, r).as("rv"))
-      // identity trains on the raw floats — NOT the rotated path's 6dp
-      // quantization — so alternation 1 is bit-identical to flat PQ
-      // (measured: rounding here alone cost 0.833 → 0.800 overlap)
-      case None => emb.select(col(idCol).as("id"), col(vecCol).as("rv"))
-    }
+    def rotated: DataFrame =
+      emb.select(col(idCol).as("id"), rotateOpt(vecCol, rot).as("rv"))
     var cb: DataFrame = null
     var codes: DataFrame = null
-    val centroid = udaf(new CentroidAggregator(dim),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
+    val centroid = centroidOf(dim)
     var a = 0
     while (a < alternations) {
       val rEmb = rotated.localCheckpoint(true)
@@ -436,6 +420,7 @@ object PqOps {
         // group (4dp decimal mean via the aggregator: deterministic,
         // and ample precision for a rotation update)
         val xm = codes
+          .select(col("id"), posexplode(col("codes")).as(Seq("j", "code")))
           .join(emb.select(col(idCol).as("id"), col(vecCol).as("__x")),
             Seq("id"))
           .groupBy("j", "code")
@@ -470,21 +455,18 @@ object PqOps {
   /** Total squared quantization error Σᵢ‖R·xᵢ − q(R·xᵢ)‖² of a trained
     * (rotation, codebook, codes) triple — the objective OPQ minimizes;
     * the audit metric that shows what a learned rotation buys at a
-    * fixed code budget. One pass: subvector table ⋈ codes ⋈ broadcast
-    * codebooks, 6dp sub-distances decimal-summed [D2]. */
+    * fixed code budget. One pass: each rotated vector's own distance
+    * table against its codes, `graft_adc_sum`, summed — the exact
+    * DECIMAL(38,6) sum of the 6dp sub-distances [D2]. */
   def quantizationError(rot: Option[Array[Array[Double]]], cb: DataFrame,
     codes: DataFrame, emb: DataFrame, idCol: String, vecCol: String,
     dim: Int, m: Int): Double = {
     GraftFunctions.register(emb.sparkSession)
-    val rEmb = rot match {
-      case Some(r) => emb.select(col(idCol).as("id"),
-        rotateCol(vecCol, r).as("rv"))
-      case None => emb.select(col(idCol).as("id"), col(vecCol).as("rv"))
-    }
-    subvectors(rEmb, "id", "rv", dim, m)
-      .join(codes, Seq("id", "j"))
-      .join(broadcast(cb), Seq("j", "code"))
-      .agg(sum(l2sq("sv", "cent").cast(graft.Dets.Dec)).as("e"))
+    val rEmb = emb.select(col(idCol).as("id"), rotateOpt(vecCol, rot).as("rv"))
+    val book = codebook(collectCb(cb), m, dim / m)
+    rEmb.join(codes, Seq("id"))
+      .agg(sum(call_function("graft_adc_sum", col("codes"),
+        codebookCall("graft_l2_table", col("rv"), book))).as("e"))
       .head().getDecimal(0).doubleValue()
   }
 
@@ -494,15 +476,12 @@ object PqOps {
     * re-rank on raw vectors. */
   def opqSearchWith(rot: Option[Array[Array[Double]]], cb: DataFrame,
     codes: DataFrame, emb: DataFrame, idCol: String, vecCol: String,
-    probes: DataFrame, dim: Int, m: Int, shortK: Int, k: Int): DataFrame = {
+    probes: DataFrame, dim: Int, m: Int, shortK: Int, k: Int,
+    excludeSelf: Boolean = true): DataFrame = {
     require(k > 0 && shortK >= k, "need shortK >= k > 0")
     GraftFunctions.register(emb.sparkSession)
-    val rProbes = rot match {
-      case Some(r) => probes.select(col("probe_id"),
-        rotateCol("pe", r).as("pe"))
-      case None => probes.select("probe_id", "pe")
-    }
-    rerank(pqAdcTopK(codes, cb, rProbes, dim, m, shortK)
+    val rProbes = probes.select(col("probe_id"), rotateOpt("pe", rot).as("pe"))
+    rerank(pqAdcTopK(codes, cb, rProbes, dim, m, shortK, excludeSelf)
       .select("probe_id", "vec_id"), emb, idCol, vecCol, probes, k)
   }
 
@@ -516,12 +495,13 @@ object PqOps {
       .join(cells, Seq("id")), dim)
   }
 
-  private def centroidsByCell(assigned: DataFrame, dim: Int): DataFrame = {
-    val centroid = udaf(new CentroidAggregator(dim),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
+  private def centroidsByCell(assigned: DataFrame, dim: Int): DataFrame =
     assigned.groupBy("cell")
-      .agg(centroid(col("v").cast("array<float>")).as("cent"))
-  }
+      .agg(centroidOf(dim)(col("v").cast("array<float>")).as("cent"))
+
+  /** The exact decimal-mean centroid of `dim`-wide float vectors. */
+  private def centroidOf(dim: Int) = udaf(new CentroidAggregator(dim),
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
 
   /** Residual corpus (id, cell, res): v − centroid(cell) — what the
     * IVF+PQ codebooks train on and the codes encode. */
@@ -626,27 +606,19 @@ object PqOps {
     val codes = assigned.select(col("id"), col("cell"),
       codebookCall("graft_l2_codes", residual, codebook(cb, m, sub))
         .as("codes"))
-    val centSchema = StructType(Seq(
-      StructField("cell", IntegerType, nullable = false),
-      StructField("cent", ArrayType(DoubleType, containsNull = false),
-        nullable = false)))
     (spark.createDataFrame(
-      cents.map { case (c, v) => Row(c, v.toSeq) }.asJava, centSchema),
+      cents.map { case (c, v) => Row(c, v.toSeq) }.asJava, CentSchema),
       codebookFrame(spark, cb), codes)
   }
 
   /** [[ivfPqSearch]]'s query stage against trained artifacts: `cents`
     * (cell, cent), `cb` residual codebooks (j, code, cent) and `codes`
     * (id, cell, codes array<int>) encoded against that `cb`
-    * ([[ivfPqTrain]]). Per probe, the `nprobe` nearest cells by exact
-    * L2; per (probe, cell) the residual's distance table
-    * (`graft_l2_table`), broadcast; each code row of a probed cell is
-    * scored by `graft_adc_sum` — the DECIMAL(38,6) sum of its m table
-    * entries — then shortlisted and re-ranked exactly. Pass `codes`
-    * materialized (persisted or checkpointed): a lazy encode map is
-    * re-evaluated per matching probe inside the join. Self-match
-    * exclusion as in [[pqAdcTopK]]: probes share the corpus id space,
-    * or pass `excludeSelf = false`. */
+    * ([[ivfPqTrain]]): the [[adcTopK]] shortlist of `shortK`, re-ranked
+    * exactly. Pass `codes` materialized (persisted or checkpointed): a
+    * lazy encode map is re-evaluated per matching probe inside the
+    * join. Self-match exclusion as in [[pqAdcTopK]]: probes share the
+    * corpus id space, or pass `excludeSelf = false`. */
   def ivfPqSearchWith(cents: DataFrame, cb: DataFrame, codes: DataFrame,
     emb: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int,
     probes: DataFrame, nprobe: Int, shortK: Int, k: Int,
@@ -654,14 +626,25 @@ object PqOps {
     require(nprobe > 0 && k > 0 && shortK >= k,
       "need nprobe > 0 and shortK >= k > 0")
     GraftFunctions.register(emb.sparkSession)
-    val book = codebook(collectCb(cb), m, dim / m)
+    rerank(adcTopK(cents, codebook(collectCb(cb), m, dim / m), codes, probes,
+        nprobe, shortK, excludeSelf).select("probe_id", "vec_id"),
+      emb, idCol, vecCol, probes, k)
+  }
+
+  /** The ADC stage of flat PQ and IVF-PQ. Per probe, the `nprobe`
+    * nearest cells of `cents` (cell, cent) by exact L2; per (probe,
+    * cell) the residual's distance table (`graft_l2_table`), broadcast;
+    * each code row (id, cell, codes) of a probed cell is scored by
+    * `graft_adc_sum` — the DECIMAL(38,6) sum of its m table entries —
+    * and the top `k` per probe kept by (adc6, id). Returns (probe_id,
+    * vec_id, adc6, rank). */
+  private def adcTopK(cents: DataFrame, book: Codebook, codes: DataFrame,
+    probes: DataFrame, nprobe: Int, k: Int, excludeSelf: Boolean)
+  : DataFrame = {
     // probe cell selection by exact L2 to the centroids
     val psel = graft.plans.GraftOps.topKPerGroup(
       broadcast(probes).crossJoin(broadcast(cents))
-        .withColumn("d2", round(
-          call_function("graft_dot", col("pe"), col("pe"))
-            - lit(2d) * call_function("graft_dot", col("pe"), col("cent"))
-            + call_function("graft_dot", col("cent"), col("cent")), 6))
+        .withColumn("d2", l2d6("pe", "cent"))
         .select(col("probe_id"), col("pe"), col("cell"), col("d2")),
       Seq(col("probe_id")), Seq(col("d2").asc, col("cell").asc), nprobe,
       rankName = "__cr")
@@ -676,133 +659,109 @@ object PqOps {
       .select(col("probe_id"), col("id"),
         round(call_function("graft_adc_sum", col("codes"), col("tab"))
           .cast("double"), 6).as("adc6"))
-    val short = graft.plans.GraftOps.topKPerGroup(scores,
-        Seq(col("probe_id")), Seq(col("adc6").asc, col("id").asc), shortK,
-        rankName = "__r")
-      .select(col("probe_id"), col("id").as("vec_id"))
-    rerank(short, emb, idCol, vecCol, probes, k)
+    graft.plans.GraftOps.topKPerGroup(scores, Seq(col("probe_id")),
+        Seq(col("adc6").asc, col("id").asc), k, rankName = "rank")
+      .select(col("probe_id"), col("id").as("vec_id"), col("adc6"),
+        col("rank"))
   }
 
-  /** milli-quantize a float-vector column to int64 units — IEEE-exact
-    * (`floor(double(x) · scale)`) in any engine, the [D5] staging step
-    * shared by the integer trace path below and MlOps.kmeansTrace. */
-  private def quantized(df: DataFrame, idCol: String, vecCol: String,
+  /** (`idName`, e): the vector column milli-quantized to int64 units —
+    * IEEE-exact (`floor(double(x) · scale)`) in any engine, the [D5]
+    * staging step of integer PQ and of the exact integer-L2 ground
+    * truths that rank against it. Rows with a NULL vector are dropped. */
+  private[graft] def quantized(df: DataFrame, idCol: String, vecCol: String,
     idName: String, scale: Long): DataFrame =
     df.select(col(idCol).cast("long").as(idName),
         expr(s"transform($vecCol, x -> " +
           s"cast(floor(cast(x as double) * ${scale}L) as bigint))")
-          .as("__e"))
-      .filter(col("__e").isNotNull)
-
-  /** the integer squared-L2 kernel between the subvector column `sv`
-    * and a codebook column `cv` — pure int64 zip_with/aggregate, no
-    * floats anywhere. */
-  private val intL2 = expr("aggregate(zip_with(sv, cv, " +
-    "(x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)")
+          .as("e"))
+      .filter(col("e").isNotNull)
 
   /** Integer-exact PQ codebook training TRACE + final model — the
     * hash-gate trust anchor for the PQ family. [[pqCodebooks]] /
     * [[pqAdcTopK]] run the float production path (bounded by recall
     * floors in RecallAuditSpec); this replays the SAME per-subspace
     * Lloyd algorithm in 64-bit integer units so a SQL engine
-    * reproduces every training round bit-exactly — the
-    * MlOps.kmeansTrace [D5] conventions applied per subspace:
-    *   - vectors milli-quantized ONCE (`floor(double(x)·scale)`),
-    *     then split into `m` subvectors of `dim / m`; every distance,
-    *     sum and centroid after that is int64;
+    * reproduces every training round bit-exactly ([D5]):
+    *   - vectors milli-quantized ONCE ([[quantized]]), then split into
+    *     `m` subvectors of `dim / m`; every distance, sum and centroid
+    *     after that is int64;
     *   - seeds: the `ksub` rows with the smallest
     *     polyMix(pmod(id, M)) (ties by id) seed EVERY subspace,
     *     codes numbered in draw order — one portable draw, no RNG;
     *   - assignment ties break toward the lower code; the centroid
     *     update is the sign-explicit truncating per-dimension mean;
     *     an emptied code keeps its previous centroid.
+    * With m = 1 this is [[MlOps.kmeansTrace]]'s k-means.
     *
     * Returns (trace, cents, codes): `trace` = one row per
     * (round, j, code) with the member count and integer inertia of
     * that round's assignment (round r evaluated against the centroids
     * after r−1 updates); `cents` = the final (j, code, cv) integer
     * codebooks (the ones the last assignment used); `codes` = the
-    * final (id, j, code) assignment.
+    * final (id, codes array<int>) assignment, [[pqEncode]]'s layout.
     *
-    * Scale shape (the kmeansTrace contract): per round ONE broadcast
-    * of m·ksub centroid literals into a codegen'd zip_with kernel
-    * over the subvector table — no join, ties broken inside
-    * array_min — plus one (j, code, dim) partial agg folding to a
-    * bounded m·ksub·(dim/m) driver-side update. With milli units the
-    * per-row sub-distance stays ≤ (dim/m)·4e6·scale², so inertia
-    * sums hold to ~1e9 rows per code before the inertia column would
-    * need decimal staging. */
+    * Scale shape: per round ONE job — `graft_l2_codes` and
+    * `graft_l2_table` on the int64 vectors with the m·ksub centroids
+    * as literals (no join), feeding one (j, code, dim) partial agg
+    * that folds to a bounded m·ksub·(dim/m) driver-side update and the
+    * round's trace rows. With milli units the per-row sub-distance
+    * stays ≤ (dim/m)·4e6·scale², so inertia sums hold to ~1e9 rows per
+    * code; an overflow raises. */
   def pqIntTrain(emb: DataFrame, idCol: String, vecCol: String,
     dim: Int, m: Int, ksub: Int, iters: Int, scale: Long = 1000L)
   : (DataFrame, DataFrame, DataFrame) = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     require(ksub >= 1 && iters >= 1, "need ksub >= 1 and iters >= 1")
     val spark = emb.sparkSession
+    GraftFunctions.register(spark)
     val sub = dim / m
-    val hashM = TextFunctions.HashMod
-    val sv = subvectorsKeyed(quantized(emb, idCol, vecCol, "id", scale),
-      Seq("id"), "__e", dim, m).localCheckpoint(true)
-    val seedIds = quantized(emb, idCol, vecCol, "id", scale)
-      .select(col("id"),
-        graft.operators.GraphQueries.polyMix(pmod(col("id"), lit(hashM)))
-          .as("__h"))
+    val e = quantized(emb, idCol, vecCol, "id", scale).localCheckpoint(true)
+    val seedIds = e
+      .select(col("id"), graft.operators.GraphQueries.polyMix(
+        pmod(col("id"), lit(TextFunctions.HashMod))).as("__h"))
       .orderBy(col("__h").asc, col("id").asc).limit(ksub)
       .collect().map(_.getLong(0))
     // with fewer usable rows than ksub the codebooks would be missing
-    // (j, code) keys and the assign kernel would die later with an
-    // opaque NoSuchElementException — fail at the draw, with the count
+    // (j, code) keys — fail at the draw, with the count
     require(seedIds.length == ksub,
       s"pqIntTrain needs >= ksub=$ksub rows with non-null embeddings " +
         s"to seed each subspace codebook; corpus yielded ${seedIds.length}")
     val seedRank = seedIds.zipWithIndex.toMap
     var cents: Map[(Int, Int), Array[Long]] =
-      sv.filter(col("id").isin(seedIds.map(Long.box): _*)).collect()
-        .map(r => (r.getInt(1), seedRank(r.getLong(0))) ->
-          r.getSeq[Long](2).toArray).toMap
-    // one codegen'd kernel: the full m×ksub codebook rides a SINGLE
-    // nested array literal (one plan node), the row's subspace selects
-    // its ksub centroids and a transform/array_min computes the argmin
-    // (dist asc, code asc — the tie-break is the struct field order).
-    // The earlier form built a per-(j, code) literal-array when-chain —
-    // m·ksub separate aggregate/zip_with subtrees — whose analysis +
-    // codegen dominated training wall-clock at the production geometry
-    // (measured r14: shared:pqprodint_train 42 s at sf0.1 with 4.3 MiB
-    // task binaries; 256 kernels of this shape). Same integer math,
-    // same tie-break, O(1) plan size in (m, ksub).
-    def assigned: DataFrame = {
-      val cLit = typedLit((0 until m).map(j =>
-        (0 until ksub).map(c => cents((j, c)).toSeq)))
-      sv.withColumn("__cbs", element_at(cLit, col("j") + 1))
-        .withColumn("__a", array_min(expr(
-          s"transform(sequence(0, ${ksub - 1}), c -> named_struct(" +
-            "'dist', aggregate(zip_with(sv, __cbs[c], " +
-            "(x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b), " +
-            "'code', CAST(c AS INT)))")))
-        .select(col("id"), col("j"), col("sv"),
-          col("__a.code").as("code"), col("__a.dist").as("dist"))
-    }
-    // ONE distributed job per round: the (j, code, pos)-keyed stats agg
+      e.filter(col("id").isin(seedIds.map(Long.box): _*)).collect()
+        .flatMap { r =>
+          val v = r.getSeq[Long](1).toArray
+          (0 until m).map(j =>
+            (j, seedRank(r.getLong(0))) -> v.slice(j * sub, j * sub + sub))
+        }.toMap
+    def book = new IntCodebook(sub, Array.tabulate(m, ksub)((j, c) => cents((j, c))),
+      Array.fill(m)(Array.range(0, ksub)))
+    // each vector's codes and the distance of each to its code (read
+    // from the distance table before the explode, so the exploded rows
+    // carry m values, not m·ksub), then one row per component:
+    // subspace j = pos div sub, its code and distance, and the
+    // component's offset q in the subvector. The (j, code, q) agg
     // yields the centroid-update sums AND the round's trace numbers
-    // (n_vecs / inertia = the pos-0 slice — dist repeats per exploded
-    // position, so summing it where pos = 0 is the plain per-(j, code)
-    // sum). The earlier loop evaluated each round's assignment TWICE
-    // (sums collect + the trace's union member) and the final one a
-    // third time for codes, and the iters-member union of assignment
-    // plans was re-analyzed whole at every trace action; the trace rows
-    // are m·ksub·iters bounded, so they assemble driver-side like the
-    // final centroids (measured r14 with the kernel fix compounding:
-    // shared:pqprodint_train 42 s → 3.3 s at sf0.1).
+    // (n_vecs / inertia = the q = 0 slice — dist repeats per
+    // component, so summing it where q = 0 is the plain per-(j, code)
+    // sum).
     val traceRows = Seq.newBuilder[Row]
-    var lastAssign: DataFrame = null
     var r = 1
     while (r <= iters) {
-      val a = assigned
-      lastAssign = a
-      val stats = a.select(col("j"), col("code"), col("dist"),
-          posexplode(col("sv")))
-        .groupBy("j", "code", "pos")
+      val cb = book
+      val stats = e
+        .select(codebookCall("graft_l2_codes", col("e"), cb).as("codes"),
+          codebookCall("graft_l2_table", col("e"), cb).as("tab"), col("e"))
+        .select(col("codes"), array((0 until m).map(j => element_at(col("tab"),
+            element_at(col("codes"), j + 1) + (j * ksub + 1))): _*).as("dist"),
+          posexplode(col("e")))
+        .filter(col("pos") < dim)
+        .withColumn("j", expr(s"CAST(pos div $sub AS INT)"))
+        .groupBy(col("j"), element_at(col("codes"), col("j") + 1).as("code"),
+          (col("pos") % sub).as("q"))
         .agg(sum("col").as("s"), count(lit(1)).as("n"),
-          sum("dist").as("sd"))
+          sum(element_at(col("dist"), col("j") + 1)).as("sd"))
         .collect()
       traceRows ++= stats.iterator
         .filter(_.getInt(2) == 0)
@@ -826,51 +785,38 @@ object PqOps {
       }
       r += 1
     }
-    val traceSchema = StructType(Seq(
-      StructField("round", LongType, nullable = false),
-      StructField("j", IntegerType, nullable = false),
-      StructField("code", IntegerType, nullable = false),
-      StructField("n_vecs", LongType, nullable = false),
-      StructField("inertia", LongType, nullable = false)))
-    val traceDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        traceRows.result().sortBy(row =>
-          (row.getLong(0), row.getInt(1), row.getInt(2))), 1), traceSchema)
-    val centSchema = StructType(Seq(
-      StructField("j", IntegerType, nullable = false),
-      StructField("code", IntegerType, nullable = false),
-      StructField("cv", ArrayType(LongType, containsNull = false),
-        nullable = false)))
-    val centDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        cents.toSeq.sortBy(_._1)
-          .map { case ((j, c), v) => Row(j, c, v.toSeq) }, 1), centSchema)
-    (traceDf.orderBy("round", "j", "code"),
-      centDf,
-      lastAssign.select(col("id"), col("j"), col("code")))
+    def local(rows: Seq[Row], ddl: String): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), StructType.fromDDL(ddl))
+    (local(traceRows.result(), "round BIGINT NOT NULL, j INT NOT NULL, " +
+        "code INT NOT NULL, n_vecs BIGINT NOT NULL, inertia BIGINT NOT NULL")
+        .orderBy("round", "j", "code"),
+      local(cents.toSeq.sortBy(_._1).map { case ((j, c), v) => Row(j, c, v.toSeq) },
+        "j INT NOT NULL, code INT NOT NULL, cv ARRAY<BIGINT> NOT NULL"),
+      e.select(col("id"), codebookCall("graft_l2_codes", col("e"), book)
+        .as("codes")))
   }
 
   /** ADC ranking in EXACT integer units over [[pqIntTrain]]'s model:
     * probes are the corpus rows with id < `nProbes`, each ranked
     * against every OTHER vector by the summed per-subspace integer
     * sub-distance to the centroid of that vector's code — the
-    * [[pqAdcTopK]] plan shape (the |probes|·m·ksub distance table
-    * broadcasts into the codes, which never move; partial sums
-    * collapse map-side; bounded-heap top-k) with the 6dp float table
-    * replaced by the bit-replayable int64 one. */
+    * [[pqAdcTopK]] plan shape (each probe's m·ksub int64 distance
+    * table, `graft_l2_table`, broadcasts into the codes, which never
+    * move; `graft_adc_sum` scores each code row; bounded-heap top-k)
+    * with the 6dp float table replaced by the bit-replayable one. */
   def pqIntAdcTopK(emb: DataFrame, idCol: String, vecCol: String,
     dim: Int, m: Int, cents: DataFrame, codes: DataFrame,
     nProbes: Int, k: Int, scale: Long = 1000L): DataFrame = {
-    val psv = subvectorsKeyed(
-      quantized(emb.filter(col(idCol) < nProbes), idCol, vecCol,
-        "probe_id", scale),
-      Seq("probe_id"), "__e", dim, m)
-    val pd = psv.join(broadcast(cents), Seq("j"))
-      .select(col("probe_id"), col("j"), col("code"), intL2.as("pd"))
-    val adc = codes.join(broadcast(pd), Seq("j", "code"))
-      .filter(col("id") =!= col("probe_id"))
-      .groupBy("probe_id", "id")
-      .agg(sum("pd").as("adc"))
+    GraftFunctions.register(emb.sparkSession)
+    val (cd, cv) = bySubspace(cents.collect().map(r =>
+      (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray)), m)
+    val ptab = quantized(emb.filter(col(idCol) < nProbes), idCol, vecCol,
+        "probe_id", scale)
+      .select(col("probe_id"), codebookCall("graft_l2_table", col("e"),
+        new IntCodebook(dim / m, cv, cd)).as("tab"))
+    val adc = codes.join(broadcast(ptab), col("id") =!= col("probe_id"))
+      .select(col("probe_id"), col("id"),
+        call_function("graft_adc_sum", col("codes"), col("tab")).as("adc"))
     graft.plans.GraftOps.topKPerGroup(adc, Seq(col("probe_id")),
         Seq(col("adc").asc, col("id").asc), k)
       .select(col("probe_id"), col("id").as("vec_id"), col("adc"),

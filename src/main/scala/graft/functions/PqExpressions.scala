@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -25,6 +27,12 @@ private[functions] object ModelArgs {
     case _ => false
   }
 
+  /** An int64 vector: integer PQ's milli-quantized units. */
+  def isLongs(e: Expression): Boolean = e.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
   /** Failure unless `e` is a foldable of type `want` (nullability aside). */
   def literal(fname: String, what: String, e: Expression, want: DataType)
   : Option[String] =
@@ -40,36 +48,35 @@ private[functions] object ModelArgs {
     }
 
   def check(fname: String, vec: Expression,
-    lits: Seq[(String, Expression, DataType)]): TypeCheckResult =
-    if (!isVector(vec)) TypeCheckResult.TypeCheckFailure(
-      s"$fname expects array<float|double>, got ${vec.dataType}")
+    lits: Seq[(String, Expression, DataType)],
+    vectorOk: Expression => Boolean = isVector,
+    want: String = "array<float|double>"): TypeCheckResult =
+    if (!vectorOk(vec)) TypeCheckResult.TypeCheckFailure(
+      s"$fname expects $want, got ${vec.dataType}")
     else lits.flatMap { case (w, e, t) => literal(fname, w, e, t) }
       .headOption.fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess)(
         TypeCheckResult.TypeCheckFailure(_))
 
   val Doubles2: DataType = ArrayType(ArrayType(DoubleType))
   val Doubles3: DataType = ArrayType(ArrayType(ArrayType(DoubleType)))
+  val Longs3: DataType = ArrayType(ArrayType(ArrayType(LongType)))
   val Ints1: DataType = ArrayType(IntegerType)
   val Ints2: DataType = ArrayType(ArrayType(IntegerType))
 
   private def arr(a: Any): ArrayData = a.asInstanceOf[ArrayData]
 
-  def doubles2(a: Any): Array[Array[Double]] = {
+  /** An array literal's elements, each read by `elem`. */
+  private def nested[T: ClassTag](a: Any)(elem: ArrayData => T): Array[T] = {
     val x = arr(a)
-    Array.tabulate(x.numElements())(i => x.getArray(i).toDoubleArray())
+    Array.tabulate(x.numElements())(i => elem(x.getArray(i)))
   }
 
-  def doubles3(a: Any): Array[Array[Array[Double]]] = {
-    val x = arr(a)
-    Array.tabulate(x.numElements())(i => doubles2(x.getArray(i)))
-  }
-
+  def doubles2(a: Any): Array[Array[Double]] = nested(a)(_.toDoubleArray())
+  def doubles3(a: Any): Array[Array[Array[Double]]] = nested(a)(doubles2)
+  def longs3(a: Any): Array[Array[Array[Long]]] =
+    nested(a)(nested(_)(_.toLongArray()))
   def ints1(a: Any): Array[Int] = arr(a).toIntArray()
-
-  def ints2(a: Any): Array[Array[Int]] = {
-    val x = arr(a)
-    Array.tabulate(x.numElements())(i => x.getArray(i).toIntArray())
-  }
+  def ints2(a: Any): Array[Array[Int]] = nested(a)(_.toIntArray())
 
   /** The body of a kernel call `out = kernel(vec, isFloat, model)`. */
   def callGen(ctx: CodegenContext, ev: ExprCode, vec: Expression,
@@ -122,7 +129,9 @@ case class CosArgmax(v: Expression, cents: Expression, cells: Expression)
 }
 
 /** Shared by the two codebook expressions: `x` split into subspaces of
-  * `sub`, codebook `cents(j)(i)` with code `codes(j)(i)` as literals. */
+  * `sub`, codebook `cents(j)(i)` with code `codes(j)(i)` as literals.
+  * A bigint `x` takes bigint centroids and the int64 kernels (integer
+  * PQ); a float or double `x` takes double centroids. */
 private[functions] trait CodebookExpr extends Expression {
   def x: Expression
   def sub: Int
@@ -132,16 +141,22 @@ private[functions] trait CodebookExpr extends Expression {
 
   override def children: Seq[Expression] = Seq(x, cents, codes)
 
+  protected def integral: Boolean = isLongs(x)
+
   override def checkInputDataTypes(): TypeCheckResult =
     if (sub <= 0) TypeCheckResult.TypeCheckFailure(s"$fname: sub must be > 0")
-    else check(fname, x, Seq(("cents", cents, Doubles3), ("codes", codes, Ints2)))
+    else check(fname, x, Seq(("cents", cents, if (integral) Longs3 else Doubles3),
+      ("codes", codes, Ints2)), e => isVector(e) || isLongs(e),
+      "array<float|double|bigint>")
 
-  @transient protected lazy val model =
-    new Codebook(sub, doubles3(cents.eval()), ints2(codes.eval()))
+  @transient protected lazy val model: CodeLayout =
+    if (integral) new IntCodebook(sub, longs3(cents.eval()), ints2(codes.eval()))
+    else new Codebook(sub, doubles3(cents.eval()), ints2(codes.eval()))
 }
 
 /** graft_l2_codes(x, sub, cents, codes): x's PQ code per subspace
-  * ([[PqKernels.l2Codes]]) as array<int>, subspace j at position j. */
+  * ([[PqKernels.l2Codes]], [[PqKernels.l2CodesLongs]]) as array<int>,
+  * subspace j at position j. */
 case class L2Codes(x: Expression, sub: Int, cents: Expression,
   codes: Expression) extends CodebookExpr {
   protected def fname = "graft_l2_codes"
@@ -160,12 +175,13 @@ case class L2Codes(x: Expression, sub: Int, cents: Expression,
 }
 
 /** graft_l2_table(x, sub, cents, codes): x's ADC distance table
-  * ([[PqKernels.l2Table]]) — array<double> of m × width, NULL for a
-  * NULL x. */
+  * ([[PqKernels.l2Table]] and its int64 twin) — array<double>,
+  * or array<bigint> for a bigint x, of m × width; NULL for a NULL x. */
 case class L2Table(x: Expression, sub: Int, cents: Expression,
   codes: Expression) extends CodebookExpr {
   protected def fname = "graft_l2_table"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def dataType: DataType =
+    ArrayType(if (integral) LongType else DoubleType, containsNull = true)
   override def nullable: Boolean = true
 
   override def eval(input: InternalRow): Any = PqKernels.l2TableData(
@@ -180,25 +196,37 @@ case class L2Table(x: Expression, sub: Int, cents: Expression,
 }
 
 /** graft_adc_sum(codes, table): Σ_j table[j·width + codes[j]] as the
-  * exact DECIMAL(38,6) sum ([[PqKernels.adcSum]]). */
+  * exact DECIMAL(38,6) sum ([[PqKernels.adcSum]]), or as a bigint for
+  * an integer table ([[PqKernels.adcSumLongs]]). */
 case class AdcSum(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DecimalType(38, 6)
+  private def integral: Boolean = isLongs(right)
+  override def dataType: DataType =
+    if (integral) LongType else DecimalType(38, 6)
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
+      case (ArrayType(IntegerType, _), ArrayType(DoubleType | LongType, _)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_adc_sum expects (array<int>, array<double>), got $l, $r")
+        s"graft_adc_sum expects (array<int>, array<double|bigint>), got $l, $r")
     }
 
   override protected def nullSafeEval(c: Any, t: Any): Any =
-    PqKernels.adcSum(c.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData])
+    if (integral)
+      PqKernels.adcSumLongs(c.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData])
+    else PqKernels.adcSum(c.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (c, t) =>
-      s"""
+      if (integral) {
+        val boxed = ctx.freshName("adc")
+        s"""
+           |java.lang.Long $boxed = graft.functions.PqKernels.adcSumLongs($c, $t);
+           |${ev.isNull} = $boxed == null;
+           |if (!${ev.isNull}) ${ev.value} = $boxed;
+         """.stripMargin
+      } else s"""
          |${ev.value} = graft.functions.PqKernels.adcSum($c, $t);
          |${ev.isNull} = ${ev.value} == null;
        """.stripMargin)

@@ -22,7 +22,13 @@ import org.apache.spark.sql.types.Decimal
   *  - orderings are Spark's (`SQLOrderingUtil.compareDoubles`: NaN
   *    largest, -0.0 == 0.0; NULL fields first);
   *  - [[dec6]] is `CAST(d AS DECIMAL(38,6))`, so an ADC sum of them
-  *    is the DECIMAL(38,6) sum.
+  *    is the DECIMAL(38,6) sum;
+  *  - the int64 twins ([[l2CodesLongs]], [[longTable]],
+  *    [[adcSumLongs]]) are integer PQ's
+  *    `aggregate(zip_with(sv, cent, (x, y) -> (x - y) * (x - y)), 0L,
+  *    (a, b) -> a + b)` and `sum` under ANSI arithmetic: an overflow
+  *    raises, a NULL element or a length mismatch makes the distance
+  *    NULL, and a NULL distance sorts first.
   */
 object PqKernels {
 
@@ -188,17 +194,91 @@ object PqKernels {
     var s: JBigDecimal = null
     var j = 0
     while (j < m) {
-      if (!codes.isNullAt(j)) {
-        val code = codes.getInt(j)
-        val at = j * width + code
-        if (code >= 0 && code < width && !table.isNullAt(at)) {
-          val u = dec6(table.getDouble(at))
-          if (u != null) s = if (s == null) u else s.add(u)
-        }
+      val at = slot(codes, table, width, j)
+      if (at >= 0) {
+        val u = dec6(table.getDouble(at))
+        if (u != null) s = if (s == null) u else s.add(u)
       }
       j += 1
     }
     if (s == null) null else Decimal(s, 38, 6)
+  }
+
+  /** The table slot of subspace j's code, or -1 where the code is
+    * NULL, outside the table's width or its slot NULL. */
+  private def slot(codes: ArrayData, table: ArrayData, width: Int, j: Int)
+  : Int =
+    if (codes.isNullAt(j)) -1
+    else {
+      val code = codes.getInt(j)
+      val at = j * width + code
+      if (code >= 0 && code < width && !table.isNullAt(at)) at else -1
+    }
+
+  /** The integer squared L2 of slice j of x (`nulls` marks NULL
+    * elements, or is null) against `cent`, or -1 for NULL. Every pair
+    * is evaluated, as `zip_with` does, so an overflow past a NULL
+    * still raises; the sum stops at the first NULL term, as
+    * `aggregate` does. A real distance is never negative. */
+  private def l2Long(x: Array[Long], nulls: Array[Boolean], j: Int, sub: Int,
+    cent: Array[Long]): Long = {
+    val off = j * sub
+    val ns = math.max(0, math.min(sub, x.length - off))
+    var s = 0L
+    var isNull = false
+    var i = 0
+    while (i < math.max(ns, cent.length)) {
+      if (i < ns && i < cent.length && (nulls == null || !nulls(off + i))) {
+        val d = Math.subtractExact(x(off + i), cent(i))
+        val t = Math.multiplyExact(d, d)
+        if (!isNull) s = Math.addExact(s, t)
+      } else isNull = true
+      i += 1
+    }
+    if (isNull) -1L else s
+  }
+
+  /** x's int64 distance table, -1 for a NULL distance, for a code the
+    * codebook does not hold, and everywhere for a NULL vector. */
+  private def longTable(x: ArrayData, cb: IntCodebook): Array[Long] = {
+    val t = Array.fill(cb.m * cb.width)(-1L)
+    if (x != null) {
+      val v = x.toLongArray()
+      val nulls = if (hasNull(x)) Array.tabulate(v.length)(x.isNullAt) else null
+      for (j <- 0 until cb.m; i <- cb.codes(j).indices)
+        t(j * cb.width + cb.codes(j)(i)) = l2Long(v, nulls, j, cb.sub, cb.cents(j)(i))
+    }
+    t
+  }
+
+  /** [[l2Codes]] in int64 units: per subspace the code at the minimum
+    * (distance, code), a NULL distance (-1) first; a NULL vector takes
+    * each subspace's lowest code. */
+  private def l2CodesLongs(x: ArrayData, cb: IntCodebook): ArrayData = {
+    val t = longTable(x, cb)
+    ArrayData.toArrayData(Array.tabulate(cb.m) { j =>
+      cb.codes(j).reduce { (a, b) =>
+        val da = t(j * cb.width + a); val db = t(j * cb.width + b)
+        if (db < da || (db == da && b < a)) b else a
+      }
+    })
+  }
+
+  /** [[adcSum]] in int64 units: Σ_j table[j·width + codes[j]], NULL
+    * terms skipped, NULL when none is left; an overflow raises, as the
+    * ANSI `sum` does. */
+  def adcSumLongs(codes: ArrayData, table: ArrayData): java.lang.Long = {
+    val m = codes.numElements()
+    val width = if (m == 0) 0 else table.numElements() / m
+    var s = 0L
+    var any = false
+    var j = 0
+    while (j < m) {
+      val at = slot(codes, table, width, j)
+      if (at >= 0) { s = Math.addExact(s, table.getLong(at)); any = true }
+      j += 1
+    }
+    if (any) s else null
   }
 
   /** CAST(a[i] AS DOUBLE) − b[i], `zip_with` semantics: the longer
@@ -248,21 +328,36 @@ object PqKernels {
   def cosArgmaxData(v: ArrayData, isFloat: Boolean, m: CellModel): Int =
     cosArgmax(toDoubles(v, isFloat), m)
 
-  /** [[l2Codes]] on a Catalyst array (the graft_l2_codes entry). */
-  def l2CodesData(x: ArrayData, isFloat: Boolean, cb: Codebook): ArrayData =
-    ArrayData.toArrayData(l2Codes(toDoubles(x, isFloat), cb))
-
-  /** [[l2Table]] on a Catalyst array (the graft_l2_table entry): NULL
-    * for a NULL vector, NULL slots for codes the codebook does not hold. */
-  def l2TableData(x: ArrayData, isFloat: Boolean, cb: Codebook): ArrayData =
-    if (x == null) null
-    else {
-      val t = l2Table(toDoubles(x, isFloat), cb)
-      if (cb.complete) ArrayData.toArrayData(t)
-      else new GenericArrayData(Array.tabulate[Any](t.length) { i =>
-        if (cb.present(i)) t(i) else null
-      })
+  /** [[l2Codes]], or [[l2CodesLongs]] for an integer codebook, on a
+    * Catalyst array (the graft_l2_codes entry). */
+  def l2CodesData(x: ArrayData, isFloat: Boolean, cb: CodeLayout): ArrayData =
+    cb match {
+      case c: Codebook => ArrayData.toArrayData(l2Codes(toDoubles(x, isFloat), c))
+      case c: IntCodebook => l2CodesLongs(x, c)
     }
+
+  /** [[l2Table]], or its int64 twin for an integer codebook, on a
+    * Catalyst array (the graft_l2_table entry): NULL for a NULL vector,
+    * NULL slots for codes the codebook does not hold (and, in int64,
+    * for NULL distances). */
+  def l2TableData(x: ArrayData, isFloat: Boolean, cb: CodeLayout): ArrayData =
+    cb match {
+      case _ if x == null => null
+      case c: Codebook => l2TableDoubles(x, isFloat, c)
+      case c: IntCodebook =>
+        val t = longTable(x, c)
+        if (t.forall(_ >= 0)) ArrayData.toArrayData(t)
+        else new GenericArrayData(t.map(d => if (d < 0) null else d: Any))
+    }
+
+  private def l2TableDoubles(x: ArrayData, isFloat: Boolean, cb: Codebook)
+  : ArrayData = {
+    val t = l2Table(toDoubles(x, isFloat), cb)
+    if (cb.complete) ArrayData.toArrayData(t)
+    else new GenericArrayData(Array.tabulate[Any](t.length) { i =>
+      if (cb.present(i)) t(i) else null
+    })
+  }
 
   /** The Lloyd update: per key, the exact decimal-mean centroid of the
     * vectors (read as floats, as `CAST(v AS ARRAY<FLOAT>)`), by the same
@@ -288,20 +383,18 @@ final class CellModel(val cents: Array[Array[Double]], val cells: Array[Int])
   val cn2: Array[Double] = cents.map(c => PqKernels.dot(c, c))
 }
 
-/** m per-subspace codebooks of `sub`-wide centroids: `cents(j)(i)` is
-  * code `codes(j)(i)`. `width` is one past the largest code, the stride
-  * of a [[PqKernels.l2Table]] row. */
-final class Codebook(val sub: Int, val cents: Array[Array[Array[Double]]],
-  val codes: Array[Array[Int]]) extends Serializable {
-  require(cents.length == codes.length &&
-    cents.indices.forall(j => cents(j).length == codes(j).length),
+/** The code layout of m per-subspace codebooks of `sub`-wide
+  * centroids: subspace j holds codes `codes(j)`. `width` is one past
+  * the largest code, the stride of a distance-table row. */
+sealed abstract class CodeLayout(val sub: Int, val codes: Array[Array[Int]],
+  centsPerSubspace: Array[Int]) extends Serializable {
+  require(centsPerSubspace.sameElements(codes.map(_.length)),
     "a codebook needs one code per centroid")
   require(codes.forall(_.nonEmpty),
     "a codebook needs >= 1 surviving code per subspace, got " +
       codes.map(_.length).mkString(","))
   val m: Int = codes.length
   val width: Int = codes.iterator.flatMap(_.iterator).max + 1
-  val cn2: Array[Array[Double]] = cents.map(_.map(c => PqKernels.dot(c, c)))
   /** Which table slots hold a code. */
   val present: Array[Boolean] = {
     val p = new Array[Boolean](m * width)
@@ -310,3 +403,13 @@ final class Codebook(val sub: Int, val cents: Array[Array[Array[Double]]],
   }
   val complete: Boolean = present.forall(identity)
 }
+
+/** Float PQ codebooks: `cents(j)(i)` is code `codes(j)(i)`. */
+final class Codebook(sub: Int, val cents: Array[Array[Array[Double]]],
+  codes: Array[Array[Int]]) extends CodeLayout(sub, codes, cents.map(_.length)) {
+  val cn2: Array[Array[Double]] = cents.map(_.map(c => PqKernels.dot(c, c)))
+}
+
+/** Integer PQ codebooks in int64 units, laid out as [[Codebook]]. */
+final class IntCodebook(sub: Int, val cents: Array[Array[Array[Long]]],
+  codes: Array[Array[Int]]) extends CodeLayout(sub, codes, cents.map(_.length))

@@ -545,8 +545,9 @@ object VectorQueries {
     // per-round member counts and inertia both. This is the trust
     // anchor for the k-means family: the float production path is
     // bounded by recall floors, the integer trace by a hash gate.
-    // Scale: per round one broadcast centroid kernel (no join) + one
-    // (cluster, dim) partial agg; see MlOps.kmeansTrace.
+    // Scale: per round one compiled centroid kernel (no join) + one
+    // (cluster, dim) partial agg; MlOps.kmeansTrace is PqOps.pqIntTrain
+    // with one subspace.
     "q247_kmeans_steps" -> ((s, dir) =>
       graft.api.MlOps.kmeansTrace(
         t(s, dir, "embeddings"), "vec_id", "embedding",
@@ -558,18 +559,20 @@ object VectorQueries {
     // recall floors; this replays the SAME per-subspace Lloyd in
     // int64 milli-units so DuckDB reproduces every round bit-exactly:
     // member counts AND inertia per (round, subspace, code)). Scale:
-    // per round one broadcast m·ksub centroid-literal kernel over the
-    // subvector table (no join) + one (j, code, dim) partial agg with
-    // a bounded m·ksub·subdim driver fold — see PqOps.pqIntTrain.
+    // per round the compiled graft_l2_codes/graft_l2_table kernels with
+    // the m·ksub centroids as literals (no join) + one (j, code, dim)
+    // partial agg with a bounded m·ksub·subdim driver fold — see
+    // PqOps.pqIntTrain.
     "q267_pq_trace" -> ((s, dir) => pqIntArtifacts(s, dir)._1),
 
     // ADC ranking in EXACT integer units over q267's trained model,
-    // ORACLE-GATED — the second half of the PQ trust anchor: the
-    // asymmetric-distance table (|probes|·m·ksub int64 sub-distances)
-    // broadcasts into the final codes, partial sums collapse
-    // map-side, bounded-heap top-k — the q132 ADC plan shape with the
-    // 6dp float table replaced by the bit-replayable integer one, so
-    // the oracle verifies codebooks, encoding AND ranking end-to-end.
+    // ORACLE-GATED — the second half of the PQ trust anchor: each
+    // probe's asymmetric-distance table (m·ksub int64 sub-distances)
+    // broadcasts into the final code arrays, graft_adc_sum scores each
+    // (probe, code row) pair, bounded-heap top-k — the q132 ADC plan
+    // shape with the 6dp float table replaced by the bit-replayable
+    // integer one, so the oracle verifies codebooks, encoding AND
+    // ranking end-to-end.
     "q268_pq_adc_int" -> ((s, dir) =>
       graft.Caches.memo(s, s"pqint:$dir:adc") {
         val (_, cents, codes) = pqIntArtifacts(s, dir)
@@ -597,34 +600,10 @@ object VectorQueries {
       graft.Caches.memo(s, s"pqint:$dir:recall") {
         val emb = t(s, dir, "embeddings")
         val (_, cents, codes) = pqIntArtifacts(s, dir)
-        val adc = graft.api.PqOps.pqIntAdcTopK(emb, "vec_id",
-            "embedding", 64, PqTrM, cents, codes, PqTrProbes, PqTrTopK)
-          .select(col("probe_id"), col("vec_id"))
-        val q = emb.select(col("vec_id").cast("long").as("id"),
-            expr("transform(embedding, x -> " +
-              "cast(floor(cast(x as double) * 1000L) as bigint))")
-              .as("e"))
-          .filter(col("e").isNotNull)
-        val probes = q.filter(col("id") < PqTrProbes)
-          .select(col("id").as("probe_id"), col("e").as("pe"))
-        val exact = graft.plans.GraftOps.topKPerGroup(
-          broadcast(probes).join(q, col("id") =!= col("probe_id"))
-            .select(col("probe_id"), col("id"),
-              expr("aggregate(zip_with(pe, e, " +
-                "(x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)")
-                .as("d")),
-          Seq(col("probe_id")), Seq(col("d").asc, col("id").asc),
-          PqTrTopK)
-          .select(col("probe_id"), col("id").as("vec_id"))
-        val ov = adc.join(exact, Seq("probe_id", "vec_id"), "left_semi")
-          .groupBy("probe_id").agg(count(lit(1)).as("n_overlap"))
-        probes.select("probe_id")
-          .join(ov, Seq("probe_id"), "left")
-          .select(col("probe_id"),
-            coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-            expr(s"coalesce(n_overlap, 0L) * 1000L div $PqTrTopK")
-              .as("recall_permille"))
-          .orderBy("probe_id")
+        intRecall(emb, PqTrProbes, PqTrTopK)((_, _) =>
+          graft.api.PqOps.pqIntAdcTopK(emb, "vec_id", "embedding", 64,
+              PqTrM, cents, codes, PqTrProbes, PqTrTopK)
+            .select(col("probe_id"), col("vec_id")))
       }),
 
     // The q284 recall machinery at q132's PRODUCTION geometry (16
@@ -639,47 +618,25 @@ object VectorQueries {
     // stage is why this tracks q132's 0.833 floor story rather than
     // q284's honestly-low raw-ADC permilles: ADC only has to land the
     // true top-3 anywhere in the 32-shortlist. Scale shape = q132:
-    // codes equi-join per subspace, bounded-heap top-k, probes
-    // broadcast; the exact side's corpus-scan BNLJ is the documented
-    // ground-truth anchor, not the production path.
+    // broadcast probe tables scored against each code array,
+    // bounded-heap top-k; the exact side's corpus-scan BNLJ is the
+    // documented ground-truth anchor, not the production path.
     "q285_adc_recall_prod" -> ((s, dir) =>
       graft.Caches.memo(s, s"pqprodint:$dir:recall") {
         val emb = t(s, dir, "embeddings")
         val (_, cents, codes) = pqProdIntArtifacts(s, dir)
-        val short = graft.api.PqOps.pqIntAdcTopK(emb, "vec_id",
-            "embedding", 64, PqPrM, cents, codes, PqPrProbes, PqPrShortK)
-          .select(col("probe_id"), col("vec_id"))
-        val q = emb.select(col("vec_id").cast("long").as("id"),
-            expr("transform(embedding, x -> " +
-              "cast(floor(cast(x as double) * 1000L) as bigint))")
-              .as("e"))
-          .filter(col("e").isNotNull)
-        val probes = q.filter(col("id") < PqPrProbes)
-          .select(col("id").as("probe_id"), col("e").as("pe"))
-        val dExpr = expr("aggregate(zip_with(pe, e, " +
-          "(x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)")
-        val rerank = graft.plans.GraftOps.topKPerGroup(
-          short.join(q, col("vec_id") === col("id"))
-            .join(broadcast(probes), Seq("probe_id"))
-            .select(col("probe_id"), col("id"), dExpr.as("d")),
-          Seq(col("probe_id")), Seq(col("d").asc, col("id").asc),
-          PqPrTopK)
-          .select(col("probe_id"), col("id").as("vec_id"))
-        val exact = graft.plans.GraftOps.topKPerGroup(
-          broadcast(probes).join(q, col("id") =!= col("probe_id"))
-            .select(col("probe_id"), col("id"), dExpr.as("d")),
-          Seq(col("probe_id")), Seq(col("d").asc, col("id").asc),
-          PqPrTopK)
-          .select(col("probe_id"), col("id").as("vec_id"))
-        val ov = rerank.join(exact, Seq("probe_id", "vec_id"), "left_semi")
-          .groupBy("probe_id").agg(count(lit(1)).as("n_overlap"))
-        probes.select("probe_id")
-          .join(ov, Seq("probe_id"), "left")
-          .select(col("probe_id"),
-            coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-            expr(s"coalesce(n_overlap, 0L) * 1000L div $PqPrTopK")
-              .as("recall_permille"))
-          .orderBy("probe_id")
+        intRecall(emb, PqPrProbes, PqPrTopK) { (q, probes) =>
+          val short = graft.api.PqOps.pqIntAdcTopK(emb, "vec_id",
+              "embedding", 64, PqPrM, cents, codes, PqPrProbes, PqPrShortK)
+            .select(col("probe_id"), col("vec_id"))
+          graft.plans.GraftOps.topKPerGroup(
+            short.join(q, col("vec_id") === col("id"))
+              .join(broadcast(probes), Seq("probe_id"))
+              .select(col("probe_id"), col("id"), exactIntL2().as("d")),
+            Seq(col("probe_id")), Seq(col("d").asc, col("id").asc),
+            PqPrTopK)
+            .select(col("probe_id"), col("id").as("vec_id"))
+        }
       }),
 
     // PQ codebook health — the operational census an ANN owner reads
@@ -709,17 +666,11 @@ object VectorQueries {
     // q284 ground-truth-anchor BNLJ class.
     "q366_matryoshka_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val q = emb.select(col("vec_id").cast("long").as("id"),
-          expr("transform(embedding, x -> " +
-            "cast(floor(cast(x as double) * 1000L) as bigint))").as("e"))
-        .filter(col("e").isNotNull)
+      val q = graft.api.PqOps.quantized(emb, "vec_id", "embedding", "id",
+        1000L)
       val probes = q.filter(col("id") < MrlProbes)
         .select(col("id").as("probe_id"), col("e").as("pe"))
-      val dCols = MrlDims.map { w =>
-        expr(s"aggregate(zip_with(slice(pe, 1, $w), slice(e, 1, $w), " +
-          "(x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)")
-          .as(s"d_$w")
-      }
+      val dCols = MrlDims.map(w => exactIntL2(Some(w)).as(s"d_$w"))
       val pairs = graft.Caches.persistTracked(
         broadcast(probes).join(q, col("id") =!= col("probe_id"))
           .select(col("probe_id") +: col("id") +: dCols: _*))
@@ -752,6 +703,45 @@ object VectorQueries {
     "q359_pq_code_health_prod" -> ((s, dir) =>
       codeHealth(pqProdIntArtifacts(s, dir)._1, PqPrK, PqPrIters))
   )
+
+  /** The exact integer squared L2 between the milli-quantized probe
+    * `pe` and vector `e` ([[graft.api.PqOps.quantized]]), over their
+    * first `prefix` components when given — the ground truth q284,
+    * q285 and q366 rank against. Reference code, kept as the SQL
+    * formulation the oracle replays. */
+  private def exactIntL2(prefix: Option[Int] = None): Column = {
+    val (a, b) = prefix.fold(("pe", "e"))(w =>
+      (s"slice(pe, 1, $w)", s"slice(e, 1, $w)"))
+    expr(s"aggregate(zip_with($a, $b, " +
+      "(x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)")
+  }
+
+  /** q284/q285's recall table: per probe (the quantized corpus rows
+    * with id < `nProbes`), how many of its `found` (probe_id, vec_id)
+    * rows sit in the exact integer-L2 top-`k` ([D5] truncating
+    * permille); `found` is built from the quantized corpus (id, e) and
+    * its probes (probe_id, pe). */
+  private def intRecall(emb: DataFrame, nProbes: Int, k: Int)(
+    found: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val q = graft.api.PqOps.quantized(emb, "vec_id", "embedding", "id", 1000L)
+    val probes = q.filter(col("id") < nProbes)
+      .select(col("id").as("probe_id"), col("e").as("pe"))
+    val exact = graft.plans.GraftOps.topKPerGroup(
+      broadcast(probes).join(q, col("id") =!= col("probe_id"))
+        .select(col("probe_id"), col("id"), exactIntL2().as("d")),
+      Seq(col("probe_id")), Seq(col("d").asc, col("id").asc), k)
+      .select(col("probe_id"), col("id").as("vec_id"))
+    val ov = found(q, probes)
+      .join(exact, Seq("probe_id", "vec_id"), "left_semi")
+      .groupBy("probe_id").agg(count(lit(1)).as("n_overlap"))
+    probes.select("probe_id")
+      .join(ov, Seq("probe_id"), "left")
+      .select(col("probe_id"),
+        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
+        expr(s"coalesce(n_overlap, 0L) * 1000L div $k")
+          .as("recall_permille"))
+      .orderBy("probe_id")
+  }
 
   /** q341/q359's shared derivation over a PQ training trace's FINAL
     * round: per subspace, codes in use vs dead, assignment entropy
@@ -831,25 +821,30 @@ object VectorQueries {
     * [[pqIntArtifacts]]. */
   private[graft] def ivfPqArtifacts(s: SparkSession, dir: String)
   : (DataFrame, DataFrame, DataFrame) = {
-    val mk = s"ivfpq:$dir:64:$IvfPqCells:4:$PqM:$PqKsub:$PqIters"
-    var built: Option[(DataFrame, DataFrame, DataFrame)] = None
-    def b(i: Int): DataFrame = {
-      if (built.isEmpty)
-        built = Some(graft.api.PqOps.ivfPqTrain(t(s, dir, "embeddings"),
-          "vec_id", "embedding", 64, IvfPqCells, 4, PqM, PqKsub, PqIters, 1))
-      built.get.productElement(i).asInstanceOf[DataFrame]
+    memo3(s, s"ivfpq:$dir:64:$IvfPqCells:4:$PqM:$PqKsub:$PqIters",
+        ("cents", "cb", "codes")) {
+      graft.api.PqOps.ivfPqTrain(t(s, dir, "embeddings"), "vec_id",
+        "embedding", 64, IvfPqCells, 4, PqM, PqKsub, PqIters, 1)
     }
-    (graft.Caches.memo(s, s"$mk:cents")(b(0)),
-      graft.Caches.memo(s, s"$mk:cb")(b(1)),
-      graft.Caches.memo(s, s"$mk:codes")(b(2)))
+  }
+
+  /** Three artifacts of ONE training run per (session, key prefix),
+    * each memoized: memo's build is by-name, so the first access runs
+    * `train` once for all three; every later access in the session
+    * hits the cache. */
+  private def memo3(s: SparkSession, prefix: String,
+    names: (String, String, String))(train: => (DataFrame, DataFrame, DataFrame))
+  : (DataFrame, DataFrame, DataFrame) = {
+    lazy val built = train
+    (graft.Caches.memo(s, s"$prefix:${names._1}")(built._1),
+      graft.Caches.memo(s, s"$prefix:${names._2}")(built._2),
+      graft.Caches.memo(s, s"$prefix:${names._3}")(built._3))
   }
 
   /** The q267/q268/q284 integer-PQ training artifacts (trace, cents,
-    * codes) from ONE training run per (session, dir): memo's build is
-    * by-name, so on the first access a single pqIntTrain call fills
-    * the shared `built` slot for all three keys; every later access in
-    * the session hits the cache — the Caches.memo one-training-run
-    * convention (q132/q235) applied to a multi-output trainer. */
+    * codes) from ONE pqIntTrain run per (session, dir) — the
+    * Caches.memo one-training-run convention (q132/q235) applied to a
+    * multi-output trainer ([[memo3]]). */
   private[graft] def pqIntArtifacts(s: SparkSession, dir: String)
   : (DataFrame, DataFrame, DataFrame) =
     pqIntArtifactsAt(s, dir, "pqint", PqTrM, PqTrK, PqTrIters)
@@ -862,18 +857,11 @@ object VectorQueries {
 
   private def pqIntArtifactsAt(s: SparkSession, dir: String,
     prefix: String, m: Int, k: Int, iters: Int)
-  : (DataFrame, DataFrame, DataFrame) = {
-    var built: Option[(DataFrame, DataFrame, DataFrame)] = None
-    def b(i: Int): DataFrame = {
-      if (built.isEmpty)
-        built = Some(graft.api.PqOps.pqIntTrain(t(s, dir, "embeddings"),
-          "vec_id", "embedding", 64, m, k, iters))
-      built.get.productElement(i).asInstanceOf[DataFrame]
+  : (DataFrame, DataFrame, DataFrame) =
+    memo3(s, s"$prefix:$dir", ("trace", "cents", "codes")) {
+      graft.api.PqOps.pqIntTrain(t(s, dir, "embeddings"), "vec_id",
+        "embedding", 64, m, k, iters)
     }
-    (graft.Caches.memo(s, s"$prefix:$dir:trace")(b(0)),
-      graft.Caches.memo(s, s"$prefix:$dir:cents")(b(1)),
-      graft.Caches.memo(s, s"$prefix:$dir:codes")(b(2)))
-  }
 
   /** q267/q268's integer-trace PQ layout: 4 subspaces of 16 dims,
     * 8 codes each, 3 Lloyd rounds, milli-unit quantization; q268

@@ -549,8 +549,9 @@ class ApiSpec extends SparkSpec {
     })
     val codes = graft.api.PqOps.pqEncode(emb, "vid", "v", dim, m, cb)
     // every vector gets exactly one code per subspace
-    val perId = codes.groupBy("id").count().collect()
-    assert(perId.length == rows.length && perId.forall(_.getLong(1) == m))
+    val perId = codes.select(col("id"), size(col("codes"))).collect()
+    assert(perId.map(_.getLong(0)).distinct.length == rows.length &&
+      perId.length == rows.length && perId.forall(_.getInt(1) == m))
     // ADC: an exact duplicate's summed sub-distances equal the probe's
     // own quantization error, which lower-bounds EVERY candidate's ADC
     // (each probe subvector's own code is its argmin centroid) — so the
@@ -670,9 +671,6 @@ class ApiSpec extends SparkSpec {
     val res = PqOps.residuals(emb1, "vid", "v", assigned, cents)
     val cb = PqOps.pqCodebooksWithin(res, "id", "res", dim, m, ksub, 2, oneIn, 0L)
     val codes = PqOps.pqEncode(res, "id", "res", dim, m, cb)
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("j"), col("code")))).as("jc"))
-      .select(col("id"), col("jc.code").as("codes"))
       .join(res.select("id", "cell"), Seq("id"))
       .localCheckpoint(true)
     assert(PqOps.ivfPqSearchWith(cents, cb, codes, emb1, "vid", "v", dim, m,
@@ -712,8 +710,9 @@ class ApiSpec extends SparkSpec {
     val cbRows = cents.collect()
     assert(cbRows.length == m * ksub)
     assert(cbRows.forall(_.getSeq[Long](2).length == dim / m))
-    val perId = codes.groupBy("id").count().collect()
-    assert(perId.length == rows.length && perId.forall(_.getLong(1) == m))
+    val perId = codes.select(col("id"), size(col("codes"))).collect()
+    assert(perId.map(_.getLong(0)).distinct.length == rows.length &&
+      perId.length == rows.length && perId.forall(_.getInt(1) == m))
     // ADC in exact integer units: the planted duplicate (id 31 = id 7)
     // shares all of probe 7's codes, so its ADC equals the probe's own
     // quantization error — the per-probe MINIMUM (ties break by id)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression, LambdaFunction}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -207,6 +207,11 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // attach inside each PageRank round now shows. Build side is a
       // single-row count aggregate, the bounded-attach idiom.
       "q153_pagerank",
+      // q132/q268 (flat and integer PQ): each probe's distance table
+      // broadcasts (|probes| rows: 10 and 3) and every code row is
+      // scored against every table — flat PQ is IVF-PQ with one cell,
+      // so the cell key folds away; the probe-rows idiom of q62/q70
+      "q132_pq_adc", "q268_pq_adc_int",
       "q255_lsh_eval", "q259_markov_attribution",
       "q260_shapley_attribution", "q261_zorder_prune",
       "q265_kaplan_meier", "q266_known_item_mrr", "q44_median_disc",
@@ -461,6 +466,21 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       p.jobs.map(_.site).mkString("\n"))
   }
 
+  private def scansEmbeddings(st: Seq[SparkPlan]): Boolean = st.exists {
+    case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.exists(_.getName.startsWith("embeddings"))
+    case _ => false
+  }
+
+  /** A stage whose input derives from an embeddings scan: the scan is
+    * in the stage or below it, through exchanges (the spread
+    * repartition) or cached frames (a memoized encode). */
+  private def readsEmbeddings(st: Seq[SparkPlan]): Boolean =
+    st.exists(n => find(n) {
+      case c: InMemoryTableScanExec => readsEmbeddings(Seq(c.relation.cachedPlan))
+      case other => scansEmbeddings(Seq(other))
+    }.isDefined)
+
   test("no interpreted lambda in an ivfPqSearch or q134 stage that scans " +
     "the embeddings") {
     val sf = fixture("sf0.01")
@@ -472,11 +492,6 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         16, 2, probes, 8, 64, 10, trainOneIn = 4).collect()
       SparkEntry.queries("q134_ivfpq")(spark, sf).collect()
     }
-    def scansEmbeddings(st: Seq[SparkPlan]): Boolean = st.exists {
-      case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.exists(_.getName.startsWith("embeddings"))
-      case _ => false
-    }
     // Probe-side stages that may keep a lambda, by the operator text
     // that carries it: none today (the probe residual and its distance
     // table run on graft_vsub / graft_l2_table).
@@ -486,6 +501,29 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         !probeSideAllowlist.exists(n.simpleString(400).contains)
     })
     assert(stages.count(scansEmbeddings) >= 2, s"${stages.length} stages")
+    assert(offenders.isEmpty,
+      offenders.map(_.simpleString(400)).mkString("\n"))
+  }
+
+  test("no interpreted lambda but the milli-quantize staging in a q132, " +
+    "q247, q267 or q268 stage that reads the embeddings") {
+    val sf = fixture("sf0.01")
+    val stages = executedStages {
+      Seq("q132_pq_adc", "q247_kmeans_steps", "q267_pq_trace",
+        "q268_pq_adc_int").foreach(SparkEntry.queries(_)(spark, sf).collect())
+    }
+    // PqOps.quantized's transform(v, x -> floor(...)) runs once per row
+    // ahead of the compiled kernels; every other lambda is an offender
+    def quantize(e: Expression): Boolean = e match {
+      case t: ArrayTransform =>
+        t.function.find(_.prettyName.equalsIgnoreCase("floor")).isDefined
+      case _ => false
+    }
+    def lambdaOutsideQuantize(e: Expression): Boolean = !quantize(e) &&
+      (e.isInstanceOf[LambdaFunction] || e.children.exists(lambdaOutsideQuantize))
+    val offenders = stages.filter(readsEmbeddings).flatMap(
+      _.filter(_.expressions.exists(lambdaOutsideQuantize)))
+    assert(stages.count(readsEmbeddings) >= 3, s"${stages.length} stages")
     assert(offenders.isEmpty,
       offenders.map(_.simpleString(400)).mkString("\n"))
   }

@@ -462,6 +462,105 @@ class PropertySpec extends SparkSpec {
       assert(both.forall(r => r.getDecimal(1) == r.getDecimal(2)),
         s"probe $probe\n" + both.mkString("\n"))
     }
+    // integer PQ: the int64 kernels against the lambdas they replaced —
+    // the intL2 distance, its argmin over (distance, code) and the
+    // joined SUM of distances — on ties (duplicate centroids, coarse
+    // components), negative components, a NULL element, a NULL vector
+    // and a probe with a NULL element (a NULL table block)
+    val intL2 = "aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), " +
+      "0L, (a, b) -> a + b)"
+    val longVecs = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, v ARRAY<BIGINT>")
+    def longRows(vs: Seq[(Long, Seq[java.lang.Long])]) =
+      spark.createDataFrame(java.util.Arrays.asList(
+        vs.map { case (i, v) => org.apache.spark.sql.Row(i, v) }: _*), longVecs)
+    val ivecs = cases(Gen.listOfN(dim, Gen.choose(-2L, 2L)), 60)
+      .map(_.map(Long.box))
+    val iemb = longRows(ivecs.zipWithIndex.map { case (v, i) => (i.toLong, v) } ++
+      Seq((60L, Seq[java.lang.Long](1L, null, -2L, 0L, 1L, 1L, -1L, 2L)),
+        (61L, null)))
+    val icents = Seq(
+      Seq(Seq(1L, 0L, -1L, 2L), Seq(0L, 0L, 0L, 0L), Seq(1L, 0L, -1L, 2L),
+        Seq(-2L, 1L, 1L, -1L)),
+      Seq(Seq(2L, 2L, 0L, -1L), Seq(0L, -1L, 1L, 0L), Seq(2L, 2L, 0L, -1L)))
+    val icbLit = Seq(lit(sub), typedLit(icents), typedLit(cbCodes))
+    val centOf = element_at(element_at(typedLit(icents), col("j") + 1),
+      array_position(element_at(typedLit(cbCodes), col("j") + 1),
+        col("code")).cast("int"))
+    def codesAgainstArgmin(cents: Seq[Seq[Seq[Long]]], codes: Seq[Seq[Int]]) = {
+      val perJ = iemb.select(col("id"), col("v"), posexplode(call_function(
+          "graft_l2_codes", col("v"), lit(sub), typedLit(cents), typedLit(codes)))
+          .as(Seq("j", "got")))
+        .withColumn("sv", slice(col("v"), col("j") * sub + 1, lit(sub)))
+        .withColumn("__cc", element_at(typedLit(cents), col("j") + 1))
+        .withColumn("__cd", element_at(typedLit(codes), col("j") + 1))
+        .withColumn("want", expr("array_min(transform(sequence(0, " +
+          "size(__cd) - 1), i -> named_struct('dist', aggregate(zip_with(sv, " +
+          "__cc[i], (x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b), " +
+          "'code', __cd[i]))).code"))
+        .select("id", "j", "got", "want").collect()
+      assert(perJ.length == 62 * 2)
+      assert(perJ.forall(r => r.getInt(2) == r.getInt(3)), perJ.mkString("\n"))
+    }
+    codesAgainstArgmin(icents, cbCodes)
+    // a NULL distance sorts first: a centroid shorter than its subspace
+    // (zip_with pads it with NULLs) beats every real distance
+    codesAgainstArgmin(Seq(Seq(Seq(0L, 0L, 0L, 0L), Seq(2L, 2L, 2L)),
+      Seq(Seq(1L, 1L, 1L, 1L))), Seq(Seq(0, 1), Seq(0)))
+    val itab = iemb
+      .withColumn("tab", call_function("graft_l2_table", (col("v") +: icbLit): _*))
+      .select(col("id"), col("v"), col("tab"), explode(typedLit(
+        for (j <- cbCodes.indices; c <- cbCodes(j)) yield (j, c))).as("jc"))
+      .select(col("id"), col("jc._1").as("j"), col("jc._2").as("code"),
+        element_at(col("tab"), col("jc._1") * 4 + col("jc._2") + 1).as("got"),
+        slice(col("v"), col("jc._1") * sub + 1, lit(sub)).as("sv"))
+      .withColumn("cv", centOf)
+      .select(col("id"), col("got"), expr(intL2).as("want")).collect()
+    assert(itab.length == 62 * 7)
+    assert(itab.forall(r => r.get(1) == r.get(2)), itab.mkString("\n"))
+    for (probe <- Seq(Seq[java.lang.Long](1L, -2L, 0L, 2L, -1L, 0L, 2L, 1L),
+        Seq[java.lang.Long](0L, 1L, null, -1L, 2L, 2L, -2L, 0L))) {
+      val pv = array(probe.map(x =>
+        if (x == null) lit(null).cast("long") else lit(x.longValue)): _*)
+      val adc = iemb.select(col("id"),
+          call_function("graft_l2_codes", (col("v") +: icbLit): _*).as("codes"))
+        .withColumn("got", call_function("graft_adc_sum", col("codes"),
+          call_function("graft_l2_table", (pv +: icbLit): _*)))
+      val want = adc.select(col("id"), posexplode(col("codes")).as(Seq("j", "code")))
+        .withColumn("sv", slice(pv, col("j") * sub + 1, lit(sub)))
+        .withColumn("cv", centOf)
+        .groupBy("id").agg(sum(expr(intL2)).as("want"))
+      val both = adc.join(want, Seq("id")).select("id", "got", "want").collect()
+      assert(both.length == 62)
+      assert(both.forall(r => r.get(1) == r.get(2)), s"probe $probe\n" +
+        both.mkString("\n"))
+    }
+    // an overflowing product raises in the kernels and in the lambda,
+    // and so does an overflowing ADC sum against the ANSI SUM
+    def raises(run: => Any): Boolean =
+      try { run; false } catch {
+        case e: Throwable => Iterator.iterate(e)(_.getCause)
+          .takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+      }
+    val huge = longRows(Seq((0L, Seq[java.lang.Long](4000000000L, 0L, 0L, 0L,
+      0L, 0L, 0L, 0L))))
+    for (fn <- Seq("graft_l2_codes", "graft_l2_table"))
+      assert(raises(huge.select(call_function(fn, (col("v") +: icbLit): _*))
+        .collect()), fn)
+    assert(raises(huge.select(slice(col("v"), 1, sub).as("sv"),
+      typedLit(icents(0)(1)).as("cv")).select(expr(intL2)).collect()))
+    // (each sub-distance of the wide probe fits, their sum does not)
+    val wide = typedLit(Seq(2200000000L, 0L, 0L, 0L, 2200000000L, 1L, 0L, 0L))
+    val zeroCodes = longRows(Seq((0L, Seq.fill[java.lang.Long](dim)(0L))))
+      .select(call_function("graft_l2_codes", (col("v") +: icbLit): _*)
+        .as("codes"))
+    assert(raises(zeroCodes.select(call_function("graft_adc_sum", col("codes"),
+      call_function("graft_l2_table", (wide +: icbLit): _*))).collect()))
+    assert(raises(zeroCodes
+      .select(posexplode(col("codes")).as(Seq("j", "code")))
+      .withColumn("sv", slice(wide, col("j") * sub + 1, lit(sub)))
+      .withColumn("cv", centOf)
+      .agg(sum(expr(intL2))).collect()))
     // the kernel's rounding against Spark's ROUND and the decimal cast,
     // on random magnitudes and on values a few ulps from a half
     val rnd = new scala.util.Random(7)

@@ -91,7 +91,7 @@ class RecallAuditSpec extends SparkSpec {
     // exact brute-force ranks. The fixture's embeddings are only weakly
     // clustered by label (the exact pair histogram tops out at cos
     // ~0.6), so label-cell IVF is intrinsically lossy here — measured
-    // 0.30 / 0.40 / 0.50 at nprobe 2 / 4 / 5 (RecallProbe). The floor
+    // 0.30 / 0.40 / 0.50 at nprobe 2 / 4 / 5 (BENCH_NOTES.md). The floor
     // pins the measured value; the quality-tunable path is the learned
     // quantizer below.
     val ann = VectorQueries.queries("q70_ann_ivf")(spark, Sf01)
@@ -112,8 +112,9 @@ class RecallAuditSpec extends SparkSpec {
     // squared-L2 brute force on the same probes. After the refine step
     // the overlap IS the shortlist recall — ADC-only top-3 measured
     // 0.07-0.33 across layouts (PQ's fine ordering quantizes away
-    // near-ties; PqProbe sweep), which is why the shipped search
-    // re-ranks. The floor pins the measured two-stage value honestly.
+    // near-ties; the layout sweep in BENCH_NOTES.md), which is why the
+    // shipped search re-ranks. The floor pins the measured two-stage
+    // value honestly.
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.loadSpread(spark, Sf01, "embeddings")
     val ann = VectorQueries.queries("q132_pq_adc")(spark, Sf01)

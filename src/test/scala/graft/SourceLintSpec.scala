@@ -97,6 +97,20 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("one milli-quantize staging: the quantize lambda appears only in " +
+    "PqOps.quantized") {
+    val pattern = "floor(cast(x as double)"
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+      (line, i) <- Files.readAllLines(p).asScala.toSeq.zipWithIndex
+      if !isComment(line) && line.contains(pattern)
+    } yield s"$p:${i + 1}"
+    assert(hits.size == 1 && hits.head.contains("graft/api/PqOps.scala"),
+      s"${hits.size} copies of the milli-quantize staging:\n" +
+        hits.mkString("\n"))
+  }
+
   private def lint(p: Path, lines: Seq[String]): Seq[String] = {
     {
       // pass 1: top-level strict-val declaration lines per name
