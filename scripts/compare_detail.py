@@ -7,20 +7,30 @@ Reads two BENCH_DETAIL-style files (the `queries` map: line -> seconds)
 and prints the per-line speedup table over ALL common lines — geomean,
 totals, and the biggest movers both ways — so the round's verdict is
 not hostage to the inline worst-25 window (wins that leave the window
-and noise-regressions of untouched lines otherwise dominate).
+and noise-regressions of untouched lines otherwise dominate). When both
+files carry the `layers` map, each mover also shows its jobs and tasks
+on both sides.
 """
 import json
 import math
 import sys
 
 
-def lines(path):
+def load(path):
     d = json.load(open(path))
-    return {k: v for k, v in d.get("queries", {}).items() if v and v > 0}
+    return ({k: v for k, v in d.get("queries", {}).items() if v and v > 0},
+            d.get("layers"))
 
 
 def main():
-    prev, now = lines(sys.argv[1]), lines(sys.argv[2])
+    (prev, prev_l), (now, now_l) = load(sys.argv[1]), load(sys.argv[2])
+
+    def counts(k):
+        if not (prev_l and now_l and k in prev_l and k in now_l):
+            return ""
+        a, b = prev_l[k], now_l[k]
+        return (f"  jobs {a['jobs']}->{b['jobs']}"
+                f"  tasks {a['tasks']}->{b['tasks']}")
     top_n = int(sys.argv[3]) if len(sys.argv) > 3 else 15
     common = sorted(set(prev) & set(now))
     ratios = {k: prev[k] / now[k] for k in common}
@@ -34,12 +44,12 @@ def main():
     movers = sorted(ratios.items(), key=lambda kv: -kv[1])
     print(f"\nbiggest improvements (prev s -> now s, speedup):")
     for k, r in movers[:top_n]:
-        print(f"  {prev[k]:7.2f} -> {now[k]:7.2f}  {r:5.2f}x  {k}")
+        print(f"  {prev[k]:7.2f} -> {now[k]:7.2f}  {r:5.2f}x  {k}{counts(k)}")
     print(f"\nbiggest regressions:")
     for k, r in movers[-top_n:][::-1]:
         if r >= 1:
             break
-        print(f"  {prev[k]:7.2f} -> {now[k]:7.2f}  {r:5.2f}x  {k}")
+        print(f"  {prev[k]:7.2f} -> {now[k]:7.2f}  {r:5.2f}x  {k}{counts(k)}")
 
 
 if __name__ == "__main__":

@@ -1,4 +1,17 @@
 package graft
+
+import tools.Probe
+
+/** The throughput sweep: every `shared:` memo prime (label order), then
+  * every declared key (sorted), each timed once through [[Probe.measure]]
+  * after an untimed warm-up. `value` is the sum of the sweep's lines, so
+  * it equals `value_raw`. Pollution is detected, not patched: the start
+  * gate, the loadavg/calibration telemetry and `hot_vs_history` let a
+  * reader tell a polluted run from a slow one.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (fixture dir), SPARK_GRAFT_BENCH_DETAIL (the
+  * companion file), SPARK_GRAFT_CPUS (via [[GraftSession.harness]]).
+  */
 object Bench {
 
   /** First three fields of /proc/loadavg (1/5/15-min run-queue), or
@@ -28,12 +41,17 @@ object Bench {
   private def jsonEsc(v: String): String =
     v.replace("\\", "\\\\").replace("\"", "\\\"")
 
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** Sum of the lines that did not fail (a failed line reads -1). */
+  private def total(lines: Seq[Probe.Record]): Double =
+    lines.map(_.seconds).filter(_ >= 0).sum
+
   /** Per-line history from the PREVIOUS BENCH_DETAIL at the same path
-    * (the committed idle sweep, in the driver's round flow): key →
-    * seconds for both q-keys and shared: lines. Empty when the file is
-    * absent/unreadable, or was written on another core count or scale
-    * factor (a file without `cpus` predates the field and counts as
-    * another core count) — the history trigger then just never fires. */
+    * (the committed idle sweep): line → seconds, read from its `queries`
+    * map only. Empty when the file is absent/unreadable, or was written
+    * on another core count or scale factor (a file without `cpus`
+    * predates the field and counts as another core count). */
   private[graft] def readHistory(path: String, cpus: Int,
     sfDir: String): Map[String, Double] =
     try {
@@ -43,26 +61,56 @@ object Bench {
         .exists(_.group(1).toInt == cpus)
       val sameSf = "\"sf\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
         .exists(_.group(1) == jsonEsc(sfDir))
+      val queries = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(txt)
       if (!(sameCpus && sameSf)) Map.empty
-      else "\"((?:q|shared:)[A-Za-z0-9_]+)\":(-?[0-9]+(?:\\.[0-9]+)?)".r
-        .findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      else queries.toSeq.flatMap(q =>
+        "\"((?:q|shared:)[A-Za-z0-9_]+)\":(-?[0-9]+(?:\\.[0-9]+)?)".r
+          .findAllMatchIn(q.group(1))
+          .map(m => m.group(1) -> m.group(2).toDouble)).toMap
     } catch { case _: Throwable => Map.empty }
 
+  /** One line's layers, from its [[Probe.Record]]: job, stage and task
+    * counts, planning time, shuffle/spill/peak bytes, and the final
+    * plans' exchange/sort/broadcast counts and CARTESIAN/BNLJ flags. */
+  private def layers(r: Probe.Record): String =
+    Seq("jobs" -> r.jobs.size, "stages" -> r.stages.size,
+      "tasks" -> r.tasks, "planning_ms" -> r.planningMs,
+      "shuffle_read_bytes" -> r.shuffleRead,
+      "shuffle_write_bytes" -> r.shuffleWrite,
+      "spill_mem_bytes" -> r.memSpill, "spill_disk_bytes" -> r.diskSpill,
+      "peak_exec_bytes" -> r.peakExec, "exchanges" -> r.exchanges,
+      "sorts" -> r.sorts, "broadcasts" -> r.broadcasts,
+      "cartesian" -> r.flags.contains("CARTESIAN"),
+      "bnlj" -> r.flags.contains("BNLJ"))
+      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+  /** The BENCH_DETAIL text: every line under its full name, with its
+    * seconds in `queries` and its layers in `layers`, the lines more
+    * than 2.5× and more than 1 s over their history (`hot`), the
+    * telemetry fields `tele`, and the total. n_queries counts keys;
+    * the shared: lines ride n_shared. */
+  private[graft] def detail(sfDir: String, cpus: Int,
+    lines: Seq[Probe.Record], hot: Seq[String], tele: String): String = {
+    def obj(v: Probe.Record => String): String =
+      lines.map(r => "\"" + r.name + "\":" + v(r)).mkString("{", ",", "}")
+    val nShared = lines.count(_.name.startsWith("shared:"))
+    s"""{"sf":"${jsonEsc(sfDir)}","cpus":$cpus,""" +
+      s""""n_queries":${lines.size - nShared},"n_shared":$nShared,""" +
+      s""""queries":${obj(r => f3(r.seconds))},"layers":${obj(layers)},""" +
+      s""""hot_vs_history":${hot.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""unit":"sec",$tele,"metric":"total",""" +
+      s""""value_raw":${f3(total(lines))},"value":${f3(total(lines))}}""" + "\n"
+  }
+
   def main(args: Array[String]): Unit = {
-    // Official-sweep start gate (r12 finding: two rounds shipped the
-    // driver artifact from a box at loadavg_pre >= 3). If the 1-min
-    // run queue is already > 1.5 at entry, sleep-retry in 30 s steps
-    // for up to 5 min before starting the measured sweep; if the box
-    // never quiets, proceed — the requery self-defense below still
-    // corrects residual contention. GRAFT_BENCH_NO_WAIT=1 skips the
-    // gate (spec smoke runs must not sleep on a busy CI box).
+    // Start gate (r12 finding: two rounds shipped the headline artifact
+    // from a box at loadavg_pre >= 3): while the 1- or 5-min run queue
+    // is above 1.5, sleep in 30 s steps for up to 5 min; if the box
+    // never quiets, proceed, and the telemetry says so.
     var loadWaitS = 0
-    if (!sys.env.contains("GRAFT_BENCH_NO_WAIT")) {
-      while (loadWaitS < 300 &&
-             loadavg().headOption.exists(l => !l.isNaN && l > 1.5)) {
-        Thread.sleep(30000); loadWaitS += 30
-      }
+    while (loadWaitS < 300 &&
+           loadavg().take(2).exists(l => !l.isNaN && l > 1.5)) {
+      Thread.sleep(30000); loadWaitS += 30
     }
     val loadPre = loadavg()
     val calibPre = calibMs()
@@ -75,187 +123,48 @@ object Bench {
     val spark = GraftSession.harness()
     // the harness runs one shuffle partition per core
     val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // idle history must be read BEFORE this run overwrites the file
+    // history must be read BEFORE this run overwrites the file
     val history = readHistory(detailPath, cpus, sfDir)
-    // Untimed warmup: JIT, codegen cache, parquet footer reads — otherwise
-    // ~5s of one-time JVM cost lands on whichever query happens to run
-    // first and distorts its number.
-    tools.Probe.warmUp(spark, sfDir)
-    // Memo-prime phase: build every cross-key shared memo FIRST, each
-    // timed under its own stable `shared:<name>` label — per-key lines
-    // below are then memo-warm by definition instead of charging family
-    // build costs to whichever key sweeps first (the r11 q153/q118/q267
-    // attribution finding). The shared lines are real work and count in
-    // the total, so totals stay comparable across rounds.
-    def primeShared(): Seq[(String, Double)] =
-      SharedMemos.primes(sfDir).map { case (label, prime) =>
-        val t0 = System.nanoTime()
-        val ok = try { prime(spark); true } catch { case _: Throwable => false }
-        label -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }
-    val shared = primeShared()
-    val perKey = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // a failed query must read as -1, not as its time-to-failure —
-      // otherwise a regression that throws early looks like a speedup
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
-    val results = shared ++ perKey
-    // The driver keeps only a ~3 KB tail of stdout; with 94 queries the
-    // full-name map overflowed it and the line arrived unparseable
-    // (BENCH_r02 `parsed: null`), and by 258 keys even the short-key map
-    // was ~3.3 KB and clipped q01-q199 out of the captured artifact
-    // (BENCH_r10). So the FULL per-query map (full names) goes to a
-    // companion file and the inline line carries only the worst-N slice
-    // (the lines a reader triages first) next to the totals + telemetry.
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def shortKey(k: String): String =
-      if (k.startsWith("shared:")) k else k.takeWhile(_ != '_')
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // escape the interpolated path — a quote or backslash in the env
-    // var would otherwise break the one JSON line the driver parses
-    val sfEsc = jsonEsc(sfDir)
-    // load/calibration telemetry so a load-polluted run is machine-
-    // detectable next to the timings it polluted (idle box ≈ load1 ≪
-    // nproc and calib_ms_pre ≈ calib_ms_post)
+    // Shared memos first, each under its own `shared:` label, so every
+    // key line is memo-warm instead of charging a family build to
+    // whichever key sweeps first (the r11 attribution finding).
+    val lines = Probe.sweep(spark, sfDir,
+      SharedMemos.primes(sfDir).map(_._1) ++ SparkEntry.queries.keys.toSeq.sorted)
     val loadPost = loadavg()
     val calibPost = calibMs()
+    val hot = lines.collect { case r if r.seconds >= 0 && history.get(r.name)
+      .exists(h => h > 0 && r.seconds > 2.5 * h && r.seconds - h > 1.0) => r.name }
     def fl(v: Double): String =
       if (v.isNaN) "null" else "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    // Pollution SELF-DEFENSE (round 10; detection alone was not enough —
-    // BENCH_r09 shipped a 2x-inflated official total that the telemetry
-    // flagged but could not correct). Three independent triggers, each a
-    // contention mode a previous round actually shipped polluted:
-    //  (a) calib drift > 15% across the sweep — CPU contention DURING
-    //      the run (the r10 trigger);
-    //  (b) loadavg_pre > 1.5 — scheduler load already queued at run
-    //      START, which calib drift misses (BENCH_r11 shipped 6 keys at
-    //      2-6x idle truth with calib drift only -8%);
-    //  (c) any line at > 2.5x its committed idle history AND > 1s over
-    //      it — the per-key symptom itself, caught against the previous
-    //      BENCH_DETAIL at this path (absent file → trigger inert).
-    val drift = math.max(calibPre, calibPost) /
-      math.max(1e-9, math.min(calibPre, calibPost))
-    val load1 = loadPre.headOption.getOrElse(Double.NaN)
-    val hotVsHistory = results.filter { case (k, v) =>
-      v >= 0 && history.get(k).exists(h => h > 0 && v > 2.5 * h && v - h > 1.0)
-    }.map(_._1)
-    // GRAFT_BENCH_FORCE_REQUERY exercises the re-measure branch on an
-    // idle box (used by the JSON smoke check; also a manual lever)
-    val forced = sys.env.contains("GRAFT_BENCH_FORCE_REQUERY")
-    val trigger =
-      if (forced) "forced"
-      else if (!(drift.isNaN || drift <= 1.15)) "calib_drift"
-      else if (!load1.isNaN && load1 > 1.5) "loadavg_pre"
-      else if (hotVsHistory.nonEmpty) "vs_history"
-      else ""
-    val doRequery = trigger.nonEmpty
-    // The re-measure mirrors the main sweep's semantics exactly: clear
-    // the session's working set ONCE, re-prime the shared memos (their
-    // rebuild cost lands on re-emitted shared: lines), then re-run the
-    // selected keys memo-warm — so every requeried line is comparable
-    // 1:1 to its main-sweep line and to the idle history. Selected =
-    // history-hot lines plus the worst-10, capped to bound the rerun.
-    val requeried: Seq[(String, Double)] =
-      if (!doRequery) Seq.empty
-      else {
-        graft.operators.TextQueries.clearCaches(spark)
-        val reShared = primeShared()
-        // Selection (r12 judge finding): the union must be capped
-        // WORST-FIRST, not in sweep (name-sorted) order — otherwise,
-        // when >= 15 keys are history-hot, .take(15) keeps the 15
-        // alphabetically-first hot keys and the sweep's actual worst
-        // lines are never re-measured (BENCH_r12 shipped exactly that).
-        // Worst-10 q-keys are in by construction: they sort to the top.
-        // Coverage (r13 verdict item 2): the requery must cover the
-        // FULL inline worst-25 slice, so the headline artifact's
-        // inline lines are all requery-substituted idle values —
-        // shared: lines are wholesale re-primed above, and the
-        // worst-InlineWorstN q-keys are in `worstQ` by construction;
-        // history-hot keys beyond that ride until the cap.
-        val timeOf = results.toMap
-        val worstQ = results
-          .filter { case (k, v) => v >= 0 && k.startsWith("q") }
-          .sortBy(-_._2).take(InlineWorstN).map(_._1)
-        val wanted = (worstQ ++ hotVsHistory.filter(_.startsWith("q")))
-          .distinct.sortBy(k => -timeOf.getOrElse(k, 0.0)).take(35)
-        reShared ++ wanted.map { name =>
-          // Warm-cache hole (r14 verdict item 2): a requeried key with
-          // builder-internal persists could otherwise run partially
-          // warm off an EARLIER requeried key's tracked frames
-          // (CacheManager matches by logical plan). Dropping tracked
-          // persists (never the shared memos) before each key makes
-          // every requeried line memo-warm + tracked-cold — exactly a
-          // key's first-run state in the main sweep.
-          graft.Caches.clearTracked(spark)
-          val t0 = System.nanoTime()
-          val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-        }
-      }
-    val calibRe = if (requeried.isEmpty) Double.NaN else calibMs()
-    val reJson =
-      if (requeried.isEmpty) ""
-      else {
-        val m = requeried.map { case (k, v) =>
-          "\"" + shortKey(k) + "\":" + f3(v)
-        }.mkString("{", ",", "}")
-        s""""requeried":$m,"requery_trigger":"$trigger",""" +
-          s""""calib_ms_re":${fl(calibRe)},"""
-      }
-    // Requery substitution (r12 item 2, widened per the r13 verdict):
-    // where a line was requeried, both the inline worst-N slice AND
-    // the headline `value` carry the REQUERIED number, so the driver
-    // artifact agrees with idle truth without reader-side
-    // adjudication; the raw contended sweep stays machine-readable as
-    // `value_raw` + the detail file's per-line map, and the
-    // `requeried` map keeps both side by side.
-    val reMapInline = requeried.toMap
-    val effective = results.map { case (k, v) =>
-      val rv = reMapInline.getOrElse(k, v)
-      k -> (if (rv >= 0) rv else v)
-    }
-    val totalEff = effective.map(_._2).filter(_ >= 0).sum
-    val qs = effective.filter(_._2 >= 0).sortBy(-_._2).take(InlineWorstN)
-      .map { case (k, v) => "\"" + shortKey(k) + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+    // idle box ≈ load1 ≪ nproc and calib_ms_pre ≈ calib_ms_post
     val tele = s""""loadavg_wait_s":$loadWaitS,""" +
       s""""loadavg_pre":[${loadPre.map(fl).mkString(",")}],""" +
       s""""loadavg_post":[${loadPost.map(fl).mkString(",")}],""" +
-      s""""calib_ms_pre":${fl(calibPre)},"calib_ms_post":${fl(calibPost)}""" +
-      s""",$reJson""".stripSuffix(",")
-    // the companion artifact: the FULL per-line map under full names —
-    // shared: prime lines first, then every query key (the inline line
-    // only carries the worst-N slice) — plus the same telemetry;
-    // written before the inline print so a teardown failure cannot eat
-    // it. n_queries stays the per-KEY count (the round-over-round
-    // coverage number); the shared prime lines ride n_shared.
-    try {
-      val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
-        s"""{"sf":"$sfEsc","cpus":$cpus,"n_queries":${perKey.size},""" +
-          s""""n_shared":${shared.size},"queries":$fullQs,"unit":"sec",""" +
-          s"""$tele,"metric":"total","value_raw":${f3(total)},""" +
-          s""""value":${f3(totalEff)}}""" + "\n")
-    } catch { case e: Throwable =>
+      s""""calib_ms_pre":${fl(calibPre)},"calib_ms_post":${fl(calibPost)},""" +
+      s""""nproc":${Runtime.getRuntime.availableProcessors},""" +
+      s""""heap_mb":${Runtime.getRuntime.maxMemory / 1048576}"""
+    // written before the inline print so a teardown failure cannot eat it
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
+      detail(sfDir, cpus, lines, hot, tele))
+    catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}")
     }
-    // the one JSON line goes out LAST, after session teardown, so the
-    // driver's bounded tail-capture of stdout cannot lose it behind
-    // later output — but in a try/finally so a teardown failure can
-    // never eat the headline metric. Telemetry sits AFTER the query
-    // map, next to the total at the END of the line: the driver's
-    // ~3 KB window keeps the tail and may clip the head (BENCH_r08
-    // lost the loadavg fields when they led the line).
+    // The harness that reads this line keeps only a ~3 KB tail of stdout
+    // (BENCH_r02/r10 lost clipped lines), so the inline line carries the worst-N slice under
+    // short keys, and the telemetry and total sit at its END (BENCH_r08
+    // lost the loadavg fields when they led the line). It goes out last,
+    // after teardown, in a finally so a teardown failure cannot eat it.
+    def shortKey(k: String): String =
+      if (k.startsWith("shared:")) k else k.takeWhile(_ != '_')
+    val qs = lines.filter(_.seconds >= 0).sortBy(-_.seconds).take(InlineWorstN)
+      .map(r => "\"" + shortKey(r.name) + "\":" + f3(r.seconds))
+      .mkString("{", ",", "}")
     try {
       graft.operators.TextQueries.clearCaches(spark)
       spark.stop()
     } finally {
-      println(s"""{"sf":"$sfEsc","n_queries":${perKey.size},"n_shared":${shared.size},"queries_inline":"worst$InlineWorstN","detail_file":"$detailPath","queries":$qs,"unit":"sec",$tele,"metric":"total","value_raw":${f3(total)},"value":${f3(totalEff)}}""")
+      val nShared = lines.count(_.name.startsWith("shared:"))
+      println(s"""{"sf":"${jsonEsc(sfDir)}","n_queries":${lines.size - nShared},"n_shared":$nShared,"queries_inline":"worst$InlineWorstN","detail_file":"${jsonEsc(detailPath)}","queries":$qs,"unit":"sec",$tele,"metric":"total","value_raw":${f3(total(lines))},"value":${f3(total(lines))}}""")
       System.out.flush()
     }
   }

@@ -60,18 +60,6 @@ object Caches {
     }
   }
 
-  /** Unpersist only the [[persistTracked]] frames of `s`, leaving the
-    * memoized shared builds warm. Bench's requery loop calls this
-    * before each re-measured key so the key runs memo-warm but
-    * tracked-COLD — the same storage state as its first run in the
-    * main sweep (per-key tracked persists never plan-match across
-    * keys, so lingering ones are dead weight that could only warm a
-    * requeried key that happens to share a builder-internal plan). */
-  def clearTracked(s: SparkSession): Unit = {
-    val l = tracked.remove(s)
-    if (l != null) l.forEach(df => { df.unpersist(); () })
-  }
-
   /** Unpersist every frame registered under `s` — tracked persists and
     * memoized frames — and drop the session's entries (blocking=false —
     * reclaim proceeds async). The static maps otherwise pin both the
@@ -80,7 +68,8 @@ object Caches {
     * long-lived host that cycles sessions; such hosts call this when
     * done with a session. */
   def clear(s: SparkSession): Unit = {
-    clearTracked(s)
+    val l = tracked.remove(s)
+    if (l != null) l.forEach(df => { df.unpersist(); () })
     memoized.forEach { (k, v) =>
       if (k._1 eq s) { v.unpersist(); memoized.remove(k) }
     }

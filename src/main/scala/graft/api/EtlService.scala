@@ -332,11 +332,8 @@ final class EtlService(spark: SparkSession) {
     require(iters >= 0, "iters must be >= 0")
     val features = Seq("f_ntok", "f_wlen", "f_ttr", "f_stop")
     val feats = TextOps.qualityFeatures(documents, textCol)
-    val tr = MlOps.perceptronTrace(feats, features, "keep", iters)
-      .orderBy(col("step").desc).limit(1).collect().head
-    val w = tr.getAs[Long]("w_bias") +:
-      features.map(c => tr.getAs[Long](s"w_$c"))
-    MlOps.linearScore(feats, features, w)
+    MlOps.linearScore(feats, features, MlOps.perceptronWeights(
+      MlOps.perceptronTrace(feats, features, "keep", iters)))
   }
 
   /** Shared pair build for the graph endpoints: distinct per-order

@@ -128,6 +128,14 @@ object MlOps {
       .orderBy("round", "cl")
   }
 
+  /** The trained model of a [[perceptronTrace]]: its last step's
+    * weights, bias first, in the [[linearScore]] layout. One bounded
+    * read of the (iters + 1)-row trace. */
+  def perceptronWeights(trace: DataFrame): Seq[Long] = {
+    val last = trace.collect().maxBy(_.getAs[Long]("step"))
+    trace.columns.toSeq.filter(_.startsWith("w_")).map(last.getAs[Long])
+  }
+
   /** Score rows with a trained weight vector (bias first, then one
     * weight per feature, the [[perceptronTrace]] layout): appends the
     * integer margin `score` = w·(1, x...). Positive margin = keep. */

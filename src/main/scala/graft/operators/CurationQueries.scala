@@ -344,13 +344,7 @@ object CurationQueries {
     // shared-string double formula over exact integer counts, NULL
     // when the gates never disagree.
     "q298_mcnemar_gates" -> ((s, dir) => {
-      val feats = graft.api.TextOps
-        .qualityFeatures(t(s, dir, "documents"), "text")
-      val last = percTrace(s, dir)
-        .filter(col("step") === PercIters).collect().head
-      val w = last.getAs[Long]("w_bias") +:
-        PercFeatures.map(c => last.getAs[Long](s"w_$c"))
-      graft.api.MlOps.linearScore(feats, PercFeatures, w)
+      percScored(s, dir)
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("score") > 0 && col("keep") === 1, 1L)
             .otherwise(0L)).as("n_both_keep"),
@@ -375,13 +369,7 @@ object CurationQueries {
     // chance agreement is already 1 (both gates constant), MCC NULL
     // when any marginal is empty.
     "q299_gate_kappa" -> ((s, dir) => {
-      val feats = graft.api.TextOps
-        .qualityFeatures(t(s, dir, "documents"), "text")
-      val last = percTrace(s, dir)
-        .filter(col("step") === PercIters).collect().head
-      val w = last.getAs[Long]("w_bias") +:
-        PercFeatures.map(c => last.getAs[Long](s"w_$c"))
-      graft.api.MlOps.linearScore(feats, PercFeatures, w)
+      percScored(s, dir)
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("score") > 0 && col("keep") === 1, 1L)
             .otherwise(0L)).as("ka"),
@@ -477,13 +465,7 @@ object CurationQueries {
     }),
 
     "q237_quality_score_rollup" -> ((s, dir) => {
-      val feats = graft.api.TextOps
-        .qualityFeatures(t(s, dir, "documents"), "text")
-      val last = percTrace(s, dir)
-        .filter(col("step") === PercIters).collect().head
-      val w = last.getAs[Long]("w_bias") +:
-        PercFeatures.map(c => last.getAs[Long](s"w_$c"))
-      graft.api.MlOps.linearScore(feats, PercFeatures, w)
+      percScored(s, dir)
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("score") > 0, 1L).otherwise(0L)).as("n_pred_keep"),
@@ -502,13 +484,7 @@ object CurationQueries {
     // count, the q104 rule-keep count, and the margin range. All
     // integers end to end; one ranking pass + one agg.
     "q241_quality_calibration" -> ((s, dir) => {
-      val feats = graft.api.TextOps
-        .qualityFeatures(t(s, dir, "documents"), "text")
-      val last = percTrace(s, dir)
-        .filter(col("step") === PercIters).collect().head
-      val w = last.getAs[Long]("w_bias") +:
-        PercFeatures.map(c => last.getAs[Long](s"w_$c"))
-      val scored = graft.api.MlOps.linearScore(feats, PercFeatures, w)
+      val scored = percScored(s, dir)
         .select(col("doc_id"), col("keep"), col("score"))
       val (ranked, n) = graft.functions.GlobalRank.rowNumberWithTotal(
         scored, Seq(col("score").desc, col("doc_id").asc))
@@ -536,13 +512,7 @@ object CurationQueries {
     // range-partitioned cumulative sum; at 1e9 docs/lang 2·U tops out
     // near 2e18, inside int64 (past that, the q186 decimal staging).
     "q249_quality_auc" -> ((s, dir) => {
-      val feats = graft.api.TextOps
-        .qualityFeatures(t(s, dir, "documents"), "text")
-      val last = percTrace(s, dir)
-        .filter(col("step") === PercIters).collect().head
-      val w = last.getAs[Long]("w_bias") +:
-        PercFeatures.map(c => last.getAs[Long](s"w_$c"))
-      val h = graft.api.MlOps.linearScore(feats, PercFeatures, w)
+      val h = percScored(s, dir)
         .groupBy("lang", "score")
         .agg(sum(col("keep").cast("long")).as("c1"),
           sum(lit(1L) - col("keep").cast("long")).as("c0"))
@@ -651,13 +621,7 @@ object CurationQueries {
     // int64 product can overflow). A language with zero keeps has no
     // defined AP and drops (mirrored WHERE on both engines).
     "q365_avg_precision" -> ((s, dir) => {
-      val feats = graft.api.TextOps
-        .qualityFeatures(t(s, dir, "documents"), "text")
-      val last = percTrace(s, dir)
-        .filter(col("step") === PercIters).collect().head
-      val w = last.getAs[Long]("w_bias") +:
-        PercFeatures.map(c => last.getAs[Long](s"w_$c"))
-      val h = graft.api.MlOps.linearScore(feats, PercFeatures, w)
+      val h = percScored(s, dir)
         .groupBy("lang", "score")
         .agg(sum(col("keep").cast("long")).as("c1"),
           sum(lit(1L) - col("keep").cast("long")).as("c0"))
@@ -730,13 +694,7 @@ object CurationQueries {
     // distributed rank pass + two keyed aggs over 10 bin rows.
     "q333_brier_gate" -> ((s, dir) => {
       val d38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-      val feats = graft.api.TextOps
-        .qualityFeatures(t(s, dir, "documents"), "text")
-      val last = percTrace(s, dir)
-        .filter(col("step") === PercIters).collect().head
-      val w = last.getAs[Long]("w_bias") +:
-        PercFeatures.map(c => last.getAs[Long](s"w_$c"))
-      val scored = graft.api.MlOps.linearScore(feats, PercFeatures, w)
+      val scored = percScored(s, dir)
         .select(col("doc_id"), col("keep"), col("score"))
       val (ranked, n) = graft.functions.GlobalRank.rowNumberWithTotal(
         scored, Seq(col("score").desc, col("doc_id").asc))
@@ -819,6 +777,13 @@ object CurationQueries {
         graft.api.TextOps.qualityFeatures(t(s, dir, "documents"), "text"),
         PercFeatures, "keep", PercIters)
     }
+
+  /** The q104 feature view scored with the final weights of the
+    * memoized q235 training (an appended integer margin `score`). */
+  private def percScored(s: SparkSession, dir: String): DataFrame =
+    graft.api.MlOps.linearScore(
+      graft.api.TextOps.qualityFeatures(t(s, dir, "documents"), "text"),
+      PercFeatures, graft.api.MlOps.perceptronWeights(percTrace(s, dir)))
 
   /** The unrolled q235 training replay: features from the shared q104
     * rule CTEs, then per step t a margin/misclassification projection

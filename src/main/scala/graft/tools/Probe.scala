@@ -11,7 +11,6 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
-import scala.util.control.NonFatal
 
 /** The profiling tool: runs declared query keys (a `count()`, as
   * graft.Bench times them) or `shared:` memo primes on the harness
@@ -72,20 +71,26 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val spark = GraftSession.harness()
-    warmUp(spark, dir)
-    args.tail.foreach(n => measure(spark, dir, n).lines.foreach(println))
+    sweep(spark, dir, args.tail.toSeq).foreach(_.lines.foreach(println))
     graft.operators.TextQueries.clearCaches(spark)
     spark.stop()
   }
 
-  /** Untimed q20 run: JIT, codegen and parquet footers, so the first
-    * measured name does not pay them. */
-  def warmUp(spark: SparkSession, dir: String): Unit =
-    try { SparkEntry.queries("q20_agg_pricing")(spark, dir).count(); () }
-    catch { case NonFatal(_) => }
+  /** The one timing loop (Probe, graft.Bench, ScaleBench): an untimed q20
+    * run (JIT, codegen and parquet footers, so the first measured name
+    * does not pay them), then each name once through [[measure]], in
+    * order. */
+  def sweep(spark: SparkSession, dir: String, names: Seq[String]): Seq[Record] = {
+    try SparkEntry.queries("q20_agg_pricing")(spark, dir).count()
+    catch { case _: Throwable => }
+    names.map(measure(spark, dir, _))
+  }
 
   /** Runs `name` once with a listener scoped to it. Counters are read
-    * after the listener bus has delivered every event of the run. */
+    * after the listener bus has delivered every event of the run. Any
+    * Throwable, fatal ones included, makes the name read -1 with its
+    * message, so one line that overflows the stack or the heap cannot
+    * end a sweep without its total. */
   def measure(spark: SparkSession, dir: String, name: String): Record = {
     val rec = new Recorder
     DatasetBridge.drainListenerBus(spark) // earlier events stay unseen
@@ -98,7 +103,7 @@ object Probe {
           SharedMemos.primes(dir).toMap.apply(name)(spark)
         else SparkEntry.queries(name)(spark, dir).count()
         None
-      } catch { case NonFatal(e) => Some(String.valueOf(e.getMessage)) }
+      } catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
     val seconds = (System.nanoTime() - t0) / 1e9
     try DatasetBridge.drainListenerBus(spark)
     finally {

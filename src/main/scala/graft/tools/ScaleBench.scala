@@ -14,8 +14,8 @@ import graft.{GraftSession, SharedMemos}
   * selected families consume are primed FIRST, each timed under its
   * own `shared:` line, so per-key lines are memo-warm and comparable
   * across scale factors; a key's exponent then measures ITS plan, not
-  * whichever family build it happened to trigger. Each line is timed
-  * through [[Probe.measure]] on the harness session. Prints one JSON line
+  * whichever family build it happened to trigger. The lines are timed
+  * by [[Probe.sweep]], as graft.Bench times its own. Prints one JSON line
   * with the per-line seconds plus the fixture's row counts (the x-axis
   * of the growth table in BENCH_NOTES.md).
   */
@@ -55,19 +55,14 @@ object ScaleBench {
       t -> graft.Tables.load(spark, sfDir, t).count()
     }
 
-    // untimed warmup (JIT + codegen + footers), same as graft.Bench
-    Probe.warmUp(spark, sfDir)
-    def time(name: String): Double = Probe.measure(spark, sfDir, name).seconds
-    val shared = SharedMemos.primes(sfDir).map(_._1)
-      .filter(sharedWanted.contains).map(label => label -> time(label))
-    val perKey = keys.map(k => k -> time(k))
+    val all = Probe.sweep(spark, sfDir,
+      SharedMemos.primes(sfDir).map(_._1).filter(sharedWanted.contains) ++ keys)
     def f3(v: Double): String =
       "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val all = shared ++ perKey
-    val total = all.map(_._2).filter(_ >= 0).sum
+    val total = all.map(_.seconds).filter(_ >= 0).sum
     val rowsJson = rows.map { case (t, n) => s""""$t":$n""" }
       .mkString("{", ",", "}")
-    val linesJson = all.map { case (k, v) => s""""$k":${f3(v)}""" }
+    val linesJson = all.map(r => s""""${r.name}":${f3(r.seconds)}""")
       .mkString("{", ",", "}")
     graft.operators.TextQueries.clearCaches(spark)
     spark.stop()
