@@ -1,10 +1,9 @@
 package graft.api
 
-import graft.Dets.safeDiv
 import graft.Iterate
 import graft.Iterate.{Concurrent, Sequential}
 import graft.functions.{GraftFunctions, TextFunctions}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** User-facing deduplication operators over ARBITRARY DataFrames — exact,
@@ -19,6 +18,12 @@ import org.apache.spark.sql.functions._
   * quadratic comparison never happens, and only candidates pay the exact
   * verify. [[clusterResolve]] turns any pair set into per-row cluster ids
   * and a keep/drop decision.
+  *
+  * Every banded pair pipeline (batch, incremental and streaming MinHash,
+  * SimHash, and [[VectorOps.cosineLshPairs]]) is made of the same
+  * pieces: one MinHash sketch ([[bandKeys]] over
+  * [[TextOps.tokenHashes]]), one lowest-band rule ([[lowestBand]]) and
+  * one verify ([[TextOps.jaccardVerify]] for the MinHash family).
   */
 object DedupOps {
 
@@ -77,15 +82,8 @@ object DedupOps {
     *
     * Pipeline shape for scale: the band join carries ONLY (id, band,
     * key); cross-band duplicate candidates are eliminated WITHOUT a
-    * distinct shuffle by the first-matching-band rule — a pair is kept
-    * only in the lowest band where the two signatures collide, so every
-    * pair surfaces exactly once. `broadcastLookups = true` (default)
-    * attaches the per-doc lookup tables (band keys, sorted hashes) by
-    * broadcast — right while one copy fits an executor; pass false once
-    * the corpus outgrows that and they attach via shuffled equi-joins on
-    * the id instead (hash-co-partitioned, no broadcast anywhere; the
-    * first-band rule and the result are unchanged — asserted in
-    * ApiSpec).
+    * distinct shuffle by the lowest-band rule ([[lowestBand]]), so
+    * every pair surfaces exactly once.
     *
     * `blockCol` optionally restricts the relation to same-block pairs
     * (e.g. same language — the blocking [[TextOps.nearDupPairs]]
@@ -104,107 +102,125 @@ object DedupOps {
     * candidate-bounded. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
     minJac: Double, numHashes: Int = 64, bands: Int = 16,
-    broadcastLookups: Boolean = true,
     blockCol: Option[String] = None): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    GraftFunctions.register(docs.sparkSession)
     // one row of fixed-size sketches per doc, feeding five consumers (the
     // band explode and four broadcast lookup sides) — persist so the
     // minhash chain runs once
-    val d = graft.Caches.persistTracked(docs
-      .withColumn("__toks", TextFunctions.tokenSet(col(textCol)))
-      .withColumn("hs", array_sort(expr("graft_token_hashes(__toks)")))
-      .withColumn("mh", expr(s"graft_minhash(hs, $numHashes)"))
-      .withColumn("bks", expr(s"graft_band_keys(mh, $bands, $rows)"))
-      .select((Seq(col(idCol).as("id"), col("hs"), col("bks")) ++
-        blockCol.map(c => col(c).as("block"))): _*))
-    val firstBand =
-      bandCollisionPairs(d, bands, broadcastLookups, blockCol.isDefined)
-    val att = attach(broadcastLookups)
+    val d = graft.Caches.persistTracked(
+      sketch(docs, col(textCol), numHashes, bands)
+        .select((Seq(col(idCol).as("id"), col("hs"), col("bks")) ++
+          blockCol.map(c => col(c).as("block"))): _*))
+    val firstBand = bandCollisionPairs(d, bands, blockCol.isDefined)
     val ha = d.select(col("id").as("id_lo"), col("hs").as("hs_a"))
     val hb = d.select(col("id").as("id_hi"), col("hs").as("hs_b"))
-    firstBand.join(att(ha), "id_lo").join(att(hb), "id_hi")
-      .withColumn("inter",
-        expr("graft_sorted_intersect(hs_a, hs_b)").cast("double"))
-      .withColumn("jac", safeDiv(col("inter"),
-        size(col("hs_a")) + size(col("hs_b")) - col("inter")))
-      .filter(col("jac") >= minJac)
-      .select("id_lo", "id_hi", "jac")
+    TextOps.jaccardVerify(
+      firstBand.join(broadcast(ha), "id_lo").join(broadcast(hb), "id_hi"),
+      minJac).select("id_lo", "id_hi", "jac")
   }
 
-  /** Incremental MinHash-LSH: candidate pairs between a NEW batch
+  /** Incremental MinHash-LSH: verified pairs between a NEW batch
     * (`delta`) and an existing corpus (`base`) ONLY — the production
     * dedup shape, where yesterday's corpus is sketched once and each
     * increment joins its band keys against that index instead of
     * re-pairing the world (the full [[minhashLshPairs]] is O(corpus²)
     * candidate surface per run; this is O(delta × collisions)). Same
-    * hash family, band geometry, and exact-Jaccard verify, so the
-    * result is exactly the cross-side subset of the full pair
-    * relation. Returns (id_delta, id_base, inter, uni, jac) with the
-    * intersection/union sizes exposed as exact integers (consumers
-    * derive integer-exact scores like permille Jaccard without
-    * re-intersecting). */
+    * hash family, band geometry, lowest-band rule and exact-Jaccard
+    * verify, so the result is exactly the cross-side subset of the
+    * full pair relation. Returns (id_delta, id_base, inter, uni, jac)
+    * with the intersection/union sizes exposed as exact integers
+    * (consumers derive integer-exact scores like permille Jaccard
+    * without re-intersecting).
+    *
+    * Stream-safe: `delta` may be a streaming frame (the online form of
+    * the q315 increment). The base is sketched once and persisted;
+    * its band index is the narrow (band, key, id) explode of that one
+    * per-document lookup. The delta is read once and never persisted:
+    * each delta row carries its own sketch through its band explode,
+    * equi-joins the index, and keeps a (delta, base) pair only in its
+    * lowest colliding band — a per-row predicate, so no distinct
+    * shuffle and no state store, and append mode holds. */
   def minhashLshAgainst(base: DataFrame, delta: DataFrame, idCol: String,
     textCol: String, minJac: Double, numHashes: Int = 64, bands: Int = 16)
   : DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    GraftFunctions.register(base.sparkSession)
-    def sketch(df: DataFrame): DataFrame =
-      graft.Caches.persistTracked(df
-        .withColumn("__toks", TextFunctions.tokenSet(col(textCol)))
-        .withColumn("hs", array_sort(expr("graft_token_hashes(__toks)")))
-        .withColumn("mh", expr(s"graft_minhash(hs, $numHashes)"))
-        .withColumn("bks", expr(s"graft_band_keys(mh, $bands, $rows)"))
-        .select(col(idCol).as("id"), col("hs"), col("bks")))
-    val b = sketch(base)
-    val d = sketch(delta)
-    def banded(df: DataFrame, n: String): DataFrame = df.select(
-      col("id").as(n), posexplode(col("bks")).as(Seq("band", "key")))
-    val cand = banded(d, "id_delta")
-      .join(banded(b, "id_base"), Seq("band", "key"))
-      .select("id_delta", "id_base").distinct()
-    cand
-      .join(b.select(col("id").as("id_base"), col("hs").as("hs_b")),
-        Seq("id_base"))
-      .join(d.select(col("id").as("id_delta"), col("hs").as("hs_a")),
-        Seq("id_delta"))
-      .withColumn("inter",
-        expr("graft_sorted_intersect(hs_a, hs_b)").cast("long"))
-      .withColumn("uni",
-        (size(col("hs_a")) + size(col("hs_b"))).cast("long") - col("inter"))
-      .withColumn("jac", safeDiv(col("inter").cast("double"),
-        col("uni").cast("double")))
-      .filter(col("jac") >= minJac)
+    val b = graft.Caches.persistTracked(
+      sketch(base, col(textCol), numHashes, bands)
+        .select(col(idCol).as("id_base"), col("hs").as("hs_b"),
+          col("bks").as("bks_b")))
+    val index = b.select(col("id_base"),
+      posexplode(col("bks_b")).as(Seq("band", "key")))
+    val cand = sketch(delta, col(textCol), numHashes, bands)
+      .select(col(idCol).as("id_delta"), col("hs").as("hs_a"),
+        col("bks").as("bks_a"), posexplode(col("bks")).as(Seq("band", "key")))
+      .join(index, Seq("band", "key"))
+      .join(broadcast(b), "id_base")
+      .filter(lowestBand(col("band"), col("bks_a"), col("bks_b"), bands))
+    TextOps.jaccardVerify(cand, minJac)
       .select("id_delta", "id_base", "inter", "uni", "jac")
+  }
+
+  /** `docs` plus the sorted token-hash array `hs` of `text` and its
+    * `bands` MinHash band keys `bks` — the one sketch every MinHash pair
+    * pipeline bands and verifies. */
+  private def sketch(docs: DataFrame, text: Column, numHashes: Int,
+    bands: Int): DataFrame = {
+    GraftFunctions.register(docs.sparkSession)
+    docs.withColumn("hs", TextOps.tokenHashes(text))
+      .withColumn("bks", bandKeys(col("hs"), numHashes, bands))
+  }
+
+  /** `numHashes` MinHash slots of a sorted token-hash array (the
+    * permutation family of [[graft.functions.TextFunctions.mhMul]]). */
+  private[graft] def minhashSignature(hs: Column, numHashes: Int): Column =
+    call_function("graft_minhash", hs, lit(numHashes))
+
+  /** The `bands` band keys of `hs`'s `numHashes`-slot MinHash signature:
+    * band i folds slots [i·r, (i+1)·r) with r = numHashes / bands. */
+  private[graft] def bandKeys(hs: Column, numHashes: Int, bands: Int)
+  : Column = {
+    require(bands > 0 && numHashes % bands == 0,
+      "numHashes must divide into bands")
+    call_function("graft_band_keys", minhashSignature(hs, numHashes),
+      lit(bands), lit(numHashes / bands))
+  }
+
+  /** The lowest-colliding-band rule: true iff `band` is the FIRST band
+    * whose keys in the per-item key arrays `a` and `b` are equal, so a
+    * pair that collides in several bands is kept exactly once, with no
+    * distinct shuffle. Unrolled as Column comparisons, not a HOF lambda:
+    * higher-order functions evaluate interpreted per element, which
+    * would dominate on the candidate set; the CASE stays inside
+    * whole-stage codegen. A colliding pair always matches its last band
+    * if no earlier one, hence the ELSE arm (and with one band the CASE
+    * is always 0).
+    *
+    * Every banded pair pipeline attaches its per-item lookups (key
+    * arrays, hashes, vectors) by broadcast — right while one copy fits
+    * an executor. Past that size, block the input by a key (source,
+    * language, IVF cell) and pair within blocks. */
+  private[graft] def lowestBand(band: Column, a: Column, b: Column,
+    bands: Int): Column = {
+    def hit(i: Int) = a.getItem(i) === b.getItem(i)
+    band === (1 until bands - 1)
+      .foldLeft(when(hit(0), 0))((c, i) => c.when(hit(i), i))
+      .otherwise(bands - 1)
   }
 
   /** The shared LSH candidate step: given one row per item of
     * (`id`, `bks` = array of per-band bucket keys), return every
     * (id_lo, id_hi) whose keys collide in at least one band — emitted
-    * EXACTLY once, in the lowest colliding band, so no distinct shuffle
-    * is needed. Used by the MinHash pipeline here and the hyperplane
-    * pipeline in [[VectorOps.cosineLshPairs]].
-    *
-    * The band join carries only (id, band, key); the per-id key arrays
-    * re-attach via broadcast for the first-band filter — at corpus
-    * scale, attach them via a co-partitioned join on the id instead
-    * (the first-band rule is unchanged). The CASE is unrolled, not a
-    * HOF lambda: higher-order functions evaluate interpreted per
-    * element, which would dominate on the candidate set; the CASE stays
-    * inside whole-stage codegen. A colliding pair always matches its
-    * last band if no earlier one, hence the ELSE arm.
+    * EXACTLY once, in the lowest colliding band ([[lowestBand]]). Used
+    * by the MinHash and SimHash pipelines here and the hyperplane
+    * pipeline in [[VectorOps.cosineLshPairs]]. The band join carries
+    * only (id, band, key); the per-id key arrays re-attach for the
+    * lowest-band filter.
     *
     * With `blocked = true`, `d` must carry a `block` column and it
     * joins into the collision key — same-block pairs collide in exactly
     * the bands they would unblocked (block equality is pair-constant,
-    * so the first-band rule is untouched); cross-block pairs are never
+    * so the lowest-band rule is untouched); cross-block pairs are never
     * produced. */
   private[api] def bandCollisionPairs(d: DataFrame, bands: Int,
-    broadcastLookups: Boolean = true, blocked: Boolean = false)
-  : DataFrame = {
-    val att = attach(broadcastLookups)
+    blocked: Boolean = false): DataFrame = {
     val bandedCols = Seq(col("id")) ++
       (if (blocked) Seq(col("block")) else Nil)
     val banded = d.select(bandedCols :+
@@ -219,24 +235,11 @@ object DedupOps {
       .select("id_lo", "id_hi", "band")
     val ka = d.select(col("id").as("id_lo"), col("bks").as("bks_a"))
     val kb = d.select(col("id").as("id_hi"), col("bks").as("bks_b"))
-    // bands == 1 would unroll to a WHEN-less CASE (a parse error) —
-    // with a single band the first matching band is trivially 0
-    val firstMatch =
-      if (bands == 1) lit(0)
-      else expr((0 until bands - 1)
-        .map(i => s"WHEN bks_a[$i] = bks_b[$i] THEN $i")
-        .mkString("CASE ", " ", s" ELSE ${bands - 1} END"))
     cand
-      .join(att(ka), "id_lo").join(att(kb), "id_hi")
-      .filter(col("band") === firstMatch)
+      .join(broadcast(ka), "id_lo").join(broadcast(kb), "id_hi")
+      .filter(lowestBand(col("band"), col("bks_a"), col("bks_b"), bands))
       .select("id_lo", "id_hi")
   }
-
-  /** Broadcast the lookup side, or leave it to shuffle co-partitioned on
-    * the join key (and hint AGAINST broadcast so AQE cannot promote a
-    * "small" side that will not stay small at scale). */
-  private def attach(bcast: Boolean): DataFrame => DataFrame =
-    if (bcast) broadcast else _.hint("shuffle_merge")
 
   /** SimHash fingerprint per row, appended as `simhash`: every distinct
     * token votes its spread hash's bits, the fingerprint collects the
@@ -268,12 +271,11 @@ object DedupOps {
     * occupancy n/32k keeps the candidate join near-linear). Past that,
     * widen the fingerprint (two 64-bit words) and keep radius/chunks
     * proportional — the pigeonhole rule and this pipeline are unchanged;
-    * only the chunk extraction expressions grow. `broadcastLookups` as
-    * in [[minhashLshPairs]]. Rows with no tokens carry no fingerprint
-    * and never pair. */
+    * only the chunk extraction expressions grow. Rows with no tokens
+    * carry no fingerprint and never pair. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-    maxDist: Int = 3, bits: Int = 61, spread: Long = 2654435761L,
-    broadcastLookups: Boolean = true): DataFrame = {
+    maxDist: Int = 3, bits: Int = 61, spread: Long = 2654435761L)
+  : DataFrame = {
     require(maxDist >= 1 && maxDist + 1 <= bits,
       "need 1 <= maxDist and maxDist + 1 chunks within the bit width")
     val chunks = maxDist + 1
@@ -289,12 +291,10 @@ object DedupOps {
       expr(s"(simhash >> $off) & ${(1L << w) - 1}L")
     }
     val cand = bandCollisionPairs(
-      sh.select(col("id"), array(bkExprs: _*).as("bks")),
-      chunks, broadcastLookups)
-    val att = attach(broadcastLookups)
+      sh.select(col("id"), array(bkExprs: _*).as("bks")), chunks)
     val fa = sh.select(col("id").as("id_lo"), col("simhash").as("sh_a"))
     val fb = sh.select(col("id").as("id_hi"), col("simhash").as("sh_b"))
-    cand.join(att(fa), "id_lo").join(att(fb), "id_hi")
+    cand.join(broadcast(fa), "id_lo").join(broadcast(fb), "id_hi")
       .withColumn("hd", expr("bit_count(sh_a ^ sh_b)").cast("int"))
       .filter(col("hd") <= maxDist)
       .select("id_lo", "id_hi", "hd")

@@ -39,11 +39,47 @@ object TextOps {
   def tokenHashTable(docs: DataFrame, idCol: String, textCol: String,
     blockCol: String): DataFrame = {
     GraftFunctions.register(docs.sparkSession)
-    docs
-      .withColumn("__toks", TextFunctions.tokenSet(col(textCol)))
-      .withColumn("hs", array_sort(expr("graft_token_hashes(__toks)")))
-      .select(col(idCol).as("id"), col(blockCol).as("block"), col("hs"))
+    docs.select(col(idCol).as("id"), col(blockCol).as("block"),
+      tokenHashes(col(textCol)).as("hs"))
   }
+
+  /** The sorted distinct-token hash array of a text column: the `hs` of
+    * [[tokenHashTable]], the MinHash input of
+    * [[DedupOps.minhashSignature]], and both sides of every
+    * [[jaccardVerify]]. `sort_array`, not `array_sort`: the latter
+    * sorts through an interpreted comparator lambda, and the hashes
+    * carry no NULLs, so both orders agree. */
+  private[graft] def tokenHashes(text: Column): Column =
+    sort_array(
+      call_function("graft_token_hashes", TextFunctions.tokenSet(text)))
+
+  /** The exact token-set Jaccard verify of candidate pairs carrying sorted
+    * hash arrays `hs_a`/`hs_b`: appends the intersection and union sizes
+    * as exact longs (`inter`, `uni`) and `jac` = inter / uni in double,
+    * and keeps the pairs at `jac` ≥ `minJac`. The one verify of
+    * [[nearDupPairs]], [[DedupOps.minhashLshPairs]] and
+    * [[DedupOps.minhashLshAgainst]]. */
+  private[graft] def jaccardVerify(pairs: DataFrame, minJac: Double)
+  : DataFrame = pairs
+    .withColumn("inter", call_function("graft_sorted_intersect",
+      col("hs_a"), col("hs_b")).cast("long"))
+    .withColumn("uni",
+      (size(col("hs_a")) + size(col("hs_b"))).cast("long") - col("inter"))
+    .withColumn("jac",
+      safeDiv(col("inter").cast("double"), col("uni").cast("double")))
+    .filter(col("jac") >= minJac)
+
+  /** The containment verify of [[containmentPairs]] and
+    * [[containmentPairsPrefix]]: `c_lo` = |A∩B|/|A| and `c_hi` =
+    * |A∩B|/|B| over `hs_a`/`hs_b`, kept where either reaches `minCont`. */
+  private def containmentVerify(pairs: DataFrame, minCont: Double)
+  : DataFrame = pairs
+    .withColumn("inter", call_function("graft_sorted_intersect",
+      col("hs_a"), col("hs_b")).cast("double"))
+    .withColumn("c_lo", safeDiv(col("inter"), size(col("hs_a"))))
+    .withColumn("c_hi", safeDiv(col("inter"), size(col("hs_b"))))
+    .filter(greatest(col("c_lo"), col("c_hi")) >= minCont)
+    .select("id_lo", "id_hi", "c_lo", "c_hi")
 
   /** Exact near-duplicate pairs from a [[tokenHashTable]]: same block,
     * `id_lo < id_hi`, token-set Jaccard ≥ `minJac`. Returns
@@ -51,14 +87,9 @@ object TextOps {
     * (J(A,B) ≤ min|A|,|B| / max|A|,|B|) skips the merge-intersect for
     * most pairs without changing the result set. */
   def nearDupPairs(hashed: DataFrame, minJac: Double): DataFrame =
-    blockedPairs(hashed)
+    jaccardVerify(blockedPairs(hashed)
       .filter(safeDiv(least(size(col("hs_a")), size(col("hs_b"))).cast("double"),
-        greatest(size(col("hs_a")), size(col("hs_b")))) >= minJac)
-      .withColumn("inter",
-        expr("graft_sorted_intersect(hs_a, hs_b)").cast("double"))
-      .withColumn("jac", safeDiv(col("inter"),
-        size(col("hs_a")) + size(col("hs_b")) - col("inter")))
-      .filter(col("jac") >= minJac)
+        greatest(size(col("hs_a")), size(col("hs_b")))) >= minJac), minJac)
       .select(col("id_lo"), col("id_hi"), col("jac"))
 
   /** Containment pairs from a [[tokenHashTable]]: catches what Jaccard
@@ -67,13 +98,7 @@ object TextOps {
     * side can always be fully contained). Returns
     * (id_lo, id_hi, c_lo, c_hi) where `c_lo` = |A∩B|/|A|. */
   def containmentPairs(hashed: DataFrame, minCont: Double): DataFrame =
-    blockedPairs(hashed)
-      .withColumn("inter",
-        expr("graft_sorted_intersect(hs_a, hs_b)").cast("double"))
-      .withColumn("c_lo", safeDiv(col("inter"), size(col("hs_a"))))
-      .withColumn("c_hi", safeDiv(col("inter"), size(col("hs_b"))))
-      .filter(greatest(col("c_lo"), col("c_hi")) >= minCont)
-      .select("id_lo", "id_hi", "c_lo", "c_hi")
+    containmentVerify(blockedPairs(hashed), minCont)
 
   /** [[containmentPairs]]' 100 TB form — same result set, never a
     * blocked quadratic scan. Prefix filtering (the classic
@@ -130,13 +155,7 @@ object TextOps {
       .distinct()
     val la = hashed.select(col("id").as("id_lo"), col("hs").as("hs_a"))
     val lb = hashed.select(col("id").as("id_hi"), col("hs").as("hs_b"))
-    cand.join(la, "id_lo").join(lb, "id_hi")
-      .withColumn("inter",
-        expr("graft_sorted_intersect(hs_a, hs_b)").cast("double"))
-      .withColumn("c_lo", safeDiv(col("inter"), size(col("hs_a"))))
-      .withColumn("c_hi", safeDiv(col("inter"), size(col("hs_b"))))
-      .filter(greatest(col("c_lo"), col("c_hi")) >= minCont)
-      .select("id_lo", "id_hi", "c_lo", "c_hi")
+    containmentVerify(cand.join(la, "id_lo").join(lb, "id_hi"), minCont)
   }
 
   private def blockedPairs(hashed: DataFrame): DataFrame = {

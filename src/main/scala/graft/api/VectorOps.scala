@@ -198,41 +198,42 @@ object VectorOps {
     * Past that regime, block by an IVF cell
     * ([[graft.sources.IvfIndex]]) and pair within cells instead.
     *
-    * With `broadcastLookups = true` (default) the per-id lookup tables
-    * (keys, vectors) attach via broadcast — right while one copy of
-    * (id, vector, norm) fits an executor; pass false once the corpus
-    * outgrows that and they attach via shuffled equi-joins on the id
-    * (the banding, first-band rule, and result are unchanged). The
-    * banded sketch table is persisted for its two consumers and released
-    * with the session (same lifecycle as [[DedupOps.minhashLshPairs]]). */
+    * The banded sketch table is persisted for its two consumers and
+    * released with the session (same lifecycle as
+    * [[DedupOps.minhashLshPairs]]). */
   def cosineLshPairs(corpus: DataFrame, idCol: String, vecCol: String,
     dim: Int, minCos: Double, planesPerBand: Int = 4, bands: Int = 16,
-    seed: Long = 42L, broadcastLookups: Boolean = true): DataFrame = {
+    seed: Long = 42L): DataFrame = {
     require(dim > 0 && planesPerBand > 0 && planesPerBand <= 62 && bands > 0,
       "need dim > 0, 0 < planesPerBand <= 62, bands > 0")
-    GraftFunctions.register(corpus.sparkSession)
     val planes = gaussianPlanes(bands * planesPerBand, dim, seed)
-    def bandKey(b: Int): Column =
-      (0 until planesPerBand).map { i =>
-        val dot = call_function("graft_dot", col(vecCol),
-          typedLit(planes(b * planesPerBand + i)))
-        when(dot >= 0d, lit(1L << i)).otherwise(lit(0L))
-      }.reduce(_ + _)
+      .grouped(planesPerBand).toSeq
     val d = graft.Caches.persistTracked(withNorm(corpus, vecCol)
       .select(col(idCol).as("id"), col(vecCol).as("__v"), col("n2"),
-        array((0 until bands).map(bandKey): _*).as("bks")))
+        array(planes.map(signKey(col(vecCol), _)): _*).as("bks")))
     val va = d.select(col("id").as("id_lo"), col("__v").as("v_a"),
       col("n2").as("n2_a"))
     val vb = d.select(col("id").as("id_hi"), col("__v").as("v_b"),
       col("n2").as("n2_b"))
-    val att: DataFrame => DataFrame =
-      if (broadcastLookups) broadcast else _.hint("shuffle_merge")
-    DedupOps.bandCollisionPairs(d, bands, broadcastLookups)
-      .join(att(va), "id_lo").join(att(vb), "id_hi")
+    DedupOps.bandCollisionPairs(d, bands)
+      .join(broadcast(va), "id_lo").join(broadcast(vb), "id_hi")
       .withColumn("cos", round(cosWith("v_a", "v_b", "n2_a", "n2_b"), 4))
       .filter(col("cos") >= minCos)
       .select("id_lo", "id_hi", "cos")
   }
+
+  /** The hyperplane sign key of `vec`: bit i set iff its dot with
+    * `planes(i)` is ≥ 0 — one long per band of
+    * [[cosineLshPairs]], and the whole-signature key of
+    * [[graft.streaming.DocStreams.semanticDupFilter]]. Codegen
+    * `graft_dot` against literal planes; the caller registers the
+    * graft functions. */
+  private[graft] def signKey(vec: Column, planes: Array[Array[Float]])
+  : Column =
+    planes.zipWithIndex.map { case (p, i) =>
+      when(call_function("graft_dot", vec, typedLit(p)) >= 0d, lit(1L << i))
+        .otherwise(lit(0L))
+    }.reduce(_ + _)
 
   /** Deterministic Gaussian hyperplanes: Box–Muller over splitmix64
     * uniforms, seeded per (plane, dim) — identical on every run/engine.

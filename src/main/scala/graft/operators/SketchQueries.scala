@@ -87,9 +87,8 @@ object SketchQueries {
     // only in the lowest band where the two signatures collide, so every
     // pair surfaces exactly once and the whole candidate+verify path is
     // map-side (broadcast lookups), with the final ORDER BY as the only
-    // shuffle. At 100 TB the per-doc lookup tables (band keys, sorted
-    // token hashes) would be attached via a co-partitioned join on doc_id
-    // instead of broadcast; the first-band rule is unchanged.
+    // shuffle. Past one broadcast copy of the per-doc lookups, block the
+    // corpus by a key (source, language) and pair within blocks.
     "q66_minhash_lsh" -> ((s, dir) =>
       lshNearDupPairs(s, dir, 0.5)
         .select(col("id_lo"), col("id_hi"), round(col("jac"), 4).as("jac4"))
@@ -325,10 +324,8 @@ object SketchQueries {
       graft.functions.GraftFunctions.register(s)
       val pairs = lshNearDupPairs(s, dir, 0.5)
       val mh = t(s, dir, "documents")
-        .withColumn("tks", TextFunctions.tokenSet(col("text")))
-        .select(col("doc_id"),
-          expr(s"graft_minhash(array_sort(graft_token_hashes(tks))," +
-            s" $NumHashes)").as("mh"))
+        .select(col("doc_id"), graft.api.DedupOps.minhashSignature(
+          graft.api.TextOps.tokenHashes(col("text")), NumHashes).as("mh"))
       pairs
         .join(mh.select(col("doc_id").as("id_lo"), col("mh").as("ma")),
           Seq("id_lo"))

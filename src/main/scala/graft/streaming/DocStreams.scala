@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.api.{DedupOps, TextOps, VectorOps}
 import graft.functions.{GraftFunctions, TextFunctions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -41,22 +42,13 @@ object DocStreams {
       .drop("__sig_key")
   }
 
-  /** Batch model of [[nearDupFilter]]'s steady state: the documents that
-    * survive when the whole corpus is replayed oldest-first — first
-    * arrival (min ts, doc_id tie-break) per signature key. Used by specs
-    * to assert stream/batch convergence, and usable directly as the
-    * backfill compaction for a corpus at rest. */
   /** The whole-signature dedup key: MinHash the distinct whitespace
     * tokens, fold all slots into ONE band key. Column-composed
     * (call_function binds columns by value), so any text column name
     * works. */
   private def sigKey(textCol: String, nHashes: Int) =
-    element_at(call_function("graft_band_keys",
-      call_function("graft_minhash",
-        call_function("graft_token_hashes",
-          TextFunctions.tokenSet(col(textCol))),
-        lit(nHashes)),
-      lit(1), lit(nHashes)), 1)
+    element_at(DedupOps.bandKeys(TextOps.tokenHashes(col(textCol)),
+      nHashes, 1), 1)
 
   /** Online SEMANTIC near-duplicate filter — the embedding-side
     * sibling of [[nearDupFilter]]: drops an arriving vector whose full
@@ -79,11 +71,8 @@ object DocStreams {
     require(dim > 0 && nPlanes > 0 && nPlanes <= 62,
       "need dim > 0 and 0 < nPlanes <= 62")
     GraftFunctions.register(emb.sparkSession)
-    val planes = graft.api.VectorOps.gaussianPlanes(nPlanes, dim, seed)
-    val key = (0 until nPlanes).map { i =>
-      val dot = call_function("graft_dot", col(vecCol), typedLit(planes(i)))
-      when(dot >= 0d, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    val key = VectorOps.signKey(col(vecCol),
+      VectorOps.gaussianPlanes(nPlanes, dim, seed))
     // gate the key on the vector's nullity: a NULL embedding's dot is
     // NULL, which the otherwise(0L) arms would silently fold to sig 0 —
     // colliding every NULL row with each other AND with genuine
@@ -96,64 +85,6 @@ object DocStreams {
       .dropDuplicatesWithinWatermark("__sig")
       .unionByName(keyed.filter(col("__sig").isNull))
       .drop("__sig")
-  }
-
-  /** Streaming delta-against-base near-dup matcher — the online form
-    * of the q315 increment ([[graft.api.DedupOps.minhashLshAgainst]]):
-    * the base corpus is sketched ONCE as a static banded index (id,
-    * band key, sorted token-hash signature, full band-key array);
-    * each ARRIVING document sketches itself with the SAME hash family
-    * and band geometry, explodes its band keys, and stream-static
-    * equi-joins the index — O(arrival × collisions) work per doc,
-    * no state store, no watermark, append-mode safe. A colliding
-    * (delta, base) pair is emitted EXACTLY once via the stateless
-    * lowest-colliding-band rule: both sides carry their full band-key
-    * arrays, so "no earlier band also collides" is a per-row codegen
-    * predicate — the batch kernel's `.distinct()` without a shuffle
-    * or state. The exact verify is identical to the batch kernel
-    * (sorted-intersection, integer-exact inter/uni exposed), so the
-    * streamed rows are exactly the batch pair relation restricted to
-    * arrived documents; agreement is spec-asserted (StreamingSpec).
-    * Emits (id_delta, id_base, inter, uni, jac). */
-  def deltaDupMatches(deltaDocs: DataFrame, base: DataFrame,
-    idCol: String, textCol: String, minJac: Double,
-    numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    GraftFunctions.register(base.sparkSession)
-    def sketch(df: DataFrame, s: String): DataFrame = df
-      .withColumn("__toks", TextFunctions.tokenSet(col(textCol)))
-      .withColumn(s"hs$s",
-        array_sort(call_function("graft_token_hashes", col("__toks"))))
-      .withColumn("__mh",
-        call_function("graft_minhash", col(s"hs$s"), lit(numHashes)))
-      .withColumn(s"bks$s",
-        call_function("graft_band_keys", col("__mh"), lit(bands), lit(rows)))
-    val idx = graft.Caches.persistTracked(
-      sketch(base, "_b").select(col(idCol).as("id_base"),
-        col("hs_b"), col("bks_b"),
-        posexplode(col("bks_b")).as(Seq("band", "key"))))
-    val cand = sketch(deltaDocs, "_a")
-      .select(col(idCol).as("id_delta"), col("hs_a"), col("bks_a"),
-        posexplode(col("bks_a")).as(Seq("band", "key")))
-      .join(idx, Seq("band", "key"))
-    // unrolled lowest-band predicate (no HOF: stays in codegen, same
-    // reasoning as the batch bandCollisionPairs CASE)
-    val firstBand = (0 until bands).map { i =>
-      (0 until i).map(j =>
-          element_at(col("bks_a"), j + 1) =!= element_at(col("bks_b"), j + 1))
-        .foldLeft(col("band") === i)(_ && _)
-    }.reduce(_ || _)
-    cand.filter(firstBand)
-      .withColumn("inter",
-        call_function("graft_sorted_intersect",
-          col("hs_a"), col("hs_b")).cast("long"))
-      .withColumn("uni",
-        (size(col("hs_a")) + size(col("hs_b"))).cast("long") - col("inter"))
-      .withColumn("jac", graft.Dets.safeDiv(
-        col("inter").cast("double"), col("uni").cast("double")))
-      .filter(col("jac") >= minJac)
-      .select("id_delta", "id_base", "inter", "uni", "jac")
   }
 
   /** Online exact-duplicate filter: drops an arriving document whose
@@ -220,8 +151,8 @@ object DocStreams {
       .agg(sort_array(collect_set(col("g"))).as("__ev"))
       .withColumn("__one", lit(1))
     val ruled = learnedWeights match {
-      case Some(w) => graft.api.TextOps.qualityRulesScored(docs, textCol, w)
-      case None    => graft.api.TextOps.qualityRules(docs, textCol)
+      case Some(w) => TextOps.qualityRulesScored(docs, textCol, w)
+      case None    => TextOps.qualityRules(docs, textCol)
     }
     val gated = ruled
       .withColumn("__g", grams(col(textCol)))
@@ -276,9 +207,8 @@ object DocStreams {
       col(vecCol).as("embedding"))
     val prb = probes.select(col("probe_id"), col("pe"))
     EventStreams.foldSnapshot(survivors, snapshotRoot) { (prev, batch) =>
-      val part = graft.api.VectorOps
-        .cosineTopK(batch.join(embN, Seq("vec_id")), "vec_id", "embedding",
-          prb, k)
+      val part = VectorOps.cosineTopK(batch.join(embN, Seq("vec_id")),
+          "vec_id", "embedding", prb, k)
         .select(col("probe_id"), col("id").as("vec_id"),
           col("cos").as("cos4"))
       val all = prev match {
@@ -332,6 +262,11 @@ object DocStreams {
       .orderBy("tok")
   }
 
+  /** Batch model of [[nearDupFilter]]'s steady state: the documents that
+    * survive when the whole corpus is replayed oldest-first — first
+    * arrival (min ts, doc_id tie-break) per signature key. Used by specs
+    * to assert stream/batch convergence, and usable directly as the
+    * backfill compaction for a corpus at rest. */
   def nearDupKeepSet(docs: DataFrame, tsCol: String, idCol: String,
     textCol: String, nHashes: Int = 16): DataFrame = {
     GraftFunctions.register(docs.sparkSession)

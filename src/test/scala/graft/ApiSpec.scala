@@ -182,15 +182,25 @@ class ApiSpec extends SparkSpec {
       TextOps.tokenHashTable(corpus, "key", "body", "tongue"), 0.5)
       .select("id_lo", "id_hi")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def lsh(numHashes: Int, bands: Int) = DedupOps.minhashLshPairs(
+        corpus, "key", "body", 0.5, numHashes = numHashes, bands = bands)
+      .select("id_lo", "id_hi")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // 8 bands of 2 rows: a jac-0.8 pair misses all bands with prob
     // (1-0.8^2)^8 ≈ 3e-4 — and the minhash family is fixed, so the
     // outcome is deterministic, not flaky
-    val lsh = DedupOps.minhashLshPairs(corpus, "key", "body", 0.5,
-      numHashes = 16, bands = 8)
-      .select("id_lo", "id_hi")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lsh8 = lsh(16, 8)
     // the verify step guarantees soundness (no false positives)
-    assert(lsh.subsetOf(exact) && lsh == exact)
+    assert(lsh8.subsetOf(exact) && lsh8 == exact)
+    // one band of all slots: a pair is a candidate iff its whole
+    // signature agrees, so the relation is exactly the exact pairs with
+    // equal signatures (2 slots, so the jac-0.78 pairs can collide)
+    val sig = TextOps.tokenHashTable(corpus, "key", "body", "tongue")
+      .select(col("id"), expr("graft_minhash(hs, 2)"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val lsh1 = lsh(2, 1)
+    assert(lsh1.subsetOf(exact) && lsh1.nonEmpty &&
+      lsh1 == exact.filter { case (a, b) => sig(a) == sig(b) })
   }
 
   test("minhashLshPairs blockCol: exactly the unblocked relation cut to same-block pairs") {
@@ -217,11 +227,6 @@ class ApiSpec extends SparkSpec {
     assert(unb.contains((1L, 3L)) && !blk.contains((1L, 3L)),
       "cross-block dup must pair unblocked and be excluded blocked")
     assert(blk.contains((1L, 2L)) && blk.contains((4L, 5L)))
-    // and the blocked + co-partitioned (100 TB) attach path agrees
-    val blkSh = pairs(DedupOps.minhashLshPairs(docs, "key", "body", 0.5,
-      numHashes = 16, bands = 8, broadcastLookups = false,
-      blockCol = Some("tongue")))
-    assert(blkSh == blk)
   }
 
   test("minhashLshAgainst: exactly the cross-side subset of the full " +
@@ -236,43 +241,23 @@ class ApiSpec extends SparkSpec {
     ).toDF("key", "body")
     val base = docs.filter($"key" % 2 === 0)
     val delta = docs.filter($"key" % 2 === 1)
-    val full = DedupOps.minhashLshPairs(docs, "key", "body", 0.5,
-      numHashes = 16, bands = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val inc = DedupOps.minhashLshAgainst(base, delta, "key", "body", 0.5,
-      numHashes = 16, bands = 8)
-      .collect()
-      .map(r => (math.min(r.getLong(1), r.getLong(0)),
-        math.max(r.getLong(1), r.getLong(0)))).toSet
-    // same hash family + band geometry + verify ⇒ the incremental run
-    // is EXACTLY the full relation cut to (even, odd) pairs
-    assert(inc == full.filter { case (a, b) => (a + b) % 2 == 1 })
-    // and it must produce a cross-side dup the full run knows about
-    assert(inc.nonEmpty)
-  }
-
-  test("LSH pipelines give identical pairs with shuffled lookup joins") {
-    // the co-partitioned (100 TB) attach path must be result-identical
-    // to the broadcast path, and must plan NO broadcast of the lookups
-    val bc = DedupOps.minhashLshPairs(corpus, "key", "body", 0.5,
-      numHashes = 16, bands = 8)
-      .select("id_lo", "id_hi")
-    val sh = DedupOps.minhashLshPairs(corpus, "key", "body", 0.5,
-      numHashes = 16, bands = 8, broadcastLookups = false)
-      .select("id_lo", "id_hi")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(bc) == pairs(sh) && pairs(bc).nonEmpty)
-    // the four lookup attaches must become sort-merge joins; only the
-    // band-key self-join may still broadcast (AQE's call on a tiny
-    // fixture — at scale both its sides are the full banded corpus)
-    def nBroadcast(df: org.apache.spark.sql.DataFrame) =
-      "BroadcastHashJoin".r.findAllIn(
-        df.queryExecution.executedPlan.toString).length
-    val planStr = sh.queryExecution.executedPlan.toString
-    assert(nBroadcast(sh) < nBroadcast(bc), "lookup sides still broadcast")
-    assert("SortMergeJoin".r.findAllIn(planStr).length >= 4,
-      s"expected >=4 shuffled lookup joins:\n${planStr.take(1500)}")
+    // 8 bands of 2 rows, and one band of 2 slots (the lowest-band rule
+    // with nothing below band 0)
+    for ((numHashes, bands) <- Seq((16, 8), (2, 1))) {
+      val full = DedupOps.minhashLshPairs(docs, "key", "body", 0.5,
+        numHashes = numHashes, bands = bands)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val inc = DedupOps.minhashLshAgainst(base, delta, "key", "body", 0.5,
+        numHashes = numHashes, bands = bands)
+        .collect()
+        .map(r => (math.min(r.getLong(1), r.getLong(0)),
+          math.max(r.getLong(1), r.getLong(0)))).toSet
+      // same hash family + band geometry + verify ⇒ the incremental run
+      // is EXACTLY the full relation cut to (even, odd) pairs
+      assert(inc == full.filter { case (a, b) => (a + b) % 2 == 1 }, bands)
+      // and it must produce a cross-side dup the full run knows about
+      assert(inc.nonEmpty, bands)
+    }
   }
 
   test("bm25 ranks term-bearing docs only, rare terms weigh more") {
@@ -311,10 +296,6 @@ class ApiSpec extends SparkSpec {
     assert(chunked == brute && brute.nonEmpty)
     assert(!chunked.exists(p => p._1 == 106L || p._2 == 106L),
       "token-less rows must not pair")
-    // the co-partitioned attach path is result-identical
-    val shuffled = pairSet(DedupOps.simhashPairs(
-      corpus, "key", "body", maxDist = d, broadcastLookups = false))
-    assert(shuffled == brute)
   }
 
   test("clusterResolve keeps exactly one representative per cluster") {

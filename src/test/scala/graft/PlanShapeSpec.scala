@@ -466,20 +466,23 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       p.jobs.map(_.site).mkString("\n"))
   }
 
-  private def scansEmbeddings(st: Seq[SparkPlan]): Boolean = st.exists {
+  private def scans(table: String)(st: Seq[SparkPlan]): Boolean = st.exists {
     case f: FileSourceScanExec =>
-      f.relation.location.rootPaths.exists(_.getName.startsWith("embeddings"))
+      f.relation.location.rootPaths.exists(_.getName.startsWith(table))
     case _ => false
   }
 
-  /** A stage whose input derives from an embeddings scan: the scan is
+  /** A stage whose input derives from a scan of `table`: the scan is
     * in the stage or below it, through exchanges (the spread
     * repartition) or cached frames (a memoized encode). */
-  private def readsEmbeddings(st: Seq[SparkPlan]): Boolean =
+  private def reads(table: String)(st: Seq[SparkPlan]): Boolean =
     st.exists(n => find(n) {
-      case c: InMemoryTableScanExec => readsEmbeddings(Seq(c.relation.cachedPlan))
-      case other => scansEmbeddings(Seq(other))
+      case c: InMemoryTableScanExec => reads(table)(Seq(c.relation.cachedPlan))
+      case other => scans(table)(Seq(other))
     }.isDefined)
+
+  private def hasLambda(n: SparkPlan): Boolean =
+    n.expressions.exists(_.find(_.isInstanceOf[LambdaFunction]).isDefined)
 
   test("no interpreted lambda in an ivfPqSearch or q134 stage that scans " +
     "the embeddings") {
@@ -499,12 +502,12 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // every stage downstream of the scan: the spread repartition puts an
     // exchange between q134's scan and each of its compute stages, so
     // the scan-only stages alone would leave them all unexamined
-    val offenders = stages.filter(readsEmbeddings).flatMap(_.filter { n =>
-      n.expressions.exists(_.find(_.isInstanceOf[LambdaFunction]).isDefined) &&
-        !probeSideAllowlist.exists(n.simpleString(400).contains)
+    val offenders = stages.filter(reads("embeddings")).flatMap(_.filter {
+      n => hasLambda(n) && !probeSideAllowlist.exists(n.simpleString(400).contains)
     })
-    assert(stages.count(readsEmbeddings) > stages.count(scansEmbeddings) &&
-      stages.count(scansEmbeddings) >= 2, s"${stages.length} stages")
+    assert(stages.count(reads("embeddings")) >
+      stages.count(scans("embeddings")) &&
+      stages.count(scans("embeddings")) >= 2, s"${stages.length} stages")
     assert(offenders.isEmpty,
       offenders.map(_.simpleString(400)).mkString("\n"))
   }
@@ -525,9 +528,28 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     def lambdaOutsideQuantize(e: Expression): Boolean = !quantize(e) &&
       (e.isInstanceOf[LambdaFunction] || e.children.exists(lambdaOutsideQuantize))
-    val offenders = stages.filter(readsEmbeddings).flatMap(
+    val offenders = stages.filter(reads("embeddings")).flatMap(
       _.filter(_.expressions.exists(lambdaOutsideQuantize)))
-    assert(stages.count(readsEmbeddings) >= 3, s"${stages.length} stages")
+    assert(stages.count(reads("embeddings")) >= 3, s"${stages.length} stages")
+    assert(offenders.isEmpty,
+      offenders.map(_.simpleString(400)).mkString("\n"))
+  }
+
+  test("no interpreted lambda in a q66, q68, q102 or q315 stage that " +
+    "reads the documents or the embeddings") {
+    val sf = fixture("sf0.01")
+    val stages = executedStages {
+      Seq("q66_minhash_lsh", "q68_simhash_pairs", "q102_embed_lsh",
+        "q315_incremental_dedup")
+        .foreach(SparkEntry.queries(_)(spark, sf).collect())
+    }
+    // the band explode, the lowest-band CASE and the verify run in these
+    // stages, once per candidate pair: every lambda is an offender
+    val read = (st: Seq[SparkPlan]) =>
+      reads("documents")(st) || reads("embeddings")(st)
+    val offenders = stages.filter(read).flatMap(_.filter(hasLambda))
+    assert(stages.count(reads("documents")) >= 3 &&
+      stages.count(reads("embeddings")) >= 1, s"${stages.length} stages")
     assert(offenders.isEmpty,
       offenders.map(_.simpleString(400)).mkString("\n"))
   }

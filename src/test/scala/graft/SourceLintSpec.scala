@@ -111,6 +111,21 @@ class SourceLintSpec extends AnyFunSuite {
         hits.mkString("\n"))
   }
 
+  test("one MinHash sketch: outside graft/functions, graft_minhash and " +
+    "graft_band_keys appear only in api/DedupOps") {
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+      if !p.toString.contains("graft/functions/") &&
+        !p.endsWith("graft/api/DedupOps.scala")
+      (line, i) <- Files.readAllLines(p).asScala.toSeq.zipWithIndex
+      if !isComment(line) &&
+        Seq("graft_minhash", "graft_band_keys").exists(line.contains)
+    } yield s"$p:${i + 1}"
+    assert(hits.isEmpty,
+      s"MinHash sketch written outside DedupOps:\n${hits.mkString("\n")}")
+  }
+
   private def lint(p: Path, lines: Seq[String]): Seq[String] = {
     {
       // pass 1: top-level strict-val declaration lines per name

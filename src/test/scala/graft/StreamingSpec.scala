@@ -544,14 +544,15 @@ class StreamingSpec extends SparkSpec {
 
   test("streamed delta-against-base near-dup matches agree with the " +
     "q315 batch kernel") {
-    // the r12 verdict item-5 agreement gate: DocStreams.deltaDupMatches
-    // (stream) vs DedupOps.minhashLshAgainst (q315's batch kernel) on a
-    // CONSTRUCTED corpus — a 30-doc base, a 10-doc delta streamed as
-    // two micro-batches where the even delta docs are one-token-dropped
-    // near-copies of base docs (Jaccard 11/12 >= 0.6) and the odd ones
-    // draw from a disjoint vocabulary (Jaccard 0). Same hash family +
-    // band geometry on both sides, so the full (id_delta, id_base,
-    // inter, uni) relations must be set-equal, and non-trivially so.
+    // q315's kernel, DedupOps.minhashLshAgainst, run on a STREAMING
+    // delta vs the full batch minhashLshPairs relation cut to
+    // cross-side pairs, on a CONSTRUCTED corpus — a 30-doc base, a
+    // 10-doc delta streamed as two micro-batches where the even delta
+    // docs are one-token-dropped near-copies of base docs (Jaccard
+    // 11/12 >= 0.6) and the odd ones draw from a disjoint vocabulary
+    // (Jaccard 0). Same hash family + band geometry on both sides, so
+    // the (id pair, jac) relations must be set-equal, and non-trivially
+    // so.
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_deltadup_").toString
     def text(seed: Int): String =
@@ -576,18 +577,20 @@ class StreamingSpec extends SparkSpec {
     val schema = delta.toDF("doc_id", "text").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/part_*.parquet")
-    val q = graft.streaming.DocStreams
-      .deltaDupMatches(stream, base, "doc_id", "text", 0.6)
+    val q = graft.api.DedupOps
+      .minhashLshAgainst(base, stream, "doc_id", "text", 0.6)
       .writeStream.format("memory").queryName("t_deltadup")
       .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("id_delta"), r.getAs[Long]("id_base"),
-        r.getAs[Long]("inter"), r.getAs[Long]("uni"))
-    val streamed = spark.table("t_deltadup").collect().map(key).toSet
-    val batch = graft.api.DedupOps.minhashLshAgainst(
-        base, delta.toDF("doc_id", "text"), "doc_id", "text", 0.6)
-      .collect().map(key).toSet
+    val streamed = spark.table("t_deltadup").collect()
+      .map(r => (r.getAs[Long]("id_delta"), r.getAs[Long]("id_base"),
+        r.getAs[Double]("jac"))).toSet
+    // base ids < 100 <= delta ids: a cross-side pair is (base, delta)
+    val batch = graft.api.DedupOps.minhashLshPairs(
+        base.unionByName(delta.toDF("doc_id", "text")), "doc_id", "text", 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .collect { case (lo, hi, jac) if lo < 100 && hi >= 100 => (hi, lo, jac) }
+      .toSet
     assert(streamed == batch)
     // non-trivial: every even delta doc matched its source base doc
     val expected = (0 until 10 by 2).map(i => (100L + i, i.toLong)).toSet
