@@ -238,14 +238,15 @@ final class EtlService(spark: SparkSession) {
     * filter + top-k, no iteration). `minSupport` floors the edge
     * relation like q227's backbone (a single shared order is noise on
     * a dense co-occurrence graph); the pair build is the per-order
-    * self-join — Σ|order|² with order size schema-bounded, never
-    * |corpus|². Returns (p_partkey, score) — RWR mass at 6dp or the
-    * co-purchase count as a double. */
+    * self-join ([[GraphOps.pairWeights]]) — Σ|order|² with order size
+    * schema-bounded, never |corpus|². Returns (p_partkey, score) — RWR
+    * mass at 6dp or the co-purchase count as a double. */
   def relatedParts(lineitem: DataFrame, seed: Long, k: Int,
     method: String = "rwr", minSupport: Long = 1L,
     iters: Int = 3): DataFrame = {
     require(k > 0 && iters > 0 && minSupport >= 1, "need k, iters, support >= 1")
-    val undw = coPurchasePairs(lineitem, minSupport)
+    val undw = GraphOps.pairWeights(lineitem, "l_orderkey", "l_partkey")
+      .filter(col("w") >= minSupport)
     method match {
       case "rwr" =>
         val seedDf = undw.sparkSession.range(1).select(lit(seed).as("v"))
@@ -254,8 +255,7 @@ final class EtlService(spark: SparkSession) {
           .orderBy(col("pr").desc, col("v").asc).limit(k)
           .select(col("v").as("p_partkey"), col("pr").as("score"))
       case "cooc" =>
-        undw.select(col("x").as("u"), col("y").as("v"), col("w"))
-          .unionAll(undw.select(col("y").as("u"), col("x").as("v"), col("w")))
+        GraphOps.directed(undw, "x", "y", Some("w"))
           .filter(col("u") === seed)
           .orderBy(col("w").desc, col("v").asc).limit(k)
           .select(col("v").as("p_partkey"), col("w").cast("double").as("score"))
@@ -270,8 +270,9 @@ final class EtlService(spark: SparkSession) {
     * (p_partkey, community). */
   def partCommunities(lineitem: DataFrame, minSupport: Long = 2L,
     iters: Int = 2): DataFrame =
-    GraphOps.labelPropagation(coPurchasePairs(lineitem, minSupport),
-        "x", "y", "w", iters)
+    GraphOps.labelPropagation(
+        GraphOps.pairWeights(lineitem, "l_orderkey", "l_partkey")
+          .filter(col("w") >= minSupport), "x", "y", "w", iters)
       .select(col("v").as("p_partkey"), col("label").as("community"))
 
   /** Assortment-gap suggestions: part pairs NOT co-purchased on the
@@ -281,7 +282,8 @@ final class EtlService(spark: SparkSession) {
   def linkSuggestions(lineitem: DataFrame, k: Int,
     minSupport: Long = 2L): DataFrame =
     GraphOps.adamicAdar(
-      coPurchasePairs(lineitem, minSupport).select("x", "y"), "x", "y", k)
+      GraphOps.pairWeights(lineitem, "l_orderkey", "l_partkey")
+        .filter(col("w") >= minSupport).select("x", "y"), "x", "y", k)
 
   /** Per-customer recommendations — the item-CF serving endpoint
     * (q253's scoring path as a service call): each customer's distinct
@@ -298,7 +300,8 @@ final class EtlService(spark: SparkSession) {
     customers: Option[DataFrame] = None): DataFrame = {
     require(k > 0 && nbrK > 0, "need k > 0 and nbrK > 0")
     val nbr = GraphOps.itemNeighbors(
-      coPurchasePairs(lineitem, minSupport), "x", "y", "w", nbrK)
+      GraphOps.pairWeights(lineitem, "l_orderkey", "l_partkey")
+        .filter(col("w") >= minSupport), "x", "y", "w", nbrK)
     val ords = customers.fold(orders)(c =>
       orders.join(c.select(col(c.columns.head).as("o_custkey")),
         Seq("o_custkey"), "left_semi"))
@@ -306,14 +309,7 @@ final class EtlService(spark: SparkSession) {
       .join(lineitem.select(col("l_orderkey").as("o_orderkey"),
         col("l_partkey")), Seq("o_orderkey"))
       .select("o_custkey", "l_partkey").distinct()
-    val cand = bought.join(nbr, bought("l_partkey") === nbr("item"))
-      .groupBy(col("o_custkey"), col("rec"))
-      .agg(sum(col("wjac_bp")).as("score"))
-      .join(bought.select(col("o_custkey"), col("l_partkey").as("rec")),
-        Seq("o_custkey", "rec"), "left_anti")
-    graft.plans.GraftOps.topKPerGroup(cand, Seq(col("o_custkey")),
-        Seq(col("score").desc, col("rec").asc), k, rankName = "rank")
-      .select("o_custkey", "rec", "score", "rank")
+    GraphOps.itemCfScores(bought, "o_custkey", "l_partkey", nbr, k)
   }
 
   /** Train-and-score quality endpoint — the learned curation gate as a
@@ -334,19 +330,6 @@ final class EtlService(spark: SparkSession) {
     val feats = TextOps.qualityFeatures(documents, textCol)
     MlOps.linearScore(feats, features, MlOps.perceptronWeights(
       MlOps.perceptronTrace(feats, features, "keep", iters)))
-  }
-
-  /** Shared pair build for the graph endpoints: distinct per-order
-    * incidence, per-order self-join, weighted x < y pairs, support
-    * floor. */
-  private def coPurchasePairs(lineitem: DataFrame, minSupport: Long)
-  : DataFrame = {
-    val li = lineitem.select("l_orderkey", "l_partkey").distinct()
-    val a = li.select(col("l_orderkey"), col("l_partkey").as("x"))
-    val b = li.select(col("l_orderkey"), col("l_partkey").as("y"))
-    a.join(b, Seq("l_orderkey")).filter(col("x") < col("y"))
-      .groupBy("x", "y").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= minSupport)
   }
 
   /** Referential-integrity audit over the relational lake — the data-

@@ -28,8 +28,47 @@ import org.apache.spark.sql.functions._
   * dense graphs; label propagation is one equi-join + argmax per
   * round. Every loop here keeps its round state through
   * [[graft.Iterate]], so round k never replays round k−1.
+  *
+  * The co-purchase graph layer shares four `private[graft]` pieces
+  * with [[EtlService]] and the graph/basket keys, each written once:
+  * [[basketPairs]] (the per-basket x < y self-join of a (basket, item)
+  * incidence; [[pairWeights]] is its grouped (x, y, w) form),
+  * [[directed]] (both orientations of an x < y edge list), the
+  * Ruzicka pair scorer behind [[weightedJaccard]] and
+  * [[itemNeighbors]], and [[itemCfScores]] (history votes over
+  * neighbour lists, bought items dropped, per-user top-k).
   */
 object GraphOps {
+
+  /** The distinct per-basket item pairs of a (basket, item) incidence:
+    * (basketCol, x, y) with x < y. The incidence is deduplicated first,
+    * so an item listed twice in one basket pairs once (on an already
+    * distinct incidence the optimizer drops the second aggregate).
+    * Σ|basket|² work, never |items|². */
+  private[graft] def basketPairs(inc: DataFrame, basketCol: String,
+    itemCol: String): DataFrame = {
+    val li = inc.select(basketCol, itemCol).distinct()
+    li.select(col(basketCol), col(itemCol).as("x"))
+      .join(li.select(col(basketCol), col(itemCol).as("y")), Seq(basketCol))
+      .filter(col("x") < col("y"))
+  }
+
+  /** Weighted undirected pairs (x, y, w) of a (basket, item) incidence:
+    * x < y, w = number of baskets holding both — [[basketPairs]]
+    * grouped. Exact integer counts. */
+  private[graft] def pairWeights(inc: DataFrame, basketCol: String,
+    itemCol: String): DataFrame =
+    basketPairs(inc, basketCol, itemCol)
+      .groupBy("x", "y").agg(count(lit(1)).as("w"))
+
+  /** Both orientations of an undirected x < y edge list: (u, v), or
+    * (u, v, w) when a weight column is named. */
+  private[graft] def directed(und: DataFrame, xCol: String, yCol: String,
+    wCol: Option[String] = None): DataFrame = {
+    val w = wCol.map(c => col(c).as("w")).toSeq
+    und.select(Seq(col(xCol).as("u"), col(yCol).as("v")) ++ w: _*)
+      .unionAll(und.select(Seq(col(yCol).as("u"), col(xCol).as("v")) ++ w: _*))
+  }
 
   /** Per-vertex degree of an undirected x < y edge list: (v, d). */
   def degrees(und: DataFrame, xCol: String, yCol: String): DataFrame =
@@ -112,8 +151,7 @@ object GraphOps {
   def adamicAdar(und: DataFrame, xCol: String, yCol: String, k: Int)
   : DataFrame = {
     val u = und.select(col(xCol).as("x"), col(yCol).as("y"))
-    val ed = u.select(col("x").as("u"), col("y").as("v"))
-      .unionAll(u.select(col("y").as("u"), col("x").as("v")))
+    val ed = directed(u, "x", "y")
     val deg = ed.groupBy("u").agg(count(lit(1)).as("d"))
     val invlog = deg.filter(col("d") >= 2).select(col("u"),
       round(lit(1d) / log(col("d").cast("double")), 6).as("il"))
@@ -161,10 +199,7 @@ object GraphOps {
     require(Micro % dDen == 0 && dNum >= 0 && dNum <= dDen,
       s"damping must be a [0,1] decimal with <= 6 places, got $damping")
     val restartMicro = Micro - Micro / dDen * dNum
-    val ed0 = und.select(col(xCol).as("u"), col(yCol).as("v"),
-        col(wCol).as("w"))
-      .unionAll(und.select(col(yCol).as("u"), col(xCol).as("v"),
-        col(wCol).as("w")))
+    val ed0 = directed(und, xCol, yCol, Some(wCol))
     val wdeg = ed0.groupBy("u").agg(sum(col("w")).as("wdeg"))
     val ed = ed0.join(wdeg, Seq("u")).localCheckpoint(true)
     val s = seed.select(col("v")).localCheckpoint(true)
@@ -206,27 +241,12 @@ object GraphOps {
     * Σ deg² wedge join — callers pass a support-floored backbone or
     * sample first, as with [[adamicAdar]]. */
   def weightedJaccard(und: DataFrame, xCol: String, yCol: String,
-    wCol: String, k: Int): DataFrame = {
-    val ed = und.select(col(xCol).as("u"), col(yCol).as("v"),
-        col(wCol).as("w"))
-      .unionAll(und.select(col(yCol).as("u"), col(xCol).as("v"),
-        col(wCol).as("w")))
-    val sdeg = ed.groupBy("u").agg(sum(col("w")).as("s"))
-    val e1 = ed.select(col("u"), col("v").as("px"), col("w").as("wx"))
-    val e2 = ed.select(col("u"), col("v").as("py"), col("w").as("wy"))
-    e1.join(e2, Seq("u")).filter(col("px") < col("py"))
-      .select(col("px"), col("py"), least(col("wx"), col("wy")).as("m"))
-      .groupBy("px", "py")
-      .agg(count(lit(1)).as("cn"), sum(col("m")).as("cmin"))
-      .join(sdeg.select(col("u").as("px"), col("s").as("sx")), Seq("px"))
-      .join(sdeg.select(col("u").as("py"), col("s").as("sy")), Seq("py"))
-      .withColumn("d", col("sx") + col("sy") - col("cmin"))
+    wCol: String, k: Int): DataFrame =
+    ruzickaPairs(und, xCol, yCol, wCol)
       .select(col("px"), col("py"), col("cn"),
-        (expr("(2L * cmin * 10000L + d) div (2L * d)").cast("double")
-          / 10000d).as("wjac4"))
+        (col("wjac_bp").cast("double") / 10000d).as("wjac4"))
       .orderBy(col("wjac4").desc, col("px").asc, col("py").asc)
       .limit(k)
-  }
 
   /** Per-item top-`kPerItem` neighbours under the same Ruzicka
     * (weighted-Jaccard) similarity as [[weightedJaccard]], returned as
@@ -241,22 +261,7 @@ object GraphOps {
     * (item, partition). */
   def itemNeighbors(und: DataFrame, xCol: String, yCol: String,
     wCol: String, kPerItem: Int): DataFrame = {
-    val ed = und.select(col(xCol).as("u"), col(yCol).as("v"),
-        col(wCol).as("w"))
-      .unionAll(und.select(col(yCol).as("u"), col(xCol).as("v"),
-        col(wCol).as("w")))
-    val sdeg = ed.groupBy("u").agg(sum(col("w")).as("s"))
-    val e1 = ed.select(col("u"), col("v").as("px"), col("w").as("wx"))
-    val e2 = ed.select(col("u"), col("v").as("py"), col("w").as("wy"))
-    val sc = e1.join(e2, Seq("u")).filter(col("px") < col("py"))
-      .select(col("px"), col("py"), least(col("wx"), col("wy")).as("m"))
-      .groupBy("px", "py")
-      .agg(sum(col("m")).as("cmin"))
-      .join(sdeg.select(col("u").as("px"), col("s").as("sx")), Seq("px"))
-      .join(sdeg.select(col("u").as("py"), col("s").as("sy")), Seq("py"))
-      .withColumn("d", col("sx") + col("sy") - col("cmin"))
-      .select(col("px"), col("py"),
-        expr("(2L * cmin * 10000L + d) div (2L * d)").as("wjac_bp"))
+    val sc = ruzickaPairs(und, xCol, yCol, wCol)
     val both = sc.select(col("px").as("item"), col("py").as("rec"),
         col("wjac_bp"))
       .unionAll(sc.select(col("py").as("item"), col("px").as("rec"),
@@ -265,6 +270,47 @@ object GraphOps {
         Seq(col("wjac_bp").desc, col("rec").asc), kPerItem,
         rankName = "__rn")
       .select("item", "rec", "wjac_bp")
+  }
+
+  /** The Ruzicka scorer of [[weightedJaccard]] and [[itemNeighbors]]:
+    * every px < py pair sharing a neighbour, with its common-neighbour
+    * count `cn` and the ratio in exact integer 1e-4 units `wjac_bp`
+    * (half-up, `(2·cmin·10⁴ + d) div (2d)`). When a caller drops
+    * `cn`, the optimizer prunes its count from the aggregate. */
+  private def ruzickaPairs(und: DataFrame, xCol: String, yCol: String,
+    wCol: String): DataFrame = {
+    val ed = directed(und, xCol, yCol, Some(wCol))
+    val sdeg = ed.groupBy("u").agg(sum(col("w")).as("s"))
+    val e1 = ed.select(col("u"), col("v").as("px"), col("w").as("wx"))
+    val e2 = ed.select(col("u"), col("v").as("py"), col("w").as("wy"))
+    e1.join(e2, Seq("u")).filter(col("px") < col("py"))
+      .select(col("px"), col("py"), least(col("wx"), col("wy")).as("m"))
+      .groupBy("px", "py")
+      .agg(count(lit(1)).as("cn"), sum(col("m")).as("cmin"))
+      .join(sdeg.select(col("u").as("px"), col("s").as("sx")), Seq("px"))
+      .join(sdeg.select(col("u").as("py"), col("s").as("sy")), Seq("py"))
+      .withColumn("d", col("sx") + col("sy") - col("cmin"))
+      .select(col("px"), col("py"), col("cn"),
+        expr("(2L * cmin * 10000L + d) div (2L * d)").as("wjac_bp"))
+  }
+
+  /** Item-CF scoring over per-item neighbour lists (item, rec, wjac_bp —
+    * the [[itemNeighbors]] layout): every (userCol, itemCol) history
+    * row votes its item's neighbours, votes sum per (user, rec) into
+    * `score` (exact int64), items already in the user's history are
+    * dropped, and the top `k` per user survive, ranked (score desc,
+    * rec asc). `hist` must be distinct per (user, item). Returns
+    * (userCol, rec, score, rank). */
+  private[graft] def itemCfScores(hist: DataFrame, userCol: String,
+    itemCol: String, nbr: DataFrame, k: Int): DataFrame = {
+    val cand = hist.join(nbr, hist(itemCol) === nbr("item"))
+      .groupBy(col(userCol), col("rec"))
+      .agg(sum(col("wjac_bp")).as("score"))
+      .join(hist.select(col(userCol), col(itemCol).as("rec")),
+        Seq(userCol, "rec"), "left_anti")
+    graft.plans.GraftOps.topKPerGroup(cand, Seq(col(userCol)),
+        Seq(col("score").desc, col("rec").asc), k, rankName = "rank")
+      .select(userCol, "rec", "score", "rank")
   }
 
   /** Multi-source BFS over an undirected x < y edge list: hop
@@ -284,9 +330,7 @@ object GraphOps {
     * alongside (v, lvl). */
   def multiSourceBfs(und: DataFrame, xCol: String, yCol: String,
     seeds: DataFrame, maxLvl: Int, seedCol: String = "src"): DataFrame = {
-    val u = und.select(col(xCol).as("x"), col(yCol).as("y"))
-    val ed = u.select(col("x").as("u"), col("y").as("v"))
-      .unionAll(u.select(col("y").as("u"), col("x").as("v")))
+    val ed = directed(und, xCol, yCol)
     val seeded = Iterate.keep(seeds.select(col(seedCol).as("src"))
       .withColumn("v", col("src")).withColumn("lvl", lit(0)), Concurrent)
     Iterate.rounds(seeded, maxLvl, Concurrent) { (dist, lvl) =>
@@ -361,11 +405,7 @@ object GraphOps {
     * (every vertex in an edge list has degree ≥ 1). */
   def labelPropagation(und: DataFrame, xCol: String, yCol: String,
     wCol: String, iters: Int): DataFrame = {
-    val ed = und.select(col(xCol).as("u"), col(yCol).as("v"),
-        col(wCol).as("w"))
-      .unionAll(und.select(col(yCol).as("u"), col(xCol).as("v"),
-        col(wCol).as("w")))
-      .localCheckpoint(true)
+    val ed = directed(und, xCol, yCol, Some(wCol)).localCheckpoint(true)
     val init = Iterate.keep(ed.select(col("u").as("v")).distinct()
       .withColumn("label", col("v")), Sequential)
     val rn = row_number().over(

@@ -37,6 +37,24 @@ object BasketQueries {
   private def baskets(s: SparkSession, dir: String): DataFrame =
     CoPurchase.baskets(s, dir)
 
+  /** q334/q352's frequent part triples (x < y < z, support): the
+    * per-order pairs ([[graft.api.GraphOps.basketPairs]]) semi-joined
+    * against the memoized frequent-pair table — the Apriori prune —
+    * then extended by a third part z > y of the same order, counted
+    * and floored at [[MinSup3]]. */
+  private def frequentTriples(s: SparkSession, dir: String): DataFrame = {
+    val li = baskets(s, dir)
+    val f2 = CoPurchase.pairW(s, dir)
+      .filter(col("w") >= MinSup3).select(col("x"), col("y"))
+    graft.api.GraphOps.basketPairs(li, "l_orderkey", "l_partkey")
+      .join(f2, Seq("x", "y"), "leftsemi")
+      .join(li.select(col("l_orderkey"), col("l_partkey").as("z")),
+        Seq("l_orderkey"))
+      .filter(col("z") > col("y"))
+      .groupBy("x", "y", "z").agg(count(lit(1)).as("support"))
+      .filter(col("support") >= MinSup3)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Directed association rules by CONVICTION + leverage (Brin et al.
@@ -134,26 +152,12 @@ object BasketQueries {
     // triple generation is bounded by basket size (≤ 7 lines), the
     // triple agg is map-side combinable — the genuine Apriori shape
     // at 100 TB.
-    "q334_itemsets3" -> ((s, dir) => {
-      val li = baskets(s, dir)
-      val f2 = CoPurchase.pairW(s, dir)
-        .filter(col("w") >= MinSup3).select(col("x"), col("y"))
-      val po = li
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("x"))
-        .join(li.select(col("l_orderkey").as("o"),
-          col("l_partkey").as("y")), Seq("o"))
-        .filter(col("x") < col("y"))
-        .join(f2, Seq("x", "y"), "leftsemi")
-      po.join(li.select(col("l_orderkey").as("o"),
-          col("l_partkey").as("z")), Seq("o"))
-        .filter(col("z") > col("y"))
-        .groupBy("x", "y", "z").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= MinSup3)
+    "q334_itemsets3" -> ((s, dir) =>
+      frequentTriples(s, dir)
         .select(col("x").as("p1"), col("y").as("p2"), col("z").as("p3"),
           col("support"))
         .orderBy(col("support").desc, col("p1").asc, col("p2").asc,
-          col("p3").asc)
-    }),
+          col("p3").asc)),
 
     // 3-itemset lift — q334's triples SCORED against independence
     // (lift₃ = P(xyz)/(P(x)P(y)P(z)) = sup·N²/(c₁c₂c₃), the q167
@@ -169,19 +173,7 @@ object BasketQueries {
       val nOrders = li.agg(count_distinct(col("l_orderkey"))
         .as("n_orders"))
       val item = li.groupBy("l_partkey").agg(count(lit(1)).as("cnt"))
-      val f2 = CoPurchase.pairW(s, dir)
-        .filter(col("w") >= MinSup3).select(col("x"), col("y"))
-      val po = li
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("x"))
-        .join(li.select(col("l_orderkey").as("o"),
-          col("l_partkey").as("y")), Seq("o"))
-        .filter(col("x") < col("y"))
-        .join(f2, Seq("x", "y"), "leftsemi")
-      po.join(li.select(col("l_orderkey").as("o"),
-          col("l_partkey").as("z")), Seq("o"))
-        .filter(col("z") > col("y"))
-        .groupBy("x", "y", "z").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= MinSup3)
+      frequentTriples(s, dir)
         .join(item.select(col("l_partkey").as("x"), col("cnt").as("c1")),
           Seq("x"))
         .join(item.select(col("l_partkey").as("y"), col("cnt").as("c2")),

@@ -283,19 +283,15 @@ object GraphQueries {
     // bit width of the degree (length of the binary representation
     // minus one) — pure integer arithmetic, no floor(log2(d)) whose
     // last-ulp rounding could disagree between engines at exact powers
-    // of two. One hash agg over the edge endpoints; output is
-    // O(log maxdeg) rows.
-    "q176_degree_dist" -> ((s, dir) => {
-      val e = CoPurchase.und(s, dir)
-      val deg = e.select(col("x").as("v"))
-        .unionAll(e.select(col("y").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("d"))
-      deg.groupBy((length(conv(col("d"), 10, 2)) - 1).cast("long")
+    // of two. One hash agg over the memoized degree table
+    // (shared:graph_degrees); output is O(log maxdeg) rows.
+    "q176_degree_dist" -> ((s, dir) =>
+      CoPurchase.undDegrees(s, dir)
+        .groupBy((length(conv(col("d"), 10, 2)) - 1).cast("long")
           .as("bucket"))
         .agg(count(lit(1)).as("n_nodes"),
           min(col("d")).as("min_d"), max(col("d")).as("max_d"))
-        .orderBy("bucket")
-    }),
+        .orderBy("bucket")),
 
     // Link prediction over the SUPPORT-FLOORED co-purchase backbone:
     // keep only edges with w ≥ 2 co-purchases (the backbone — a
@@ -395,9 +391,7 @@ object GraphQueries {
     // a degree-regular graph (zero variance), −0.0-normalized.
     "q292_assortativity" -> ((s, dir) => {
       val d38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-      val und = CoPurchase.und(s, dir)
-      val ed = und.select(col("x").as("u"), col("y").as("v"))
-        .unionByName(und.select(col("y").as("u"), col("x").as("v")))
+      val ed = graft.api.GraphOps.directed(CoPurchase.und(s, dir), "x", "y")
       // directed degree (count per u over both orientations) IS the
       // undirected degree — ride the shared memo instead of one more
       // 2·m shuffle (r14)
@@ -497,22 +491,20 @@ object GraphQueries {
     // co-purchase links persist, appear, and disappear, plus the edge-
     // set Jaccard — the link-stability audit that decides whether
     // last year's graph artifacts (communities, link predictions,
-    // CF neighbourhoods) are still trustworthy. One per-order
-    // self-join builds the (year, x, y) distinct edge relation (year
+    // CF neighbourhoods) are still trustworthy. The per-order pair
+    // build (GraphOps.basketPairs) gives the (year, x, y) distinct
+    // edge relation (year
     // rides the order, so the join is STILL per-order — never
     // year × corpus); consecutive years compare via ONE full outer
     // join of the relation against its year-shifted self on
     // (year, x, y). Counts are integers; the Jaccard ratio rounds
     // half-up as pure integer arithmetic ([D5], the q234 convention).
     "q242_edge_churn" -> ((s, dir) => {
-      val li = graft.Tables.load(s, dir, "lineitem")
-        .select("l_orderkey", "l_partkey").distinct()
       val yr = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey").as("l_orderkey"),
           year(col("o_orderdate")).as("yr"))
-      val a = li.select(col("l_orderkey"), col("l_partkey").as("x"))
-      val b = li.select(col("l_orderkey"), col("l_partkey").as("y"))
-      val ey = a.join(b, Seq("l_orderkey")).filter(col("x") < col("y"))
+      val ey = graft.api.GraphOps
+        .basketPairs(CoPurchase.baskets(s, dir), "l_orderkey", "l_partkey")
         .join(yr, Seq("l_orderkey"))
         .select("yr", "x", "y").distinct()
         .localCheckpoint(true)
@@ -552,7 +544,8 @@ object GraphQueries {
     // .itemNeighbors — the bounded serving layout, integer 1e-4
     // scores so the per-customer score sums are order-invariant
     // int64), already-bought parts are excluded, and the top-CfRecK
-    // recs are checked against the holdout's NEW parts. Reported per
+    // recs (GraphOps.itemCfScores, the scorer EtlService
+    // .recommendations serves) are checked against the holdout's NEW parts. Reported per
     // market segment: evaluable customers, hit customers, hit-rate
     // permille, recommended-hit and holdout totals, recall permille
     // ([D5] truncating ratios). Scale shape: the model is a bounded
@@ -584,8 +577,7 @@ object GraphQueries {
     "q253_cf_holdout" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val nbr = cfNeighbors(s, dir)
-      val li = graft.Tables.load(s, dir, "lineitem")
-        .select("l_orderkey", "l_partkey").distinct()
+      val li = CoPurchase.baskets(s, dir)
       val ro = graft.Tables.load(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
         .withColumn("rn", row_number().over(Window.partitionBy("o_custkey")
@@ -602,14 +594,8 @@ object GraphQueries {
       val tnew = lastp
         .join(hist.select("o_custkey").distinct(), Seq("o_custkey"))
         .join(hist, Seq("o_custkey", "l_partkey"), "left_anti")
-      val cand = hist.join(nbr, hist("l_partkey") === nbr("item"))
-        .groupBy(col("o_custkey"), col("rec"))
-        .agg(sum(col("wjac_bp")).as("score"))
-        .join(hist.select(col("o_custkey"), col("l_partkey").as("rec")),
-          Seq("o_custkey", "rec"), "left_anti")
-      val recs = graft.plans.GraftOps.topKPerGroup(cand,
-          Seq(col("o_custkey")), Seq(col("score").desc, col("rec").asc),
-          CfRecK, rankName = "__rn")
+      val recs = graft.api.GraphOps
+        .itemCfScores(hist, "o_custkey", "l_partkey", nbr, CfRecK)
         .select("o_custkey", "rec")
       val hold = tnew.groupBy("o_custkey").agg(count(lit(1)).as("n_hold"))
       val hitc = recs

@@ -331,9 +331,11 @@ object SketchQueries {
           Seq("id_lo"))
         .join(mh.select(col("doc_id").as("id_hi"), col("mh").as("mb")),
           Seq("id_hi"))
-        .withColumn("agree", expr("aggregate(zip_with(ma, mb, " +
-          "(a, b) -> CASE WHEN a = b THEN 1L ELSE 0L END), 0L, " +
-          "(acc, v) -> acc + v)"))
+        // agreeing slots as one Column sum, unrolled like
+        // DedupOps.lowestBand: no interpreted lambda per candidate pair
+        .withColumn("agree", (0 until NumHashes).map(i =>
+          when(col("ma").getItem(i) === col("mb").getItem(i), 1L)
+            .otherwise(0L)).reduce(_ + _))
         .withColumn("est",
           col("agree").cast("double") / lit(NumHashes.toDouble))
         .select(

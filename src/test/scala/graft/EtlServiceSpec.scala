@@ -146,8 +146,9 @@ class EtlServiceSpec extends SparkSpec {
     import spark.implicits._
     // two orders: {1,2,3} and {1,2,4} → pair weights (1,2)=2,
     // (1,3)=(2,3)=(1,4)=(2,4)=1; seed 1's cooc ranking is 2 (w=2)
-    // then 3, 4 (w=1, id tie-break)
-    val li = Seq((10L, 1L), (10L, 2L), (10L, 3L),
+    // then 3, 4 (w=1, id tie-break). Order 10 lists part 2 twice: the
+    // pair build dedups the incidence, so (1,2) stays at 2.
+    val li = Seq((10L, 1L), (10L, 2L), (10L, 3L), (10L, 2L),
         (20L, 1L), (20L, 2L), (20L, 4L))
       .toDF("l_orderkey", "l_partkey")
       .withColumn("l_suppkey", lit(0L))
@@ -192,9 +193,11 @@ class EtlServiceSpec extends SparkSpec {
     // orders {1,2,3} (cust 100) and {1,2,4} (cust 200): parts 3 and 4
     // have identical co-purchase profiles → wjac 1.0, so each
     // customer's single surviving rec is the OTHER basket's unique
-    // part, carried by the strongest vote (10000 from its twin)
+    // part, carried by the strongest vote (10000 from its twin).
+    // Order 20 lists part 4 twice; the deduped incidence keeps the
+    // model unchanged.
     val li = Seq((10L, 1L), (10L, 2L), (10L, 3L),
-        (20L, 1L), (20L, 2L), (20L, 4L))
+        (20L, 1L), (20L, 2L), (20L, 4L), (20L, 4L))
       .toDF("l_orderkey", "l_partkey")
       .withColumn("l_suppkey", lit(0L))
     val ords = Seq((10L, 100L), (20L, 200L)).toDF("o_orderkey", "o_custkey")

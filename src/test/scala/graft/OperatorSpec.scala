@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Operator-semantics unit tests that the SQL oracle can't express:
   * HLL error bounds, session invariants, aggregator merge paths,
-  * IVF search structure, dedup idempotence. */
+  * IVF search structure, dedup idempotence, and the cross-key
+  * identities of the co-purchase graph and basket keys (q332, q334,
+  * q340, q352, q358, q392 — all built on the `CoPurchase` tables). */
 class OperatorSpec extends SparkSpec {
 
   test("q22 HLL estimate within documented error of exact distinct") {
@@ -342,4 +344,72 @@ class OperatorSpec extends SparkSpec {
     assert(frames.toSeq == Seq(0L, 3000L, 6000L, 9000L))
     assert(Multimodal.FakeDecoder.frameSampleMs(0, 1000).toSeq == Seq(0L))
   }
+
+  // ---- co-purchase graph and basket keys (the CoPurchase family) ----
+
+  private def rows(name: String): Array[Row] =
+    SparkEntry.queries(name)(spark, Sf).collect()
+  private def d(r: Row, c: String): Double = r.getAs[Double](c)
+  private def l(r: Row, c: String): Long = r.getAs[Long](c)
+
+  test("q332 edge-support mass equals 3x the q165 triangle census") {
+    val sup = rows("q332_edge_support")
+      .map(r => l(r, "support") * l(r, "n_edges")).sum
+    val q165 = rows("q165_triangles").head
+    assert(sup == 3L * l(q165, "n_triangles"),
+      s"support mass $sup vs 3 x ${l(q165, "n_triangles")}")
+    val edges = rows("q332_edge_support").map(r => l(r, "n_edges")).sum
+    assert(edges == l(q165, "n_edges"))
+  }
+
+  test("q334 3-itemsets: canonical part order and the support floor") {
+    rows("q334_itemsets3").foreach { r =>
+      assert(l(r, "p1") < l(r, "p2") && l(r, "p2") < l(r, "p3"))
+      assert(l(r, "support") >= 2L)
+    }
+  }
+
+  test("q340 rich club: ladder counts shrink as the degree cut rises " +
+    "and phi stays in [0, 1]") {
+    val rs = rows("q340_rich_club").sortBy(_.getAs[Int]("k"))
+    val ns = rs.map(r => l(r, "n_rich"))
+    assert(ns.zip(ns.tail).forall { case (a, b) => a >= b })
+    rs.filter(r => !r.isNullAt(r.fieldIndex("phi6"))).foreach { r =>
+      assert(d(r, "phi6") >= 0.0 && d(r, "phi6") <= 1.0)
+    }
+  }
+
+  test("q352 scores exactly q334's triples with positive lifts") {
+    val lifted = rows("q352_itemset_lift")
+    val base = rows("q334_itemsets3")
+    assert(lifted.length == base.length)
+    assert(lifted.map(r => (l(r, "p1"), l(r, "p2"), l(r, "p3"),
+      l(r, "support"))).toSet ==
+      base.map(r => (l(r, "p1"), l(r, "p2"), l(r, "p3"),
+        l(r, "support"))).toSet)
+    lifted.foreach(r => assert(d(r, "lift4") > 0.0))
+  }
+
+  test("q358 basket-size mass equals the distinct (order, part) " +
+    "incidence") {
+    val mass = rows("q358_basket_size")
+      .map(r => l(r, "n_items") * l(r, "n_orders")).sum
+    val incidence = Tables.load(spark, Sf, "lineitem")
+      .select("l_orderkey", "l_partkey").distinct().count()
+    assert(mass == incidence)
+  }
+
+  test("q392 conviction: NULL exactly on exceptionless rules, confidence bounded") {
+    val rs = rows("q392_conviction")
+    assert(rs.length == 20)
+    rs.foreach { r =>
+      val conf = r.getAs[Double]("conf6")
+      assert(conf > 0 && conf <= 1)
+      val convNull = r.isNullAt(r.fieldIndex("conviction4"))
+      assert(convNull == (conf == 1.0),
+        "conviction NULL iff the rule is exceptionless")
+      if (!convNull) assert(r.getAs[Double]("conviction4") > 0)
+    }
+  }
+
 }

@@ -540,11 +540,12 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val sf = fixture("sf0.01")
     val stages = executedStages {
       Seq("q66_minhash_lsh", "q68_simhash_pairs", "q102_embed_lsh",
-        "q315_incremental_dedup")
+        "q315_incremental_dedup", "q321_minhash_error")
         .foreach(SparkEntry.queries(_)(spark, sf).collect())
     }
-    // the band explode, the lowest-band CASE and the verify run in these
-    // stages, once per candidate pair: every lambda is an offender
+    // the band explode, the lowest-band CASE, the verify and q321's
+    // slot-agreement count run in these stages, once per candidate
+    // pair: every lambda is an offender
     val read = (st: Seq[SparkPlan]) =>
       reads("documents")(st) || reads("embeddings")(st)
     val offenders = stages.filter(read).flatMap(_.filter(hasLambda))

@@ -3,9 +3,11 @@ package graft
 /** Structural invariants for the round-12 session additions (q328–
   * q351) — value-level correctness is the DuckDB oracle's job; these
   * pin cross-metric identities and bounds the oracle can't see
-  * (Kruskal–Wallis vs its tie correction, edge-support mass vs the
-  * q165 triangle census, packing slack/overshoot conservation,
-  * Fisher's index between its two factors, curve monotonicity).
+  * (Kruskal–Wallis vs its tie correction, packing slack/overshoot
+  * conservation, Fisher's index between its two factors, curve
+  * monotonicity). The round's graph and basket keys (q332, q334,
+  * q340, q352, q358) are checked in OperatorSpec with the rest of the
+  * co-purchase family.
   * Everything runs at sf0.001 off the session-memoized relations, so
   * the whole suite costs seconds.
   */
@@ -56,16 +58,6 @@ class Round12Spec extends SparkSpec {
     }
   }
 
-  test("q332 edge-support mass equals 3x the q165 triangle census") {
-    val sup = rows("q332_edge_support")
-      .map(r => l(r, "support") * l(r, "n_edges")).sum
-    val q165 = rows("q165_triangles").head
-    assert(sup == 3L * l(q165, "n_triangles"),
-      s"support mass $sup vs 3 x ${l(q165, "n_triangles")}")
-    val edges = rows("q332_edge_support").map(r => l(r, "n_edges")).sum
-    assert(edges == l(q165, "n_edges"))
-  }
-
   test("q333 Brier pieces are bounded: brier in [0,1], uncertainty " +
     "in [0, 0.25], reliability/resolution non-negative") {
     val r = rows("q333_brier_gate").head
@@ -74,28 +66,11 @@ class Round12Spec extends SparkSpec {
     assert(d(r, "rel6") >= 0.0 && d(r, "res6") >= 0.0)
   }
 
-  test("q334 3-itemsets: canonical part order and the support floor") {
-    rows("q334_itemsets3").foreach { r =>
-      assert(l(r, "p1") < l(r, "p2") && l(r, "p2") < l(r, "p3"))
-      assert(l(r, "support") >= 2L)
-    }
-  }
-
   test("q337 success curve: hits nondecreasing in k, bounded by probes") {
     val rs = rows("q337_success_curve").sortBy(_.getAs[Int]("k"))
     val hits = rs.map(r => l(r, "hits"))
     assert(hits.zip(hits.tail).forall { case (a, b) => a <= b })
     assert(hits.last <= l(rs.head, "n_probes"))
-  }
-
-  test("q340 rich club: ladder counts shrink as the degree cut rises " +
-    "and phi stays in [0, 1]") {
-    val rs = rows("q340_rich_club").sortBy(_.getAs[Int]("k"))
-    val ns = rs.map(r => l(r, "n_rich"))
-    assert(ns.zip(ns.tail).forall { case (a, b) => a >= b })
-    rs.filter(r => !r.isNullAt(r.fieldIndex("phi6"))).foreach { r =>
-      assert(d(r, "phi6") >= 0.0 && d(r, "phi6") <= 1.0)
-    }
   }
 
   test("q341 PQ code health: used + dead = ksub per subspace and every " +
@@ -200,17 +175,6 @@ class Round12Spec extends SparkSpec {
     assert(d(te.head, "rate6") <= hs.max + 1e-9)
   }
 
-  test("q352 scores exactly q334's triples with positive lifts") {
-    val lifted = rows("q352_itemset_lift")
-    val base = rows("q334_itemsets3")
-    assert(lifted.length == base.length)
-    assert(lifted.map(r => (l(r, "p1"), l(r, "p2"), l(r, "p3"),
-      l(r, "support"))).toSet ==
-      base.map(r => (l(r, "p1"), l(r, "p2"), l(r, "p3"),
-        l(r, "support"))).toSet)
-    lifted.foreach(r => assert(d(r, "lift4") > 0.0))
-  }
-
   test("q353 elasticity covers every part with sales") {
     val sold = Tables.load(spark, Sf, "lineitem")
       .select("l_partkey").distinct().count()
@@ -249,14 +213,5 @@ class Round12Spec extends SparkSpec {
         org.apache.spark.sql.functions.col("o_orderdate")))
       .distinct().count()
     assert(rs.map(r => l(r, "n_days")).sum == days)
-  }
-
-  test("q358 basket-size mass equals the distinct (order, part) " +
-    "incidence") {
-    val mass = rows("q358_basket_size")
-      .map(r => l(r, "n_items") * l(r, "n_orders")).sum
-    val incidence = Tables.load(spark, Sf, "lineitem")
-      .select("l_orderkey", "l_partkey").distinct().count()
-    assert(mass == incidence)
   }
 }

@@ -123,19 +123,6 @@ class Round14Spec extends SparkSpec {
     assert(r.getAs[Long]("k") == 5L, "five market segments")
   }
 
-  test("q392 conviction: NULL exactly on exceptionless rules, confidence bounded") {
-    val rs = rows("q392_conviction")
-    assert(rs.length == 20)
-    rs.foreach { r =>
-      val conf = r.getAs[Double]("conf6")
-      assert(conf > 0 && conf <= 1)
-      val convNull = r.isNullAt(r.fieldIndex("conviction4"))
-      assert(convNull == (conf == 1.0),
-        "conviction NULL iff the rule is exceptionless")
-      if (!convNull) assert(r.getAs[Double]("conviction4") > 0)
-    }
-  }
-
   test("q393 MSTTR: both diversity ratios are valid proportions") {
     rows("q393_msttr").foreach { r =>
       val (m, t) = (r.getAs[Double]("msttr6"), r.getAs[Double]("ttr6"))

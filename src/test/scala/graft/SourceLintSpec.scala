@@ -126,6 +126,22 @@ class SourceLintSpec extends AnyFunSuite {
       s"MinHash sketch written outside DedupOps:\n${hits.mkString("\n")}")
   }
 
+  test("one basket-pair build: the x < y cut of the per-basket self-join " +
+    "appears only in GraphOps.basketPairs") {
+    // every copy of the (basket, item) self-join ends in this filter;
+    // the graph operators' own x < y tests compare inside a CASE
+    val pattern = """.filter(col("x") < col("y"))"""
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala")).iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+      (line, i) <- Files.readAllLines(p).asScala.toSeq.zipWithIndex
+      if !isComment(line) && line.contains(pattern)
+    } yield s"$p:${i + 1}"
+    assert(hits.size == 1 && hits.head.contains("graft/api/GraphOps.scala"),
+      s"${hits.size} copies of the basket-pair build:\n" +
+        hits.mkString("\n"))
+  }
+
   private def lint(p: Path, lines: Seq[String]): Seq[String] = {
     {
       // pass 1: top-level strict-val declaration lines per name
